@@ -2,7 +2,8 @@
 """Benchmark harness: runs every registered query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...,
+ "cpus": ..., "spark_version": ..., "git_sha": ...}
 
 Queries are materialized via the noop sink (full execution, no driver
 collect). One SparkSession is reused — at this scale JVM startup would
@@ -14,12 +15,14 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import subprocess
 import sys
 import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
 from direct_kafka_stream_spark import QUERIES, get_session
+from direct_kafka_stream_spark.session import session_cores
 
 
 def materialize(df) -> None:
@@ -70,6 +73,46 @@ def adjudicate_sweeps(
         ok_runs = [s[name] for s in sweeps if s.get(name, -1.0) >= 0]
         times[name] = min(ok_runs) if ok_runs else -1.0
     return times, band_violated, sweeps
+
+
+def git_sha(repo: pathlib.Path) -> str | None:
+    """HEAD of ``repo`` when it is the root of a git checkout, else None
+    (git would otherwise report an enclosing checkout's HEAD)."""
+    if not (repo / ".git").exists():
+        return None
+    try:
+        out = subprocess.run(
+            ["git", "-C", str(repo), "rev-parse", "HEAD"],
+            capture_output=True, text=True, timeout=10,
+        )
+        return out.stdout.strip() or None
+    except (OSError, subprocess.SubprocessError):
+        return None
+
+
+def artifact_identity(spark, repo: pathlib.Path) -> dict:
+    """What a bench artifact must record to be read against another:
+    the session's real task slots, the Spark version and the code."""
+    return {
+        "cpus": session_cores(spark),
+        "spark_version": spark.version,
+        "git_sha": git_sha(repo),
+    }
+
+
+def prior_quiet_mins(repo: pathlib.Path, sf: float, cpus: int) -> dict[str, float]:
+    """Per-query times of the newest ``BENCH_FULL_r*.json`` measured at
+    the same (sf, cpus). An artifact that does not record its core
+    count never matches: it may be an 8-core run read as a 32-core one."""
+    prior_files = sorted(
+        (p for p in repo.glob("BENCH_FULL_r*.json") if p.stem.split("_r")[1].isdigit()),
+        key=lambda p: int(p.stem.split("_r")[1]),
+    )
+    for p in reversed(prior_files):
+        data = json.loads(p.read_text())
+        if data.get("sf") == sf and data.get("cpus") == cpus:
+            return data.get("queries", {})
+    return {}
 
 
 def main() -> None:
@@ -165,24 +208,15 @@ def main() -> None:
 
     # Quiet-window protocol: any query measuring >2.5x its PRIOR-round
     # quiet min (from the newest tracked BENCH_FULL artifact at the
-    # same sf) gets one more re-run, and both the raw first measurement
-    # and the final are recorded — so the tracked artifact stops
-    # encoding host weather and round-over-round regression reads are
-    # adjudicable without a judge re-bench.
+    # same sf and core count) gets one more re-run, and both the raw
+    # first measurement and the final are recorded — so the tracked
+    # artifact stops encoding host weather and round-over-round
+    # regression reads are adjudicable without a judge re-bench.
     here = pathlib.Path(__file__).resolve().parent
+    identity = artifact_identity(spark, here)
     raw_before_requiet: dict[str, float] = {}
     try:
-        prior_files = sorted(
-            (p for p in here.glob("BENCH_FULL_r*.json")
-             if p.stem.split("_r")[1].isdigit()),
-            key=lambda p: int(p.stem.split("_r")[1]),
-        )
-        prior = {}
-        for p in reversed(prior_files):
-            data = json.loads(p.read_text())
-            if data.get("sf") == sf:
-                prior = data.get("queries", {})
-                break
+        prior = prior_quiet_mins(here, sf, identity["cpus"])
         for name, t_prior in prior.items():
             t_now = times.get(name, -1.0)
             if t_prior > 0 and t_now > 2.5 * t_prior:
@@ -203,6 +237,7 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": sf,
+        **identity,
         "n_queries": len(times),
         "repeat_min_of": repeat,
         "sweeps": sweeps,

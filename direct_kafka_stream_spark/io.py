@@ -170,15 +170,9 @@ def spread_scan(df: DataFrame, key: str) -> DataFrame:
     matching the probed plans). Keyed (hash) repartition so no
     determinism sort is needed; key must be high-cardinality relative
     to the core count (table primary keys are)."""
-    from direct_kafka_stream_spark.session import default_parallelism
+    from direct_kafka_stream_spark.session import session_cores
 
-    # Prefer the SESSION's actual scheduling width (a verify driver may
-    # hand a local[4] session on a 32-CPU host); env/cpu-count only as
-    # the Spark Connect fallback where no SparkContext is reachable.
-    try:
-        cores = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        cores = default_parallelism()
+    cores = session_cores(df.sparkSession)
     total = _local_input_bytes(df)
     if total is None or total >= cores * _SPREAD_BYTES_PER_CORE:
         return df

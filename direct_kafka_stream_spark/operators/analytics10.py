@@ -12,6 +12,7 @@ from functools import reduce
 
 from pyspark.sql import Column, SparkSession, functions as F
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
 
@@ -164,7 +165,7 @@ def q_train_test_split(spark: SparkSession, d: str):
             "split"
         ),
     )
-    tagged = tagged.persist()
+    tagged = track(tagged.persist())
     tot = tagged.agg(F.count(F.lit(1)).alias("n"))
     leak = (
         tagged.groupBy(F.sha2("text", 256).alias("h"))

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key, dsum, dsum_sql
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
@@ -160,7 +161,7 @@ def theil_sen_stat(events):
     pts = daily.crossJoin(F.broadcast(t0)).select(
         F.datediff("day", "d0").alias("t"), "x"
     )
-    pts = pts.persist()
+    pts = track(pts.persist())
     a, b = pts.alias("a"), pts.alias("b")
     slopes = a.join(b, F.col("b.t") > F.col("a.t")).select(
         (

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import dsum, dsum_sql
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
@@ -171,7 +172,7 @@ def seasonal_anomaly_report(e):
     resid = daily.join(
         F.broadcast(dow_mean), F.dayofweek("day") == F.col("dw")
     ).select("day", "x", F.round(F.col("x") - F.col("mu"), 6).alias("r"))
-    resid = resid.persist()
+    resid = track(resid.persist())
     med = resid.agg(F.percentile("r", F.lit(0.5)).alias("rmed"))
     mad = resid.crossJoin(F.broadcast(med)).agg(
         F.percentile(F.abs(F.col("r") - F.col("rmed")), F.lit(0.5)).alias(
@@ -244,7 +245,7 @@ def q_target_encode(spark: SparkSession, d: str):
         "source",
         F.when(F.col("text").like("%the%"), 1).otherwise(0).alias("y"),
     )
-    labeled = labeled.persist()
+    labeled = track(labeled.persist())
     overall = labeled.agg(
         (F.sum("y").cast("double") / F.count(F.lit(1))).alias("gmean")
     )

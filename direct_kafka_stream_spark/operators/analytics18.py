@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC, bounded_window_key
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.operators.retrieval import BM25_SCORED_SQL
@@ -213,7 +214,7 @@ def q_bfs_hops(spark: SparkSession, d: str):
     cust = load_table(spark, d, "customer")
     nation = load_table(spark, d, "nation")
 
-    e0 = (
+    e0 = track(
         li.join(sup, li.l_suppkey == sup.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -221,8 +222,9 @@ def q_bfs_hops(spark: SparkSession, d: str):
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .agg(F.count(F.lit(1)).alias("w"))
-    ).persist()
-    edges = (
+        .persist()
+    )
+    edges = track(
         e0.filter(F.col("src") != F.col("dst"))
         .withColumn(
             "rn",

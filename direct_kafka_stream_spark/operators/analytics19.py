@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.io import load_table, spread_scan
 from direct_kafka_stream_spark.operators.llm import _BUCKET16_SQL
 from direct_kafka_stream_spark.registry import query
@@ -104,11 +105,12 @@ def q_setsim_prefix(spark: SparkSession, d: str):
     from direct_kafka_stream_spark.operators.llm import _shingles_from_docs
 
     docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
-    tok = (
+    tok = track(
         _shingles_from_docs(docs)
         .select("doc_id", F.col("shingle").alias("word"))
         .distinct()
-    ).persist()
+        .persist()
+    )
     sz = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("s"))
     df = tok.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     ranked = tok.join(df, "word").withColumn(
@@ -266,7 +268,7 @@ def q_lof_bucketed(spark: SparkSession, d: str):
             F.round(1 - _cosine(F.col("ea"), F.col("eb")), 9).alias("d"),
         )
     )
-    knn = (
+    knn = track(
         dist.withColumn(
             "rn",
             F.row_number().over(Window.partitionBy("va").orderBy("d", "vb")),

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC, bounded_window_key
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
@@ -124,7 +125,7 @@ def q_kcore(spark: SparkSession, d: str):
     of the shrinking edge set — no global structure; the edge set is
     bucket-scoped (never corpus-quadratic), and rounds is a fixed
     constant, not data-dependent driver control flow."""
-    edges = _sim_edges_spark(spark, d).persist()
+    edges = track(_sim_edges_spark(spark, d).persist())
     cur = edges
     for _ in range(_KCORE_ROUNDS):
         ends = cur.select(F.col("a").alias("node")).unionAll(
@@ -231,7 +232,7 @@ def q_mutual_best(spark: SparkSession, d: str):
         )
     )
     w = Window.partitionBy("va").orderBy(F.col("cos").desc(), "vb")
-    best = (
+    best = track(
         sims.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("va", "vb", "cos")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
@@ -352,7 +353,7 @@ def q_link_predict(spark: SparkSession, d: str):
     no global sort materialises."""
     from direct_kafka_stream_spark.operators.analytics22 import _sim_edges_spark
 
-    e = _sim_edges_spark(spark, d).persist()
+    e = track(_sim_edges_spark(spark, d).persist())
     und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )

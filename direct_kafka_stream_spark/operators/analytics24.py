@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
@@ -291,7 +292,7 @@ def q_modularity(spark: SparkSession, d: str):
     from direct_kafka_stream_spark.operators.analytics22 import _sim_edges_spark
     from direct_kafka_stream_spark.operators.llm import propagate_min_labels
 
-    e = _sim_edges_spark(spark, d).persist()
+    e = track(_sim_edges_spark(spark, d).persist())
     und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )

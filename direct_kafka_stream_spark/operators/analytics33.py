@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import (
     DEC,
     bounded_window_key,
@@ -321,7 +322,7 @@ def kruskal_wallis_stat(ev):
         .groupBy("v", "g", "bin")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    vals = vals.persist()
+    vals = track(vals.persist())
     vtot = vals.groupBy("v", "bin").agg(F.sum("c").alias("t"))
     bins = vtot.groupBy("bin").agg(F.sum("t").alias("bt"))
     wbin = (

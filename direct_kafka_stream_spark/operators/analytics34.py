@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import dsum_sql
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
@@ -310,7 +311,7 @@ def textrank_on(docs):
             F.filter(F.split("text", " "), lambda x: x != "")
         ).alias("pos", "w"),
     )
-    cw = (
+    cw = track(
         words.select(
             "doc_id",
             F.floor(F.col("pos") / _TR_CHUNK).cast("bigint").alias("c"),
@@ -319,7 +320,7 @@ def textrank_on(docs):
         .distinct()
         .persist()
     )
-    sz = cw.groupBy("doc_id", "c").agg(F.count(F.lit(1)).alias("n")).persist()
+    sz = track(cw.groupBy("doc_id", "c").agg(F.count(F.lit(1)).alias("n")).persist())
     a, b = cw.alias("a"), cw.alias("b")
     pr = (
         a.join(
@@ -363,7 +364,7 @@ def textrank_on(docs):
     wsum = ed.groupBy("doc_id", "src").agg(
         F.round(F.sum(F.col("w").cast(DEC)), 9).cast("double").alias("ws")
     )
-    nw = (
+    nw = track(
         ed.join(wsum, ["doc_id", "src"])
         .select("doc_id", "src", "dst", (F.col("w") / F.col("ws")).alias("nw"))
         .persist()

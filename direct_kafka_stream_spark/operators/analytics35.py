@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import davg, davg_sql
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
@@ -89,7 +90,7 @@ def friedman_stat(events):
     cell = events.groupBy(
         F.col("ts").cast("date").alias("day"), "event_type"
     ).agg(davg(F.col("value")).alias("m"))
-    cell = cell.persist()
+    cell = track(cell.persist())
     complete = (
         cell.groupBy("day")
         .agg(F.count(F.lit(1)).alias("kk"))
@@ -239,7 +240,7 @@ def propensity_strata(events):
             / F.count(F.lit(1))
         ).alias("y"),
     )
-    u = u.persist()
+    u = track(u.persist())
     by_clicks = u.groupBy("clicks").agg(F.count(F.lit(1)).alias("cnt"))
     wsweep = (
         Window.partitionBy(bounded_window_key("clicks"))
@@ -435,12 +436,12 @@ def logrank_from_durations(durations):
     property-tested against a brute-force hand computation in
     tests/test_properties.py."""
     DECS = "decimal(38,10)"
-    durations = durations.persist()
+    durations = track(durations.persist())
     cell = durations.groupBy("t", "g").agg(
         F.sum("ev").cast("bigint").alias("d"),
         F.count(F.lit(1)).cast("bigint").alias("leave_"),
     )
-    cell = cell.persist()
+    cell = track(cell.persist())
     totals = durations.groupBy("g").agg(F.count(F.lit(1)).alias("n_tot"))
     # The at-risk count for group g must be evaluated at EVERY pooled
     # event time, not only where g has its own (t, g) cell — otherwise

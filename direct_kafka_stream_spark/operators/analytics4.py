@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table, spread_scan
 from direct_kafka_stream_spark.registry import query
@@ -937,7 +938,7 @@ def q_triangle_count(spark: SparkSession, d: str):
         )
         .select(F.col("va").alias("a"), F.col("vb").alias("b"))
     )
-    edges = edges.persist()
+    edges = track(edges.persist())
     wedges = edges.alias("e1").join(
         edges.alias("e2"), F.col("e2.a") == F.col("e1.b")
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import (
     davg_sql,
     dsum,
@@ -354,7 +355,7 @@ def chi2_stat(e):
     obs = bucketed.groupBy("event_type", "vbucket").agg(
         F.count(F.lit(1)).alias("o")
     )
-    obs = obs.persist()
+    obs = track(obs.persist())
     rt = obs.groupBy("event_type").agg(F.sum("o").alias("r"))
     ct = obs.groupBy("vbucket").agg(F.sum("o").alias("c"))
     n = obs.agg(F.sum("o").alias("n"))

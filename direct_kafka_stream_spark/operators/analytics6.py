@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key, dsum, dsum_sql
 from direct_kafka_stream_spark.io import load_table, spread_scan
 from direct_kafka_stream_spark.registry import query
@@ -68,7 +69,7 @@ def q_assoc_rules(spark: SparkSession, d: str):
     integer counts — bit-identical division on both engines."""
     e = load_table(spark, d, "events")
     baskets = e.select("user_id", "event_type").distinct()
-    baskets = baskets.persist()
+    baskets = track(baskets.persist())
     n = baskets.agg(F.countDistinct("user_id").alias("n_users"))
     item = baskets.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_item"))
     a = baskets.alias("a")
@@ -421,7 +422,7 @@ def q_km_survival(spark: SparkSession, d: str):
             ),
         )
     )
-    durations = durations.persist()
+    durations = track(durations.persist())
     n_total = durations.agg(F.count(F.lit(1)).alias("n_total"))
     per_t = durations.groupBy("t").agg(
         F.sum("converted").alias("d_events"),

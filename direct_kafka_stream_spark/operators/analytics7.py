@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key, davg_sql, dsum, dsum_sql
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
@@ -182,7 +183,7 @@ def dau_mau_report(e):
     ud = e.select(
         "user_id", F.date_trunc("day", "ts").cast("date").alias("day")
     ).distinct()
-    ud = ud.persist()
+    ud = track(ud.persist())
     dau = ud.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     coverage = ud.select(
         "user_id",
@@ -301,7 +302,7 @@ def q_seasonal_index(spark: SparkSession, d: str):
     daily = e.groupBy(
         F.date_trunc("day", "ts").cast("date").alias("day")
     ).agg(dsum("value").alias("x"))
-    daily = daily.persist()
+    daily = track(daily.persist())
     overall = daily.agg(
         (dsum("x") / F.count(F.lit(1))).alias("mu")
     )

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.io import load_table, spread_scan
 from direct_kafka_stream_spark.registry import query
 
@@ -220,7 +221,7 @@ def q_cms_heavy_hitters(spark: SparkSession, d: str):
 
     docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
     words = docs.select(F.explode(_tokens()).alias("word"))
-    words = words.persist()
+    words = track(words.persist())
     salts = spark.range(_CMS_D).select(F.col("id").cast("int").alias("s"))
     bucket = (
         F.conv(

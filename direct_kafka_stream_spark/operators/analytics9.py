@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key, dsum, dsum_sql
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
@@ -181,7 +182,7 @@ def q_jsd(spark: SparkSession, d: str):
         F.col("source").isin("src0", "src1")
     )
     words = docs.select("source", F.explode(_tokens()).alias("word"))
-    words = words.persist()
+    words = track(words.persist())
     vocab = (
         words.groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -287,7 +288,7 @@ def q_dedup_cross_source(spark: SparkSession, d: str):
     from direct_kafka_stream_spark.operators.llm2 import decon_gram_stream
 
     grams = decon_gram_stream(load_table(spark, d, "documents")).distinct()
-    grams = grams.persist()
+    grams = track(grams.persist())
     rare = (
         grams.groupBy("gh")
         .agg(F.countDistinct("doc_id").alias("df"))

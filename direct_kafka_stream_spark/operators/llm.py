@@ -26,6 +26,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.io import load_table, spread_scan
 from direct_kafka_stream_spark.registry import query
 
@@ -48,11 +49,9 @@ def _materialized(df: DataFrame) -> DataFrame:
     unpersists here; every persist is tracked in ``caching`` and freed
     by the registry wrapper when the NEXT query starts — sequential
     sweeps pin at most one query's intermediates."""
-    from direct_kafka_stream_spark.caching import track
-
-    df = df.persist()
+    df = track(df.persist())
     df.count()
-    return track(df)
+    return df
 
 
 def _tokens(col: str = "text") -> Column:
@@ -1102,8 +1101,6 @@ def q_sim_ivf(spark: SparkSession, d: str):
         .filter(F.col("rn") == 1)
         .select("vec_id", "cid")
     )
-    from direct_kafka_stream_spark.caching import track
-
     assign = track(assign.persist())
     qc = assign.filter(F.col("vec_id") == 0).select(F.col("cid").alias("qcid"))
     bucket = assign.join(F.broadcast(qc), assign.cid == qc.qcid).filter(

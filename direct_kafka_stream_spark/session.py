@@ -36,9 +36,23 @@ _RUNTIME_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+# Derived per session in tune_session, not a fixed value.
+_LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def session_cores(spark: SparkSession) -> int:
+    """The session's real task slots (``defaultParallelism``) — a
+    driver may hand us a local[4] session on a 32-CPU host. Falls back
+    to ``default_parallelism()`` where no SparkContext is reachable
+    (Spark Connect)."""
+    try:
+        return spark.sparkContext.defaultParallelism
+    except Exception:
+        return default_parallelism()
 
 
 def _env_flag(name: str) -> bool:
@@ -66,8 +80,18 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     Safe to call repeatedly; used at the top of every registered query
     so correctness does not depend on who built the SparkSession.
+
+    File-listing width follows the session's cores: past Spark's
+    32-path threshold a listing job (a file-stream batch over many new
+    files, or a multi-path read) runs one task per path under the
+    10,000 default, each task deserializing a full Hadoop
+    Configuration. Capping it at the task slots keeps listing
+    distributed — on a cluster it is still as wide as the cluster —
+    without paying one task per path.
     """
-    for k, v in _RUNTIME_CONF.items():
+    confs = dict(_RUNTIME_CONF)
+    confs[_LISTING_PARALLELISM] = str(session_cores(spark))
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:

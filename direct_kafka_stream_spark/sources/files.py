@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from direct_kafka_stream_spark.session import tune_session
+
 # Stateful-stream state store configuration, shared by the streaming
 # exhibits (operators/analytics38.py) and the standalone probes
 # (scripts/stream_state_probe.py): the provider swap that trades a
@@ -30,6 +32,11 @@ def file_stream(
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
+    """Stream the files landing under ``path``. Tunes the session first:
+    a streaming query clones its session at ``start()``, so a session
+    built by someone else must carry the engine confs (the file-listing
+    width above all) before the query is started."""
+    tune_session(spark)
     reader = spark.readStream.format(fmt).schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -6,12 +6,14 @@ bench run. No SparkSession involved."""
 
 from __future__ import annotations
 
+import json
 import pathlib
 import sys
+from types import SimpleNamespace
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from bench import adjudicate_sweeps, sweep_total
+from bench import adjudicate_sweeps, artifact_identity, prior_quiet_mins, sweep_total
 
 
 def test_agreeing_sweeps_no_extra_run():
@@ -92,3 +94,34 @@ def test_union_of_keys_across_sweeps():
     times, violated, _ = adjudicate_sweeps([s1, s2], extra_sweep=None)
     assert not violated  # totals 3.0 vs 3.4 — inside the band
     assert times == {"qa": 1.0, "qb": 0.5, "qc": 1.8}
+
+
+def test_artifact_records_cores_spark_version_and_sha(tmp_path):
+    """An artifact states the session's real core count, the Spark
+    version and the git sha (None outside a git checkout)."""
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=8), version="4.1.2"
+    )
+    assert artifact_identity(spark, tmp_path) == {
+        "cpus": 8,
+        "spark_version": "4.1.2",
+        "git_sha": None,
+    }
+    src = (pathlib.Path(__file__).resolve().parent.parent / "bench.py").read_text()
+    assert "**identity," in src  # spread into the written payload
+
+
+def test_quiet_window_prior_keyed_by_sf_and_cpus(tmp_path):
+    """The quiet-window lookup takes the newest artifact at the same sf
+    AND core count; an artifact without a core count never matches."""
+
+    def write(rnd, **fields):
+        (tmp_path / f"BENCH_FULL_r{rnd:02d}.json").write_text(json.dumps(fields))
+
+    write(11, sf=0.1, cpus=32, queries={"qa": 1.0})
+    write(12, sf=0.1, cpus=8, queries={"qa": 4.0})
+    write(13, sf=0.1, queries={"qa": 9.0})  # legacy: no core count
+    write(14, sf=0.01, cpus=32, queries={"qa": 0.1})
+    assert prior_quiet_mins(tmp_path, 0.1, 32) == {"qa": 1.0}
+    assert prior_quiet_mins(tmp_path, 0.1, 8) == {"qa": 4.0}
+    assert prior_quiet_mins(tmp_path, 0.1, 4) == {}

@@ -8,9 +8,12 @@ of a znode).
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -180,6 +183,91 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     q = pipeline.run_to_parquet(stream(), str(sink), str(ckpt))
     _await(q)
     assert spark.read.parquet(str(sink)).count() == 1000  # idempotent restart
+
+
+def _land_event_file(src, k: int, per_file: int = 10) -> set[int]:
+    """Atomically land event file ``k``: ``per_file`` fresh ids plus a
+    redelivery of the previous file's last id (at-least-once input).
+    Each id's ``ts`` is a function of the id, so a redelivered event is
+    the same event. Returns the file's fresh ids."""
+    fresh = list(range(k * per_file, (k + 1) * per_file))
+    ids = fresh + ([k * per_file - 1] if k else [])
+    n = len(ids)
+    table = pa.table(
+        {
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array(
+                [1_700_000_000_000_000 + i * 1000 for i in ids],
+                pa.timestamp("us", tz="UTC"),
+            ),
+            "user_id": pa.array([i % 7 for i in ids], pa.int64()),
+            "event_type": ["view"] * n,
+            "value": pa.array([float(i) for i in ids]),
+            "props": ["{}"] * n,
+        }
+    )
+    staged = src.parent / f"staged-{k}.parquet"
+    pq.write_table(table, staged)
+    os.rename(staged, src / f"events-{k:04d}.parquet")
+    return set(fresh)
+
+
+def test_restart_over_backlog_lists_files_within_session_cores(spark, tmp_path):
+    """The paper's outage scenario: more than 32 files (Spark's
+    parallel-listing threshold) land while a checkpointed file_stream →
+    dedup_streaming pipeline is stopped; the restart drains them
+    exactly once, and no stage of any job the restart runs is wider
+    than the session's task slots — in particular the listing of the
+    backlog runs at the session's cores, not one task per file."""
+    from direct_kafka_stream_spark.session import _LISTING_PARALLELISM, tune_session
+
+    src, ckpt = tmp_path / "landing", str(tmp_path / "ckpt")
+    src.mkdir()
+    cores = spark.sparkContext.defaultParallelism
+    # a whole number of files per core, so the backlog scan packs into
+    # exactly `cores` partitions
+    backlog = cores * (32 // cores + 1)
+    committed: dict[int, list[int]] = {}  # batch id -> event ids
+
+    def sink(batch_df, batch_id):
+        committed[batch_id] = [r.event_id for r in batch_df.select("event_id").collect()]
+
+    def run():
+        # a session built by someone else: file_stream must derive the
+        # listing width itself before the query clones the session
+        spark.conf.unset(_LISTING_PARALLELISM)
+        events = file_stream(spark, str(src), events_schema())
+        q = pipeline.run_foreach_batch(transforms.dedup_streaming(events), sink, ckpt)
+        _await(q)
+        return q
+
+    # The stateful shuffle's width is the session's shuffle partitions
+    # (8 in the test session), fixed in the checkpoint by the first run;
+    # pin it to the cores so every stage is held to the same bound.
+    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(cores))
+    try:
+        expected = set().union(*(_land_event_file(src, k) for k in range(2)))
+        run()
+        for k in range(2, 2 + backlog):
+            expected |= _land_event_file(src, k)
+        q = run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+        tune_session(spark)
+
+    got = [i for ids in committed.values() for i in ids]
+    assert len(got) == len(set(got)) == len(expected)
+    assert set(got) == expected
+
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    assert jobs, "the restart ran no job under its group"
+    widths = {
+        j: [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds]
+        for j in jobs
+    }
+    assert max(max(w) for w in widths.values()) <= cores, widths
 
 
 def test_stream_static_join(spark, events_dir, tmp_path):
