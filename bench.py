@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
 from direct_kafka_stream_spark import QUERIES, get_session
-from direct_kafka_stream_spark.session import session_cores
+from direct_kafka_stream_spark.session import jvm_cpus, session_cores
 
 
 def materialize(df) -> None:
@@ -92,9 +92,11 @@ def git_sha(repo: pathlib.Path) -> str | None:
 
 def artifact_identity(spark, repo: pathlib.Path) -> dict:
     """What a bench artifact must record to be read against another:
-    the session's real task slots, the Spark version and the code."""
+    the session's real task slots, the processor count its JVM sized
+    its JIT and GC threads by, the Spark version and the code."""
     return {
         "cpus": session_cores(spark),
+        "jvm_cpus": jvm_cpus(spark),
         "spark_version": spark.version,
         "git_sha": git_sha(repo),
     }

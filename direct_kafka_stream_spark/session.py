@@ -9,11 +9,19 @@ than the 200 default (which would produce hundreds of tiny partitions
 at test scale and too few at 100 TB — at cluster scale this knob is
 expected to be set per-deployment, or left to AQE's
 ``coalescePartitions`` with a high initial partition number).
+
+Under the reference's ``local[*]`` the JVM and the task slots always
+had the same cores. ``get_session`` builds ``local[SPARK_GRAFT_CPUS]``
+instead, so it also tells the driver JVM that budget
+(``-XX:ActiveProcessorCount``, see ``java_options``): the JVM then
+sizes its JIT-compiler and GC threads to the session, not to the host.
+The count is derived, not a knob.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -41,7 +49,58 @@ _LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """Task slots of the ``local[N]`` master: ``SPARK_GRAFT_CPUS``, or
+    the host's CPUs when it is unset or empty."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    if not raw:
+        return os.cpu_count() or 8
+    if not raw.isdecimal() or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return int(raw)
+
+
+def _usable_cpus() -> int:
+    """CPUs this process may run on (its affinity mask), which a
+    container or ``taskset`` can make smaller than the host's."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+)(?:,\s*\d+)?\])?")
+
+
+def java_options(master: str, usable_cpus: int) -> dict[str, str]:
+    """JVM options for a session on ``master``.
+
+    A local master's JVM is told its processor budget: the task slots,
+    clamped to the CPUs the process may run on. HotSpot sizes its JIT
+    compiler and GC thread pools from that count, and otherwise sizes
+    them for the whole host while the session uses only some of its
+    cores. ``local[*]`` already spans the host, and a cluster's
+    executors size themselves, so neither gets the flag.
+    """
+    tz = "-Duser.timezone=UTC"
+    driver = tz
+    m = _LOCAL_MASTER.fullmatch(master.strip())
+    if m:
+        slots = int(m.group(1) or 1)
+        driver += f" -XX:ActiveProcessorCount={min(slots, usable_cpus)}"
+    return {
+        "spark.driver.extraJavaOptions": driver,
+        "spark.executor.extraJavaOptions": tz,
+    }
+
+
+def jvm_cpus(spark: SparkSession) -> int | None:
+    """The session JVM's own processor count
+    (``Runtime.availableProcessors``); None where no JVM is reachable
+    (Spark Connect)."""
+    try:
+        return spark.sparkContext._jvm.java.lang.Runtime.getRuntime().availableProcessors()
+    except Exception:
+        return None
 
 
 def session_cores(spark: SparkSession) -> int:
@@ -127,10 +186,8 @@ def get_session(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),
         )
-        .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
-        .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
-    for k, v in _RUNTIME_CONF.items():
+    for k, v in {**java_options(master, _usable_cpus()), **_RUNTIME_CONF}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

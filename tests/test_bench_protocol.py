@@ -97,13 +97,19 @@ def test_union_of_keys_across_sweeps():
 
 
 def test_artifact_records_cores_spark_version_and_sha(tmp_path):
-    """An artifact states the session's real core count, the Spark
-    version and the git sha (None outside a git checkout)."""
+    """An artifact states the session's real core count, its JVM's
+    processor count, the Spark version and the git sha (None outside a
+    git checkout)."""
+    runtime = SimpleNamespace(availableProcessors=lambda: 6)
+    jvm = SimpleNamespace(
+        java=SimpleNamespace(lang=SimpleNamespace(Runtime=SimpleNamespace(getRuntime=lambda: runtime)))
+    )
     spark = SimpleNamespace(
-        sparkContext=SimpleNamespace(defaultParallelism=8), version="4.1.2"
+        sparkContext=SimpleNamespace(defaultParallelism=8, _jvm=jvm), version="4.1.2"
     )
     assert artifact_identity(spark, tmp_path) == {
         "cpus": 8,
+        "jvm_cpus": 6,
         "spark_version": "4.1.2",
         "git_sha": None,
     }

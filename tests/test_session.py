@@ -1,0 +1,90 @@
+"""Session sizing: the ``SPARK_GRAFT_CPUS`` parser, the JVM option
+builder, and a JVM built with fewer slots than the host has."""
+
+from __future__ import annotations
+
+import json
+import os
+import pathlib
+import subprocess
+import sys
+import textwrap
+
+import pytest
+
+from direct_kafka_stream_spark.session import _usable_cpus, default_parallelism, java_options
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+TZ = "-Duser.timezone=UTC"
+
+
+def test_empty_cpus_env_means_host_cpus(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert default_parallelism() == (os.cpu_count() or 8)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", " 3 ")
+    assert default_parallelism() == 3
+
+
+@pytest.mark.parametrize("raw", ["0", "-2", "two", "1.5"])
+def test_bad_cpus_env_names_the_variable(monkeypatch, raw):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        default_parallelism()
+
+
+@pytest.mark.parametrize(
+    "master, usable, n",
+    [
+        ("local[2]", 4, 2),
+        ("local[3]", 8, 3),
+        ("local[64]", 4, 4),  # clamped: never more than the process may use
+        ("local[4, 2]", 16, 4),
+        ("local", 4, 1),
+    ],
+)
+def test_local_master_tells_the_jvm_its_slots(master, usable, n):
+    opts = java_options(master, usable)
+    assert opts["spark.driver.extraJavaOptions"] == f"{TZ} -XX:ActiveProcessorCount={n}"
+    assert opts["spark.executor.extraJavaOptions"] == TZ
+
+
+@pytest.mark.parametrize("master", ["local[*]", "spark://host:7077", "yarn", "local-cluster[2,1,1024]"])
+def test_other_masters_get_no_processor_count(master):
+    assert java_options(master, 4) == {
+        "spark.driver.extraJavaOptions": TZ,
+        "spark.executor.extraJavaOptions": TZ,
+    }
+
+
+def test_jvm_processor_count_matches_session_slots(tmp_path):
+    """A session on half the host's CPUs: the JVM (which sizes its JIT
+    and GC threads from its processor count) sees the session's slots,
+    not the host's."""
+    host = _usable_cpus()
+    if host < 4:
+        pytest.skip("needs at least 4 CPUs to run on half of them")
+    script = textwrap.dedent(
+        """
+        import json
+        from direct_kafka_stream_spark.session import get_session, jvm_cpus
+        spark = get_session("jvm-cpus")
+        print(json.dumps([jvm_cpus(spark), spark.sparkContext.defaultParallelism]))
+        spark.stop()
+        """
+    )
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CPUS=str(host // 2),
+        SPARK_GRAFT_DRIVER_MEM="512m",
+        SPARK_GRAFT_WAREHOUSE=str(tmp_path / "warehouse"),
+        PYTHONPATH=os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")])),
+    )
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    jvm, slots = json.loads(out.stdout.strip().splitlines()[-1])
+    assert slots == host // 2
+    assert jvm == slots
