@@ -119,10 +119,15 @@ def _ordered_names() -> list[str]:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Callables are session-safe but not mutually concurrent: SQL-form
+    Each call opens a query scope on the calling thread (``caching``):
+    the query's persists and, under the scale flag, its scale confs
+    last until the thread starts its next query or calls
+    ``clear_materialized()``. Threads do not free each other's caches,
+    so queries may run concurrently on one session; but SQL-form
     queries register fixture temp views by bare table name (matching
-    the oracle's view names), so run queries sequentially within one
-    SparkSession — which is the driver's execution model."""
+    the oracle's view names), so concurrent threads must read the same
+    ``sf_dir``, and under the scale flag they share the session's confs
+    (give each thread ``spark.newSession()``)."""
     return {name: QUERIES[name].spark for name in _ordered_names()}
 
 

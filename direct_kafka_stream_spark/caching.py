@@ -1,43 +1,78 @@
-"""Session-wide ledger of eagerly-persisted query intermediates.
+"""Query scopes: what a registered query leaves on its session, and
+when it is released.
 
-Operators persist an intermediate when the downstream DAG references it
-more than once (see ``operators.llm._materialized``) — but the cache
-must outlive the query callable, because callers collect AFTER the
-callable returns. So nothing can unpersist inside the query itself.
-Instead every persist is tracked here, and the registry wrapper frees
-the PREVIOUS query's caches when the NEXT query starts: in the
-sequential execution model of the verify driver, bench.py, and the test
-suite, at most one query's intermediates are ever pinned, instead of
-accumulating across a 150+-query sweep until LRU eviction kicks in.
+A query's build may persist intermediates (``track``) and, under the
+scale flag, overwrite session confs (its ``scale_confs``). Both must
+outlive the query callable: its DataFrame is lazy, the caller collects
+after it returns, and AQE/broadcast confs are read at execution time.
 
-Long-running services embedding the registry should call
-``clear_materialized()`` whenever a query's results have been fully
-consumed.
+So each thread has at most one open scope. The registry wrapper opens
+it when a query starts (``open_scope``); it closes when the next
+registered query starts on the same thread, or when that thread calls
+``clear_materialized()``. Closing unpersists what the query tracked and
+restores the conf values it overwrote. Threads never close each
+other's scopes, so several threads may run queries on one session.
+A thread that does not go on to another query (a service worker, a
+foreachBatch callback) calls ``clear_materialized()`` once the result
+is consumed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import threading
+from dataclasses import dataclass, field
 
-_LIVE: list[DataFrame] = []
+from pyspark.sql import DataFrame, SparkSession
+
+
+@dataclass
+class _Scope:
+    frames: list[DataFrame] = field(default_factory=list)
+    spark: SparkSession | None = None
+    saved: dict[str, str | None] = field(default_factory=dict)
+
+
+# thread id -> that thread's open scope
+_LIVE: dict[int, _Scope] = {}
 
 
 def track(df: DataFrame) -> DataFrame:
-    """Record an already-persisted DataFrame for later cleanup."""
-    _LIVE.append(df)
+    """Record an already-persisted DataFrame in this thread's scope."""
+    _LIVE.setdefault(threading.get_ident(), _Scope()).frames.append(df)
     return df
 
 
+def open_scope(spark: SparkSession, confs: dict[str, str]) -> None:
+    """Close this thread's scope and open a new one that sets ``confs``
+    on ``spark``. Closing sets each key back to what
+    ``spark.conf.get(k, None)`` read here: a key that read as None was
+    never set and is unset again, which leaves its default in force."""
+    clear_materialized()
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    _LIVE[threading.get_ident()] = _Scope(spark=spark, saved=saved)
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+
+
 def clear_materialized() -> int:
-    """Unpersist every tracked cache; returns how many were freed.
-    Safe to call at any time — unpersisting a DataFrame whose session
-    is gone is swallowed."""
+    """Close this thread's scope; returns how many tracked frames were
+    unpersisted. Errors from a stopped session are swallowed."""
+    scope = _LIVE.pop(threading.get_ident(), None)
+    if scope is None:
+        return 0
     n = 0
-    while _LIVE:
-        df = _LIVE.pop()
+    for df in scope.frames:
         try:
             df.unpersist()
             n += 1
+        except Exception:
+            pass
+    for k, v in scope.saved.items():
+        try:
+            if v is None:
+                scope.spark.conf.unset(k)
+            else:
+                scope.spark.conf.set(k, v)
         except Exception:
             pass
     return n

@@ -110,8 +110,8 @@ def q_containment_dedup(spark: SparkSession, d: str):
     docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
     from direct_kafka_stream_spark.caching import track
 
-    # Round 13: persist RESTORED (tracked, freed when the next query
-    # starts). The round-12 stage-reuse variant won a warm interleaved
+    # Round 13: persist RESTORED (tracked, freed when the query's scope
+    # closes). The round-12 stage-reuse variant won a warm interleaved
     # A/B (0.67x) but lost badly in every cold adjudicated run at 32
     # cores (driver 3.37 s -> 7.28 s; the 8-core run stayed at 3.35 s):
     # the verify-join stage re-derived the candidate expansion from the

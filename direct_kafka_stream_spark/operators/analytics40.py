@@ -113,8 +113,8 @@ def q_multimodal_codec(spark: SparkSession, d: str):
 
     # three modality pipelines read this frame — persist so the encode
     # pass runs once, not once per branch (bounded: |docs|/13 rows of
-    # ~700 B media each); tracked so the registry wrapper frees it
-    # when the next query starts
+    # ~700 B media each); tracked so it is freed when the query's
+    # scope closes (caching)
     from direct_kafka_stream_spark.caching import track
 
     media = track(

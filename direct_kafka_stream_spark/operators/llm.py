@@ -46,9 +46,10 @@ def _materialized(df: DataFrame) -> DataFrame:
 
     Lifetime note: the cache must outlive the returned DataFrame (the
     caller collects AFTER the query callable returns), so nothing
-    unpersists here; every persist is tracked in ``caching`` and freed
-    by the registry wrapper when the NEXT query starts — sequential
-    sweeps pin at most one query's intermediates."""
+    unpersists here; the persist is tracked in the calling thread's
+    query scope (``caching``) and freed when that scope closes — when
+    the thread starts its next query, calls ``clear_materialized()``,
+    or (inside ``run_foreach_batch``) finishes the micro-batch."""
     df = track(df.persist())
     df.count()
     return df

@@ -10,12 +10,11 @@ driver, the pytest suite, and bench.py all iterate this one dict.
 from __future__ import annotations
 
 from collections.abc import Callable
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from direct_kafka_stream_spark.caching import clear_materialized
+from direct_kafka_stream_spark.caching import open_scope
 from direct_kafka_stream_spark.session import scale_flag_set, tune_session
 
 
@@ -48,35 +47,19 @@ def query(
     runtime session tuning first so results don't depend on the caller's
     session configuration (timezone, Arrow, NTZ inference).
 
-    ``scale_confs`` ships a query's probe-passed 100x session knobs with
-    the query itself, so a cluster job gets the working plan without
-    reading SCALE.md: when the scale flag is set (SPARK_GRAFT_SCALE),
-    the wrapper applies them before building the plan.
-
-    CONTRACT — the confs PERSIST on the session after the wrapper
-    returns. The wrapper cannot restore them itself: the DataFrame it
-    returns is lazy, and AQE/broadcast confs are read at EXECUTION
-    time, so restoring before the caller materializes would defeat the
-    hint. This is the per-job model of a real cluster submit (one
-    query, one session, confs die with the job). Any consumer that runs
-    SEVERAL registered queries in ONE session under the scale flag WILL
-    cross-tune (e.g. q_containment_dedup's 256MB broadcast threshold
-    leaking into later joins) unless it wraps each query in
-    ``scale_conf_guard`` below — which is exactly what
-    scripts/scale_probe.py does. bench.py and the correctness driver
-    never set the flag, so they are unaffected.
+    It then opens the query's scope on this thread (``caching``), which
+    closes the thread's previous query's scope. ``scale_confs`` ships a
+    query's probe-passed 100x session knobs with the query itself, so a
+    cluster job gets the working plan without reading SCALE.md: when
+    the scale flag is set (SPARK_GRAFT_SCALE), the scope applies them
+    and restores the overwritten values when it closes.
     """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             tune_session(spark)
-            if scale_confs and scale_flag_set():
-                for k, v in scale_confs.items():
-                    spark.conf.set(k, v)
-            # Free the previous query's persisted intermediates (the
-            # sequential-execution contract: by the time this query is
-            # invoked, the previous query's result has been consumed).
-            clear_materialized()
+            hints = dict(scale_confs) if scale_confs and scale_flag_set() else {}
+            open_scope(spark, hints)
             return fn(spark, sf_dir)
 
         wrapped.__name__ = name
@@ -95,35 +78,3 @@ def query(
 
     return deco
 
-
-@contextmanager
-def scale_conf_guard(spark: SparkSession, name: str):
-    """Snapshot/restore a query's ``scale_confs`` keys around one
-    materialization, so a multi-query scale JOB (several registered
-    queries in one session under SPARK_GRAFT_SCALE) doesn't cross-tune.
-
-    Usage::
-
-        with scale_conf_guard(spark, "q_containment_dedup"):
-            df = QUERIES["q_containment_dedup"].spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-
-    Restore semantics: ``spark.conf.get(k, None)`` returns the key's
-    ConfigEntry DEFAULT (not None) for Spark-defined keys that were
-    never explicitly set, so restore re-pins that default explicitly —
-    value-equivalent to unset. Only a key with no ConfigEntry at all
-    snapshots as None and is truly unset on exit.
-    """
-    hints = dict(QUERIES[name].scale_confs) if name in QUERIES else {}
-    saved = {k: spark.conf.get(k, None) for k in hints}
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)

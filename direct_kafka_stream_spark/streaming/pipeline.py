@@ -20,6 +20,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from direct_kafka_stream_spark.caching import clear_materialized
+
 
 def run_to_memory(
     df: DataFrame,
@@ -72,8 +74,16 @@ def run_foreach_batch(
     """foreachBatch — the per-micro-batch DataFrame hook, successor of
     the reference's foreachRDD processing hook (KDS:43-51). The batch_id
     passed to ``fn`` is stable across retries, enabling idempotent
-    writes to transactional stores."""
-    w = df.writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint_dir)
+    writes to transactional stores. Each batch is one query scope
+    (``caching``): what ``fn`` persisted is freed once it returns."""
+
+    def batch(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            fn(batch_df, batch_id)
+        finally:
+            clear_materialized()
+
+    w = df.writeStream.foreachBatch(batch).option("checkpointLocation", checkpoint_dir)
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()

@@ -79,6 +79,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from direct_kafka_stream_spark import get_session, load_table
+from direct_kafka_stream_spark.caching import clear_materialized
 from direct_kafka_stream_spark.exprs import dsum
 from direct_kafka_stream_spark.io import TABLES
 
@@ -331,6 +332,9 @@ def run_queries(
     import os
 
     os.environ.setdefault("SPARK_GRAFT_UI", "1")
+    # Close the caller's open query scope now, so its conf restore does
+    # not land on top of the probe session's set-up.
+    clear_materialized()
     # The probe IS the scale path: set the scale flag so the registry
     # wrapper applies each query's probe-passed `scale_confs` (SCALE.md
     # knobs shipped with the query — a 100x run needs NO --conf flags).
@@ -349,6 +353,7 @@ def run_queries(
             sf_dir, names, timeout_s, disk_floor_gb, extra_conf, use_scale_confs
         )
     finally:
+        clear_materialized()
         if _prior_scale is None:
             os.environ.pop("SPARK_GRAFT_SCALE", None)
         else:
@@ -392,14 +397,10 @@ def _run_queries_inner(
     warm = "lineitem" if pathlib.Path(sf_dir, "lineitem.parquet").exists() else "documents"
     load_table(spark, sf_dir, warm).count()
     for name in names:
-        # snapshot this query's scale-conf keys so multi-query probes
-        # don't cross-tune: the registry wrapper sets them at plan-build
-        # time (per-job semantics on a cluster); here queries run back
-        # to back in ONE session, so restore after the timed runs
+        # the query's scope (caching) keeps its scale confs through the
+        # timed runs and the drain below, and restores them when the
+        # next query starts or when run_queries returns
         hints = dict(_REG[name].scale_confs) if name in _REG else {}
-        # get(k, None): a hint key with no Spark-defined default must
-        # snapshot as "was unset", not throw before the run
-        saved = {k: spark.conf.get(k, None) for k in hints}
         raws = []
         df = None
         shuffle = None
@@ -497,19 +498,6 @@ def _run_queries_inner(
             ),
             flush=True,
         )
-        # Restore pre-query values (the histogram drain above was the
-        # last execution under this query's hints). Note the snapshot
-        # semantics: for Spark-defined keys, spark.conf.get(k, None)
-        # returns the ConfigEntry DEFAULT (e.g. 64MB for
-        # advisoryPartitionSizeInBytes) rather than None, so restore
-        # re-pins that default explicitly — value-equivalent to unset.
-        # Only a key with no ConfigEntry snapshots as None and is
-        # truly unset here.
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def plan_only(sf_dir: str, names: list[str]) -> None:

@@ -8,9 +8,12 @@ from __future__ import annotations
 import pathlib
 import sys
 
+import pytest
+
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from direct_kafka_stream_spark import QUERIES
+from direct_kafka_stream_spark.caching import clear_materialized
 
 _HERE = pathlib.Path(__file__).resolve().parent.parent
 
@@ -33,8 +36,10 @@ def test_pair_generators_carry_probe_passed_confs():
 
 def test_scale_confs_applied_only_under_flag(monkeypatch, spark, sf_dir):
     """Flag unset: building the query leaves the session conf alone.
-    Flag set: the wrapper applies the query's hints at plan-build time."""
+    Flag set: the wrapper applies the query's hints at plan-build time,
+    and closing the query's scope takes them off again."""
     monkeypatch.delenv("SPARK_GRAFT_SCALE", raising=False)
+    clear_materialized()
     before = spark.conf.get("spark.sql.shuffle.partitions")
     QUERIES["q_setsim_prefix"].spark(spark, sf_dir)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
@@ -48,8 +53,8 @@ def test_scale_confs_applied_only_under_flag(monkeypatch, spark, sf_dir):
             == "16m"
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        clear_materialized()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_scale_flag_env_parsing(monkeypatch):
@@ -140,38 +145,48 @@ def test_probe_run_restores_session_confs(monkeypatch, spark, capsys):
     for k, v in fixture_before.items():
         spark.conf.set(k, v)
 
-def test_scale_conf_guard_restores(monkeypatch, spark, sf_dir):
-    """registry.scale_conf_guard (the documented tool for multi-query
-    scale JOBS): hints applied inside the block persist through the
-    caller's materialization, then restore on exit — including the
-    re-pinned ConfigEntry default for keys that were never set."""
-    from direct_kafka_stream_spark.registry import scale_conf_guard
 
+def test_query_scope_restores_scale_confs(monkeypatch, spark, sf_dir, tmp_path):
+    """Under the scale flag a query's hints stay on the session through
+    the caller's materialization, and its scope restores the prior
+    values when it closes: when the thread's next query starts, on
+    ``clear_materialized()``, and after a build that raised. A
+    Spark-defined key that was never set is left at its default."""
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     keys = (
         "spark.sql.shuffle.partitions",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        advisory,
         "spark.sql.autoBroadcastJoinThreshold",
     )
+    clear_materialized()
+    spark.conf.unset(advisory)
+    default_advisory = spark.conf.get(advisory)
     before = {k: spark.conf.get(k, None) for k in keys}
     monkeypatch.setenv("SPARK_GRAFT_SCALE", "1")
-    with scale_conf_guard(spark, "q_containment_dedup"):
-        df = QUERIES["q_containment_dedup"].spark(spark, "/root/testdata/sf0.001")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1024"
-        assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "268435456"
-        df.write.format("noop").mode("overwrite").save()
-    after = {k: spark.conf.get(k, None) for k in keys}
-    assert after == before
 
-    # exceptions still restore
-    try:
-        with scale_conf_guard(spark, "q_setsim_prefix"):
-            spark.conf.set("spark.sql.shuffle.partitions", "1024")
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before[
-        "spark.sql.shuffle.partitions"
-    ]
+    def assert_restored():
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+        assert spark.conf.get(advisory) == default_advisory
+
+    df = QUERIES["q_containment_dedup"].spark(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1024"
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "268435456"
+    assert spark.conf.get(advisory) == "16m"
+    QUERIES["q_scan"].spark(spark, sf_dir)
+    assert_restored()
+
+    QUERIES["q_containment_dedup"].spark(spark, sf_dir)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1024"
+    clear_materialized()
+    assert_restored()
+
+    with pytest.raises(Exception):
+        QUERIES["q_containment_dedup"].spark(spark, str(tmp_path / "missing"))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1024"
+    QUERIES["q_scan"].spark(spark, sf_dir)
+    assert_restored()
+    clear_materialized()
 
 
 def test_probe_run_restores_scale_env(monkeypatch, spark, capsys):

@@ -1662,13 +1662,7 @@ def test_incremental_curation_matches_batch_pipeline(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(tmp_path / "ckpt_cur"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await(q)
+    _await(pipeline.run_foreach_batch(stream, process, str(tmp_path / "ckpt_cur")))
     assert len(n_batches) == 3
 
     got = sorted(
