@@ -120,10 +120,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     Each call opens a query scope on the calling thread (``caching``):
-    the query's persists and, under the scale flag, its scale confs
-    last until the thread starts its next query or calls
-    ``clear_materialized()``. Threads do not free each other's caches,
-    so queries may run concurrently on one session; but SQL-form
+    everything the query leaves behind — persists, local checkpoints,
+    scratch directories, catalog tables and, under the scale flag, its
+    scale confs — lasts until the thread starts its next query or calls
+    ``clear_materialized()``. Threads do not release each other's
+    state, so queries may run concurrently on one session; but SQL-form
     queries register fixture temp views by bare table name (matching
     the oracle's view names), so concurrent threads must read the same
     ``sf_dir``, and under the scale flag they share the session's confs

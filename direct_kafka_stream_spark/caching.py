@@ -1,45 +1,107 @@
-"""Query scopes: what a registered query leaves on its session, and
-when it is released.
+"""Query scopes: everything a registered query leaves behind, and when
+it is released.
 
-A query's build may persist intermediates (``track``) and, under the
-scale flag, overwrite session confs (its ``scale_confs``). Both must
-outlive the query callable: its DataFrame is lazy, the caller collects
-after it returns, and AQE/broadcast confs are read at execution time.
+A query's build may leave state that must outlive the query callable:
+its DataFrame is lazy, the caller collects after it returns, and
+AQE/broadcast confs are read at execution time. The scope owns it all:
 
-So each thread has at most one open scope. The registry wrapper opens
-it when a query starts (``open_scope``); it closes when the next
+- frames it persisted or local-checkpointed (``track``);
+- directories it wrote to (``scratch_dir``);
+- anything else it registers a close action for (``on_close``), such
+  as catalog tables;
+- under the scale flag, the session confs it overwrote (``open_scope``).
+
+Each thread has at most one open scope. The registry wrapper opens it
+when a query starts (``open_scope``); it closes when the next
 registered query starts on the same thread, or when that thread calls
-``clear_materialized()``. Closing unpersists what the query tracked and
-restores the conf values it overwrote. Threads never close each
-other's scopes, so several threads may run queries on one session.
-A thread that does not go on to another query (a service worker, a
-foreachBatch callback) calls ``clear_materialized()`` once the result
-is consumed.
+``clear_materialized()``. Closing runs the scope's close actions in
+reverse order of acquisition. Threads never close each other's scopes,
+so several threads may run queries on one session. A thread that does
+not go on to another query (a service worker, a foreachBatch callback)
+calls ``clear_materialized()`` once the result is consumed.
+
+Scratch directories live under ``/tmp/dks_spark_scratch/<pid>``, which
+nothing sweeps while that process lives; the first ``scratch_root()``
+call in a process removes the roots that dead processes left behind.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import pathlib
+import shutil
 import threading
-from dataclasses import dataclass, field
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-@dataclass
-class _Scope:
-    frames: list[DataFrame] = field(default_factory=list)
-    spark: SparkSession | None = None
-    saved: dict[str, str | None] = field(default_factory=dict)
+_SCRATCH = pathlib.Path("/tmp/dks_spark_scratch")
 
 
-# thread id -> that thread's open scope
-_LIVE: dict[int, _Scope] = {}
+# thread id -> that thread's open scope: its close actions, run
+# last-in first-out. The flag marks a tracked frame's release, which
+# counts towards clear_materialized()'s result.
+_LIVE: dict[int, list[tuple[Callable[[], object], bool]]] = {}
+
+
+def _push(fn: Callable[[], object], is_frame: bool) -> None:
+    _LIVE.setdefault(threading.get_ident(), []).append((fn, is_frame))
+
+
+def on_close(fn: Callable[[], object]) -> None:
+    """Run ``fn`` when this thread's scope closes."""
+    _push(fn, False)
+
+
+def _release(df: DataFrame) -> None:
+    df.unpersist()
+    try:
+        # unpersist() leaves a local checkpoint's RDD pinned; its plan
+        # is a LogicalRDD over that RDD
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+    except Exception:
+        pass  # not a local checkpoint, or no JVM (Spark Connect)
 
 
 def track(df: DataFrame) -> DataFrame:
-    """Record an already-persisted DataFrame in this thread's scope."""
-    _LIVE.setdefault(threading.get_ident(), _Scope()).frames.append(df)
+    """Record an already-persisted or local-checkpointed DataFrame in
+    this thread's scope."""
+    _push(functools.partial(_release, df), True)
     return df
+
+
+@functools.cache
+def _sweep_dead_roots(base: pathlib.Path) -> None:
+    """Remove the ``<pid>`` roots under ``base`` whose process is dead;
+    cached, so it runs once per process. Other entries are left alone."""
+    try:
+        roots = [p for p in base.iterdir() if p.name.isdigit()]
+    except OSError:
+        return
+    for p in roots:
+        try:
+            os.kill(int(p.name), 0)
+        except ProcessLookupError:
+            shutil.rmtree(p, ignore_errors=True)
+        except OSError:
+            pass  # alive, but not ours (EPERM)
+
+
+def scratch_root() -> pathlib.Path:
+    """This process's scratch root."""
+    _sweep_dead_roots(_SCRATCH)
+    return _SCRATCH / str(os.getpid())
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh directory under this process's scratch root, removed
+    when this thread's scope closes."""
+    path = scratch_root() / f"{tag}_{uuid.uuid4().hex[:12]}"
+    path.mkdir(parents=True)
+    on_close(functools.partial(shutil.rmtree, path, ignore_errors=True))
+    return str(path)
 
 
 def open_scope(spark: SparkSession, confs: dict[str, str]) -> None:
@@ -48,31 +110,23 @@ def open_scope(spark: SparkSession, confs: dict[str, str]) -> None:
     ``spark.conf.get(k, None)`` read here: a key that read as None was
     never set and is unset again, which leaves its default in force."""
     clear_materialized()
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    _LIVE[threading.get_ident()] = _Scope(spark=spark, saved=saved)
     for k, v in confs.items():
+        old = spark.conf.get(k, None)
+        if old is None:
+            on_close(functools.partial(spark.conf.unset, k))
+        else:
+            on_close(functools.partial(spark.conf.set, k, old))
         spark.conf.set(k, v)
 
 
 def clear_materialized() -> int:
     """Close this thread's scope; returns how many tracked frames were
-    unpersisted. Errors from a stopped session are swallowed."""
-    scope = _LIVE.pop(threading.get_ident(), None)
-    if scope is None:
-        return 0
-    n = 0
-    for df in scope.frames:
+    released. Errors from a stopped session are swallowed."""
+    freed = 0
+    for fn, is_frame in reversed(_LIVE.pop(threading.get_ident(), [])):
         try:
-            df.unpersist()
-            n += 1
+            fn()
         except Exception:
-            pass
-    for k, v in scope.saved.items():
-        try:
-            if v is None:
-                scope.spark.conf.unset(k)
-            else:
-                scope.spark.conf.set(k, v)
-        except Exception:
-            pass
-    return n
+            continue
+        freed += is_frame
+    return freed

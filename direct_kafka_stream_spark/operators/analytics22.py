@@ -142,7 +142,7 @@ def q_kcore(spark: SparkSession, d: str):
             .join(keep.withColumnRenamed("node", "b"), "b")
             .select("a", "b")
         )
-        cur = cur.localCheckpoint(eager=False)
+        cur = track(cur.localCheckpoint(eager=False))
     ends = cur.select(F.col("a").alias("node")).unionAll(
         cur.select(F.col("b").alias("node"))
     )

@@ -11,72 +11,14 @@ processing hook is KafkaDirectStream.scala:43-51).
 
 from __future__ import annotations
 
-import pathlib
-import uuid
+from functools import partial
 
 from pyspark.sql import SparkSession, functions as F
 
+from direct_kafka_stream_spark.caching import on_close, scratch_dir
 from direct_kafka_stream_spark.exprs import dsum, dsum_sql
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
-
-# Scratch root for the operators that exercise write-then-read engine
-# paths (bucketed tables, partitioned layouts). Session-unique subdirs
-# avoid clashes between a concurrently-running driver and test suite.
-_SCRATCH = "/tmp/dks_spark_scratch"
-
-
-def _pid_alive(pid: int) -> bool:
-    import os
-
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except OSError:
-        return True  # exists but not ours (EPERM)
-    return True
-
-
-def _scratch_dir(tag: str) -> str:
-    # best-effort GC of stale siblings, three rules:
-    # 1. this pid's PREVIOUS dirs of the SAME tag go immediately —
-    #    queries run sequentially, so the prior invocation's output
-    #    has been consumed (same contract as the dks_bucket_ catalog
-    #    drop), bounding in-session accumulation at one dir per tag;
-    # 2. a dead owner's dirs go immediately (pid embedded in the name);
-    # 3. OWNERLESS legacy dirs fall back to a 24 h age cutoff. The
-    #    cutoff deliberately does NOT apply while the embedded owner
-    #    pid is alive: a long-running session's staged dir (e.g. the
-    #    analytics38 streaming fixture, last touched >24 h ago but
-    #    still being drained) must not be swept by a concurrent
-    #    session. Cost: a pid recycled to an unrelated live process
-    #    shields its dirs until that pid dies — bounded, and strictly
-    #    safer than deleting under a live reader.
-    import os
-    import shutil
-    import time
-
-    me = os.getpid()
-    root = pathlib.Path(_SCRATCH)
-    try:
-        cutoff = time.time() - 86_400
-        for p in root.iterdir():
-            if not p.is_dir():
-                continue
-            parts = p.name.split("_")
-            owner = int(parts[-2]) if len(parts) >= 3 and parts[-2].isdigit() else None
-            own_tag = "_".join(parts[:-2]) if owner is not None else None
-            stale = (
-                (owner == me and own_tag == tag)
-                or (owner is not None and not _pid_alive(owner))
-                or (owner is None and p.stat().st_mtime < cutoff)
-            )
-            if stale:
-                shutil.rmtree(p, ignore_errors=True)
-    except OSError:
-        pass
-    return f"{_SCRATCH}/{tag}_{me}_{uuid.uuid4().hex[:12]}"
 
 
 # ---------------------------------------------------------------------------
@@ -320,20 +262,16 @@ def q_bucket_join(spark: SparkSession, d: str):
 
     The result itself is scale-independent of the layout — the oracle
     is the plain join aggregate."""
-    # drop the catalog entries left by PRIOR invocations in this
-    # session (queries run sequentially, so their DataFrames have been
-    # consumed) — otherwise table metadata accumulates per invocation;
-    # external-table DROP leaves the files, which the pid-keyed scratch
-    # GC reclaims
-    for t in spark.catalog.listTables():
-        if t.name.startswith("dks_bucket_"):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    scratch = _scratch_dir("bucket")
+    scratch = scratch_dir("bucket")
     tag = scratch.rsplit("_", 1)[1]
     o = load_table(spark, d, "orders").select("o_orderkey", "o_orderpriority")
     li = load_table(spark, d, "lineitem").select("l_orderkey", "l_extendedprice")
     to_name = f"dks_bucket_orders_{tag}"
     tl_name = f"dks_bucket_lineitem_{tag}"
+    # the scope drops both tables, then removes their files (an
+    # external-table DROP leaves them)
+    for name in (to_name, tl_name):
+        on_close(partial(spark.sql, f"DROP TABLE IF EXISTS {name}"))
     (
         o.write.mode("overwrite")
         .format("parquet")
@@ -390,7 +328,7 @@ def q_partition_prune(spark: SparkSession, d: str):
     difference between reading 7 days and reading 100 TB: at cluster
     scale this layout + filter is what makes time-ranged queries on an
     append-only fact table O(range) instead of O(history)."""
-    scratch = _scratch_dir("ppart")
+    scratch = scratch_dir("ppart")
     ev = load_table(spark, d, "events").withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )

@@ -28,9 +28,9 @@ import uuid
 
 from pyspark.sql import SparkSession, functions as F
 
+from direct_kafka_stream_spark.caching import scratch_dir, scratch_root
 from direct_kafka_stream_spark.exprs import dsum, dsum_sql
 from direct_kafka_stream_spark.io import load_table
-from direct_kafka_stream_spark.operators.analytics36 import _scratch_dir
 from direct_kafka_stream_spark.registry import query
 from direct_kafka_stream_spark.sources.files import (
     PROVIDER_CONF as _PROVIDER_CONF,
@@ -48,11 +48,9 @@ from direct_kafka_stream_spark.sources.files import (
 # per distinct fixture per session, every later exhibit measures the
 # STREAM. Keyed by (resolved path, n_files, SOURCE FINGERPRINT) so a
 # fixture dir rewritten in place (scale_probe re-materialization)
-# misses instead of serving stale data; staged into its own scratch
-# tag so an owner query's scratch GC can't invalidate it; each hit
-# re-touches the dir's mtime so the 24 h scratch sweep never removes
-# live staging, and the _SUCCESS check self-heals if anything else
-# does.
+# misses instead of serving stale data. The memo outlives any one
+# query, so the staging sits under the process's scratch root, not in
+# a query scope.
 _STAGED: dict[tuple, str] = {}
 
 
@@ -75,19 +73,11 @@ def _stage_events(spark: SparkSession, d: str, n_files: int = 1):
     """Return a µs-timestamp parquet staging of the events fixture
     split into exactly n_files files, writing it only if this session
     hasn't already staged this exact fixture content."""
-    import hashlib
-    import os
-
     key = (str(pathlib.Path(d).resolve()), n_files, _fixture_sig(d))
     hit = _STAGED.get(key)
-    if hit is not None and pathlib.Path(hit, "_SUCCESS").exists():
-        # keep the dir younger than the 24 h scratch sweep while in use
-        os.utime(pathlib.Path(hit).parent, None)
+    if hit is not None:
         return hit
-    tag = "evstage_{}_{}".format(
-        n_files, hashlib.md5(repr(key).encode()).hexdigest()[:10]
-    )
-    src = f"{_scratch_dir(tag)}/src"
+    src = str(scratch_root() / f"evstage_{n_files}_{uuid.uuid4().hex[:12]}")
     # repartition, not coalesce: coalesce can't SPLIT a 1-partition
     # source, and the multi-batch exhibits need n_files real files
     load_table(spark, d, "events").repartition(n_files).write.mode(
@@ -138,7 +128,7 @@ def q_stream_rocksdb(spark: SparkSession, d: str):
     The provider conf is set for the run and restored after — state
     store provider is bound per-query at stream START, so scoping it
     this way leaves the rest of the session untouched."""
-    scratch = _scratch_dir("rocksdb")
+    scratch = scratch_dir("rocksdb")
     src = _stage_events(spark, d)
     old = spark.conf.get(_PROVIDER_CONF, None)
     spark.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
@@ -202,7 +192,7 @@ def q_stream_listener(spark: SparkSession, d: str):
     is asynchronous by contract)."""
     from pyspark.sql.streaming import StreamingQueryListener
 
-    scratch = _scratch_dir("listener")
+    scratch = scratch_dir("listener")
     src = _stage_events(spark, d, n_files=2)
     name = f"dks_ledger_{uuid.uuid4().hex[:12]}"
 
@@ -288,12 +278,11 @@ def q_stream_pyds_write(spark: SparkSession, d: str):
     batchId. The published JSONL files are read back batch-side and
     aggregated; the oracle checks the round trip lost/duplicated
     nothing."""
-    return pyds_write_report(spark, d, _scratch_dir("pysink"))
+    return pyds_write_report(spark, d, scratch_dir("pysink"))
 
 
 def pyds_write_report(spark: SparkSession, d: str, scratch: str):
-    """Composable form with an explicit scratch dir (tests pass their
-    own tmp dir so nothing races on the shared scratch root)."""
+    """Composable form with an explicit scratch dir."""
     from direct_kafka_stream_spark.sources.pyds import JsonlSinkDataSource
 
     try:

@@ -35,12 +35,12 @@ import pathlib
 
 from pyspark.sql import SparkSession, functions as F
 
+from direct_kafka_stream_spark.caching import scratch_dir
 from direct_kafka_stream_spark.exprs import _OUT_SCALE, dsum, dsum_sql
 from direct_kafka_stream_spark.operators.analytics38 import (
     _run_available_now,
     _stage_events,
 )
-from direct_kafka_stream_spark.operators.analytics36 import _scratch_dir
 from direct_kafka_stream_spark.registry import query
 from direct_kafka_stream_spark.sources.files import events_schema, file_stream
 
@@ -83,7 +83,7 @@ def q_stream_state_reader(spark: SparkSession, d: str):
     Scale: the state read is partition-parallel over the store's
     shuffle partitions; output is one row per live key (bounded by
     |event_type| here)."""
-    scratch = _scratch_dir("statereader")
+    scratch = scratch_dir("statereader")
     n_files = 2
     src = _stage_events(spark, d, n_files=n_files)
     ckpt = f"{scratch}/ckpt"
@@ -264,7 +264,7 @@ def q_stream_offset_log(spark: SparkSession, d: str):
     Scale: the ledger is KBs per micro-batch regardless of data size
     (driver parse is O(batches)); the audit recount is an ordinary
     distributed parquet scan of the assigned files."""
-    scratch = _scratch_dir("offsetlog")
+    scratch = scratch_dir("offsetlog")
     n_files = 3
     src = _stage_events(spark, d, n_files=n_files)
     ckpt = f"{scratch}/ckpt"

@@ -46,10 +46,8 @@ def _materialized(df: DataFrame) -> DataFrame:
 
     Lifetime note: the cache must outlive the returned DataFrame (the
     caller collects AFTER the query callable returns), so nothing
-    unpersists here; the persist is tracked in the calling thread's
-    query scope (``caching``) and freed when that scope closes — when
-    the thread starts its next query, calls ``clear_materialized()``,
-    or (inside ``run_foreach_batch``) finishes the micro-batch."""
+    unpersists here; the calling thread's query scope (``caching``)
+    frees it when it closes."""
     df = track(df.persist())
     df.count()
     return df
@@ -1360,7 +1358,6 @@ def q_dedup_components(spark: SparkSession, d: str):
     docs = load_table(spark, d, "documents")
     edges = _materialized(_minhash_band_edges(docs))
     labels = propagate_min_labels(edges)
-    edges.unpersist()
     singletons = docs.join(labels, "doc_id", "left_anti").select(
         "doc_id", F.col("doc_id").alias("label")
     )
@@ -1388,9 +1385,9 @@ def propagate_min_labels(edges, max_rounds: int = 15):
         .union(edges.select(F.col("dst").alias("doc_id")))
         .distinct()
     )
-    labels = connected.select(
-        "doc_id", F.col("doc_id").alias("label")
-    ).localCheckpoint()
+    labels = track(
+        connected.select("doc_id", F.col("doc_id").alias("label")).localCheckpoint()
+    )
     cur_sum = labels.agg(F.sum("label")).collect()[0][0]
     converged = False
     for _ in range(max_rounds):
@@ -1408,7 +1405,7 @@ def propagate_min_labels(edges, max_rounds: int = 15):
         ptr = stepped.select(
             F.col("doc_id").alias("p_doc"), F.col("label").alias("p_label")
         )
-        nxt = (
+        nxt = track(
             stepped.join(ptr, stepped.label == ptr.p_doc, "left")
             .select(
                 "doc_id",

@@ -48,7 +48,8 @@ def query(
     session configuration (timezone, Arrow, NTZ inference).
 
     It then opens the query's scope on this thread (``caching``), which
-    closes the thread's previous query's scope. ``scale_confs`` ships a
+    closes the thread's previous query's scope, and makes ``spark`` the
+    JVM's active session on this thread. ``scale_confs`` ships a
     query's probe-passed 100x session knobs with the query itself, so a
     cluster job gets the working plan without reading SCALE.md: when
     the scale flag is set (SPARK_GRAFT_SCALE), the scope applies them
@@ -60,6 +61,11 @@ def query(
             tune_session(spark)
             hints = dict(scale_confs) if scale_confs and scale_flag_set() else {}
             open_scope(spark, hints)
+            # a py4j thread starts with no active JVM session, and then
+            # a Python data source registered on spark is not found
+            jvm = getattr(spark, "_jvm", None)  # None on Spark Connect
+            if jvm is not None:
+                jvm.SparkSession.setActiveSession(spark._jsparkSession)
             return fn(spark, sf_dir)
 
         wrapped.__name__ = name

@@ -75,7 +75,7 @@ def run_foreach_batch(
     the reference's foreachRDD processing hook (KDS:43-51). The batch_id
     passed to ``fn`` is stable across retries, enabling idempotent
     writes to transactional stores. Each batch is one query scope
-    (``caching``): what ``fn`` persisted is freed once it returns."""
+    (``caching``): what ``fn`` left in it is released once it returns."""
 
     def batch(batch_df: DataFrame, batch_id: int) -> None:
         try:

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC, dsum
 
 
@@ -409,9 +410,9 @@ def curation_apply_batch(
     # makes every returned delta independent of the store files —
     # callers can append in any order. Batch-sized, so the eager
     # checkpoint is cheap at any scale.
-    new_base = batch_base.join(
-        seen.select("h"), "h", "left_anti"
-    ).localCheckpoint(eager=True)
+    new_base = track(
+        batch_base.join(seen.select("h"), "h", "left_anti").localCheckpoint(eager=True)
+    )
     sigs = _minhash_sigs(
         _shingles_from_docs(_spread(new_base.select("doc_id", "text")))
     )
@@ -442,7 +443,7 @@ def curation_apply_batch(
     # drops read the band/word store paths — checkpoint them too so the
     # returned frames survive subsequent store appends (same hazard as
     # new_base above)
-    drops = (
+    drops = track(
         _jaccard_on_pairs(edges, all_warr, "src", "dst")
         .filter(F.col("jaccard") >= _CURATION_TAU)
         .select(F.col("dst").alias("doc_id"))

@@ -1,15 +1,17 @@
-"""Query scopes (``caching``): every eager persist the package makes is
-tracked in the calling thread's scope, which closes — unpersisting what
-it tracked — when that thread starts its next registered query, calls
-``clear_materialized()``, or finishes a ``run_foreach_batch``
-micro-batch. Threads sharing one session never free each other's
-caches, and nothing stays pinned once every scope is closed."""
+"""Query scopes (``caching``): every persist, local checkpoint, scratch
+directory and catalog table the package leaves behind belongs to the
+calling thread's scope, which closes — releasing all of them — when that
+thread starts its next registered query, calls ``clear_materialized()``,
+or finishes a ``run_foreach_batch`` micro-batch. Threads sharing one
+session never free each other's state, and nothing stays pinned once
+every scope is closed."""
 
 from __future__ import annotations
 
 import ast
 import os
 import pathlib
+import subprocess
 import sys
 import threading
 import time
@@ -26,7 +28,8 @@ PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "direct_kafka_stream_
 
 
 def _untracked_persists(src: str) -> list[int]:
-    """Line numbers of ``.persist()`` calls not wrapped in ``track(...)``."""
+    """Line numbers of ``.persist()`` and ``.localCheckpoint()`` calls
+    not wrapped in ``track(...)``."""
     tree = ast.parse(src)
     tracked = {
         id(arg)
@@ -41,13 +44,19 @@ def _untracked_persists(src: str) -> list[int]:
         for node in ast.walk(tree)
         if isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "persist"
+        and node.func.attr in ("persist", "localCheckpoint")
         and id(node) not in tracked
     ]
 
 
 def test_detector_flags_untracked_persist():
-    assert _untracked_persists("x = df.persist()\ny = track(df.persist())\n") == [1]
+    src = (
+        "x = df.persist()\n"
+        "y = track(df.persist())\n"
+        "z = df.localCheckpoint(eager=False)\n"
+        "w = track(df.localCheckpoint())\n"
+    )
+    assert _untracked_persists(src) == [1, 3]
 
 
 def test_every_operator_persist_is_tracked():
@@ -61,13 +70,8 @@ def test_every_operator_persist_is_tracked():
 
 
 def _persistent_rdd_ids(spark) -> set[int]:
-    """RDDs pinned by ``persist``. Local checkpoints are left out: they
-    are not tracked, and Spark frees them when their RDD is collected."""
-    return {
-        i
-        for i, rdd in spark.sparkContext._jsc.getPersistentRDDs().items()
-        if not rdd.rdd().isLocallyCheckpointed()
-    }
+    """RDDs pinned by ``persist`` or ``localCheckpoint``."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 class _Frame:
@@ -117,60 +121,129 @@ def test_clear_materialized_frees_setsim_prefix_persists(spark):
     assert _persistent_rdd_ids(spark) <= before
 
 
-# Two persist-using queries per thread. q_dedup_components is left out:
-# it unpersists its own edges before returning.
+# Two queries per thread. Two threads run the same scratch-directory
+# queries, so each must keep its own directories and catalog tables.
 _THREAD_QUERIES = (
     ("q_setsim_prefix", "q_textrank"),
     ("q_containment_dedup", "q_tfidf_cosine"),
     ("q_ctfidf_terms", "q_link_predict"),
+    ("q_dedup_components", "q_kcore"),
+    ("q_partition_prune", "q_bucket_join"),
+    ("q_partition_prune", "q_bucket_join"),
 )
 
 
 def test_concurrent_queries_keep_their_own_caches(spark):
-    """Three threads on one session: every thread builds before any
-    consumes, yet each thread's tracked frames are still cached when it
-    consumes, its results equal the sequential ones, and nothing stays
-    pinned once every thread has closed its scope."""
+    """Threads on one session build in turn, each after the previous
+    thread has built, then all consume: what each build pinned (persists
+    and local checkpoints) is still pinned when its thread consumes,
+    each result equals the sequential one (so no scratch directory or
+    table was removed under it), and nothing stays pinned once every
+    thread has closed its scope."""
     want = {}
     for names in _THREAD_QUERIES:
         for name in names:
-            want[name] = normalize(QUERIES[name].spark(spark, SF_DIR).toPandas())
+            if name not in want:
+                want[name] = normalize(QUERIES[name].spark(spark, SF_DIR).toPandas())
     clear_materialized()
     baseline = _persistent_rdd_ids(spark)
 
-    barrier = threading.Barrier(len(_THREAD_QUERIES))
+    n = len(_THREAD_QUERIES)
+    turns = [threading.Semaphore(0) for _ in range(n)]
+    built, consumed = threading.Barrier(n), threading.Barrier(n)
     got, errors = {}, []
 
-    def run(names):
+    def run(k, names):
         try:
             for name in names:
-                df = QUERIES[name].spark(spark, SF_DIR)
-                own = caching._LIVE[threading.get_ident()].frames
-                barrier.wait(timeout=300)
-                assert own and all(f.is_cached for f in own), name
-                got[name] = normalize(df.toPandas())
+                assert turns[k].acquire(timeout=300), "turn never came"
+                try:
+                    before = _persistent_rdd_ids(spark)
+                    df = QUERIES[name].spark(spark, SF_DIR)
+                    pinned = _persistent_rdd_ids(spark) - before
+                finally:
+                    turns[(k + 1) % n].release()
+                built.wait(timeout=300)
+                assert pinned <= _persistent_rdd_ids(spark), name
+                got[k, name] = normalize(df.toPandas())
+                consumed.wait(timeout=300)
         except Exception as e:
-            barrier.abort()
+            built.abort()
+            consumed.abort()
             errors.append(e)
         finally:
             clear_materialized()
 
-    threads = [threading.Thread(target=run, args=(n,)) for n in _THREAD_QUERIES]
+    threads = [
+        threading.Thread(target=run, args=(k, names))
+        for k, names in enumerate(_THREAD_QUERIES)
+    ]
     for t in threads:
         t.start()
+    turns[0].release()
     for t in threads:
-        t.join(timeout=600)
+        t.join(timeout=900)
         assert not t.is_alive()
     assert not errors, errors
-    assert got == want
+    assert got == {
+        (k, name): want[name]
+        for k, names in enumerate(_THREAD_QUERIES)
+        for name in names
+    }
     assert not caching._LIVE
     assert _persistent_rdd_ids(spark) <= baseline
 
 
+def test_scope_removes_scratch_dirs_and_tables(spark):
+    """Once consumed and closed, the scratch-directory queries leave
+    no directory under the process's scratch root and no table in the
+    session catalog."""
+    clear_materialized()
+    root = caching.scratch_root()
+    made = set()
+    for name in ("q_partition_prune", "q_bucket_join"):
+        before = set(root.glob("*"))
+        QUERIES[name].spark(spark, SF_DIR).collect()
+        new = set(root.glob("*")) - before
+        assert new, name
+        made |= new
+    clear_materialized()
+    assert not [p for p in made if p.exists()]
+    assert not [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("dks_bucket_")
+    ]
+
+
+def test_first_scratch_dir_call_removes_dead_roots(tmp_path, monkeypatch):
+    """The first ``scratch_dir`` call under a scratch base removes the
+    roots of dead processes and keeps those of live ones and any entry
+    not named by a pid."""
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    live = subprocess.Popen(["sleep", "60"])
+    try:
+        for name in (str(dead.pid), str(live.pid), "bucket_123_0a1b2c"):
+            (tmp_path / name / "part").mkdir(parents=True)
+        monkeypatch.setattr(caching, "_SCRATCH", tmp_path)
+        clear_materialized()
+        path = pathlib.Path(caching.scratch_dir("t"))
+        assert path.is_dir() and path.parent == tmp_path / str(os.getpid())
+        assert not (tmp_path / str(dead.pid)).exists()
+        assert (tmp_path / str(live.pid) / "part").exists()
+        assert (tmp_path / "bucket_123_0a1b2c" / "part").exists()
+        clear_materialized()
+        assert not path.exists()
+    finally:
+        live.kill()
+        live.wait()
+
+
 def test_foreach_batch_frees_each_batch_persists(spark, tmp_path):
-    """curation_apply_batch persists three frames per micro-batch;
-    run_foreach_batch closes the batch's scope once the batch is done,
-    so a drained stream leaves nothing pinned."""
+    """curation_apply_batch persists three frames and local-checkpoints
+    two per micro-batch; run_foreach_batch closes the batch's scope once
+    the batch is done, so a drained stream leaves nothing pinned."""
     from direct_kafka_stream_spark.streaming.pipeline import (
         await_all,
         run_foreach_batch,

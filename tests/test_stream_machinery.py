@@ -60,6 +60,37 @@ def test_stream_pyds_write_two_phase_commit(spark, tmp_path):
     assert not list((sink / "_staging").glob("*")), "staging must drain on commit"
 
 
+def test_stream_pyds_write_from_worker_thread(spark):
+    """The registered query finds its Python data source sink from a
+    thread other than the main one, and returns the main thread's
+    result."""
+    import threading
+
+    from direct_kafka_stream_spark import QUERIES
+    from direct_kafka_stream_spark.caching import clear_materialized
+    from scripts.check_oracle import normalize
+
+    run = QUERIES["q_stream_pyds_write"].spark
+    want = normalize(run(spark, SF_DIR).toPandas())
+    clear_materialized()
+    out = {}
+
+    def worker():
+        try:
+            out["got"] = normalize(run(spark, SF_DIR).toPandas())
+        except Exception as e:
+            out["error"] = e
+        finally:
+            clear_materialized()
+
+    t = threading.Thread(target=worker)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert "error" not in out, out.get("error")
+    assert out["got"] == want
+
+
 def test_pyds_writer_abort_discards_staging(tmp_path):
     """The abort() hook (called by the engine on batch failure) must
     remove staged temp files so a retried batch can't double-publish."""
