@@ -34,25 +34,38 @@ import shutil
 import threading
 import uuid
 from collections.abc import Callable
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 _SCRATCH = pathlib.Path("/tmp/dks_spark_scratch")
 
 
-# thread id -> that thread's open scope: its close actions, run
-# last-in first-out. The flag marks a tracked frame's release, which
-# counts towards clear_materialized()'s result.
-_LIVE: dict[int, list[tuple[Callable[[], object], bool]]] = {}
+@dataclass
+class _Scope:
+    """A thread's open scope. Its close actions run last-in first-out;
+    each carries the tracked frame it releases, or None."""
+
+    actions: list[tuple[Callable[[], object], DataFrame | None]] = field(
+        default_factory=list
+    )
+
+    @property
+    def frames(self) -> list[DataFrame]:
+        return [df for _, df in self.actions if df is not None]
 
 
-def _push(fn: Callable[[], object], is_frame: bool) -> None:
-    _LIVE.setdefault(threading.get_ident(), []).append((fn, is_frame))
+# thread id -> that thread's open scope
+_LIVE: dict[int, _Scope] = {}
+
+
+def _push(fn: Callable[[], object], df: DataFrame | None = None) -> None:
+    _LIVE.setdefault(threading.get_ident(), _Scope()).actions.append((fn, df))
 
 
 def on_close(fn: Callable[[], object]) -> None:
     """Run ``fn`` when this thread's scope closes."""
-    _push(fn, False)
+    _push(fn)
 
 
 def _release(df: DataFrame) -> None:
@@ -68,7 +81,7 @@ def _release(df: DataFrame) -> None:
 def track(df: DataFrame) -> DataFrame:
     """Record an already-persisted or local-checkpointed DataFrame in
     this thread's scope."""
-    _push(functools.partial(_release, df), True)
+    _push(functools.partial(_release, df), df)
     return df
 
 
@@ -123,10 +136,10 @@ def clear_materialized() -> int:
     """Close this thread's scope; returns how many tracked frames were
     released. Errors from a stopped session are swallowed."""
     freed = 0
-    for fn, is_frame in reversed(_LIVE.pop(threading.get_ident(), [])):
+    for fn, df in reversed(_LIVE.pop(threading.get_ident(), _Scope()).actions):
         try:
             fn()
         except Exception:
             continue
-        freed += is_frame
+        freed += df is not None
     return freed

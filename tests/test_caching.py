@@ -16,6 +16,7 @@ import sys
 import threading
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from direct_kafka_stream_spark import QUERIES, caching, load_table
@@ -74,6 +75,19 @@ def _persistent_rdd_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
+def _still_held(spark, df) -> bool:
+    """``df`` is still in the session's cache, or the RDD its local
+    checkpoint reads is still pinned. A lazy persist counts from the
+    ``persist()`` call, before any job has built its RDD."""
+    if df.storageLevel != StorageLevel.NONE:
+        return True
+    try:
+        rdd_id = df._jdf.queryExecution().logical().rdd().id()
+    except Exception:
+        return False  # neither cached nor a local checkpoint
+    return rdd_id in _persistent_rdd_ids(spark)
+
+
 class _Frame:
     freed = False
 
@@ -122,7 +136,9 @@ def test_clear_materialized_frees_setsim_prefix_persists(spark):
 
 
 # Two queries per thread. Two threads run the same scratch-directory
-# queries, so each must keep its own directories and catalog tables.
+# queries, so each must keep its own directories and catalog tables;
+# every other query tracks frames.
+_SCRATCH_QUERIES = {"q_partition_prune", "q_bucket_join"}
 _THREAD_QUERIES = (
     ("q_setsim_prefix", "q_textrank"),
     ("q_containment_dedup", "q_tfidf_cosine"),
@@ -135,8 +151,8 @@ _THREAD_QUERIES = (
 
 def test_concurrent_queries_keep_their_own_caches(spark):
     """Threads on one session build in turn, each after the previous
-    thread has built, then all consume: what each build pinned (persists
-    and local checkpoints) is still pinned when its thread consumes,
+    thread has built, then all consume: each thread's tracked frames,
+    and every RDD its build pinned, are still held when it consumes,
     each result equals the sequential one (so no scratch directory or
     table was removed under it), and nothing stays pinned once every
     thread has closed its scope."""
@@ -161,9 +177,13 @@ def test_concurrent_queries_keep_their_own_caches(spark):
                     before = _persistent_rdd_ids(spark)
                     df = QUERIES[name].spark(spark, SF_DIR)
                     pinned = _persistent_rdd_ids(spark) - before
+                    scope = caching._LIVE.get(threading.get_ident())
+                    own = scope.frames if scope else []
                 finally:
                     turns[(k + 1) % n].release()
                 built.wait(timeout=300)
+                assert own or name in _SCRATCH_QUERIES, name
+                assert all(_still_held(spark, f) for f in own), name
                 assert pinned <= _persistent_rdd_ids(spark), name
                 got[k, name] = normalize(df.toPandas())
                 consumed.wait(timeout=300)
