@@ -71,9 +71,10 @@ def on_close(fn: Callable[[], object]) -> None:
 def _release(df: DataFrame) -> None:
     df.unpersist()
     try:
-        # unpersist() leaves a local checkpoint's RDD pinned; its plan
-        # is a LogicalRDD over that RDD
-        df._jdf.queryExecution().logical().rdd().unpersist(False)
+        # unpersist() leaves a local checkpoint's RDD pinned (its plan is
+        # a LogicalRDD over it); RDD.unpersist would also log a WARN
+        rdd = df._jdf.queryExecution().logical().rdd()
+        rdd.sparkContext().unpersistRDD(rdd.id(), False)
     except Exception:
         pass  # not a local checkpoint, or no JVM (Spark Connect)
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC, dsum_sql
 from direct_kafka_stream_spark.io import load_table, spread_scan
 from direct_kafka_stream_spark.registry import query
@@ -215,12 +216,10 @@ def q_tfidf_cosine(spark: SparkSession, d: str):
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df").between(_TC_DF_MIN, _TC_DF_MAX))
     )
-    from direct_kafka_stream_spark.operators.llm import _materialized
-
     # persisted: the banded weighted index feeds the norm aggregate AND
     # both sides of the pair join — without it Spark re-derives the
     # corpus explode + tf aggregation once per reference
-    w = _materialized(
+    w = track(
         tf.join(df, "word")
         .crossJoin(F.broadcast(n))
         .select(
@@ -231,6 +230,7 @@ def q_tfidf_cosine(spark: SparkSession, d: str):
                 * F.round(F.log((F.col("n") + 1.0) / (F.col("df") + 1.0)), 9)
             ).alias("wt"),
         )
+        .persist()
     )
     nrm = w.groupBy("doc_id").agg(
         F.sqrt(

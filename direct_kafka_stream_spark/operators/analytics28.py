@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import (
     DEC,
     bounded_window_key,
@@ -387,13 +388,9 @@ def q_ctfidf_terms(spark: SparkSession, d: str):
             F.filter(F.split(F.col("text"), " "), lambda w: w != "")
         ).alias("word"),
     )
-    from direct_kafka_stream_spark.operators.llm import _materialized
-
     # persisted: cw feeds the frequency filter, the class masses, and
     # the scoring join — one corpus explode instead of three
-    cw = _materialized(
-        toks.groupBy("lang", "word").agg(F.count(F.lit(1)).alias("c"))
-    )
+    cw = track(toks.groupBy("lang", "word").agg(F.count(F.lit(1)).alias("c")).persist())
     fw = (
         cw.groupBy("word")
         .agg(F.sum("c").alias("f"))

@@ -37,22 +37,6 @@ from direct_kafka_stream_spark.registry import query
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 
-def _materialized(df: DataFrame) -> DataFrame:
-    """Persist + eagerly materialize an intermediate that the downstream
-    DAG references many times (e.g. both sides of a self-join). Without
-    this, Spark re-evaluates the whole subtree per reference — the
-    signature/word tables here are small relative to their compute, so
-    persisting them is the right trade at any scale.
-
-    Lifetime note: the cache must outlive the returned DataFrame (the
-    caller collects AFTER the query callable returns), so nothing
-    unpersists here; the calling thread's query scope (``caching``)
-    frees it when it closes."""
-    df = track(df.persist())
-    df.count()
-    return df
-
-
 def _tokens(col: str = "text") -> Column:
     """Non-empty token array (texts can carry trailing separators)."""
     return F.filter(F.split(col, " "), lambda w: w != "")
@@ -386,7 +370,7 @@ def q_dedup_near(spark: SparkSession, d: str):
         .filter(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
     )
-    warr = _materialized(_word_arrays(docs))
+    warr = track(_word_arrays(docs).persist())
     return _jaccard_on_pairs(cand, warr, "doc_a", "doc_b").select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
@@ -482,7 +466,7 @@ def q_jaccard_pairs(spark: SparkSession, d: str):
     cross-joined, unlike the round-1 sampled all-pairs baseline whose
     a.id < b.id join was quadratic by construction."""
     docs = _spread(load_table(spark, d, "documents"))
-    sigs = _materialized(_minhash_sigs(_shingles_from_docs(docs)))
+    sigs = _minhash_sigs(_shingles_from_docs(docs))
     rows1 = sigs.select(
         "doc_id",
         F.explode(
@@ -495,10 +479,10 @@ def q_jaccard_pairs(spark: SparkSession, d: str):
         ).alias("e"),
     ).select("doc_id", F.col("e.band").alias("band"), F.col("e.mh").alias("mh"))
     wb = Window.partitionBy("band", "mh")
-    capped = _materialized(
-        rows1.withColumn("bn", F.count(F.lit(1)).over(wb)).filter(
-            F.col("bn") <= _BUCKET_CAP
-        )
+    capped = track(
+        rows1.withColumn("bn", F.count(F.lit(1)).over(wb))
+        .filter(F.col("bn") <= _BUCKET_CAP)
+        .persist()
     )
     a, b = capped.alias("a"), capped.alias("b")
     cand = (
@@ -511,7 +495,7 @@ def q_jaccard_pairs(spark: SparkSession, d: str):
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    warr = _materialized(_word_arrays(docs))
+    warr = track(_word_arrays(docs).persist())
     return _jaccard_on_pairs(cand, warr, "doc_a", "doc_b").select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
@@ -1284,10 +1268,10 @@ def _minhash_band_edges(docs: DataFrame) -> DataFrame:
     # the self-join, and each bands reference re-evaluates the signature
     # aggregate 4× (one per band select) — 8 evaluations of the shingle
     # scan without this one doc-count-sized cache.
-    capped = _materialized(
-        bands.withColumn("bn", F.count(F.lit(1)).over(wb)).filter(
-            F.col("bn") <= _BUCKET_CAP
-        )
+    capped = track(
+        bands.withColumn("bn", F.count(F.lit(1)).over(wb))
+        .filter(F.col("bn") <= _BUCKET_CAP)
+        .persist()
     )
     a, b = capped.alias("a"), capped.alias("b")
     return (
@@ -1356,7 +1340,7 @@ def q_dedup_components(spark: SparkSession, d: str):
     truncation, executor-loss-safe. The oracle is DuckDB's recursive
     CTE of the same closure."""
     docs = load_table(spark, d, "documents")
-    edges = _materialized(_minhash_band_edges(docs))
+    edges = track(_minhash_band_edges(docs).persist())
     labels = propagate_min_labels(edges)
     singletons = docs.join(labels, "doc_id", "left_anti").select(
         "doc_id", F.col("doc_id").alias("label")

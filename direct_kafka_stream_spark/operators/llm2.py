@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.operators.llm import (
@@ -660,7 +661,6 @@ def curation_pipeline_on(raw_docs):
     tests/test_properties.py)."""
     from direct_kafka_stream_spark.operators.llm import (
         _jaccard_on_pairs,
-        _materialized,
         _minhash_band_edges,
         _spread,
         _word_arrays,
@@ -674,13 +674,14 @@ def curation_pipeline_on(raw_docs):
     # combinable), not a sort window — at 100 TB this avoids a
     # per-partition sort of the full corpus text
     keeper = F.min_by(F.struct("doc_id", "text"), "doc_id").alias("k")
-    base = _materialized(
+    base = track(
         docs.groupBy(F.sha2("text", 256).alias("h"))
         .agg(keeper)
         .select(F.col("k.doc_id").alias("doc_id"), F.col("k.text").alias("text"))
+        .persist()
     )
     edges = _minhash_band_edges(base).filter(F.col("src") < F.col("dst"))
-    warr = _materialized(_word_arrays(base))
+    warr = track(_word_arrays(base).persist())
     drops = (
         _jaccard_on_pairs(edges, warr, "src", "dst")
         .filter(F.col("jaccard") >= _CURATION_TAU)

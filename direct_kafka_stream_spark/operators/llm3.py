@@ -291,8 +291,8 @@ def q_dup_threshold_curve(spark: SparkSession, d: str):
     )
 
     docs = _spread(load_table(spark, d, "documents"))
-    # Round 12: _materialized persists dropped — AQE stage reuse
-    # recycles the signature/cap/word-array exchanges (measured 0.80x).
+    # nothing persisted: AQE stage reuse recycles the signature/cap/
+    # word-array exchanges (0.80x the time of persisting them, round 12)
     sigs = _minhash_sigs(_shingles_from_docs(docs))
     rows1 = sigs.select(
         "doc_id",

@@ -147,7 +147,20 @@ def tune_session(spark: SparkSession) -> SparkSession:
     Configuration. Capping it at the task slots keeps listing
     distributed — on a cluster it is still as wide as the cluster —
     without paying one task per path.
+
+    Python workers (pandas UDFs, Python data sources) import this
+    package, so its parent directory joins their ``PYTHONPATH`` once
+    and stays: a changed path would start new workers. That covers
+    workers that see the driver's filesystem; others use ``--py-files``.
     """
+    try:
+        env = spark.sparkContext.environment
+    except Exception:
+        env = {}  # no SparkContext (Spark Connect)
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if root not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, root])
     confs = dict(_RUNTIME_CONF)
     confs[_LISTING_PARALLELISM] = str(session_cores(spark))
     for k, v in confs.items():

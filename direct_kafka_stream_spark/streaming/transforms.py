@@ -377,7 +377,6 @@ def curation_apply_batch(
     from direct_kafka_stream_spark.operators.llm import (
         _BUCKET_CAP,
         _jaccard_on_pairs,
-        _materialized,
         _minhash_bands,
         _minhash_sigs,
         _shingles_from_docs,
@@ -416,15 +415,18 @@ def curation_apply_batch(
     sigs = _minhash_sigs(
         _shingles_from_docs(_spread(new_base.select("doc_id", "text")))
     )
-    new_bands = _materialized(_minhash_bands(sigs))
-    new_warr = _materialized(_word_arrays(new_base))
+    # persisted, and filled by the eager drops checkpoint below: each
+    # is read there and again by the caller's store append
+    new_bands = track(_minhash_bands(sigs).persist())
+    new_warr = track(_word_arrays(new_base).persist())
 
     all_bands = bands_store.unionByName(new_bands)
     wb = Window.partitionBy("band", "mh")
-    capped = _materialized(
+    capped = track(
         all_bands.withColumn("bn", F.count(F.lit(1)).over(wb))
         .filter(F.col("bn") <= _BUCKET_CAP)
         .drop("bn")
+        .persist()
     )
     new_ids = new_base.select("doc_id")
     capped_new = capped.join(F.broadcast(new_ids), "doc_id")

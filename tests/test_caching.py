@@ -4,7 +4,11 @@ calling thread's scope, which closes — releasing all of them — when that
 thread starts its next registered query, calls ``clear_materialized()``,
 or finishes a ``run_foreach_batch`` micro-batch. Threads sharing one
 session never free each other's state, and nothing stays pinned once
-every scope is closed."""
+every scope is closed.
+
+One reuse rule decides what a query caches: it persists a frame only
+when its plan reads that frame two or more times, and building a query
+runs no Spark job, outside a named allow-list."""
 
 from __future__ import annotations
 
@@ -16,10 +20,12 @@ import sys
 import threading
 import time
 
+import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from direct_kafka_stream_spark import QUERIES, caching, load_table
+from direct_kafka_stream_spark.io import TABLES
 from direct_kafka_stream_spark.caching import clear_materialized
 from scripts.check_oracle import normalize
 
@@ -316,3 +322,131 @@ def test_foreach_batch_frees_each_batch_persists(spark, tmp_path):
     await_all(run_foreach_batch(stream, process, str(tmp_path / "ckpt")))
     assert len(pinned_in_batch) == 3 and all(pinned_in_batch), pinned_in_batch
     assert _persistent_rdd_ids(spark) <= baseline
+
+
+# Registered queries whose build runs Spark jobs, and why.
+_BUILD_JOBS_ALLOWED = {
+    # convergence loops
+    "q_dedup_components": "label propagation collects a label sum per round",
+    "q_dup_cluster_stats": "builds q_dedup_components",
+    "q_dedup_keep_best": "builds q_dedup_components",
+    "q_modularity": "label propagation collects a label sum per round",
+    "q_kcore": "a lazy local checkpoint still runs its AQE shuffle stages",
+    # model fits: the model is a driver-side value
+    "q_kmeans_train": "collects the seed centers and each round's centers",
+    "q_kcenter_coreset": "collects each next center",
+    "q_ml_linreg": "collects feature statistics and fits the model",
+    "q_pca_power": "collects the Gram matrix for driver-side iteration",
+    "q_markov_stationary": "collects the transition matrix for driver-side iteration",
+    # staging writes: the query reads what it wrote
+    "q_bucket_join": "writes the bucketed tables it joins",
+    "q_partition_prune": "writes the partitioned table it prunes",
+    # streams the build runs to completion, then reads back
+    "q_stream_rocksdb": "collects the memory sink",
+    "q_stream_listener": "counts the memory sink",
+    "q_stream_offset_log": "counts the parquet sink",
+    "q_stream_state_reader": "reads the state store",
+    "q_stream_pyds_write": "writes through a Python streaming sink",
+}
+
+# Frames a loop reads only through its checkpoints' lineage, which no
+# plan walk sees, by the columns of the frame. q_dup_cluster_stats and
+# q_dedup_keep_best build q_dedup_components, and its edges with it.
+_LOOP_INPUTS = {
+    "q_dedup_components": ["src", "dst"],
+    "q_dup_cluster_stats": ["src", "dst"],
+    "q_dedup_keep_best": ["src", "dst"],
+    "q_kcore": ["a", "b"],
+}
+
+
+def _caches(spark, frames) -> list:
+    """(frame, its cache's builder) for the frames in the session's
+    cache; local checkpoints are not in it."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    found = [(f, cm.lookupCachedData(f._jdf)) for f in frames]
+    return [
+        (f, c.get().cachedRepresentation().cacheBuilder())
+        for f, c in found
+        if c.nonEmpty()
+    ]
+
+
+@pytest.fixture(scope="module")
+def build_sweep(spark):
+    """Build every registered query once, each under its own job group
+    and with every fixture table already loaded: name -> (Spark jobs the
+    build ran, number of persisted frames its scope tracked)."""
+    for name in TABLES:
+        load_table(spark, SF_DIR, name)
+    sc = spark.sparkContext
+    clear_materialized()
+    out = {}
+    try:
+        for name, q in QUERIES.items():
+            group = f"build:{name}"
+            sc.setJobGroup(group, group)
+            q.spark(spark, SF_DIR)
+            scope = caching._LIVE.get(threading.get_ident())
+            persisted = len(_caches(spark, scope.frames if scope else []))
+            clear_materialized()
+            out[name] = (len(sc.statusTracker().getJobIdsForGroup(group)), persisted)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out
+
+
+def test_query_builds_run_no_spark_job(build_sweep):
+    """Building a query plans it and runs nothing: the work happens when
+    the caller consumes the result. Only the allow-listed builds run
+    jobs."""
+    assert len(build_sweep) == len(QUERIES)
+    ran = {n: jobs for n, (jobs, _) in build_sweep.items() if jobs}
+    assert not {n: j for n, j in ran.items() if n not in _BUILD_JOBS_ALLOWED}
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _cache_scans(ident, plan, key: int) -> int:
+    """``InMemoryTableScanExec`` nodes over the cache whose builder has
+    identity hash ``key`` in a physical plan, not counting below a
+    reused exchange or subquery."""
+    kind = plan.getClass().getSimpleName()
+    if kind in ("ReusedExchangeExec", "ReusedSubqueryExec"):
+        return 0
+    if kind == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif kind.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        kids = _seq(plan.children()) + _seq(plan.subqueries())
+    here = kind == "InMemoryTableScanExec" and ident(plan.relation().cacheBuilder()) == key
+    return here + sum(_cache_scans(ident, k, key) for k in kids)
+
+
+def test_each_tracked_persist_is_read_twice(spark, build_sweep):
+    """A query persists a frame only when its plan reads the frame at
+    least twice. Reads are counted in the collected result's executed
+    plan and in the cached plans of the query's other persisted frames;
+    a reused exchange is one read, not two."""
+    ident = spark._jvm.System.identityHashCode
+    reads = {}
+    for name, (_, persisted) in build_sweep.items():
+        if not persisted:
+            continue
+        df = QUERIES[name].spark(spark, SF_DIR)
+        caches = _caches(spark, caching._LIVE[threading.get_ident()].frames)
+        df.collect()
+        result = df._jdf.queryExecution().executedPlan()
+        for f, builder in caches:
+            if f.columns == _LOOP_INPUTS.get(name):
+                continue
+            key = ident(builder)
+            plans = [result] + [b.cachedPlan() for _, b in caches if ident(b) != key]
+            reads[name, tuple(f.columns)] = sum(_cache_scans(ident, p, key) for p in plans)
+        clear_materialized()
+    assert reads
+    assert not {k: n for k, n in reads.items() if n < 2}

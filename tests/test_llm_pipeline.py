@@ -211,9 +211,10 @@ def test_minhash_banding_s_curve(spark):
 
 def test_materialized_caches_freed_between_queries(spark):
     """Sequential sweeps must not accumulate persisted intermediates:
-    each query's _materialized caches are freed when the next query
-    starts (registry wrapper), so a 155-query driver run pins at most
-    one query's blocks at a time."""
+    the frames a query persists are freed when the next query starts
+    (the registry wrapper closes the previous query's scope), so a
+    driver run over the whole registry pins at most one query's blocks
+    at a time."""
 
     def cached_ids():
         return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}

@@ -88,3 +88,36 @@ def test_jvm_processor_count_matches_session_slots(tmp_path):
     jvm, slots = json.loads(out.stdout.strip().splitlines()[-1])
     assert slots == host // 2
     assert jvm == slots
+
+
+def test_python_workers_import_the_package(tmp_path):
+    """A plain session started elsewhere, with the package on the
+    driver's ``sys.path`` only: a pandas-UDF query's Python workers
+    still import the package."""
+    from tests.conftest import SF_DIR
+
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {str(ROOT)!r})
+        from pyspark.sql import SparkSession
+        spark = (
+            SparkSession.builder.master("local[2]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.warehouse.dir", {str(tmp_path / "warehouse")!r})
+            .getOrCreate()
+        )
+        from direct_kafka_stream_spark import QUERIES
+        print(len(QUERIES["q_udaf_weighted"].spark(spark, {SF_DIR!r}).collect()))
+        spark.stop()
+        """
+    )
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert int(out.stdout.strip().splitlines()[-1]) > 0
