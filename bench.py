@@ -1,13 +1,19 @@
 #!/usr/bin/env python3
-"""Benchmark harness: runs every registered query at
+"""Benchmark harness: runs every registered query once at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...,
- "cpus": ..., "spark_version": ..., "git_sha": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+ "counts": {...}, "sf": ..., "cpus": ..., "spark_version": ..., "git_sha": ...}
 
-Queries are materialized via the noop sink (full execution, no driver
-collect). One SparkSession is reused — at this scale JVM startup would
-otherwise dominate.
+Each query is built once under job group ``<name>:build`` and written
+once to the noop sink (full execution, no driver collect) under
+``<name>:exec``. ``queries`` holds the single-shot wall seconds of
+build plus write (-1 on error); ``counts`` holds, per query and phase,
+what a local Spark event log records for that group: jobs, stages,
+tasks, task CPU ms, shuffle read and write bytes and spill bytes. The
+counts, not the wall time, decide whether a query regressed
+(BENCH_NOTES.md). One SparkSession is reused — at this scale JVM
+startup would otherwise dominate.
 """
 
 from __future__ import annotations
@@ -15,64 +21,78 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import shlex
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
+HERE = pathlib.Path(__file__).resolve().parent
+sys.path.insert(0, str(HERE))
+sys.path.insert(0, str(HERE / "perfbench"))
 
-from direct_kafka_stream_spark import QUERIES, get_session
-from direct_kafka_stream_spark.session import jvm_cpus, session_cores
+from tracing import read_event_log  # noqa: E402  (perfbench/tracing.py)
+
+from direct_kafka_stream_spark import QUERIES, TABLES, get_session, load_table  # noqa: E402
+from direct_kafka_stream_spark.caching import clear_materialized  # noqa: E402
+from direct_kafka_stream_spark.session import jvm_cpus, session_cores  # noqa: E402
+
+PHASES = ("build", "exec")
+WARM_GROUP = "bench:warm"
 
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def sweep_total(s: dict[str, float]) -> float:
-    """Total of one sweep's per-query seconds, errors (-1) excluded."""
-    return sum(t for t in s.values() if t >= 0)
-
-
-def adjudicate_sweeps(
-    sweep_results: list[dict[str, float]],
-    extra_sweep=None,
-    band: float = 1.2,
-) -> tuple[dict[str, float], bool, list[dict[str, float]]]:
-    """Sweep adjudication (round-10 band-violation protocol), pure.
-
-    Two sweeps are only a valid weather filter if they AGREE: when the
-    sweep totals differ by more than the documented band (1.2x), at
-    least one sweep ran inside a host stall band and the per-query min
-    may still be inflated (the round-9 driver artifact ran sweeps 1.41x
-    apart and printed four spurious >1.5x "regressions"). Self-heal:
-    call `extra_sweep()` ONCE for a third sweep, record the violation,
-    and take the per-query min across ALL sweeps (a -1 error in one
-    sweep is ignored if any sweep measured the query; all-error stays
-    -1).
-
-    Returns (per_query_min, band_violated, sweeps_used). Factored out
-    of main() so tests/test_bench_protocol.py can drive it with
-    synthetic sweep dicts and a fake extra_sweep — the rule fired for
-    real exactly once (BENCH_NOTES.md round 10) before it had a unit
-    test."""
-    sweeps = list(sweep_results)
-    band_violated = False
-    if len(sweeps) >= 2:
-        totals = [sweep_total(s) for s in sweeps]
-        lo, hi = min(totals), max(totals)
-        if lo > 0 and hi / lo > band:
-            band_violated = True
-            if extra_sweep is not None:
-                sweeps.append(extra_sweep())
+def run_queries(spark, sf_dir: str, queries) -> dict[str, float]:
+    """Build each query once under job group ``<name>:build`` and write
+    it once under ``<name>:exec``; returns wall seconds per query, -1
+    for a query that raised. A failure is reported and the run goes on."""
+    sc = spark.sparkContext
     times: dict[str, float] = {}
-    # Union of keys across ALL sweeps: a query present only in a later
-    # sweep (e.g. the self-heal third sweep after a partial first one)
-    # must not be silently dropped from the artifact.
-    for name in sorted({k for s in sweeps for k in s}):
-        ok_runs = [s[name] for s in sweeps if s.get(name, -1.0) >= 0]
-        times[name] = min(ok_runs) if ok_runs else -1.0
-    return times, band_violated, sweeps
+    for name, q in queries.items():
+        t0 = time.perf_counter()
+        try:
+            sc.setJobGroup(f"{name}:build", name)
+            df = q.spark(spark, sf_dir)
+            sc.setJobGroup(f"{name}:exec", name)
+            materialize(df)
+            times[name] = round(time.perf_counter() - t0, 3)
+        except Exception as e:  # a failed query must not end the run
+            times[name] = -1.0
+            print(f"# BENCH ERROR {name}: {type(e).__name__}: {e}", file=sys.stderr)
+        finally:
+            clear_materialized()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return times
+
+
+def query_counts(evlog, names) -> dict[str, dict[str, dict[str, float]]]:
+    """Per query and phase, the event-log totals of the jobs run under
+    job group ``<name>:<phase>``."""
+
+    def counts(group: str) -> dict[str, float]:
+        t = evlog.totals(lambda j: j.group == group)
+        return {
+            "jobs": t["jobs"],
+            "stages": t["stages"],
+            "tasks": t["tasks"],
+            "cpu_ms": round(t["cpu_s"] * 1e3, 1),
+            "shuffle_read_bytes": t["shuffle_read_bytes"],
+            "shuffle_write_bytes": t["shuffle_write_bytes"],
+            "spill_bytes": t["spill_bytes"],
+        }
+
+    return {n: {ph: counts(f"{n}:{ph}") for ph in PHASES} for n in names}
+
+
+def unattributed_jobs(evlog, names) -> int:
+    """Jobs under no query's group and not the warm-up's: a stream's
+    micro-batches, which run on the stream's own thread and group."""
+    known = {f"{n}:{ph}" for n in names for ph in PHASES} | {WARM_GROUP}
+    return evlog.totals(lambda j: j.group not in known)["jobs"]
 
 
 def git_sha(repo: pathlib.Path) -> str | None:
@@ -102,19 +122,26 @@ def artifact_identity(spark, repo: pathlib.Path) -> dict:
     }
 
 
-def prior_quiet_mins(repo: pathlib.Path, sf: float, cpus: int) -> dict[str, float]:
-    """Per-query times of the newest ``BENCH_FULL_r*.json`` measured at
-    the same (sf, cpus). An artifact that does not record its core
-    count never matches: it may be an 8-core run read as a 32-core one."""
-    prior_files = sorted(
-        (p for p in repo.glob("BENCH_FULL_r*.json") if p.stem.split("_r")[1].isdigit()),
-        key=lambda p: int(p.stem.split("_r")[1]),
+def warm_up(spark, sf_dir: str) -> None:
+    """Load every fixture table (a table's first load runs a one-task
+    parquet schema job), warm the JVM and start the Arrow Python worker
+    pool, so that one-time setup does not land on whichever query runs
+    first and a query's counts do not depend on the registry order."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.functions import pandas_udf
+
+    @pandas_udf("double")
+    def _warm(s):
+        return s * 1.0
+
+    spark.sparkContext.setJobGroup(WARM_GROUP, WARM_GROUP)
+    for t in TABLES:
+        load_table(spark, sf_dir, t)
+    materialize(QUERIES["q_scan"].spark(spark, sf_dir).limit(1))
+    materialize(
+        spark.range(0, 1024, 1, int(spark.sparkContext.defaultParallelism))
+        .select(_warm(F.col("id").cast("double")).alias("x"))
     )
-    for p in reversed(prior_files):
-        data = json.loads(p.read_text())
-        if data.get("sf") == sf and data.get("cpus") == cpus:
-            return data.get("queries", {})
-    return {}
 
 
 def main() -> None:
@@ -123,154 +150,59 @@ def main() -> None:
         sf = float(pathlib.Path(sf_dir).name.replace("sf", "") or 0.1)
     except ValueError:  # non-sf<N> dir name — keep the one-JSON-line contract
         sf = -1.0
-    spark = get_session("bench")
 
-    # Warm the JVM + parquet footer caches once so per-query numbers
-    # measure the queries, not first-touch setup.
-    materialize(QUERIES["q_scan"].spark(spark, sf_dir).limit(1))
-
-    # Spin up the Arrow Python worker pool once — forking 32 workers +
-    # importing pandas in each is multi-second, one-time setup cost that
-    # would otherwise land on whichever pandas-UDF query runs first.
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm(s):
-        return s * 1.0
-
-    materialize(
-        spark.range(0, 1024, 1, int(spark.sparkContext.defaultParallelism))
-        .select(_warm(F.col("id").cast("double")).alias("x"))
-    )
-
-    def run_once(name, q) -> float:
-        t0 = time.perf_counter()
-        materialize(q.spark(spark, sf_dir))
-        return round(time.perf_counter() - t0, 3)
-
-    # Min-of-N per query: this host (gVisor sandbox) shows run-to-run
-    # stalls of 0.6 -> 19.7 s on identical jobs (BENCH_NOTES.md), so a
-    # single-shot number is noise-dominated. The minimum of N
-    # back-to-back runs measures the query, not the host weather.
-    repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "2"))
-    if len(sys.argv) > 2 and sys.argv[1] == "--repeat":
-        repeat = int(sys.argv[2])
-    repeat = max(1, repeat)
-
-    # Two-sweep protocol (round-9 standing protocol, BENCH_NOTES.md):
-    # back-to-back min-of-N still measures ONE point in time, and this
-    # host's stall bands last long enough to inflate a whole min-of-3
-    # (q_item_cf printed ~1.8x its quiet min in two consecutive round
-    # artifacts on untouched code). Running the FULL suite twice and
-    # taking the per-query min ACROSS sweeps separates the two visits
-    # to each query by the length of a whole sweep, which kills
-    # cold-start/ordering effects and outlasts the stall bands.
-    sweeps = int(os.environ.get("SPARK_GRAFT_BENCH_SWEEPS", "2"))
-    sweeps = max(1, sweeps)
-
-    def run_sweep() -> dict[str, float]:
-        out: dict[str, float] = {}
-        for name, q in QUERIES.items():
-            try:
-                out[name] = min(run_once(name, q) for _ in range(repeat))
-            except Exception as e:  # pragma: no cover - bench must not die
-                out[name] = -1.0
-                print(
-                    f"# BENCH ERROR {name}: {type(e).__name__}: {e}",
-                    file=sys.stderr,
-                )
-        return out
-
-    sweep_results = [run_sweep() for _ in range(sweeps)]
-
-    # Band-violation rule (round-10 protocol): totals disagreeing >1.2x
-    # mean a stall band — adjudicate_sweeps self-heals with one extra
-    # sweep and takes the per-query min across all of them; the
-    # violation is recorded so the artifact is adjudicable without a
-    # judge re-bench. Logic lives in adjudicate_sweeps (pure, unit
-    # tested on synthetic sweeps in tests/test_bench_protocol.py).
-    times, band_violated, sweep_results = adjudicate_sweeps(
-        sweep_results, extra_sweep=run_sweep
-    )
-
-    # This host shows intermittent multi-second stalls unrelated to the
-    # workload (an identical query can measure 0.5s or 100s). Re-run the
-    # disproportionate outliers once and keep the faster measurement —
-    # same work, honestly re-measured.
-    ok = sorted(t for t in times.values() if t >= 0)
-    if ok:
-        median = ok[len(ok) // 2]
-        threshold = max(5.0, 10 * median)
-        for name in [n for n, t in times.items() if t > threshold]:
-            try:
-                times[name] = min(times[name], run_once(name, QUERIES[name]))
-            except Exception:
-                pass
-
-    # Quiet-window protocol: any query measuring >2.5x its PRIOR-round
-    # quiet min (from the newest tracked BENCH_FULL artifact at the
-    # same sf and core count) gets one more re-run, and both the raw
-    # first measurement and the final are recorded — so the tracked
-    # artifact stops encoding host weather and round-over-round
-    # regression reads are adjudicable without a judge re-bench.
-    here = pathlib.Path(__file__).resolve().parent
-    identity = artifact_identity(spark, here)
-    raw_before_requiet: dict[str, float] = {}
+    # A local, uncompressed event log of this session only, read back
+    # after the session stops (as perfbench/run.py does for --trace 1).
+    log_dir = tempfile.mkdtemp(prefix="bench-eventlog-")
     try:
-        prior = prior_quiet_mins(here, sf, identity["cpus"])
-        for name, t_prior in prior.items():
-            t_now = times.get(name, -1.0)
-            if t_prior > 0 and t_now > 2.5 * t_prior:
-                try:
-                    rerun = run_once(name, QUERIES[name])
-                except Exception:
-                    continue
-                if rerun < t_now:
-                    raw_before_requiet[name] = t_now
-                    times[name] = rerun
-    except (OSError, ValueError, KeyError):
-        pass  # protocol is best-effort; the bench contract line is not
+        confs = [
+            "--conf", "spark.eventLog.enabled=true",
+            "--conf", f"spark.eventLog.dir={pathlib.Path(log_dir).as_uri()}",
+            "--conf", "spark.eventLog.compress=false",
+            "--conf", "spark.eventLog.rolling.enabled=false",
+        ]
+        os.environ["PYSPARK_SUBMIT_ARGS"] = (
+            f"{shlex.join(confs)} {os.environ.get('PYSPARK_SUBMIT_ARGS', 'pyspark-shell')}"
+        )
+        spark = get_session("bench")
+        warm_up(spark, sf_dir)
+        times = run_queries(spark, sf_dir, QUERIES)
+        identity = artifact_identity(spark, HERE)
+        spark.stop()
+        evlog = read_event_log(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
-    total = round(sum(t for t in times.values() if t >= 0), 3)
     payload = {
         "metric": "total_query_wall_seconds",
-        "value": total,
+        "value": round(sum(t for t in times.values() if t >= 0), 3),
         "unit": "sec",
         "queries": times,
         "sf": sf,
         **identity,
         "n_queries": len(times),
-        "repeat_min_of": repeat,
-        "sweeps": sweeps,
-        "sweep_totals": [round(sweep_total(s), 3) for s in sweep_results],
-        "band_violated": band_violated,
+        "counts": query_counts(evlog, times),
+        "unattributed_jobs": unattributed_jobs(evlog, times),
     }
-    if raw_before_requiet:
-        payload["queries_raw_prerequiet"] = raw_before_requiet
 
     # The driver's BENCH_r0N.json keeps only a tail window of
-    # `queries`, and registration order rotates round to round — so
-    # round-over-round regression checks are impossible from that
-    # artifact alone. Persist the FULL per-query dict to a tracked
-    # repo file as well (round number from the newest CORRECTNESS
-    # artifact + 1, i.e. the round currently being built). Only the
-    # driver's sf (0.1) writes it — a local sf0.001 smoke run must
-    # not clobber the tracked sf0.1 artifact.
-    try:
-        if sf != 0.1:
-            raise OSError("non-driver sf: skip FULL artifact")
+    # `queries`, so the FULL payload also goes to a tracked repo file,
+    # named by round (newest CORRECTNESS artifact + 1, i.e. the round
+    # being built) and core count. Only the driver's sf (0.1) writes
+    # it — a local smoke run must not clobber the tracked artifact.
+    if sf == 0.1:
         rounds = [
             int(p.stem.split("_r")[1])
-            for p in here.glob("CORRECTNESS_r*.json")
+            for p in HERE.glob("CORRECTNESS_r*.json")
             if p.stem.split("_r")[1].isdigit()
         ]
         rnd = (max(rounds) if rounds else 0) + 1
-        (here / f"BENCH_FULL_r{rnd:02d}.json").write_text(
-            json.dumps(payload, indent=1) + "\n"
-        )
-    except OSError:
-        pass  # full-artifact write is best-effort; the contract line below is not
+        try:
+            (HERE / f"BENCH_FULL_r{rnd:02d}_c{identity['cpus']}.json").write_text(
+                json.dumps(payload, indent=1) + "\n"
+            )
+        except OSError:
+            pass  # the artifact write is best-effort; the contract line below is not
 
     print(json.dumps(payload))
 

@@ -119,15 +119,15 @@ def q_item_cf(spark: SparkSession, d: str):
     # Round 12: NOT persisted. The four downstream references (ni, the
     # a/b self-join sides, and sim's two union branches) all hang off
     # the SAME repartition("u") exchange, and AQE's runtime stage reuse
-    # turns them into ReusedExchange reads of one shuffle output (the
-    # executed final plan carries 5 ReusedExchange nodes,
-    # plans/r12/q_item_cf_after.txt). The previous persist() bought the
-    # same single-computation guarantee but WORSE: an AQE-cached plan
-    # reports unknown output partitioning, so the self-join re-shuffled
-    # BOTH cached sides (2x ~112 MB exchanges at sf0.1) on top of the
-    # memory-store writes. Measured min-of-4 interleaved: 7.60 s
-    # (persist) -> 6.64 s (reuse), and the ni joins now flip to
-    # runtime broadcasts.
+    # turns them into ReusedExchange reads of one shuffle output
+    # (tests/test_plans.py::test_item_cf_reuses_the_basket_exchange
+    # pins this on the executed final plan). The previous persist()
+    # bought the same single-computation guarantee but WORSE: an
+    # AQE-cached plan reports unknown output partitioning, so the
+    # self-join re-shuffled BOTH cached sides (2x ~112 MB exchanges at
+    # sf0.1) on top of the memory-store writes. Measured min-of-4
+    # interleaved: 7.60 s (persist) -> 6.64 s (reuse), and the ni joins
+    # now flip to runtime broadcasts.
     ni = baskets.groupBy("it").agg(F.count(F.lit(1)).alias("n"))
     a = baskets.select("u", F.col("it").alias("ia"))
     b = baskets.select("u", F.col("it").alias("ib"))

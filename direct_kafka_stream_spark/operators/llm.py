@@ -1398,9 +1398,12 @@ def propagate_min_labels(edges, max_rounds: int = 15):
                 ).alias("label"),
             )
             # lazy checkpoint: materialized by the convergence sum
-            # below, so each round runs ONE job instead of two (an
-            # eager checkpoint job + a separate sum job) while still
-            # truncating lineage for every later reference
+            # below instead of by a job of its own, while still
+            # truncating lineage for every later reference. A round is
+            # still several jobs, because AQE submits each shuffle
+            # stage as its own job: at sf0.001 on local[4] one round
+            # runs 9 to 11 jobs, and the build of q_dedup_components,
+            # which converges in two rounds, runs 32 (bench.py counts)
             .localCheckpoint(eager=False)
         )
         nxt_sum = nxt.agg(F.sum("label")).collect()[0][0]

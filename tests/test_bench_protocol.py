@@ -1,99 +1,132 @@
-"""Unit tests for bench.py's sweep-adjudication protocol (round-11
-directive #4): the band rule fired for real exactly once (round 10,
-BENCH_NOTES.md) — these drive the now-pure `adjudicate_sweeps` on
-synthetic sweep dicts so the self-heal path is pinned without paying a
-bench run. No SparkSession involved."""
+"""Unit tests for bench.py's one-pass protocol: each query is built and
+written once under its own job groups, and the local event log's jobs
+are attributed to queries by those groups. Driven with fakes and a
+synthetic event log, so no SparkSession is involved."""
 
 from __future__ import annotations
 
-import json
 import pathlib
 import sys
 from types import SimpleNamespace
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from bench import adjudicate_sweeps, artifact_identity, prior_quiet_mins, sweep_total
+import bench
+from bench import artifact_identity, query_counts, unattributed_jobs
+from tracing import EventLog, JobRecord  # perfbench/tracing.py, on the path via bench
+
+_SRC = (pathlib.Path(__file__).resolve().parent.parent / "bench.py").read_text()
 
 
-def test_agreeing_sweeps_no_extra_run():
-    """Totals within 1.2x: no violation, no third sweep, per-query min."""
-    calls = []
-    s1 = {"qa": 1.0, "qb": 2.0}
-    s2 = {"qa": 1.1, "qb": 1.8}
-    times, violated, used = adjudicate_sweeps(
-        [s1, s2], extra_sweep=lambda: calls.append(1) or {}
+class _Context:
+    """SparkContext stand-in that records the job group in force."""
+
+    def __init__(self):
+        self.group = None
+
+    def setJobGroup(self, group, description):
+        self.group = group
+
+    def setLocalProperty(self, key, value):
+        assert key == "spark.jobGroup.id"
+        self.group = value
+
+
+def _run(monkeypatch, failing=()):
+    """run_queries over three fake queries: (times, [(query, group) per
+    build], [(query, group) per write])."""
+    spark = SimpleNamespace(sparkContext=_Context())
+    built, written = [], []
+
+    def fake(name):
+        def build(s, sf_dir):
+            built.append((name, s.sparkContext.group))
+            if name in failing:
+                raise ValueError("boom")
+            return name
+
+        return SimpleNamespace(spark=build)
+
+    monkeypatch.setattr(bench, "materialize", lambda df: written.append((df, spark.sparkContext.group)))
+    times = bench.run_queries(spark, "sf", {n: fake(n) for n in ("qa", "qb", "qc")})
+    assert spark.sparkContext.group is None  # the last group does not outlive the run
+    return times, built, written
+
+
+def test_each_query_is_built_and_written_once_under_its_groups(monkeypatch):
+    times, built, written = _run(monkeypatch)
+    assert built == [("qa", "qa:build"), ("qb", "qb:build"), ("qc", "qc:build")]
+    assert written == [("qa", "qa:exec"), ("qb", "qb:exec"), ("qc", "qc:exec")]
+    assert sorted(times) == ["qa", "qb", "qc"] and min(times.values()) >= 0
+
+
+def test_failed_query_is_recorded_and_the_run_goes_on(monkeypatch, capsys):
+    """A query that raises gets -1, which the total leaves out, and the
+    queries after it still run."""
+    times, built, written = _run(monkeypatch, failing={"qb"})
+    assert times["qb"] == -1.0
+    assert [n for n, _ in built] == ["qa", "qb", "qc"]
+    assert [n for n, _ in written] == ["qa", "qc"]
+    assert "# BENCH ERROR qb: ValueError: boom" in capsys.readouterr().err
+    assert "sum(t for t in times.values() if t >= 0)" in _SRC
+
+
+def test_build_and_exec_jobs_land_on_their_query():
+    """Each query's build and exec counts hold exactly the jobs of its
+    own two groups; skipped stages are not counted; the warm-up's jobs
+    are nobody's, and a stream's micro-batch job is left unattributed."""
+    cpu = "Executor CPU Time"  # ns
+    log = EventLog(
+        jobs=[
+            JobRecord(0, "bench:warm", 0, {0}),
+            JobRecord(1, "qa:build", 1, {1}),
+            JobRecord(2, "qa:exec", 2, {2, 3}),  # stage 3 skipped: its shuffle is reused
+            JobRecord(3, "qa:exec", 3, {4}),
+            JobRecord(4, "qb:exec", 4, {5}),
+            JobRecord(5, "3f1c0d2e-stream-run-id", 5, {6}),
+        ],
+        stages_run={0, 1, 2, 4, 5, 6},
+        tasks_by_stage={
+            0: [{cpu: 9_000_000}],
+            1: [{cpu: 2_000_000}],
+            2: [{cpu: 1_000_000, "Shuffle Write Metrics": {"Shuffle Bytes Written": 300}}] * 2,
+            3: [{cpu: 7_000_000}],
+            4: [
+                {
+                    cpu: 500_000,
+                    "Shuffle Read Metrics": {"Local Bytes Read": 200, "Remote Bytes Read": 100},
+                    "Memory Bytes Spilled": 40,
+                    "Disk Bytes Spilled": 2,
+                }
+            ],
+            5: [{cpu: 4_000_000}],
+            6: [{cpu: 8_000_000}],
+        },
     )
-    assert not violated
-    assert calls == []
-    assert used == [s1, s2]
-    assert times == {"qa": 1.0, "qb": 1.8}
-
-
-def test_band_violation_triggers_exactly_one_extra_sweep():
-    """Totals 3.1/6.0 disagree >1.2x: violation recorded, extra_sweep
-    called ONCE, per-query min taken across all THREE sweeps."""
-    calls = []
-
-    def third():
-        calls.append(1)
-        return {"qa": 0.9, "qb": 2.5}
-
-    times, violated, used = adjudicate_sweeps(
-        [{"qa": 1.0, "qb": 2.1}, {"qa": 3.0, "qb": 3.0}], extra_sweep=third
-    )
-    assert violated
-    assert calls == [1]
-    assert len(used) == 3
-    assert times == {"qa": 0.9, "qb": 2.1}
-
-
-def test_errors_excluded_from_totals_and_min():
-    """A -1 (BENCH ERROR) row is excluded from the sweep total (so one
-    erroring query can't fake a band violation) and from the per-query
-    min (one good measurement wins); all-error stays -1."""
-    s1 = {"qa": -1.0, "qb": 2.0, "qc": -1.0}
-    s2 = {"qa": 0.2, "qb": 2.1, "qc": -1.0}
-    assert sweep_total(s1) == 2.0
-    times, violated, _ = adjudicate_sweeps([s1, s2], extra_sweep=lambda: {})
-    assert not violated  # totals 2.0 vs 2.3 — inside the band
-    assert times == {"qa": 0.2, "qb": 2.0, "qc": -1.0}
-
-
-def test_single_sweep_passes_through():
-    """sweeps=1 (SPARK_GRAFT_BENCH_SWEEPS=1): no band check possible."""
-    times, violated, used = adjudicate_sweeps(
-        [{"qa": 1.0}], extra_sweep=lambda: (_ for _ in ()).throw(AssertionError)
-    )
-    assert not violated and len(used) == 1 and times == {"qa": 1.0}
-
-
-def test_violation_without_extra_sweep_still_records():
-    """extra_sweep=None (a caller that only wants adjudication): the
-    violation is still recorded and the min is over the given sweeps."""
-    times, violated, used = adjudicate_sweeps(
-        [{"qa": 1.0}, {"qa": 2.0}], extra_sweep=None
-    )
-    assert violated and len(used) == 2 and times == {"qa": 1.0}
+    counts = query_counts(log, ["qa", "qb"])
+    zero = dict(shuffle_read_bytes=0, shuffle_write_bytes=0, spill_bytes=0)
+    assert counts == {
+        "qa": {
+            "build": dict(jobs=1, stages=1, tasks=1, cpu_ms=2.0, **zero),
+            "exec": dict(
+                jobs=2, stages=2, tasks=3, cpu_ms=2.5,
+                shuffle_read_bytes=300, shuffle_write_bytes=600, spill_bytes=42,
+            ),
+        },
+        "qb": {
+            "build": dict(jobs=0, stages=0, tasks=0, cpu_ms=0.0, **zero),
+            "exec": dict(jobs=1, stages=1, tasks=1, cpu_ms=4.0, **zero),
+        },
+    }
+    assert unattributed_jobs(log, ["qa", "qb"]) == 1
 
 
 def test_artifact_schema_fields_unchanged():
-    """The artifact keys the judge's adjudication reads must survive the
-    refactor — band_violated + sweep_totals still written by main()."""
-    src = (pathlib.Path(__file__).resolve().parent.parent / "bench.py").read_text()
-    assert '"band_violated": band_violated' in src
-    assert '"sweep_totals"' in src
-    assert "adjudicate_sweeps(" in src
-
-def test_union_of_keys_across_sweeps():
-    """A query present only in a LATER sweep (e.g. the self-heal third
-    sweep after a partial first one) must appear in the artifact, not
-    be silently dropped by iterating sweep[0]'s keys only."""
-    s1 = {"qa": 1.0, "qc": 2.0}
-    s2 = {"qa": 1.1, "qb": 0.5, "qc": 1.8}
-    times, violated, _ = adjudicate_sweeps([s1, s2], extra_sweep=None)
-    assert not violated  # totals 3.0 vs 3.4 — inside the band
-    assert times == {"qa": 1.0, "qb": 0.5, "qc": 1.8}
+    """The payload keeps the one-line contract keys and the identity
+    fields, and records every query's counts."""
+    for key in ('"metric"', '"value"', '"unit"', '"queries"', '"sf"', "**identity,"):
+        assert key in _SRC
+    assert '"counts": query_counts(evlog, times)' in _SRC
 
 
 def test_artifact_records_cores_spark_version_and_sha(tmp_path):
@@ -113,21 +146,4 @@ def test_artifact_records_cores_spark_version_and_sha(tmp_path):
         "spark_version": "4.1.2",
         "git_sha": None,
     }
-    src = (pathlib.Path(__file__).resolve().parent.parent / "bench.py").read_text()
-    assert "**identity," in src  # spread into the written payload
-
-
-def test_quiet_window_prior_keyed_by_sf_and_cpus(tmp_path):
-    """The quiet-window lookup takes the newest artifact at the same sf
-    AND core count; an artifact without a core count never matches."""
-
-    def write(rnd, **fields):
-        (tmp_path / f"BENCH_FULL_r{rnd:02d}.json").write_text(json.dumps(fields))
-
-    write(11, sf=0.1, cpus=32, queries={"qa": 1.0})
-    write(12, sf=0.1, cpus=8, queries={"qa": 4.0})
-    write(13, sf=0.1, queries={"qa": 9.0})  # legacy: no core count
-    write(14, sf=0.01, cpus=32, queries={"qa": 0.1})
-    assert prior_quiet_mins(tmp_path, 0.1, 32) == {"qa": 1.0}
-    assert prior_quiet_mins(tmp_path, 0.1, 8) == {"qa": 4.0}
-    assert prior_quiet_mins(tmp_path, 0.1, 4) == {}
+    assert "**identity," in _SRC  # spread into the written payload

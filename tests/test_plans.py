@@ -799,6 +799,20 @@ def test_exchange_reuse_single_shuffle(spark):
     assert "ReusedExchange" in plan
 
 
+def test_item_cf_reuses_the_basket_exchange(spark):
+    """q_item_cf does not persist its baskets: every reference hangs off
+    one repartition("u") exchange, which AQE reads back as a
+    ReusedExchange (analytics20.py). At this scale the executed final
+    plan carries 5 ReusedExchange nodes: the basket shuffle, one join
+    shuffle and three reads of one broadcast."""
+    df = QUERIES["q_item_cf"].spark(spark, SF_DIR)
+    df.collect()  # finalize the AQE plan of THIS execution
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    reused = [line for line in final.splitlines() if "ReusedExchange" in line]
+    assert len(reused) == 5
+    assert sum("REPARTITION_BY_COL" in line for line in reused) == 1
+
+
 def test_cogroup_asof_single_exchange_per_side(spark):
     """q_cogroup_asof: one hash exchange per input side feeding the
     FlatMapCoGroupsInPandas node — no extra shuffles around the
