@@ -27,6 +27,7 @@ call in a process removes the roots that dead processes left behind.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 import pathlib
@@ -118,19 +119,41 @@ def scratch_dir(tag: str) -> str:
     return str(path)
 
 
-def open_scope(spark: SparkSession, confs: dict[str, str]) -> None:
-    """Close this thread's scope and open a new one that sets ``confs``
-    on ``spark``. Closing sets each key back to what
-    ``spark.conf.get(k, None)`` read here: a key that read as None was
-    never set and is unset again, which leaves its default in force."""
-    clear_materialized()
+def _set_confs(
+    spark: SparkSession, confs: dict[str, str]
+) -> list[Callable[[], object]]:
+    """Set ``confs`` on ``spark``; return the actions that set each key
+    back to what ``spark.conf.get(k, None)`` read here. A key that read
+    as None was never set and is unset again, which leaves its default
+    in force."""
+    undo = []
     for k, v in confs.items():
         old = spark.conf.get(k, None)
         if old is None:
-            on_close(functools.partial(spark.conf.unset, k))
+            undo.append(functools.partial(spark.conf.unset, k))
         else:
-            on_close(functools.partial(spark.conf.set, k, old))
+            undo.append(functools.partial(spark.conf.set, k, old))
         spark.conf.set(k, v)
+    return undo
+
+
+def open_scope(spark: SparkSession, confs: dict[str, str]) -> None:
+    """Close this thread's scope and open a new one that sets ``confs``
+    on ``spark`` until it closes."""
+    clear_materialized()
+    for fn in _set_confs(spark, confs):
+        on_close(fn)
+
+
+@contextlib.contextmanager
+def session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``spark`` for the ``with`` block only."""
+    undo = _set_confs(spark, confs)
+    try:
+        yield
+    finally:
+        for fn in reversed(undo):
+            fn()
 
 
 def clear_materialized() -> int:

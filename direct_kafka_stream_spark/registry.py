@@ -34,6 +34,35 @@ class Query:
 
 QUERIES: dict[str, Query] = {}
 
+# Registered queries whose build runs Spark jobs, and why. Every other
+# build only plans: its work runs when the caller consumes the result
+# (tests/test_caching.py checks the jobs each build runs against this).
+# The frame such a build returns is the tail of a computation that has
+# already run, so a plan census of it describes only that tail.
+BUILD_RUNS_JOBS = {
+    # convergence loops
+    "q_dedup_components": "label propagation collects a label sum per round",
+    "q_dup_cluster_stats": "builds q_dedup_components",
+    "q_dedup_keep_best": "builds q_dedup_components",
+    "q_modularity": "label propagation collects a label sum per round",
+    "q_kcore": "a lazy local checkpoint still runs its AQE shuffle stages",
+    # model fits: the model is a driver-side value
+    "q_kmeans_train": "collects the seed centers and each round's centers",
+    "q_kcenter_coreset": "collects each next center",
+    "q_ml_linreg": "collects feature statistics and fits the model",
+    "q_pca_power": "collects the Gram matrix for driver-side iteration",
+    "q_markov_stationary": "collects the transition matrix for driver-side iteration",
+    # staging writes: the query reads what it wrote
+    "q_bucket_join": "writes the bucketed tables it joins",
+    "q_partition_prune": "writes the partitioned table it prunes",
+    # streams the build runs to completion, then reads back
+    "q_stream_rocksdb": "collects the memory sink",
+    "q_stream_listener": "counts the memory sink",
+    "q_stream_offset_log": "counts the parquet sink",
+    "q_stream_state_reader": "reads the state store",
+    "q_stream_pyds_write": "writes through a Python streaming sink",
+}
+
 
 def query(
     name: str,

@@ -10,13 +10,19 @@ ZooKeeper offset recovery (reference README.md:160-176)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pathlib
+import uuid
 
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from direct_kafka_stream_spark import io
+from direct_kafka_stream_spark.caching import scratch_root
+from direct_kafka_stream_spark.exprs import dsum
 from direct_kafka_stream_spark.session import tune_session
 
 # Stateful-stream state store configuration, shared by the streaming
 # exhibits (operators/analytics38.py) and the standalone probes
-# (scripts/stream_state_probe.py): the provider swap that trades a
+# (scripts/stream_probe.py): the provider swap that trades a
 # constant per-batch checkpoint cost for bounded-heap feasibility at
 # 100 M+ distinct keys.
 PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
@@ -48,6 +54,45 @@ def events_schema() -> str:
     return (
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string"
+    )
+
+
+# (resolved fixture dir, n_files, events file stamp) -> staged dir.
+# Every streaming exhibit and probe stages the same adaptation of the
+# events fixture (its ns timestamps are unreadable by the file stream
+# source), so one staging per fixture and file count serves the whole
+# process, the way a landing zone exists before a stream reads it. The
+# stamp (``io._path_stamp``) misses when the fixture is rewritten in
+# place. The memo outlives any one query, so the staging sits under the
+# process's scratch root, not in a query scope.
+_STAGED: dict[tuple, str] = {}
+
+
+def stage_events(spark: SparkSession, d: str, n_files: int = 1) -> str:
+    """Directory holding the events fixture of ``d`` as exactly
+    ``n_files`` parquet files with µs timestamps (``events_schema``);
+    written once per process and fixture content."""
+    path = f"{d}/events.parquet"
+    key = (str(pathlib.Path(d).resolve()), n_files, io._path_stamp(path))
+    hit = _STAGED.get(key)
+    if hit is not None:
+        return hit
+    src = str(scratch_root() / f"evstage_{n_files}_{uuid.uuid4().hex[:12]}")
+    # repartition, not coalesce: coalesce can't SPLIT a 1-partition
+    # source, and the multi-batch streams need n_files real files
+    io.load_table(spark, d, "events").repartition(n_files).write.mode(
+        "overwrite"
+    ).parquet(src)
+    _STAGED[key] = src
+    return src
+
+
+def event_type_totals(events: DataFrame) -> DataFrame:
+    """Per ``event_type``: row count ``n`` and exact sum ``total`` of
+    ``value``. On a stream this is the stateful aggregate whose state
+    the exhibits and probes audit; its state buffer holds (count, sum)."""
+    return events.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"), dsum(F.col("value")).alias("total")
     )
 
 

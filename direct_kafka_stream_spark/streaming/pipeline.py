@@ -18,7 +18,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from direct_kafka_stream_spark.caching import clear_materialized
 
@@ -90,7 +90,20 @@ def run_foreach_batch(
 
 
 def await_all(*queries: StreamingQuery, timeout_s: float = 120.0) -> None:
+    """Wait for each query to terminate. One that does not within
+    ``timeout_s`` is stopped and raises: a caller never reads the
+    half-populated sink of a stream that was cut short."""
     for q in queries:
         if not q.awaitTermination(timeout_s):
             q.stop()
             raise TimeoutError(f"query {q.name} did not finish in {timeout_s}s")
+
+
+def drain(writer: DataStreamWriter, ckpt: str, timeout_s: float = 300.0) -> None:
+    """Start ``writer`` from checkpoint ``ckpt`` with the availableNow
+    trigger and wait until it has processed all input present at start
+    (``await_all``)."""
+    await_all(
+        writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start(),
+        timeout_s=timeout_s,
+    )

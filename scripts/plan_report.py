@@ -17,21 +17,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from direct_kafka_stream_spark import QUERIES, get_session
 from direct_kafka_stream_spark.plans import inspect
-
-# Driver-loop queries execute eagerly while being built; plan metrics of
-# the returned (final) frame don't describe the full computation.
-_ITERATIVE = {"q_dedup_components", "q_markov_stationary"}
-
-# Round-8 streaming exhibits run a real availableNow streaming job
-# inside the callable; the returned frame is the bounded batch result,
-# so a census of it would describe the few-row tail, not the stream.
-_STREAMING = {
-    "q_stream_rocksdb",
-    "q_stream_listener",
-    "q_stream_pyds_write",
-    "q_stream_state_reader",
-    "q_stream_offset_log",
-}
+from direct_kafka_stream_spark.registry import BUILD_RUNS_JOBS
 
 
 def main() -> None:
@@ -43,11 +29,11 @@ def main() -> None:
     spark = get_session("plan-report")
     rows = []
     for name, q in QUERIES.items():
-        if name in _ITERATIVE:
-            rows.append((name, "—", "—", "—", "iterative (per-round plan; see docstring)"))
-            continue
-        if name in _STREAMING:
-            rows.append((name, "—", "—", "—", "streaming run inside the callable (availableNow); see docstring"))
+        if name in BUILD_RUNS_JOBS:
+            # the returned frame is the tail of a computation the build
+            # already ran; its plan would not describe the query
+            why = BUILD_RUNS_JOBS[name]
+            rows.append((name, "—", "—", "—", f"build runs Spark jobs: {why}"))
             continue
         try:
             df = q.spark(spark, args.sf)
@@ -92,6 +78,15 @@ def main() -> None:
             "bounded (days/bins-sized) follow-on exchanges appear too —\n"
             "a bounded-rows bookkeeping increase, not a data-sized\n"
             "shuffle regression; see `docs/ALIGNMENT.md`.\n\n"
+            "**Note (round 10):** Expand census — `Expand` nodes multiply every\n"
+            "input row per projection, so an unintended one over a fact table is a\n"
+            "hot-path bug (q_agg_approx's mixed countDistinct +\n"
+            "approx_count_distinct aggregate cost 3.7 s before its rewrite to a\n"
+            "pre-aggregated, Expand-free plan). Of the plans censused here,\n"
+            "exactly 11 contain Expand, every one semantically requiring it\n"
+            "(multi-distinct aggregates, ROLLUP/CUBE/GROUPING SETS, sliding-window\n"
+            "assignment, UNPIVOT), all sub-second at sf0.1\n"
+            "(`tests/test_plans.py::test_expand_census_is_closed`).\n\n"
             "| query | shuffles | bcast joins | pushdown | notes |\n"
             "|---|---|---|---|---|\n"
         )

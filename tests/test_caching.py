@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from direct_kafka_stream_spark import QUERIES, caching, load_table
 from direct_kafka_stream_spark.io import TABLES
 from direct_kafka_stream_spark.caching import clear_materialized
+from direct_kafka_stream_spark.registry import BUILD_RUNS_JOBS
 from scripts.check_oracle import normalize
 
 from tests.conftest import SF_DIR
@@ -324,31 +325,6 @@ def test_foreach_batch_frees_each_batch_persists(spark, tmp_path):
     assert _persistent_rdd_ids(spark) <= baseline
 
 
-# Registered queries whose build runs Spark jobs, and why.
-_BUILD_JOBS_ALLOWED = {
-    # convergence loops
-    "q_dedup_components": "label propagation collects a label sum per round",
-    "q_dup_cluster_stats": "builds q_dedup_components",
-    "q_dedup_keep_best": "builds q_dedup_components",
-    "q_modularity": "label propagation collects a label sum per round",
-    "q_kcore": "a lazy local checkpoint still runs its AQE shuffle stages",
-    # model fits: the model is a driver-side value
-    "q_kmeans_train": "collects the seed centers and each round's centers",
-    "q_kcenter_coreset": "collects each next center",
-    "q_ml_linreg": "collects feature statistics and fits the model",
-    "q_pca_power": "collects the Gram matrix for driver-side iteration",
-    "q_markov_stationary": "collects the transition matrix for driver-side iteration",
-    # staging writes: the query reads what it wrote
-    "q_bucket_join": "writes the bucketed tables it joins",
-    "q_partition_prune": "writes the partitioned table it prunes",
-    # streams the build runs to completion, then reads back
-    "q_stream_rocksdb": "collects the memory sink",
-    "q_stream_listener": "counts the memory sink",
-    "q_stream_offset_log": "counts the parquet sink",
-    "q_stream_state_reader": "reads the state store",
-    "q_stream_pyds_write": "writes through a Python streaming sink",
-}
-
 # Frames a loop reads only through its checkpoints' lineage, which no
 # plan walk sees, by the columns of the frame. q_dup_cluster_stats and
 # q_dedup_keep_best build q_dedup_components, and its edges with it.
@@ -399,11 +375,12 @@ def build_sweep(spark):
 
 def test_query_builds_run_no_spark_job(build_sweep):
     """Building a query plans it and runs nothing: the work happens when
-    the caller consumes the result. Only the allow-listed builds run
-    jobs."""
+    the caller consumes the result. Only the builds in
+    ``BUILD_RUNS_JOBS`` run jobs."""
     assert len(build_sweep) == len(QUERIES)
+    assert set(BUILD_RUNS_JOBS) <= set(QUERIES)
     ran = {n: jobs for n, (jobs, _) in build_sweep.items() if jobs}
-    assert not {n: j for n, j in ran.items() if n not in _BUILD_JOBS_ALLOWED}
+    assert not {n: j for n, j in ran.items() if n not in BUILD_RUNS_JOBS}
 
 
 def _seq(s) -> list:

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from direct_kafka_stream_spark import QUERIES
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.plans import inspect
+from direct_kafka_stream_spark.registry import BUILD_RUNS_JOBS
 
 from tests.conftest import SF_DIR
 
@@ -602,9 +603,8 @@ def test_no_unpartitioned_window_in_any_registered_query(spark):
     to a Window node with an empty partitionSpec. Detail-row windows
     must be data-keyed; bounded (bins-sized) frames must carry
     exprs.bounded_window_key so WindowExec's "No Partition Defined"
-    warning stays a real alarm instead of ~250 lines of noise. This
-    is the pytest twin of scripts/window_hygiene.py — plan-only, so
-    the full registry checks in a couple of minutes."""
+    warning stays a real alarm instead of ~250 lines of noise.
+    Plan-only, so the full registry checks in a couple of minutes."""
     flagged = {}
     for name, q in QUERIES.items():
         df = q.spark(spark, SF_DIR)
@@ -874,22 +874,13 @@ def test_expand_census_is_closed(spark):
         "q_zorder_key",
         "q_domain_stats",
     }
-    # iterative / streaming callables execute eagerly while being
-    # built; their returned frame's plan is the bounded tail, and
-    # building all of them here would turn a plan census into a full
-    # engine run (same exclusion set as scripts/plan_report.py)
-    skip = {
-        "q_dedup_components",
-        "q_markov_stationary",
-        "q_stream_rocksdb",
-        "q_stream_listener",
-        "q_stream_pyds_write",
-        "q_stream_state_reader",
-        "q_stream_offset_log",
-    }
+    # builds that run Spark jobs return the tail of a computation
+    # that has already run; building them here would turn a plan
+    # census into a full engine run (scripts/plan_report.py skips the
+    # same set)
     got = set()
     for name, q in QUERIES.items():
-        if name in skip:
+        if name in BUILD_RUNS_JOBS:
             continue
         if "Expand" in inspect.physical_plan(q.spark(spark, SF_DIR)):
             got.add(name)

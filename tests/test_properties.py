@@ -1211,9 +1211,7 @@ def test_offset_ledger_parser_total_over_fault_space(
     with the specific audit error (never a stray IO exception). The
     ledger writer is the shared fixture in test_stream_machinery —
     one copy of the on-disk format knowledge."""
-    from direct_kafka_stream_spark.operators.analytics39 import (
-        read_stream_ledger,
-    )
+    from direct_kafka_stream_spark.streaming.checkpoint import read_stream_ledger
     from tests.test_stream_machinery import _ledger_fixture
 
     n = len(files_per_batch)

@@ -12,7 +12,6 @@ the staging area, and the provider conf is restored after the run.
 from __future__ import annotations
 
 import json
-import pathlib
 
 import pytest
 
@@ -216,15 +215,13 @@ def test_stream_listener_ledger_accounts_every_row(spark):
 
 
 def test_stream_rocksdb_restores_provider_conf(spark):
-    from direct_kafka_stream_spark.operators.analytics38 import (
-        _PROVIDER_CONF,
-        q_stream_rocksdb,
-    )
+    from direct_kafka_stream_spark.operators.analytics38 import q_stream_rocksdb
+    from direct_kafka_stream_spark.sources.files import PROVIDER_CONF
 
-    before = spark.conf.get(_PROVIDER_CONF, None)
+    before = spark.conf.get(PROVIDER_CONF, None)
     out = q_stream_rocksdb(spark, SF_DIR)
     assert out.count() > 0
-    assert spark.conf.get(_PROVIDER_CONF, None) == before
+    assert spark.conf.get(PROVIDER_CONF, None) == before
     # memory-sink temp view dropped: repeated invocations don't accumulate
     assert not [
         t.name for t in spark.catalog.listTables() if t.name.startswith("dks_rocks_")
@@ -298,9 +295,7 @@ def _ledger_fixture(d, n_batches, *, files_per_batch=None, drop_commit=None,
 
 
 def test_offset_ledger_accepts_clean_run(tmp_path):
-    from direct_kafka_stream_spark.operators.analytics39 import (
-        read_stream_ledger,
-    )
+    from direct_kafka_stream_spark.streaming.checkpoint import read_stream_ledger
 
     _ledger_fixture(tmp_path, 3)
     ledger = read_stream_ledger(str(tmp_path))
@@ -313,9 +308,7 @@ def test_offset_ledger_rejects_uncommitted_batch(tmp_path):
     """An offsets entry without a matching commit is an in-flight or
     crashed batch — the drained-run audit must refuse it, exactly the
     condition the reference's sink-then-ZK-commit ordering guarded."""
-    from direct_kafka_stream_spark.operators.analytics39 import (
-        read_stream_ledger,
-    )
+    from direct_kafka_stream_spark.streaming.checkpoint import read_stream_ledger
 
     _ledger_fixture(tmp_path, 2, drop_commit=1)
     with pytest.raises(RuntimeError, match="uncommitted"):
@@ -323,9 +316,7 @@ def test_offset_ledger_rejects_uncommitted_batch(tmp_path):
 
 
 def test_offset_ledger_rejects_hole_in_batch_ids(tmp_path):
-    from direct_kafka_stream_spark.operators.analytics39 import (
-        read_stream_ledger,
-    )
+    from direct_kafka_stream_spark.streaming.checkpoint import read_stream_ledger
 
     _ledger_fixture(tmp_path, 3, drop_offset=1, drop_commit=1)
     with pytest.raises(RuntimeError, match="holes"):
@@ -335,9 +326,7 @@ def test_offset_ledger_rejects_hole_in_batch_ids(tmp_path):
 def test_offset_ledger_rejects_double_assignment(tmp_path):
     """The same input file claimed by two batches IS double-processing;
     the audit must name the file and both batches."""
-    from direct_kafka_stream_spark.operators.analytics39 import (
-        read_stream_ledger,
-    )
+    from direct_kafka_stream_spark.streaming.checkpoint import read_stream_ledger
 
     _ledger_fixture(tmp_path, 2, dup_file=True)
     with pytest.raises(RuntimeError, match="double-processing"):
@@ -347,9 +336,7 @@ def test_offset_ledger_rejects_double_assignment(tmp_path):
 def test_offset_ledger_rejects_unknown_log_version(tmp_path):
     """A version header this parser doesn't know must fail loudly, not
     parse as garbage."""
-    from direct_kafka_stream_spark.operators.analytics39 import (
-        read_stream_ledger,
-    )
+    from direct_kafka_stream_spark.streaming.checkpoint import read_stream_ledger
 
     _ledger_fixture(tmp_path, 1)
     (tmp_path / "offsets" / "0").write_text(
@@ -365,9 +352,7 @@ def test_offset_ledger_rejects_offset_index_mismatch(tmp_path):
     the source state have diverged."""
     import json as _json
 
-    from direct_kafka_stream_spark.operators.analytics39 import (
-        read_stream_ledger,
-    )
+    from direct_kafka_stream_spark.streaming.checkpoint import read_stream_ledger
 
     _ledger_fixture(tmp_path, 1)
     meta = _json.dumps({"batchWatermarkMs": 0, "batchTimestampMs": 0, "conf": {}})
@@ -386,42 +371,35 @@ def test_state_reader_time_travel_matches_batch0_inputs(spark, tmp_path):
     production incident needs: 'what did the state hold before batch N
     went wrong', answered without replaying the stream (the capability
     the reference's ZooKeeper offset history only gestured at)."""
-    from direct_kafka_stream_spark.exprs import dsum
-    from direct_kafka_stream_spark.operators.analytics38 import (
-        _run_available_now,
-        _stage_events,
-    )
-    from direct_kafka_stream_spark.operators.analytics39 import (
-        read_stream_ledger,
-    )
     from direct_kafka_stream_spark.sources.files import (
+        event_type_totals,
         events_schema,
         file_stream,
+        stage_events,
     )
+    from direct_kafka_stream_spark.streaming.checkpoint import (
+        read_state,
+        read_stream_ledger,
+    )
+    from direct_kafka_stream_spark.streaming.pipeline import drain
     from pyspark.sql import functions as F
 
     scratch = str(tmp_path / "tt")
-    src = _stage_events(spark, SF_DIR, n_files=2)
+    src = stage_events(spark, SF_DIR, n_files=2)
     ckpt = f"{scratch}/ckpt"
-    agg = (
+    agg = event_type_totals(
         file_stream(spark, src, events_schema(), max_files_per_trigger=1)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum(F.col("value")).alias("total"))
     )
-    _run_available_now(agg.writeStream.format("noop").outputMode("update"), ckpt)
+    drain(agg.writeStream.format("noop").outputMode("update"), ckpt)
 
     ledger = read_stream_ledger(ckpt)
     assert ledger["batches"] == [0, 1]
     batch0_files = [p for p, b in ledger["files"].items() if b == 0]
     assert len(batch0_files) == 1
 
-    st0 = spark.read.format("statestore").option("batchId", 0).load(ckpt)
-    got = {
-        r["key"]["event_type"]: (r["value"]["count"], float(r["value"]["sum"]))
-        for r in st0.collect()
-    }
+    got = read_state(spark, ckpt, "event_type", batch_id=0)
     want = {
-        r.event_type: (r.n, float(r.s))
+        r.event_type: (r.n, r.s)
         for r in spark.read.schema(events_schema())
         .parquet(*batch0_files)
         .groupBy("event_type")
@@ -433,11 +411,8 @@ def test_state_reader_time_travel_matches_batch0_inputs(spark, tmp_path):
     }
     assert got == want
     # and the final state strictly extends batch 0's: counts only grow
-    st_final = spark.read.format("statestore").load(ckpt)
-    final = {
-        r["key"]["event_type"]: r["value"]["count"] for r in st_final.collect()
-    }
-    assert all(final[k] >= n for k, (n, _) in got.items())
+    final = read_state(spark, ckpt, "event_type")
+    assert all(final[k][0] >= n for k, (n, _) in got.items())
 
 
 def test_file_sink_manifest_accounts_every_published_row(spark, tmp_path):
@@ -450,34 +425,32 @@ def test_file_sink_manifest_accounts_every_published_row(spark, tmp_path):
     (row-count conservation per batch and in total), mirroring the
     source-side ledger audit in q_stream_offset_log."""
     from direct_kafka_stream_spark.io import load_table
-    from direct_kafka_stream_spark.operators.analytics38 import (
-        _run_available_now,
-        _stage_events,
-    )
     from direct_kafka_stream_spark.sources.files import (
         events_schema,
         file_stream,
+        stage_events,
     )
+    from direct_kafka_stream_spark.streaming.checkpoint import log_ids, log_lines
+    from direct_kafka_stream_spark.streaming.pipeline import drain
 
     scratch = str(tmp_path / "sink")
-    src = _stage_events(spark, SF_DIR, n_files=2)
+    src = stage_events(spark, SF_DIR, n_files=2)
     out = f"{scratch}/out"
     rows = file_stream(
         spark, src, events_schema(), max_files_per_trigger=1
     ).select("event_id", "event_type")
-    _run_available_now(
+    drain(
         rows.writeStream.format("parquet").option("path", out),
         f"{scratch}/ckpt",
     )
 
-    meta = pathlib.Path(out, "_spark_metadata")
-    batch_ids = sorted(int(p.name) for p in meta.iterdir() if p.name.isdigit())
+    meta = f"{out}/_spark_metadata"
+    batch_ids = log_ids(meta)
     assert batch_ids == [0, 1]
     manifested: list[str] = []
     for b in batch_ids:
-        lines = (meta / str(b)).read_text().strip().splitlines()
-        assert lines[0] == "v1"
-        for line in lines[1:]:
+        # log_lines raises unless the entry carries the v1 header
+        for line in log_lines(meta, b):
             entry = json.loads(line)
             assert entry["action"] == "add"
             manifested.append(entry["path"])
@@ -505,12 +478,11 @@ def test_restarted_stream_ledger_and_state_stay_consistent(spark, tmp_path):
     README.md:160-176) with the audit the reference never had."""
     import pandas as pd
 
-    from direct_kafka_stream_spark.operators.analytics38 import (
-        _run_available_now,
-    )
-    from direct_kafka_stream_spark.operators.analytics39 import (
+    from direct_kafka_stream_spark.streaming.checkpoint import (
+        read_state,
         read_stream_ledger,
     )
+    from direct_kafka_stream_spark.streaming.pipeline import drain
     from direct_kafka_stream_spark.sources.files import file_stream
     from pyspark.sql import functions as F
 
@@ -525,9 +497,7 @@ def test_restarted_stream_ledger_and_state_stay_consistent(spark, tmp_path):
             .groupBy("k")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
         )
-        _run_available_now(
-            agg.writeStream.format("noop").outputMode("update"), ckpt
-        )
+        drain(agg.writeStream.format("noop").outputMode("update"), ckpt)
 
     a = pd.DataFrame({"k": ["x", "y", "x"], "v": [1, 2, 3]})
     b = pd.DataFrame({"k": ["x", "z"], "v": [10, 20]})
@@ -541,19 +511,8 @@ def test_restarted_stream_ledger_and_state_stay_consistent(spark, tmp_path):
     by_file = {p.rsplit("/", 1)[-1]: b for p, b in ledger["files"].items()}
     assert by_file == {"a.parquet": 0, "b.parquet": 1}
 
-    def state_at(**opts):
-        r = spark.read.format("statestore")
-        for k, v in opts.items():
-            r = r.option(k, v)
-        # buffer fields are named for the aggregate FUNCTIONS (count,
-        # sum), not the query's output aliases — the ALIGNMENT.md rule
-        return {
-            row["key"]["k"]: (row["value"]["count"], row["value"]["sum"])
-            for row in r.load(ckpt).collect()
-        }
-
-    assert state_at() == {"x": (3, 14), "y": (1, 2), "z": (1, 20)}
-    assert state_at(batchId=0) == {"x": (2, 4), "y": (1, 2)}
+    assert read_state(spark, ckpt, "k") == {"x": (3, 14), "y": (1, 2), "z": (1, 20)}
+    assert read_state(spark, ckpt, "k", batch_id=0) == {"x": (2, 4), "y": (1, 2)}
 
 
 def test_offset_ledger_rejects_missing_source_entry(tmp_path):
@@ -561,9 +520,7 @@ def test_offset_ledger_rejects_missing_source_entry(tmp_path):
     compaction past the parser's documented scope) must be an AUDIT
     error — RuntimeError like every other violation — not a stray
     FileNotFoundError escaping the contract."""
-    from direct_kafka_stream_spark.operators.analytics39 import (
-        read_stream_ledger,
-    )
+    from direct_kafka_stream_spark.streaming.checkpoint import read_stream_ledger
 
     _ledger_fixture(tmp_path, 2, drop_source=1)
     with pytest.raises(RuntimeError, match="missing"):
@@ -579,9 +536,7 @@ def test_state_reader_join_side_buffers_full_inputs(spark, tmp_path):
     input, row for row (deterministic, no timing window)."""
     import pandas as pd
 
-    from direct_kafka_stream_spark.operators.analytics38 import (
-        _run_available_now,
-    )
+    from direct_kafka_stream_spark.streaming.pipeline import drain
     from direct_kafka_stream_spark.sources.files import file_stream
     from pyspark.sql import functions as F
 
@@ -628,7 +583,7 @@ def test_state_reader_join_side_buffers_full_inputs(spark, tmp_path):
         ),
     )
     ckpt = f"{d}/ckpt"
-    _run_available_now(joined.writeStream.format("noop"), ckpt)
+    drain(joined.writeStream.format("noop"), ckpt)
 
     def buffered(side, val_col):
         st = spark.read.format("statestore").option("joinSide", side).load(ckpt)
@@ -652,9 +607,7 @@ def test_watermark_evicts_join_state(spark, tmp_path):
     advance the watermark and flush evictions)."""
     import pandas as pd
 
-    from direct_kafka_stream_spark.operators.analytics38 import (
-        _run_available_now,
-    )
+    from direct_kafka_stream_spark.streaming.pipeline import drain
     from direct_kafka_stream_spark.sources.files import file_stream
     from pyspark.sql import functions as F
 
@@ -690,7 +643,7 @@ def test_watermark_evicts_join_state(spark, tmp_path):
         ),
     )
     ckpt = f"{tmp_path}/ckpt"
-    _run_available_now(joined.writeStream.format("noop"), ckpt)
+    drain(joined.writeStream.format("noop"), ckpt)
 
     for side in ("left", "right"):
         st = spark.read.format("statestore").option("joinSide", side).load(ckpt)
@@ -710,9 +663,7 @@ def test_state_change_feed_replays_to_final_state(spark, tmp_path):
     the source."""
     import pandas as pd
 
-    from direct_kafka_stream_spark.operators.analytics38 import (
-        _run_available_now,
-    )
+    from direct_kafka_stream_spark.streaming.pipeline import drain
     from direct_kafka_stream_spark.sources.files import file_stream
     from pyspark.sql import functions as F
 
@@ -732,7 +683,7 @@ def test_state_change_feed_replays_to_final_state(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
     )
     ckpt = f"{tmp_path}/ckpt"
-    _run_available_now(agg.writeStream.format("noop").outputMode("update"), ckpt)
+    drain(agg.writeStream.format("noop").outputMode("update"), ckpt)
 
     feed = [
         (r.batch_id, r.change_type, r["key"]["k"],
