@@ -5,15 +5,16 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
  "counts": {...}, "sf": ..., "cpus": ..., "spark_version": ..., "git_sha": ...}
 
-Each query is built once under job group ``<name>:build`` and written
-once to the noop sink (full execution, no driver collect) under
-``<name>:exec``. ``queries`` holds the single-shot wall seconds of
-build plus write (-1 on error); ``counts`` holds, per query and phase,
-what a local Spark event log records for that group: jobs, stages,
-tasks, task CPU ms, shuffle read and write bytes and spill bytes. The
-counts, not the wall time, decide whether a query regressed
-(BENCH_NOTES.md). One SparkSession is reused — at this scale JVM
-startup would otherwise dominate.
+Each query is built once under job group ``<name>:build`` and executed
+once (full execution, no driver collect; ``plans.inspect.execute``)
+under ``<name>:exec``. ``queries`` holds the single-shot wall seconds
+of build plus execution (-1 on error); ``counts`` holds, per query and
+phase, what Spark's status store records for that group
+(``plans.inspect.group_counts``): jobs, stages, tasks, task CPU ms,
+shuffle read and write bytes and spill bytes. The counts, not the wall
+time, decide whether a query regressed (BENCH_NOTES.md). One
+SparkSession is reused — at this scale JVM startup would otherwise
+dominate.
 """
 
 from __future__ import annotations
@@ -21,78 +22,59 @@ from __future__ import annotations
 import json
 import os
 import pathlib
-import shlex
-import shutil
 import subprocess
 import sys
-import tempfile
 import time
 
 HERE = pathlib.Path(__file__).resolve().parent
 sys.path.insert(0, str(HERE))
-sys.path.insert(0, str(HERE / "perfbench"))
-
-from tracing import read_event_log  # noqa: E402  (perfbench/tracing.py)
 
 from direct_kafka_stream_spark import QUERIES, TABLES, get_session, load_table  # noqa: E402
 from direct_kafka_stream_spark.caching import clear_materialized  # noqa: E402
+from direct_kafka_stream_spark.plans.inspect import execute, group_counts  # noqa: E402
 from direct_kafka_stream_spark.session import jvm_cpus, session_cores  # noqa: E402
 
 PHASES = ("build", "exec")
 WARM_GROUP = "bench:warm"
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def run_queries(spark, sf_dir: str, queries) -> dict[str, float]:
-    """Build each query once under job group ``<name>:build`` and write
-    it once under ``<name>:exec``; returns wall seconds per query, -1
-    for a query that raised. A failure is reported and the run goes on."""
+def run_queries(spark, sf_dir: str, queries) -> tuple[dict, dict, int]:
+    """Build each query once under job group ``<name>:build`` and
+    execute it once under ``<name>:exec``. Returns wall seconds per
+    query (-1 for a query that raised), its counts per phase, and the
+    jobs that ran under no query's group since the warm-up began. A
+    failure is reported and the run goes on."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    job_ids = list(tracker.getJobIdsForGroup(WARM_GROUP))
     times: dict[str, float] = {}
+    counts: dict[str, dict[str, dict[str, float]]] = {}
     for name, q in queries.items():
         t0 = time.perf_counter()
         try:
             sc.setJobGroup(f"{name}:build", name)
             df = q.spark(spark, sf_dir)
             sc.setJobGroup(f"{name}:exec", name)
-            materialize(df)
+            execute(df)
             times[name] = round(time.perf_counter() - t0, 3)
         except Exception as e:  # a failed query must not end the run
             times[name] = -1.0
             print(f"# BENCH ERROR {name}: {type(e).__name__}: {e}", file=sys.stderr)
         finally:
             clear_materialized()
+        # read now: the status store keeps only the newest 1,000 jobs
+        counts[name] = {ph: group_counts(spark, f"{name}:{ph}") for ph in PHASES}
+        job_ids += [j for ph in PHASES for j in tracker.getJobIdsForGroup(f"{name}:{ph}")]
     sc.setLocalProperty("spark.jobGroup.id", None)
-    return times
+    return times, counts, unattributed_jobs(job_ids)
 
 
-def query_counts(evlog, names) -> dict[str, dict[str, dict[str, float]]]:
-    """Per query and phase, the event-log totals of the jobs run under
-    job group ``<name>:<phase>``."""
-
-    def counts(group: str) -> dict[str, float]:
-        t = evlog.totals(lambda j: j.group == group)
-        return {
-            "jobs": t["jobs"],
-            "stages": t["stages"],
-            "tasks": t["tasks"],
-            "cpu_ms": round(t["cpu_s"] * 1e3, 1),
-            "shuffle_read_bytes": t["shuffle_read_bytes"],
-            "shuffle_write_bytes": t["shuffle_write_bytes"],
-            "spill_bytes": t["spill_bytes"],
-        }
-
-    return {n: {ph: counts(f"{n}:{ph}") for ph in PHASES} for n in names}
-
-
-def unattributed_jobs(evlog, names) -> int:
+def unattributed_jobs(job_ids) -> int:
     """Jobs under no query's group and not the warm-up's: a stream's
-    micro-batches, which run on the stream's own thread and group."""
-    known = {f"{n}:{ph}" for n in names for ph in PHASES} | {WARM_GROUP}
-    return evlog.totals(lambda j: j.group not in known)["jobs"]
+    micro-batches, which run on the stream's own thread and group. Job
+    ids are dense per SparkContext, so these are the gaps in the span
+    of the known groups' ids."""
+    return max(job_ids, default=-1) - min(job_ids, default=0) + 1 - len(job_ids)
 
 
 def git_sha(repo: pathlib.Path) -> str | None:
@@ -137,8 +119,8 @@ def warm_up(spark, sf_dir: str) -> None:
     spark.sparkContext.setJobGroup(WARM_GROUP, WARM_GROUP)
     for t in TABLES:
         load_table(spark, sf_dir, t)
-    materialize(QUERIES["q_scan"].spark(spark, sf_dir).limit(1))
-    materialize(
+    execute(QUERIES["q_scan"].spark(spark, sf_dir).limit(1))
+    execute(
         spark.range(0, 1024, 1, int(spark.sparkContext.defaultParallelism))
         .select(_warm(F.col("id").cast("double")).alias("x"))
     )
@@ -151,27 +133,11 @@ def main() -> None:
     except ValueError:  # non-sf<N> dir name — keep the one-JSON-line contract
         sf = -1.0
 
-    # A local, uncompressed event log of this session only, read back
-    # after the session stops (as perfbench/run.py does for --trace 1).
-    log_dir = tempfile.mkdtemp(prefix="bench-eventlog-")
-    try:
-        confs = [
-            "--conf", "spark.eventLog.enabled=true",
-            "--conf", f"spark.eventLog.dir={pathlib.Path(log_dir).as_uri()}",
-            "--conf", "spark.eventLog.compress=false",
-            "--conf", "spark.eventLog.rolling.enabled=false",
-        ]
-        os.environ["PYSPARK_SUBMIT_ARGS"] = (
-            f"{shlex.join(confs)} {os.environ.get('PYSPARK_SUBMIT_ARGS', 'pyspark-shell')}"
-        )
-        spark = get_session("bench")
-        warm_up(spark, sf_dir)
-        times = run_queries(spark, sf_dir, QUERIES)
-        identity = artifact_identity(spark, HERE)
-        spark.stop()
-        evlog = read_event_log(log_dir)
-    finally:
-        shutil.rmtree(log_dir, ignore_errors=True)
+    spark = get_session("bench")
+    warm_up(spark, sf_dir)
+    times, counts, unattributed = run_queries(spark, sf_dir, QUERIES)
+    identity = artifact_identity(spark, HERE)
+    spark.stop()
 
     payload = {
         "metric": "total_query_wall_seconds",
@@ -181,8 +147,8 @@ def main() -> None:
         "sf": sf,
         **identity,
         "n_queries": len(times),
-        "counts": query_counts(evlog, times),
-        "unattributed_jobs": unattributed_jobs(evlog, times),
+        "counts": counts,
+        "unattributed_jobs": unattributed,
     }
 
     # The driver's BENCH_r0N.json keeps only a tail window of

@@ -101,7 +101,6 @@ def q_join_bloom(spark: SparkSession, d: str):
 def bloom_reduce_join(li, dim):
     """Composable form: bloom-prefilter ``li`` on l_orderkey against
     ``dim``'s k column, then the exact equi join + priority rollup.
-    Also driven at 10×-inflated scale by scripts/scale_probe.py.
 
     Both keys are canonicalized to BIGINT before hashing: xxhash64 is
     type-sensitive, so an int build key probed by a bigint fact key

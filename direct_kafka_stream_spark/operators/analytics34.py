@@ -298,8 +298,7 @@ def q_textrank(spark: SparkSession, d: str):
 
 
 def textrank_on(docs):
-    """Composable form over any documents-shaped frame — also driven
-    at 10×-inflated corpus size by scripts/scale_probe.py."""
+    """Composable form over any documents-shaped frame."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 

@@ -312,8 +312,7 @@ def q_quality_classifier(spark: SparkSession, d: str):
 
 def quality_scores(docs):
     """Composable form of q_quality_classifier over any (doc_id, text)
-    DataFrame — also exercised by scripts/scale_probe.py at inflated
-    corpus sizes."""
+    DataFrame."""
     toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     bucket = (
         F.conv(F.substring(F.md5("word"), 1, 2), 16, 10).cast("long") % _FH_DIM

@@ -2,6 +2,11 @@
 queries compile to the plans we designed for (SURVEY.md §4): filters
 reach the parquet scan, small dims broadcast, scans prune columns,
 whole-stage codegen covers the hot path. Used by tests/test_plans.py.
+
+Also the one way the bench (bench.py) and the scale probe
+(scripts/scale_probe.py) run a query and count its work: ``execute``
+drains a frame, ``group_counts`` reads what a job group cost and
+``final_plan_ops`` summarizes the AQE final plan.
 """
 
 from __future__ import annotations
@@ -39,19 +44,104 @@ def read_schema(df: DataFrame) -> str:
     return "\n".join(l.strip() for l in plan.splitlines() if "ReadSchema" in l)
 
 
-def codegen_stage_count(df: DataFrame, execute: bool = True) -> int:
-    """Number of whole-stage-codegen spans. With AQE the final plan only
-    exists after execution, so by default run the query first and read
-    the executed plan."""
-    if execute:
-        # collect() executes THIS QueryExecution so its AQE plan
-        # finalizes (a write would spawn a separate execution).
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    else:
-        plan = physical_plan(df)
-    import re
+def execute(df: DataFrame) -> None:
+    """Run ``df`` to completion without moving a row to the driver.
 
+    This executes the Dataset's own QueryExecution, in parallel on the
+    executors, so afterwards ``executedPlan()`` is the AQE final plan.
+    A write (even to the noop sink) would plan and run a separate
+    QueryExecution, and ``toLocalIterator`` runs one job per partition
+    of the final stage."""
+    df._jdf.queryExecution().toRdd().count()
+
+
+_PLAN_OPS = (
+    "BroadcastHashJoin",
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin",
+    "CartesianProduct",
+    "Exchange",
+    "AQEShuffleRead",
+    "Window",
+)
+
+
+def final_plan_ops(df: DataFrame) -> dict[str, int]:
+    """Operator histogram (join strategies, exchanges, AQE shuffle
+    reads, windows) of ``df``'s executed plan; read it after
+    ``execute(df)`` to get the AQE final plan. ``aqe_final`` records
+    whether the adaptive plan was final when read."""
+    s = df._jdf.queryExecution().executedPlan().toString()
+    # a finalized AdaptiveSparkPlan prints BOTH "== Final Plan ==" and
+    # "== Initial Plan ==" sections; count operators in the final one
+    # only (the initial section would double — or, where AQE re-planned,
+    # distort — every count)
+    s = s.split("== Initial Plan ==")[0]
+    hist = {
+        op: len(re.findall(rf"\b{op}\b", s))
+        for op in _PLAN_OPS
+        if re.search(rf"\b{op}\b", s)
+    }
+    if "AdaptiveSparkPlan" in s:
+        hist["aqe_final"] = int("isFinalPlan=true" in s)
+    return hist
+
+
+def group_counts(spark, group: str) -> dict[str, float]:
+    """What the jobs run under job group ``group`` cost: jobs, stages,
+    tasks, task CPU ms, shuffle read and write bytes, spill bytes.
+
+    Read from the application status store, which Spark's listener bus
+    fills whether or not the web UI runs, so it works on any session.
+    A stage a job skipped (its shuffle output was reused) or never ran
+    is not counted; a task counts whether it completed, failed or was
+    killed. The store keeps only the newest jobs and stages
+    (``spark.ui.retainedJobs``/``retainedStages``, 1,000 each), so read
+    a group right after its jobs ran."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    # the store is filled asynchronously; drain the bus so the jobs just
+    # finished are all in it
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    counts = {
+        "jobs": len(jobs),
+        "stages": 0,
+        "tasks": 0,
+        "cpu_ms": 0.0,
+        "shuffle_read_bytes": 0,
+        "shuffle_write_bytes": 0,
+        "spill_bytes": 0,
+    }
+    cpu_ns = 0
+    store = jsc.statusStore()
+    for sid in stage_ids:
+        # past retainedStages the store evicts skipped stages first, so
+        # a stage it no longer holds was skipped
+        if tracker.getStageInfo(sid) is None:
+            continue
+        st = store.lastStageAttempt(sid)
+        if st.status().toString() in ("SKIPPED", "PENDING"):
+            continue
+        counts["stages"] += 1
+        counts["tasks"] += st.numCompleteTasks() + st.numFailedTasks() + st.numKilledTasks()
+        cpu_ns += st.executorCpuTime()
+        counts["shuffle_read_bytes"] += st.shuffleReadBytes()
+        counts["shuffle_write_bytes"] += st.shuffleWriteBytes()
+        counts["spill_bytes"] += st.memoryBytesSpilled() + st.diskBytesSpilled()
+    counts["cpu_ms"] = round(cpu_ns / 1e6, 1)
+    return counts
+
+
+def codegen_stage_count(df: DataFrame) -> int:
+    """Number of whole-stage-codegen spans. With AQE the final plan only
+    exists after execution, so run the query first and read the
+    executed plan."""
+    execute(df)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     ids = set()
     for line in plan.splitlines():
         if "codegen id :" in line:

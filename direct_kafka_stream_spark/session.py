@@ -191,9 +191,7 @@ def get_session(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
-        # UI off for bench/test noise; scale_probe turns it on to read
-        # per-stage shuffle bytes from the REST status API
-        .config("spark.ui.enabled", "true" if _env_flag("SPARK_GRAFT_UI") else "false")
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config(
             "spark.sql.warehouse.dir",

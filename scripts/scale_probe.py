@@ -3,7 +3,9 @@
 10× → ~6M lineitem rows, an ~sf1 equivalent) and measure the heavy
 registered queries at both scales — converting the 100 TB design
 *argument* (bounded blocks, broadcast sizes, no quadratic joins) into
-measured evidence: near-linear cost ratios and no plan flips.
+measured evidence: near-linear cost ratios and no plan flips. A query
+is run and counted exactly as bench.py runs and counts it
+(``plans.inspect``).
 
 Subcommands
 -----------
@@ -16,20 +18,22 @@ materialize OUTDIR [N] [table ...]
                          cluster structure, and therefore candidate
                          volume in the dedup family, scales linearly
                          exactly as an organically larger corpus would)
-run SFDIR Q [Q...]       run registered queries against SFDIR via a
-                         noop sink, print one JSON line per query:
-                         {"query": ..., "sec": ..., "plan": {...}}
-                         where plan is the POST-execution AQE final
-                         plan's operator histogram (join strategies,
-                         exchanges, AQE skew reads). Each query's
+run SFDIR Q [Q...]       build and execute each registered query
+                         once against SFDIR, under job groups
+                         `<Q>:build` and `<Q>:exec`, and print one JSON
+                         line per query: {"query", "sf_dir", "sec",
+                         "counts", "plan"}. `sec` is the single-shot
+                         wall of build plus execution, `counts` holds
+                         bench.py's counts per phase, and `plan` is the
+                         operator histogram (join strategies,
+                         exchanges, AQE shuffle reads) of that same
+                         execution's AQE final plan. Each query's
                          registry `scale_confs` (its probe-passed 100x
                          session knobs, SCALE.md/docs/TUNING.md) are
-                         applied for its runs and restored after — a
+                         applied for its run and restored after — a
                          100x run needs NO --conf flags; explicit
                          --conf still wins on conflicting keys, and
                          --no-scale-confs probes the untuned plan
-shapes [N]               the original composed-operator shape probe
-                         (in-memory inflation, no materialization)
 
 Flags (before the subcommand; `run` only)
 ------------------------------------------
@@ -68,7 +72,6 @@ from __future__ import annotations
 
 import json
 import pathlib
-import re
 import sys
 import time
 
@@ -78,10 +81,10 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
-from direct_kafka_stream_spark import get_session, load_table
+from direct_kafka_stream_spark import QUERIES, get_session, load_table
 from direct_kafka_stream_spark.caching import clear_materialized
-from direct_kafka_stream_spark.exprs import dsum
 from direct_kafka_stream_spark.io import TABLES
+from direct_kafka_stream_spark.plans.inspect import execute, final_plan_ops, group_counts
 
 SF_DIR = "/root/testdata/sf0.1"
 SHIFT = 10_000_000_000
@@ -103,16 +106,6 @@ _KEY_COLS = {
 }
 
 _ALPHA = "abcdefghijklmnopqrstuvwxyz"
-
-
-def inflate(df: DataFrame, n: int, key_cols: tuple[str, ...]) -> DataFrame:
-    copies = []
-    for i in range(n):
-        c = df
-        for k in key_cols:
-            c = c.withColumn(k, F.col(k) + F.lit(i * SHIFT))
-        copies.append(c)
-    return reduce(lambda a, b: a.unionByName(b), copies)
 
 
 def inflate_table(spark, name: str, n: int) -> DataFrame:
@@ -178,71 +171,6 @@ def materialize(outdir: str, n: int, only: list[str] | None = None) -> None:
         df.write.mode("overwrite").parquet(dest)
         rows[name] = spark.read.parquet(dest).count()
     print(json.dumps({"materialized": outdir, "inflate": n, "rows": rows}))
-
-
-_PLAN_OPS = (
-    "BroadcastHashJoin",
-    "SortMergeJoin",
-    "ShuffledHashJoin",
-    "BroadcastNestedLoopJoin",
-    "CartesianProduct",
-    "Exchange",
-    "AQEShuffleRead",
-    "Window",
-)
-
-
-def _plan_histogram(df: DataFrame) -> dict[str, int]:
-    """Operator histogram of the POST-execution AQE final plan.
-
-    The timed noop write runs through its OWN QueryExecution, so this
-    df's plan would still be the pre-AQE-finalization one; drain the
-    Dataset's own execution first so executedPlan() is the AQE final
-    plan, and record whether finalization actually happened.
-
-    The drain executes the Dataset's OWN QueryExecution JVM-side in a
-    single parallel job with zero row transfer:
-    ``queryExecution().toRdd().count()``. (The obvious alternative,
-    ``toLocalIterator``, runs ONE JOB PER PARTITION of the final
-    stage — at 200x under the 1024-partition scale confs that is
-    hours of serial single-partition jobs for a drain whose rows
-    nobody reads; it hung the round-12 200x probe until replaced.)
-
-    Cost note: the drain is one EXTRA full execution after the timed
-    runs (~+50% on a min-of-2 probe of a heavy query). It happens
-    after timing, so recorded seconds are unaffected; for plan
-    capture without any timed runs use the `plans` subcommand."""
-    df._jdf.queryExecution().toRdd().count()
-    s = df._jdf.queryExecution().executedPlan().toString()
-    # a finalized AdaptiveSparkPlan prints BOTH "== Final Plan ==" and
-    # "== Initial Plan ==" sections; count operators in the final one
-    # only (the initial section would double — or, where AQE re-planned,
-    # distort — every count)
-    s = s.split("== Initial Plan ==")[0]
-    hist = {
-        op: len(re.findall(rf"\b{op}\b", s))
-        for op in _PLAN_OPS
-        if re.search(rf"\b{op}\b", s)
-    }
-    if "AdaptiveSparkPlan" in s:
-        hist["aqe_final"] = int("isFinalPlan=true" in s)
-    return hist
-
-
-def _stage_snapshot(sc) -> dict | None:
-    """Per-stage metrics from the REST status API (needs the UI, which
-    run_queries enables via SPARK_GRAFT_UI); None when unavailable."""
-    import urllib.request
-
-    try:
-        url = (
-            f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-            "/stages?details=false"
-        )
-        stages = json.load(urllib.request.urlopen(url, timeout=10))
-        return {(s["stageId"], s["attemptId"]): s for s in stages}
-    except Exception:
-        return None
 
 
 def _free_gb(path: str = "/tmp") -> float:
@@ -331,7 +259,6 @@ def run_queries(
 ) -> None:
     import os
 
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")
     # Close the caller's open query scope now, so its conf restore does
     # not land on top of the probe session's set-up.
     clear_materialized()
@@ -368,9 +295,6 @@ def _run_queries_inner(
     extra_conf: dict[str, str] | None,
     use_scale_confs: bool,
 ) -> None:
-    import __spark_entry__ as entry
-    from direct_kafka_stream_spark import QUERIES as _REG
-
     def _make_session():
         s = get_session("scale-probe-run")
         # probe-level runtime confs (e.g. AQE advisoryPartitionSizeInBytes:
@@ -381,7 +305,6 @@ def _run_queries_inner(
             s.conf.set(k, v)
         return s
 
-    qs = entry.queries()
     spark = _make_session()
     sc = spark.sparkContext
     conf_note = {
@@ -398,66 +321,34 @@ def _run_queries_inner(
     load_table(spark, sf_dir, warm).count()
     for name in names:
         # the query's scope (caching) keeps its scale confs through the
-        # timed runs and the drain below, and restores them when the
-        # next query starts or when run_queries returns
-        hints = dict(_REG[name].scale_confs) if name in _REG else {}
-        raws = []
-        df = None
-        shuffle = None
-        dnf = None
-        for _ in range(2):
-            before = _stage_snapshot(sc)
-            guard = _RunGuard(sc, timeout_s, disk_floor_gb)
-            t0 = time.perf_counter()
-            try:
-                df = qs[name](spark, sf_dir)
-                # explicit --conf outranks the registry's scale hints
-                for k, v in (extra_conf or {}).items():
-                    spark.conf.set(k, v)
-                df.write.format("noop").mode("overwrite").save()
-            except Exception:
-                elapsed = round(time.perf_counter() - t0, 2)
-                guard.stop()
-                if guard.reason is None:
-                    raise
-                dnf = {
-                    "query": name,
-                    "sf_dir": sf_dir,
-                    "dnf": guard.reason,
-                    "elapsed_at_kill_s": elapsed,
-                    "free_gb_at_kill": round(_free_gb(), 1),
-                }
-                break
+        # execution below, and restores them when the next query starts
+        # or when run_queries returns
+        q = QUERIES[name]
+        guard = _RunGuard(sc, timeout_s, disk_floor_gb)
+        t0 = time.perf_counter()
+        try:
+            sc.setJobGroup(f"{name}:build", name)
+            df = q.spark(spark, sf_dir)
+            # explicit --conf outranks the registry's scale hints
+            for k, v in (extra_conf or {}).items():
+                spark.conf.set(k, v)
+            sc.setJobGroup(f"{name}:exec", name)
+            execute(df)
+        except Exception:
+            elapsed = round(time.perf_counter() - t0, 2)
             guard.stop()
-            raws.append(round(time.perf_counter() - t0, 2))
-            after = _stage_snapshot(sc)
-            if after is not None:
-                new = [
-                    s
-                    for k, s in after.items()
-                    if before is None or k not in before
-                ]
-                cand = {
-                    "write_bytes": sum(s["shuffleWriteBytes"] for s in new),
-                    "peak_stage_write_bytes": max(
-                        (s["shuffleWriteBytes"] for s in new), default=0
-                    ),
-                    "spill_disk_bytes": sum(
-                        s.get("diskBytesSpilled", 0) for s in new
-                    ),
-                    "spill_mem_bytes": sum(
-                        s.get("memoryBytesSpilled", 0) for s in new
-                    ),
-                    "n_stages": len(new),
-                }
-                # keep the metrics of the fastest (quietest) run
-                if shuffle is None or raws[-1] == min(raws):
-                    shuffle = cand
-            spark.catalog.clearCache()
-        if dnf is not None:
+            if guard.reason is None:
+                raise
             # guard breach: record the DNF row, then replace the
             # session — a cancelled external sort leaves partial
             # shuffle scratch the live session won't free
+            dnf = {
+                "query": name,
+                "sf_dir": sf_dir,
+                "dnf": guard.reason,
+                "elapsed_at_kill_s": elapsed,
+                "free_gb_at_kill": round(_free_gb(), 1),
+            }
             print(json.dumps(dnf), flush=True)
             own = _session_scratch_dirs(spark)
             spark.stop()
@@ -466,198 +357,19 @@ def _run_queries_inner(
             sc = spark.sparkContext
             load_table(spark, sf_dir, warm).count()
             continue
-        # the histogram drain is one more full execution — guard it
-        # like the timed runs (a spilling drain must not ride through
-        # the disk floor unwatched); a breached drain records the
-        # reason in place of the histogram, keeping the timed raws
-        guard = _RunGuard(sc, timeout_s, disk_floor_gb)
-        try:
-            plan = _plan_histogram(df)
-        except Exception:
-            if guard.reason is None:
-                guard.stop()
-                raise
-            plan = {"drain_dnf": guard.reason}
-        finally:
-            guard.stop()
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "sf_dir": sf_dir,
-                    "sec": min(raws),
-                    "raw": raws,
-                    "shuffle": shuffle,
-                    "plan": plan,
-                    **(
-                        {"scale_confs_applied": hints}
-                        if hints and use_scale_confs
-                        else {}
-                    ),
-                }
-            ),
-            flush=True,
-        )
-
-
-def plan_only(sf_dir: str, names: list[str]) -> None:
-    """Execute each query ONCE and print its post-execution AQE final
-    plan histogram — no timing claims, usable while other work runs."""
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    spark = get_session("scale-probe-plans")
-    for name in names:
-        df = qs[name](spark, sf_dir)
-        print(
-            json.dumps(
-                {"query": name, "sf_dir": sf_dir, "plan": _plan_histogram(df)}
-            ),
-            flush=True,
-        )
-        spark.catalog.clearCache()
-
-
-def shapes(n: int) -> None:
-    spark = get_session("scale-probe")
-
-    li = inflate(load_table(spark, SF_DIR, "lineitem"), n, ("l_orderkey",))
-    o = inflate(load_table(spark, SF_DIR, "orders"), n, ("o_orderkey",))
-    c = load_table(spark, SF_DIR, "customer")
-    nat = load_table(spark, SF_DIR, "nation")
-    reg = load_table(spark, SF_DIR, "region")
-
-    rows, secs = {}, {}
-
-    def run(name, df):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        secs[name] = round(time.perf_counter() - t0, 2)
-
-    rows["lineitem"] = li.count()
-
-    # TPC-H Q1 shape: the pure aggregation throughput test
-    run(
-        "agg_group",
-        li.groupBy("l_returnflag", "l_linestatus").agg(
-            dsum("l_quantity").alias("sum_qty"),
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
-            F.count(F.lit(1)).alias("n"),
-        ),
-    )
-
-    # Q5-shape star join at inflated fact size
-    run(
-        "multiway",
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(nat), c.c_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .groupBy("n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev")),
-    )
-
-    # window (SCD-ish) over the inflated orders
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    run(
-        "window_lead",
-        o.select(
-            "o_custkey",
-            "o_orderkey",
-            F.lead("o_orderdate").over(w).alias("nxt"),
-        ),
-    )
-
-    # SRP-LSH index build over an inflated embedding corpus — the ANN
-    # scale path must stay a zero-shuffle linear scan + tiny bucket agg
-    from direct_kafka_stream_spark.operators.llm import _srp_bucket_col
-
-    par = spark.sparkContext.defaultParallelism
-    emb = inflate(load_table(spark, SF_DIR, "embeddings"), n, ("vec_id",)).repartition(
-        par, "vec_id"
-    )
-    rows["embeddings"] = emb.count()
-    run(
-        "srp_index",
-        emb.select("vec_id", _srp_bucket_col().alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_vectors")),
-    )
-
-    # Decontamination over an inflated document corpus — the eval-gram
-    # broadcast stays fixed-size while the training side scales
-    from direct_kafka_stream_spark.operators.llm2 import decontaminate
-
-    docs = inflate(load_table(spark, SF_DIR, "documents"), n, ("doc_id",)).repartition(
-        par, "doc_id"
-    )
-    rows["documents"] = docs.count()
-    run("decontaminate", decontaminate(docs))
-
-    # Round-3 shapes: hashed-linear quality scoring (one scan + one
-    # doc-keyed agg, no join) over the inflated corpus
-    from direct_kafka_stream_spark.operators.features import quality_scores
-
-    run("quality_classifier", quality_scores(docs))
-
-    # Round-4 shapes over an inflated event stream: the sweep-line
-    # concurrency window must stay day-partitioned (bounded at 86400
-    # rows/partition by the per-second pre-aggregation) and the DAU/MAU
-    # explode fan-out must stay a plain day-keyed aggregation — both
-    # would degrade into single-partition windows / nested-loop joins
-    # if their rewrites regressed.
-    from direct_kafka_stream_spark.operators.analytics5 import (
-        concurrent_peak_report,
-    )
-
-    ev = inflate(
-        load_table(spark, SF_DIR, "events"), n, ("event_id", "user_id")
-    ).repartition(par, "event_id")
-    rows["events"] = ev.count()
-    run("concurrent_peak", concurrent_peak_report(ev))
-
-    ud = ev.select(
-        "user_id", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).distinct()
-    run(
-        "dau_mau_coverage",
-        ud.select(
-            "user_id",
-            F.explode(
-                F.sequence(F.col("day"), F.date_add(F.col("day"), 29))
-            ).alias("day"),
-        )
-        .groupBy("day")
-        .agg(F.countDistinct("user_id").alias("mau")),
-    )
-
-    # Bloom semi-join reduction at inflated fact size — the probe
-    # predicate must keep the post-filter shuffle ~selectivity-sized
-    # while the bloom build/broadcast stays fixed-size
-    from direct_kafka_stream_spark.operators.analytics33 import (
-        _BLOOM_CUTOFF,
-        bloom_reduce_join,
-    )
-
-    dim = o.filter(F.col("o_orderdate") >= _BLOOM_CUTOFF).select(
-        F.col("o_orderkey").alias("k"), "o_orderpriority"
-    )
-    run(
-        "join_bloom",
-        bloom_reduce_join(
-            li.select("l_orderkey", "l_extendedprice", "l_discount"), dim
-        ),
-    )
-
-    # TextRank at inflated corpus size — doc-keyed supersteps must
-    # scale with documents, never build cross-document edges
-    from direct_kafka_stream_spark.operators.analytics34 import textrank_on
-
-    run("textrank_docs", textrank_on(docs))
-
-    print(json.dumps({"inflate": n, "rows": rows, "seconds": secs}))
+        sec = round(time.perf_counter() - t0, 2)
+        guard.stop()
+        row = {
+            "query": name,
+            "sf_dir": sf_dir,
+            "sec": sec,
+            "counts": {ph: group_counts(spark, f"{name}:{ph}") for ph in ("build", "exec")},
+            "plan": final_plan_ops(df),
+        }
+        if q.scale_confs and use_scale_confs:
+            row["scale_confs_applied"] = dict(q.scale_confs)
+        print(json.dumps(row), flush=True)
+    sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def main() -> None:
@@ -722,13 +434,11 @@ def main() -> None:
             args[1], args[2:], timeout_s, disk_floor_gb, extra_conf,
             use_scale_confs,
         )
-    elif args and args[0] == "plans":
-        plan_only(args[1], args[2:])
-    elif args and args[0] == "shapes":
-        shapes(int(args[1]) if len(args) > 1 else 10)
     else:
-        # backwards compatible: bare [N] runs the shape probe
-        shapes(int(args[0]) if args else 10)
+        raise SystemExit(
+            "usage: scale_probe.py [flags] materialize OUTDIR [N] [table ...]"
+            " | run SFDIR Q [Q ...]"
+        )
 
 
 if __name__ == "__main__":

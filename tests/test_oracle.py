@@ -93,9 +93,9 @@ def test_bench_contract_shape():
     # every query run once, failures recorded not raised
     assert "run_queries(spark, sf_dir, QUERIES)" in src
     assert "BENCH ERROR" in src
-    # per query, the build's and the exec's event-log counts (behaviour
-    # pinned by tests/test_bench_protocol.py on a synthetic event log)
-    assert '"counts": query_counts(evlog, times)' in src
+    # per query, the build's and the exec's status-store counts
+    # (behaviour pinned by tests/test_bench_protocol.py)
+    assert '"counts": counts,' in src
 
 
 def test_hll_sketch_error_is_bounded():

@@ -5,6 +5,7 @@ sf0.1 bench/correctness path."""
 
 from __future__ import annotations
 
+import json
 import pathlib
 import sys
 
@@ -138,6 +139,18 @@ def test_probe_run_restores_session_confs(monkeypatch, spark, capsys):
     out = capsys.readouterr().out
     assert '"scale_confs_applied"' in out
     assert '"spark.sql.shuffle.partitions": "1024"' in out
+    # one row per query, counted as bench.py counts it, with the final
+    # plan of that same (single) execution
+    (row,) = [json.loads(l) for l in out.splitlines() if '"query"' in l]
+    keys = [
+        "jobs", "stages", "tasks", "cpu_ms",
+        "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes",
+    ]
+    assert sorted(row["counts"]) == ["build", "exec"]
+    assert all(list(c) == keys for c in row["counts"].values())
+    assert row["counts"]["exec"]["jobs"] > 0
+    assert row["plan"]["aqe_final"] == 1
+    assert "raw" not in row and "shuffle" not in row
     for k, v in before.items():
         assert spark.conf.get(k) == v, f"{k} not restored"
     # undo the probe-session retune so the shared test session keeps
@@ -190,9 +203,10 @@ def test_query_scope_restores_scale_confs(monkeypatch, spark, sf_dir, tmp_path):
 
 
 def test_probe_run_restores_scale_env(monkeypatch, spark, capsys):
-    """run_queries must not leave SPARK_GRAFT_SCALE in the process env
-    after it returns (in-process callers would silently inherit the
-    scale flag)."""
+    """run_queries must leave the process env as it found it: an
+    in-process caller would silently inherit the scale flag, and a
+    web-UI switch the probe once set made every later session in the
+    process start the UI."""
     import importlib.util
     import os as _os
 
@@ -203,10 +217,11 @@ def test_probe_run_restores_scale_env(monkeypatch, spark, capsys):
     spec.loader.exec_module(mod)
 
     monkeypatch.delenv("SPARK_GRAFT_SCALE", raising=False)
+    env = dict(_os.environ)
     mod.run_queries(
         "/root/testdata/sf0.001", ["q_scan"], timeout_s=300.0, disk_floor_gb=1.0
     )
-    assert _os.environ.get("SPARK_GRAFT_SCALE") is None
+    assert dict(_os.environ) == env
     capsys.readouterr()
 
     monkeypatch.setenv("SPARK_GRAFT_SCALE", "0")

@@ -37,7 +37,6 @@ def probe(monkeypatch):
             run=(sf, names, t, d, conf, scale)
         ),
     )
-    monkeypatch.setattr(mod, "shapes", lambda n: calls.update(shapes=n))
     return mod, calls
 
 
@@ -80,3 +79,15 @@ def test_run_defaults_apply_registry_scale_confs(probe, monkeypatch):
     mod, calls = probe
     _main(mod, monkeypatch, ["run", "/tmp/x", "qa"])
     assert calls["run"][5] is True
+
+
+@pytest.mark.parametrize(
+    "argv", [["plans", "/tmp/x", "qa"], ["shapes", "10"], ["10"], []]
+)
+def test_removed_subcommands_are_usage_errors(probe, monkeypatch, argv):
+    """`plans` (now part of `run`), `shapes` and a bare count are gone:
+    each exits with the usage line and runs nothing."""
+    mod, calls = probe
+    with pytest.raises(SystemExit, match="usage"):
+        _main(mod, monkeypatch, argv)
+    assert calls == {}
