@@ -20,12 +20,10 @@ import sys
 import threading
 import time
 
-import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from direct_kafka_stream_spark import QUERIES, caching, load_table
-from direct_kafka_stream_spark.io import TABLES
 from direct_kafka_stream_spark.caching import clear_materialized
 from direct_kafka_stream_spark.registry import BUILD_RUNS_JOBS
 from scripts.check_oracle import normalize
@@ -325,105 +323,25 @@ def test_foreach_batch_frees_each_batch_persists(spark, tmp_path):
     assert _persistent_rdd_ids(spark) <= baseline
 
 
-# Frames a loop reads only through its checkpoints' lineage, which no
-# plan walk sees, by the columns of the frame. q_dup_cluster_stats and
-# q_dedup_keep_best build q_dedup_components, and its edges with it.
-_LOOP_INPUTS = {
-    "q_dedup_components": ["src", "dst"],
-    "q_dup_cluster_stats": ["src", "dst"],
-    "q_dedup_keep_best": ["src", "dst"],
-    "q_kcore": ["a", "b"],
-}
-
-
-def _caches(spark, frames) -> list:
-    """(frame, its cache's builder) for the frames in the session's
-    cache; local checkpoints are not in it."""
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    found = [(f, cm.lookupCachedData(f._jdf)) for f in frames]
-    return [
-        (f, c.get().cachedRepresentation().cacheBuilder())
-        for f, c in found
-        if c.nonEmpty()
-    ]
-
-
-@pytest.fixture(scope="module")
-def build_sweep(spark):
-    """Build every registered query once, each under its own job group
-    and with every fixture table already loaded: name -> (Spark jobs the
-    build ran, number of persisted frames its scope tracked)."""
-    for name in TABLES:
-        load_table(spark, SF_DIR, name)
-    sc = spark.sparkContext
-    clear_materialized()
-    out = {}
-    try:
-        for name, q in QUERIES.items():
-            group = f"build:{name}"
-            sc.setJobGroup(group, group)
-            q.spark(spark, SF_DIR)
-            scope = caching._LIVE.get(threading.get_ident())
-            persisted = len(_caches(spark, scope.frames if scope else []))
-            clear_materialized()
-            out[name] = (len(sc.statusTracker().getJobIdsForGroup(group)), persisted)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out
-
-
-def test_query_builds_run_no_spark_job(build_sweep):
+def test_query_builds_run_no_spark_job(registry_pass):
     """Building a query plans it and runs nothing: the work happens when
     the caller consumes the result. Only the builds in
     ``BUILD_RUNS_JOBS`` run jobs."""
-    assert len(build_sweep) == len(QUERIES)
+    assert list(registry_pass) == list(QUERIES)
     assert set(BUILD_RUNS_JOBS) <= set(QUERIES)
-    ran = {n: jobs for n, (jobs, _) in build_sweep.items() if jobs}
+    ran = {n: r.build_jobs for n, r in registry_pass.items() if r.build_jobs}
     assert not {n: j for n, j in ran.items() if n not in BUILD_RUNS_JOBS}
 
 
-def _seq(s) -> list:
-    return [s.apply(i) for i in range(s.size())]
-
-
-def _cache_scans(ident, plan, key: int) -> int:
-    """``InMemoryTableScanExec`` nodes over the cache whose builder has
-    identity hash ``key`` in a physical plan, not counting below a
-    reused exchange or subquery."""
-    kind = plan.getClass().getSimpleName()
-    if kind in ("ReusedExchangeExec", "ReusedSubqueryExec"):
-        return 0
-    if kind == "AdaptiveSparkPlanExec":
-        kids = [plan.executedPlan()]
-    elif kind.endswith("QueryStageExec"):
-        kids = [plan.plan()]
-    else:
-        kids = _seq(plan.children()) + _seq(plan.subqueries())
-    here = kind == "InMemoryTableScanExec" and ident(plan.relation().cacheBuilder()) == key
-    return here + sum(_cache_scans(ident, k, key) for k in kids)
-
-
-def test_each_tracked_persist_is_read_twice(spark, build_sweep):
+def test_each_tracked_persist_is_read_twice(registry_pass):
     """A query persists a frame only when its plan reads the frame at
-    least twice. Reads are counted in the collected result's executed
-    plan and in the cached plans of the query's other persisted frames;
-    a reused exchange is one read, not two."""
-    ident = spark._jvm.System.identityHashCode
-    reads = {}
-    for name, (_, persisted) in build_sweep.items():
-        if not persisted:
-            continue
-        df = QUERIES[name].spark(spark, SF_DIR)
-        caches = _caches(spark, caching._LIVE[threading.get_ident()].frames)
-        df.collect()
-        result = df._jdf.queryExecution().executedPlan()
-        for f, builder in caches:
-            if f.columns == _LOOP_INPUTS.get(name):
-                continue
-            key = ident(builder)
-            plans = [result] + [b.cachedPlan() for _, b in caches if ident(b) != key]
-            reads[name, tuple(f.columns)] = sum(_cache_scans(ident, p, key) for p in plans)
-        clear_materialized()
+    least twice. Reads are counted in the executed result's final plan
+    and in the cached plans of the query's other persisted frames; a
+    reused exchange is one read, not two."""
+    reads = {
+        (name, cols): n
+        for name, r in registry_pass.items()
+        for cols, n in (r.reads or {}).items()
+    }
     assert reads
     assert not {k: n for k, n in reads.items() if n < 2}

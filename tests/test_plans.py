@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from direct_kafka_stream_spark import QUERIES
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.plans import inspect
-from direct_kafka_stream_spark.registry import BUILD_RUNS_JOBS
 
 from tests.conftest import SF_DIR
 
@@ -598,20 +597,13 @@ def test_cusum_windows_are_keyed(spark):
     assert "windowspecdefinition(day#" not in plan
 
 
-def test_no_unpartitioned_window_in_any_registered_query(spark):
+def test_no_unpartitioned_window_in_any_registered_query(registry_pass):
     """Registry-wide window hygiene: NO registered query may compile
     to a Window node with an empty partitionSpec. Detail-row windows
     must be data-keyed; bounded (bins-sized) frames must carry
     exprs.bounded_window_key so WindowExec's "No Partition Defined"
-    warning stays a real alarm instead of ~250 lines of noise.
-    Plan-only, so the full registry checks in a couple of minutes."""
-    flagged = {}
-    for name, q in QUERIES.items():
-        df = q.spark(spark, SF_DIR)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        bad = inspect.unpartitioned_windows(plan)
-        if bad:
-            flagged[name] = bad
+    warning stays a real alarm instead of ~250 lines of noise."""
+    flagged = {n: r.windows for n, r in registry_pass.items() if r.windows}
     assert not flagged, (
         f"{len(flagged)} queries compile unpartitioned Window nodes: "
         + "; ".join(f"{n} ({len(b)})" for n, b in sorted(flagged.items()))
@@ -847,7 +839,7 @@ def test_pandas_api_lowers_without_python_nodes(spark):
         assert bad not in plan, bad
 
 
-def test_expand_census_is_closed(spark):
+def test_expand_census_is_closed(registry_pass):
     """Expand multiplies every input row once per projection, so an
     UNINTENDED Expand over a fact table is a hot-path bug even when
     values stay correct (q_agg_approx's mixed countDistinct +
@@ -874,14 +866,6 @@ def test_expand_census_is_closed(spark):
         "q_zorder_key",
         "q_domain_stats",
     }
-    # builds that run Spark jobs return the tail of a computation
-    # that has already run; building them here would turn a plan
-    # census into a full engine run (scripts/plan_report.py skips the
-    # same set)
-    got = set()
-    for name, q in QUERIES.items():
-        if name in BUILD_RUNS_JOBS:
-            continue
-        if "Expand" in inspect.physical_plan(q.spark(spark, SF_DIR)):
-            got.add(name)
+    # the pass takes no census of BUILD_RUNS_JOBS (conftest.QueryRecord)
+    got = {n for n, r in registry_pass.items() if r.expand}
     assert got == expected, got.symmetric_difference(expected)
