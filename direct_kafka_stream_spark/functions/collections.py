@@ -4,7 +4,7 @@ q_collect q_pivot).
 
 The embedding column (array<float>) is the vector-workload surface —
 the same higher-order functions power the similarity operators in
-operators/llm.py. Float elements are cast to double and rounded where
+operators/similarity.py. Float elements are cast to double and rounded where
 accumulation order could differ between engines.
 """
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import text
 from direct_kafka_stream_spark.registry import query
 
 
@@ -47,7 +48,7 @@ def q_str_fns(spark: SparkSession, d: str):
         F.concat_ws("-", "p_brand", "p_type").alias("brand_type"),
         F.length("p_name").alias("name_len"),
         F.replace(F.col("p_name"), F.lit("a"), F.lit("@")).alias("name_at"),
-        F.size(F.split("p_name", " ")).alias("n_words"),
+        F.size(text.space_split("p_name")).alias("n_words"),
         F.regexp_extract("p_name", "([a-z]+)", 1).alias("first_word"),
         F.instr(F.col("p_name"), "a").alias("a_pos"),
         F.lpad("p_brand", 12, "*").alias("brand_pad"),

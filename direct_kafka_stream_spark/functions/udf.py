@@ -221,7 +221,7 @@ def q_udtf_split(spark: SparkSession, d: str):
     """Python UDTF (Spark ≥3.5): one input row → many output rows via a
     LATERAL join — the user-extensible table function surface. Kept on
     a small slice: a Python UDTF is the slow path; the production
-    tokenizer is the higher-order-function pipeline in operators/llm.py."""
+    tokenizer is the higher-order-function pipeline in operators/text.py."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="word string, pos int")

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import davg_sql, dsum, dsum_sql
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import text
 from direct_kafka_stream_spark.registry import query
 
 
@@ -311,7 +312,7 @@ def q_explode_outer(spark: SparkSession, d: str):
     NULL token) instead of disappearing — the LEFT JOIN of lateral
     views. DuckDB emulation: rewrite null/empty lists to [NULL]."""
     docs = load_table(spark, d, "documents")
-    toks = F.slice(F.split("text", " "), 1, 2)
+    toks = F.slice(text.space_split(), 1, 2)
     arr = (
         F.when(F.col("doc_id") % 7 == 0, F.lit(None))
         .when(F.col("doc_id") % 5 == 0, F.array().cast("array<string>"))

@@ -14,6 +14,7 @@ from pyspark.sql import Column, SparkSession, functions as F
 
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import text
 from direct_kafka_stream_spark.registry import query
 
 # 2^60 as double (see q_mix_sample): md5 60-bit prefix -> u in [0,1).
@@ -154,13 +155,11 @@ def q_train_test_split(spark: SparkSession, d: str):
     one aggregation; the leakage check is a sha256-keyed aggregation
     counting distinct splits per text hash. Reproducible run-to-run
     and engine-exact (md5/sha256 are the portable primitives)."""
-    from direct_kafka_stream_spark.operators.llm import _tokens
-
     docs = load_table(spark, d, "documents")
     u = _u_col(F.col("doc_id"))
     tagged = docs.select(
         "text",
-        F.size(_tokens()).alias("n_tokens"),
+        F.size(text.tokens()).alias("n_tokens"),
         F.when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test").alias(
             "split"
         ),

@@ -12,30 +12,30 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators.features import (
+    FH_DIM,
+    QC_BIAS,
+    qc_weight_sql,
+    quality_scores,
+)
 from direct_kafka_stream_spark.registry import query
 
 _ROC_TAUS = (0.40, 0.42, 0.44, 0.46, 0.48, 0.50)
 
 
-def _scored_labeled_sql() -> str:
-    from direct_kafka_stream_spark.operators.features import (
-        _FH_DIM,
-        _QC_BIAS,
-        _qc_weight_sql,
-    )
-
+def scored_labeled_sql() -> str:
     return f"""
         SELECT s.doc_id,
                round(1.0 / (1.0 + exp(-s.z)), 6) AS score,
                CASE WHEN d.text LIKE '%the%' THEN 1 ELSE 0 END AS y
         FROM (
             SELECT f.doc_id,
-                   SUM(f.n * {_qc_weight_sql('f.bucket')}) / SUM(f.n)
-                     + {_QC_BIAS} AS z
+                   SUM(f.n * {qc_weight_sql('f.bucket')}) / SUM(f.n)
+                     + {QC_BIAS} AS z
             FROM (
                 SELECT doc_id,
                        CAST(CAST(concat('0x', substr(md5(word), 1, 2)) AS BIGINT)
-                            % {_FH_DIM} AS BIGINT) AS bucket,
+                            % {FH_DIM} AS BIGINT) AS bucket,
                        COUNT(*) AS n
                 FROM (
                     SELECT doc_id,
@@ -48,9 +48,7 @@ def _scored_labeled_sql() -> str:
     """
 
 
-def _scored_labeled(spark, d):
-    from direct_kafka_stream_spark.operators.features import quality_scores
-
+def scored_labeled(spark, d):
     docs = load_table(spark, d, "documents")
     scores = quality_scores(docs).select("doc_id", "score")
     labels = docs.select(
@@ -63,7 +61,7 @@ def _scored_labeled(spark, d):
 def _roc_oracle() -> str:
     taus = ", ".join(f"({t})" for t in _ROC_TAUS)
     return f"""
-    WITH sl AS ({_scored_labeled_sql()}),
+    WITH sl AS ({scored_labeled_sql()}),
     taus(tau) AS (VALUES {taus})
     SELECT tau,
            CAST(COUNT(*) FILTER (WHERE score >= tau AND y = 1) AS BIGINT) AS tp,
@@ -98,7 +96,7 @@ def q_roc_curve(spark: SparkSession, d: str):
     docs out in one pass (conditional counts per threshold — no
     re-scan per operating point). All counts exact; rates are integer
     ratios."""
-    sl = _scored_labeled(spark, d)
+    sl = scored_labeled(spark, d)
     taus = spark.createDataFrame([(t,) for t in _ROC_TAUS], "tau DOUBLE")
     pos = F.col("score") >= F.col("tau")
     return (
@@ -145,7 +143,7 @@ _CAL_BINS = 10
 @query(
     "q_calibration_bins",
     oracle=f"""
-    WITH sl AS ({_scored_labeled_sql()}),
+    WITH sl AS ({scored_labeled_sql()}),
     rng AS (SELECT MIN(score) AS lo, MAX(score) AS hi FROM sl),
     binned AS (
         SELECT LEAST(CAST(FLOOR((score - lo)
@@ -176,7 +174,7 @@ def q_calibration_bins(spark: SparkSession, d: str):
     n <= corpus values is sum/count — both engines' integer-exact sum
     of rounded values divided identically... rounded to 6dp for the
     residual last-ulp accumulation difference)."""
-    sl = _scored_labeled(spark, d)
+    sl = scored_labeled(spark, d)
     rng = sl.agg(F.min("score").alias("lo"), F.max("score").alias("hi"))
     width = F.nullif((F.col("hi") - F.col("lo")) / _CAL_BINS, F.lit(0.0))
     binned = sl.crossJoin(F.broadcast(rng)).select(

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC, bounded_window_key
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import similarity
 from direct_kafka_stream_spark.operators.retrieval import BM25_SCORED_SQL
 from direct_kafka_stream_spark.registry import query
 
@@ -87,7 +88,6 @@ def q_rrf_fusion(spark: SparkSession, d: str):
     corpus-sized. The fusion join is a ≤2N-row full outer join.
     Ranking uses the ALIGNMENT.md rule: ROUNDED score desc with id
     tiebreak, identical on both engines."""
-    from direct_kafka_stream_spark.operators.llm import _cosine
     from direct_kafka_stream_spark.operators.retrieval import bm25_scored
 
     lex_top = (
@@ -115,7 +115,7 @@ def q_rrf_fusion(spark: SparkSession, d: str):
         .crossJoin(F.broadcast(qv))
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.round(_cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "doc_id")
         .limit(_RRF_N)

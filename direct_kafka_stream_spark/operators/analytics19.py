@@ -16,7 +16,7 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.io import load_table, spread_scan
-from direct_kafka_stream_spark.operators.llm import _BUCKET16_SQL
+from direct_kafka_stream_spark.operators import similarity, text
 from direct_kafka_stream_spark.registry import query
 
 # Set-similarity join threshold: Jaccard >= 0.6, i.e. 3/5 — the prefix
@@ -26,10 +26,8 @@ _SSJ_NUM, _SSJ_DEN = 3, 5
 
 
 def _setsim_oracle() -> str:
-    from direct_kafka_stream_spark.operators.llm import _SHINGLES_SQL
-
     return f"""
-    WITH sh0 AS ({_SHINGLES_SQL}),
+    WITH sh0 AS ({text.SHINGLES_SQL}),
     tok AS (SELECT DISTINCT doc_id, shingle AS word FROM sh0),
     sz AS (SELECT doc_id, COUNT(*) AS s FROM tok GROUP BY doc_id),
     df AS (SELECT word, COUNT(*) AS df FROM tok GROUP BY word),
@@ -85,7 +83,7 @@ def _setsim_oracle() -> str:
 def q_setsim_prefix(spark: SparkSession, d: str):
     """Exact set-similarity self-join (shingle-Jaccard >= 0.6) with
     PPJoin-style prefix filtering over the SAME word-3-gram shingles as
-    the MinHash path (llm.py ``_shingles_from_docs``): shingles are
+    the MinHash path (text.py ``shingles_from_docs``): shingles are
     globally ordered rarest-first, each document exposes only its first
     s − ceil(t·s) + 1 shingles as join keys, and any pair with Jaccard
     >= t is guaranteed to collide on at least one prefix shingle — so
@@ -102,11 +100,9 @@ def q_setsim_prefix(spark: SparkSession, d: str):
     boilerplate shingles never become join keys); verification joins
     are candidate-pair-keyed. The quadratic worst case only occurs
     when two documents genuinely share a rare shingle."""
-    from direct_kafka_stream_spark.operators.llm import _shingles_from_docs
-
     docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
     tok = track(
-        _shingles_from_docs(docs)
+        text.shingles_from_docs(docs)
         .select("doc_id", F.col("shingle").alias("word"))
         .distinct()
         .persist()
@@ -176,7 +172,7 @@ _LOF_TOPN = 10
         FROM embeddings
     ),
     b AS (
-        SELECT vec_id, {_BUCKET16_SQL} AS bucket FROM embeddings
+        SELECT vec_id, {similarity.BUCKET16_SQL} AS bucket FROM embeddings
     ),
     norms AS (SELECT vec_id, SUM(x * x) AS nn FROM ev GROUP BY vec_id),
     pairs AS (
@@ -248,10 +244,8 @@ def q_lof_bucketed(spark: SparkSession, d: str):
     reports it). At 100 TB the bucket bit-count rises to keep bucket
     populations bounded — the same dial every LSH operator here
     shares."""
-    from direct_kafka_stream_spark.operators.llm import _bucket16_col, _cosine
-
     emb = load_table(spark, d, "embeddings").select(
-        "vec_id", "embedding", _bucket16_col().alias("bucket")
+        "vec_id", "embedding", similarity.bucket16_col().alias("bucket")
     )
     a = emb.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"), "bucket"
@@ -265,7 +259,7 @@ def q_lof_bucketed(spark: SparkSession, d: str):
         .select(
             "va",
             "vb",
-            F.round(1 - _cosine(F.col("ea"), F.col("eb")), 9).alias("d"),
+            F.round(1 - similarity.cosine(F.col("ea"), F.col("eb")), 9).alias("d"),
         )
     )
     knn = track(

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import DEC, bounded_window_key
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import similarity
 from direct_kafka_stream_spark.registry import query
 
 # nDCG cut-off and the positional discount weights 1/log2(r+1),
@@ -390,18 +391,7 @@ def q_class_metrics(spark: SparkSession, d: str):
             "vec_id",
             "label",
             "clabel",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        "embedding",
-                        "cvec",
-                        lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, t: acc + t,
-                ),
-                6,
-            ).alias("d2"),
+            F.round(similarity.sq_dist("embedding", "cvec"), 6).alias("d2"),
         )
     )
     pred = (

@@ -15,6 +15,8 @@ from pyspark.sql.window import Window
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC, bounded_window_key
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import similarity, text
+from direct_kafka_stream_spark.operators.analytics4 import TRI_TAU
 from direct_kafka_stream_spark.registry import query
 
 # k-core order and the fixed peel-round count. Peeling converges on
@@ -25,16 +27,13 @@ _KCORE_K = 2
 _KCORE_ROUNDS = 4
 
 
-def _sim_edges_sql() -> str:
+def sim_edges_sql() -> str:
     """DuckDB: the bucketed similarity edge set (a < b) shared with
     q_triangle_count — intra-sign-LSH-bucket pairs at rounded cosine
     >= the triangle threshold."""
-    from direct_kafka_stream_spark.operators.analytics4 import _TRI_TAU
-    from direct_kafka_stream_spark.operators.llm import _BUCKET16_SQL, _EV_SQL
-
     return f"""
-    ev AS ({_EV_SQL}),
-    bkt AS (SELECT vec_id, {_BUCKET16_SQL} AS bucket FROM embeddings),
+    ev AS ({similarity.EV_SQL}),
+    bkt AS (SELECT vec_id, {similarity.BUCKET16_SQL} AS bucket FROM embeddings),
     norms AS (SELECT vec_id, SUM(x * x) AS nn FROM ev GROUP BY vec_id),
     cand AS (
         SELECT a.vec_id AS va, b2.vec_id AS vb
@@ -53,18 +52,15 @@ def _sim_edges_sql() -> str:
         FROM dots d
         JOIN norms na ON na.vec_id = d.va
         JOIN norms nb ON nb.vec_id = d.vb
-        WHERE round(d.dot / (sqrt(na.nn) * sqrt(nb.nn)), 6) >= {_TRI_TAU}
+        WHERE round(d.dot / (sqrt(na.nn) * sqrt(nb.nn)), 6) >= {TRI_TAU}
     )
     """
 
 
-def _sim_edges_spark(spark: SparkSession, d: str):
+def sim_edges_spark(spark: SparkSession, d: str):
     """Spark: the same bucketed similarity edge set as a DataFrame."""
-    from direct_kafka_stream_spark.operators.analytics4 import _TRI_TAU
-    from direct_kafka_stream_spark.operators.llm import _bucket16_col, _cosine
-
     emb = load_table(spark, d, "embeddings").select(
-        "vec_id", "embedding", _bucket16_col().alias("bucket")
+        "vec_id", "embedding", similarity.bucket16_col().alias("bucket")
     )
     a = emb.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"), "bucket"
@@ -75,7 +71,7 @@ def _sim_edges_spark(spark: SparkSession, d: str):
     return (
         a.join(b, "bucket")
         .filter(F.col("va") < F.col("vb"))
-        .filter(F.round(_cosine(F.col("ea"), F.col("eb")), 6) >= _TRI_TAU)
+        .filter(F.round(similarity.cosine(F.col("ea"), F.col("eb")), 6) >= TRI_TAU)
         .select(F.col("va").alias("a"), F.col("vb").alias("b"))
     )
 
@@ -98,7 +94,7 @@ def _kcore_oracle() -> str:
     )""")
         prev = f"e{r}"
     return f"""
-    WITH {_sim_edges_sql().strip()},{",".join(rounds)}
+    WITH {sim_edges_sql().strip()},{",".join(rounds)}
     SELECT node AS vec_id, CAST(deg AS BIGINT) AS core_degree
     FROM (
         SELECT node, COUNT(*) AS deg
@@ -125,7 +121,7 @@ def q_kcore(spark: SparkSession, d: str):
     of the shrinking edge set — no global structure; the edge set is
     bucket-scoped (never corpus-quadratic), and rounds is a fixed
     constant, not data-dependent driver control flow."""
-    edges = track(_sim_edges_spark(spark, d).persist())
+    edges = track(sim_edges_spark(spark, d).persist())
     cur = edges
     for _ in range(_KCORE_ROUNDS):
         ends = cur.select(F.col("a").alias("node")).unionAll(
@@ -155,11 +151,9 @@ def q_kcore(spark: SparkSession, d: str):
 
 
 def _mutual_best_oracle() -> str:
-    from direct_kafka_stream_spark.operators.llm import _BUCKET16_SQL, _EV_SQL
-
     return f"""
-    WITH ev AS ({_EV_SQL}),
-    bkt AS (SELECT vec_id, {_BUCKET16_SQL} AS bucket FROM embeddings),
+    WITH ev AS ({similarity.EV_SQL}),
+    bkt AS (SELECT vec_id, {similarity.BUCKET16_SQL} AS bucket FROM embeddings),
     norms AS (SELECT vec_id, SUM(x * x) AS nn FROM ev GROUP BY vec_id),
     cand AS (
         SELECT a.vec_id AS va, b2.vec_id AS vb
@@ -211,10 +205,8 @@ def q_mutual_best(spark: SparkSession, d: str):
     check is a self-join of the one-row-per-node best table on the
     (node, best) key. Ranking compares the ROUNDED cosine with the id
     tiebreak per the ALIGNMENT.md ranking rule."""
-    from direct_kafka_stream_spark.operators.llm import _bucket16_col, _cosine
-
     emb = load_table(spark, d, "embeddings").select(
-        "vec_id", "embedding", _bucket16_col().alias("bucket")
+        "vec_id", "embedding", similarity.bucket16_col().alias("bucket")
     )
     a = emb.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"), "bucket"
@@ -228,7 +220,7 @@ def q_mutual_best(spark: SparkSession, d: str):
         .select(
             "va",
             "vb",
-            F.round(_cosine(F.col("ea"), F.col("eb")), 6).alias("cos"),
+            F.round(similarity.cosine(F.col("ea"), F.col("eb")), 6).alias("cos"),
         )
     )
     w = Window.partitionBy("va").orderBy(F.col("cos").desc(), "vb")
@@ -494,7 +486,7 @@ def q_mutual_info(spark: SparkSession, d: str):
     docs = load_table(spark, d, "documents")
     dt = (
         docs.filter(F.col("text").isNotNull())
-        .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+        .select("doc_id", F.explode(text.space_split()).alias("token"))
         .filter(F.col("token") != "")
         .distinct()
     )

@@ -16,6 +16,11 @@ from pyspark.sql.window import Window
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import text
+from direct_kafka_stream_spark.operators.analytics22 import (
+    sim_edges_spark,
+    sim_edges_sql,
+)
 from direct_kafka_stream_spark.registry import query
 
 _EPOCH_SEED = 7
@@ -106,7 +111,7 @@ def q_sentence_stats(spark: SparkSession, d: str):
     RE2-based engines do not support."""
     docs = load_table(spark, d, "documents").filter(F.col("text").isNotNull())
     ss = F.filter(F.split("text", "\\. "), lambda s: s != "")
-    words = lambda s: F.size(F.filter(F.split(s, " "), lambda w: w != ""))  # noqa: E731
+    words = lambda s: F.size(text.tokens(s))  # noqa: E731
     out = docs.select(
         "doc_id",
         F.size(ss).cast("bigint").alias("n_sentences"),
@@ -298,10 +303,8 @@ _LP_TOPK = 20
 
 
 def _link_predict_oracle() -> str:
-    from direct_kafka_stream_spark.operators.analytics22 import _sim_edges_sql
-
     return f"""
-    WITH {_sim_edges_sql().strip()},
+    WITH {sim_edges_sql().strip()},
     und AS (
         SELECT a AS u, b AS v FROM e
         UNION ALL
@@ -351,9 +354,7 @@ def q_link_predict(spark: SparkSession, d: str):
     degrees broadcast (node-sized). The final top-k is
     TakeOrderedAndProject on the ROUNDED score with (a, c) tiebreak —
     no global sort materialises."""
-    from direct_kafka_stream_spark.operators.analytics22 import _sim_edges_spark
-
-    e = track(_sim_edges_spark(spark, d).persist())
+    e = track(sim_edges_spark(spark, d).persist())
     und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )

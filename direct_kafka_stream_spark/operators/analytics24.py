@@ -15,6 +15,11 @@ from pyspark.sql import SparkSession, functions as F
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import text
+from direct_kafka_stream_spark.operators.analytics22 import (
+    sim_edges_spark,
+    sim_edges_sql,
+)
 from direct_kafka_stream_spark.registry import query
 
 
@@ -22,12 +27,10 @@ def _kappa_preds_sql() -> str:
     """DuckDB: the two binary en/unknown classifications per document —
     rater A = the marker-hit heuristic (q_text_langid), rater B = the
     ground-truth lang column."""
-    from direct_kafka_stream_spark.operators.llm import _marker_hits_sql
-
     return f"""
     preds AS (
         SELECT doc_id,
-               CASE WHEN {_marker_hits_sql()} > 0 THEN 'en' ELSE 'unknown' END AS ra,
+               CASE WHEN {text.marker_hits_sql()} > 0 THEN 'en' ELSE 'unknown' END AS ra,
                CASE WHEN lang = 'en' THEN 'en' ELSE 'unknown' END AS rb
         FROM documents
     )"""
@@ -72,13 +75,13 @@ def q_cohens_kappa(spark: SparkSession, d: str):
     Everything reduces to four exact counts in one ungrouped
     map-side-combinable aggregate over the corpus scan — the cheapest
     possible 100 TB shape. Both engines share the marker expression
-    verbatim (llm._marker_hits_sql) and derive κ from identical
+    verbatim (text.marker_hits_sql) and derive κ from identical
     integers, so the 6 dp rounding is cosmetic."""
-    from direct_kafka_stream_spark.operators.llm import _marker_hits
-
     docs = load_table(spark, d, "documents")
     preds = docs.select(
-        F.when(_marker_hits() > 0, F.lit("en")).otherwise(F.lit("unknown")).alias("ra"),
+        F.when(text.marker_hits() > 0, F.lit("en"))
+        .otherwise(F.lit("unknown"))
+        .alias("ra"),
         F.when(F.col("lang") == "en", F.lit("en"))
         .otherwise(F.lit("unknown"))
         .alias("rb"),
@@ -223,10 +226,8 @@ def q_jackknife(spark: SparkSession, d: str):
 
 
 def _modularity_oracle() -> str:
-    from direct_kafka_stream_spark.operators.analytics22 import _sim_edges_sql
-
     return f"""
-    WITH {_sim_edges_sql().strip()},
+    WITH {sim_edges_sql().strip()},
     -- min-label connected components via recursive closure (bounded:
     -- the bucketed edge set is sparse and cluster diameters are small)
     und AS (
@@ -289,10 +290,9 @@ def q_modularity(spark: SparkSession, d: str):
     components-sized table. The oracle derives labels independently
     via a recursive closure, so the label propagation itself is also
     cross-checked."""
-    from direct_kafka_stream_spark.operators.analytics22 import _sim_edges_spark
     from direct_kafka_stream_spark.operators.llm import propagate_min_labels
 
-    e = track(_sim_edges_spark(spark, d).persist())
+    e = track(sim_edges_spark(spark, d).persist())
     und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import DEC, bounded_window_key
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import text
 from direct_kafka_stream_spark.registry import query
 
 # Containment dedup: candidate pairs must share at least one RARE
@@ -26,10 +27,8 @@ _CT_TAU = 0.5
 
 
 def _containment_oracle() -> str:
-    from direct_kafka_stream_spark.operators.llm import _SHINGLES_SQL
-
     return f"""
-    WITH sh0 AS ({_SHINGLES_SQL}),
+    WITH sh0 AS ({text.SHINGLES_SQL}),
     sh AS (SELECT DISTINCT doc_id, shingle FROM sh0),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     rare AS (
@@ -91,7 +90,7 @@ def q_containment_dedup(spark: SparkSession, d: str):
     candidate join is Σ df² over rare shingles, never corpus². The
     verify pass joins only the candidate pairs back to both full
     shingle sets (pair-keyed exchanges, candidate-bounded). The same
-    shared shingle definition as the MinHash family (llm.py) so every
+    shared shingle definition as the MinHash family (text.py) so every
     dedup operator argues over identical sets. Blocking is
     recall-bounded by construction (a pair sharing only ubiquitous
     shingles is not generated) — the standard ER trade documented here
@@ -105,8 +104,6 @@ def q_containment_dedup(spark: SparkSession, d: str):
     no oracle mirror; a 64-bit collision would merge two shingles,
     ~d²/2⁶⁵ per doc — negligible against the blocking recall trade
     already accepted above)."""
-    from direct_kafka_stream_spark.operators.llm import _shingles_from_docs
-
     docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
     from direct_kafka_stream_spark.caching import track
 
@@ -120,7 +117,7 @@ def q_containment_dedup(spark: SparkSession, d: str):
     # Guide §5's caching rule (reused AND expensive to recompute) is the
     # governing trade here, confirmed cold both directions this round.
     sh = track(
-        _shingles_from_docs(docs)
+        text.shingles_from_docs(docs)
         .select("doc_id", F.xxhash64("shingle").alias("sid"))
         .distinct()
         .persist()
@@ -148,7 +145,7 @@ def q_containment_dedup(spark: SparkSession, d: str):
     # array_intersect is the identical count (sh is distinct by
     # construction), computed in one codegen pass over the candidate
     # table joined to two doc-count-sized array tables — the
-    # _jaccard_on_pairs shape every other dedup verifier here uses
+    # jaccard_on_pairs shape every other dedup verifier here uses
     # (guide §2.3: shuffle keys and compact per-doc state, never the
     # pair x shingle expansion).
     arr = sh.groupBy("doc_id").agg(F.collect_list("sid").alias("ss"))

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC, dsum_sql
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import similarity, text
 from direct_kafka_stream_spark.registry import query
 
 # Retrieval-eval probe count (first _MRR_PROBES vec_ids are queries).
@@ -25,10 +26,8 @@ _MRR_K = 5
 
 
 def _mrr_oracle() -> str:
-    from direct_kafka_stream_spark.operators.llm import _EV_SQL
-
     return f"""
-    WITH ev AS ({_EV_SQL}),
+    WITH ev AS ({similarity.EV_SQL}),
     qv AS (SELECT vec_id AS probe_id, i, x AS qx
            FROM ev WHERE vec_id < {_MRR_PROBES}),
     dots AS (
@@ -86,8 +85,6 @@ def q_mrr(spark: SparkSession, d: str):
     Cosines are rounded 6 dp before ranking (tie-broken by vec_id),
     reciprocal ranks and precisions are exact rationals rounded 6 dp,
     and the 5-row final mean uses the exact decimal sum."""
-    from direct_kafka_stream_spark.operators.llm import _cosine
-
     e = load_table(spark, d, "embeddings")
     probes = e.filter(F.col("vec_id") < _MRR_PROBES).select(
         F.col("vec_id").alias("probe_id"),
@@ -100,7 +97,7 @@ def q_mrr(spark: SparkSession, d: str):
         .select(
             "probe_id",
             "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
             (F.col("label") == F.col("plabel")).cast("int").alias("rel"),
         )
     )
@@ -205,9 +202,7 @@ def q_tfidf_cosine(spark: SparkSession, d: str):
     docs = load_table(spark, d, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-        ).alias("word"),
+        F.explode(text.tokens()).alias("word"),
     )
     tf = toks.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     n = docs.agg(F.count(F.lit(1)).cast("double").alias("n"))
@@ -367,9 +362,7 @@ def q_naive_bayes(spark: SparkSession, d: str):
     toks = docs.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-        ).alias("word"),
+        F.explode(text.tokens()).alias("word"),
     )
     vocab = (
         toks.groupBy("word")
@@ -499,9 +492,7 @@ def readability_report(docs):
     foreachBatch streaming twin's per-batch transform
     (tests/test_streaming.py)."""
     docs = docs
-    wcol = F.size(
-        F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    ).cast("double")
+    wcol = F.size(text.tokens()).cast("double")
     scol = F.greatest(
         F.size(F.expr("regexp_extract_all(text, '[.!?]+', 0)")), F.lit(1)
     ).cast("double")
@@ -600,9 +591,7 @@ def q_dataset_card(spark: SparkSession, d: str):
         "doc_id",
         "lang",
         "n_chars",
-        F.size(
-            F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-        ).alias("n_words"),
+        F.size(text.tokens()).alias("n_words"),
         F.md5(F.col("text").cast("binary")).alias("h"),
     )
     per_source = base.groupBy("source").agg(

@@ -21,6 +21,7 @@ from direct_kafka_stream_spark.exprs import (
     dsum_sql,
 )
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import text
 from direct_kafka_stream_spark.registry import query
 
 
@@ -384,9 +385,7 @@ def q_ctfidf_terms(spark: SparkSession, d: str):
     docs = load_table(spark, d, "documents")
     toks = docs.select(
         "lang",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-        ).alias("word"),
+        F.explode(text.tokens()).alias("word"),
     )
     # persisted: cw feeds the frequency filter, the class masses, and
     # the scoring join — one corpus explode instead of three
@@ -462,9 +461,7 @@ def hapax_report(docs):
     wc = (
         docs.select(
             "source",
-            F.explode(
-                F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-            ).alias("word"),
+            F.explode(text.tokens()).alias("word"),
         )
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -562,16 +559,12 @@ def q_heaps_law(spark: SparkSession, d: str):
         )
         .cast("bigint")
         .alias("bucket"),
-        F.size(
-            F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-        ).alias("n_toks"),
+        F.size(text.tokens()).alias("n_toks"),
         "text",
     )
     toks = dt.select(
         "bucket",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-        ).alias("word"),
+        F.explode(text.tokens()).alias("word"),
     )
     first_b = toks.groupBy("word").agg(F.min("bucket").alias("fb"))
     newv = first_b.groupBy(F.col("fb").alias("bucket")).agg(
@@ -743,7 +736,7 @@ def q_rake_keywords(spark: SparkSession, d: str):
             F.filter(
                 F.transform(
                     F.split(F.lower(F.col("text")), _RAKE_DELIM),
-                    lambda p: F.filter(F.split(p, " "), lambda w: w != ""),
+                    lambda p: text.tokens(p),
                 ),
                 lambda p: F.size(p) > 0,
             )

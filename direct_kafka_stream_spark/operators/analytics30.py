@@ -41,6 +41,10 @@ from direct_kafka_stream_spark.exprs import (
     u01_sql,
 )
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators.analytics11 import (
+    scored_labeled,
+    scored_labeled_sql,
+)
 from direct_kafka_stream_spark.registry import query
 
 # Two-sided 97.5% / 80% normal quantiles used by MDE and CUPED z-reads.
@@ -790,12 +794,8 @@ def qq_table(e):
 
 
 def _auc_oracle() -> str:
-    from direct_kafka_stream_spark.operators.analytics11 import (
-        _scored_labeled_sql,
-    )
-
     return f"""
-    WITH sl AS ({_scored_labeled_sql()}),
+    WITH sl AS ({scored_labeled_sql()}),
     by_score AS (
         SELECT score, COUNT(*) AS n, SUM(y) AS pos
         FROM sl GROUP BY score
@@ -846,9 +846,7 @@ def q_auc_pr(spark: SparkSession, d: str):
     increment term is a product of exact-integer ratios — bit-identical
     across engines — summed on the 1e-9 floor grid (order-free exact
     decimal sum)."""
-    from direct_kafka_stream_spark.operators.analytics11 import _scored_labeled
-
-    sl = _scored_labeled(spark, d)
+    sl = scored_labeled(spark, d)
     by_score = sl.groupBy("score").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
     )
@@ -899,12 +897,8 @@ _ECE_BINS = 10
 
 
 def _ece_oracle() -> str:
-    from direct_kafka_stream_spark.operators.analytics11 import (
-        _scored_labeled_sql,
-    )
-
     return f"""
-    WITH sl AS ({_scored_labeled_sql()}),
+    WITH sl AS ({scored_labeled_sql()}),
     rng AS (SELECT MIN(score) AS lo, MAX(score) AS hi FROM sl),
     binned AS (
         SELECT LEAST(CAST(FLOOR((score - lo)
@@ -943,9 +937,7 @@ def q_ece(spark: SparkSession, d: str):
     engines; the weighted terms are gap·(n/N) ≤ 1 — inside the
     floor-grid contract's proven |term| ≤ 1e4 domain at ANY corpus
     size (ALIGNMENT.md) — summed on the 1e-9 grid."""
-    from direct_kafka_stream_spark.operators.analytics11 import _scored_labeled
-
-    sl = _scored_labeled(spark, d)
+    sl = scored_labeled(spark, d)
     rng = sl.agg(F.min("score").alias("lo"), F.max("score").alias("hi"))
     width = F.nullif((F.col("hi") - F.col("lo")) / _ECE_BINS, F.lit(0.0))
     binned = sl.crossJoin(F.broadcast(rng)).select(

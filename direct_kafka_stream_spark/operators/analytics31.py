@@ -16,13 +16,10 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import DEC, dsum_sql, u01, u01_sql
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import similarity, text
 from direct_kafka_stream_spark.registry import query
 
 _TOKENS_SQL = "len(list_filter(string_split(text, ' '), w -> w != ''))"
-
-
-def _ntokens():
-    return F.size(F.filter(F.split("text", " "), lambda w: w != ""))
 
 
 # ---------------------------------------------------------------------------
@@ -85,7 +82,7 @@ def q_mix_token_budget(spark: SparkSession, d: str):
     a priority-bucket histogram the way q_quantile_bins_scaled does).
     Deterministic: priorities are md5 doubles, token counts exact."""
     docs = load_table(spark, d, "documents").select(
-        "doc_id", "source", _ntokens().cast("bigint").alias("toks"),
+        "doc_id", "source", F.size(text.tokens()).cast("bigint").alias("toks"),
         u01("doc_id").alias("u"),
     )
     tot = docs.agg(
@@ -191,19 +188,7 @@ def q_kcenter_coreset(spark: SparkSession, d: str):
         cent = e.filter(F.col("vec_id").isin(ids)).select(
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
         )
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    "embedding",
-                    "cvec",
-                    lambda x, c: (x.cast("double") - c.cast("double"))
-                    * (x.cast("double") - c.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ),
-            6,
-        )
+        d2 = F.round(similarity.sq_dist("embedding", "cvec"), 6)
         best_rows = (
             e.filter(~F.col("vec_id").isin(ids))
             .crossJoin(F.broadcast(cent))
@@ -414,18 +399,7 @@ def q_silhouette_approx(spark: SparkSession, d: str):
             F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s["c"]
         ).alias("cvec")
     )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with(
-                "embedding",
-                "cvec",
-                lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        ),
-        6,
-    )
+    d2 = F.round(similarity.sq_dist("embedding", "cvec"), 6)
     scored = e.crossJoin(F.broadcast(carr)).select(
         "vec_id", "label", "clabel", d2.alias("d2")
     )
@@ -502,7 +476,7 @@ def q_domain_stats(spark: SparkSession, d: str):
                 6,
             ).alias("dup_rate"),
             F.countDistinct("lang").cast("bigint").alias("n_langs"),
-            F.sum(_ntokens()).cast("bigint").alias("total_tokens"),
+            F.sum(F.size(text.tokens())).cast("bigint").alias("total_tokens"),
             F.round(F.avg("n_chars"), 6).alias("mean_chars"),
         )
         .orderBy("source")
@@ -560,7 +534,7 @@ def q_cv_folds(spark: SparkSession, d: str):
     )
     folds = docs.select(
         fold.alias("fold"),
-        _ntokens().cast("bigint").alias("toks"),
+        F.size(text.tokens()).cast("bigint").alias("toks"),
         "n_chars",
     )
     tot = folds.agg(F.round(F.avg("n_chars"), 6).alias("gmean"))

@@ -21,6 +21,10 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import DEC, bounded_window_key
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators.analytics11 import (
+    scored_labeled,
+    scored_labeled_sql,
+)
 from direct_kafka_stream_spark.registry import query
 
 _Z95 = 1.959964  # two-sided 95% normal quantile (shared literal)
@@ -32,12 +36,8 @@ _Z95 = 1.959964  # two-sided 95% normal quantile (shared literal)
 
 
 def _lift_oracle() -> str:
-    from direct_kafka_stream_spark.operators.analytics11 import (
-        _scored_labeled_sql,
-    )
-
     return f"""
-    WITH sl AS ({_scored_labeled_sql()}),
+    WITH sl AS ({scored_labeled_sql()}),
     by_score AS (
         SELECT score, COUNT(*) AS n, SUM(y) AS pos
         FROM sl GROUP BY score
@@ -88,9 +88,7 @@ def q_lift_gain(spark: SparkSession, d: str):
     the ≤10⁶-row distinct-score cumulative table, never by a global
     per-row NTILE; both windows are bounded (bounded_window_key) and
     all rates are exact-integer ratios rounded at 6 dp."""
-    from direct_kafka_stream_spark.operators.analytics11 import _scored_labeled
-
-    sl = _scored_labeled(spark, d)
+    sl = scored_labeled(spark, d)
     by_score = sl.groupBy("score").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
     )

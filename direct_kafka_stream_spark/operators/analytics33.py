@@ -31,6 +31,10 @@ from direct_kafka_stream_spark.exprs import (
     dsum_sql,
 )
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators.analytics11 import (
+    scored_labeled,
+    scored_labeled_sql,
+)
 from direct_kafka_stream_spark.registry import query
 
 _OUT_SCALE = 4  # matches exprs.dsum's output rounding
@@ -385,12 +389,8 @@ _BR_BINS = 10
 
 
 def _brier_oracle() -> str:
-    from direct_kafka_stream_spark.operators.analytics11 import (
-        _scored_labeled_sql,
-    )
-
     return f"""
-    WITH sl AS ({_scored_labeled_sql()}),
+    WITH sl AS ({scored_labeled_sql()}),
     binned AS (
         SELECT LEAST(CAST(floor(score * {_BR_BINS}) AS BIGINT),
                      {_BR_BINS - 1}) AS bin,
@@ -439,9 +439,7 @@ def q_brier(spark: SparkSession, d: str):
     exceeds ten rows after the first exchange. Squared errors are
     exact-decimal sums of bit-identical doubles (score is 6 dp-rounded
     before squaring on both engines)."""
-    from direct_kafka_stream_spark.operators.analytics11 import _scored_labeled
-
-    sl = _scored_labeled(spark, d)
+    sl = scored_labeled(spark, d)
     binned = sl.select(
         F.least(
             F.floor(F.col("score") * _BR_BINS).cast("bigint"),

@@ -21,6 +21,7 @@ from pyspark.sql import SparkSession
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import dsum_sql
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import text
 from direct_kafka_stream_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -306,9 +307,7 @@ def textrank_on(docs):
 
     words = docs.select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split("text", " "), lambda x: x != "")
-        ).alias("pos", "w"),
+        F.posexplode(text.tokens()).alias("pos", "w"),
     )
     cw = track(
         words.select(

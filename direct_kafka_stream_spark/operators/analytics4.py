@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import similarity, text
 from direct_kafka_stream_spark.registry import query
 
 
@@ -420,7 +421,7 @@ def q_compress_ratio(spark: SparkSession, d: str):
     and drop out on both engines (WHERE len >= 4 / explode of an
     empty sequence)."""
     docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = text.tokens()
     tokd = docs.select("doc_id", "source", toks.alias("toks"))
     grams = tokd.filter(F.size("toks") >= _CR_N).select(
         "doc_id",
@@ -488,7 +489,7 @@ def q_tokenizer_fertility(spark: SparkSession, d: str):
     corpus is scanned once, nothing shuffles but the bounded
     per-language partials."""
     docs = load_table(spark, d, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
+    toks = text.tokens()
     pieces = F.aggregate(
         toks,
         F.lit(0).cast("long"),
@@ -523,15 +524,9 @@ _RECALL_K = 10
 
 
 def _ann_recall_oracle() -> str:
-    from direct_kafka_stream_spark.operators.llm import (
-        _EV_SQL,
-        _SRP_BUCKET_SQL,
-        _SRP_MASKS,
-    )
-
-    masks = ", ".join(f"({m})" for m in _SRP_MASKS)
+    masks = ", ".join(f"({m})" for m in similarity.SRP_MASKS)
     return f"""
-    WITH ev AS ({_EV_SQL}),
+    WITH ev AS ({similarity.EV_SQL}),
     qv AS (SELECT vec_id AS probe_id, i, x AS qx
            FROM ev WHERE vec_id < {_RECALL_PROBES}),
     dots AS (
@@ -555,7 +550,7 @@ def _ann_recall_oracle() -> str:
             FROM sims
         ) WHERE rn <= {_RECALL_K}
     ),
-    b AS ({_SRP_BUCKET_SQL}),
+    b AS ({similarity.SRP_BUCKET_SQL}),
     pb AS (SELECT vec_id AS probe_id, bucket AS qbucket
            FROM b WHERE vec_id < {_RECALL_PROBES}),
     probes AS (
@@ -602,12 +597,6 @@ def q_ann_recall(spark: SparkSession, d: str):
     (probe × mask) bucket table broadcast. Both sides are documented
     sample-only on the probe axis: recall is a statistic you estimate
     on a bounded probe set, never computed corpus × corpus."""
-    from direct_kafka_stream_spark.operators.llm import (
-        _SRP_MASKS,
-        _cosine,
-        _srp_bucket_col,
-    )
-
     e = load_table(spark, d, "embeddings")
     probes = e.filter(F.col("vec_id") < _RECALL_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("qv")
@@ -618,7 +607,7 @@ def q_ann_recall(spark: SparkSession, d: str):
         .select(
             "probe_id",
             "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), "vec_id")
@@ -627,11 +616,11 @@ def q_ann_recall(spark: SparkSession, d: str):
         .filter(F.col("rn") <= _RECALL_K)
         .select("probe_id", "vec_id")
     )
-    b = e.select("vec_id", _srp_bucket_col().alias("bucket"))
+    b = e.select("vec_id", similarity.srp_bucket_col().alias("bucket"))
     pb = b.filter(F.col("vec_id") < _RECALL_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("bucket").alias("qbucket")
     )
-    masks = F.explode(F.array(*[F.lit(m) for m in _SRP_MASKS])).alias("mask")
+    masks = F.explode(F.array(*[F.lit(m) for m in similarity.SRP_MASKS])).alias("mask")
     probe_buckets = pb.select("probe_id", "qbucket", masks).select(
         "probe_id",
         F.col("qbucket").bitwiseXOR(F.col("mask")).alias("pbucket"),
@@ -856,15 +845,13 @@ def q_partial_merge(spark: SparkSession, d: str):
 # Similarity-graph edge threshold (rounded cosine within sign-LSH
 # buckets; picked so the fixture graph has a non-trivial triangle
 # census: sf0.01 -> 751 edges, 132 triangles).
-_TRI_TAU = 0.2
+TRI_TAU = 0.2
 
 
 def _triangle_oracle() -> str:
-    from direct_kafka_stream_spark.operators.llm import _BUCKET16_SQL, _EV_SQL
-
     return f"""
-    WITH ev AS ({_EV_SQL}),
-    b AS (SELECT vec_id, {_BUCKET16_SQL} AS bucket FROM embeddings),
+    WITH ev AS ({similarity.EV_SQL}),
+    b AS (SELECT vec_id, {similarity.BUCKET16_SQL} AS bucket FROM embeddings),
     norms AS (SELECT vec_id, SUM(x * x) AS nn FROM ev GROUP BY vec_id),
     cand AS (
         SELECT a.vec_id AS va, b2.vec_id AS vb
@@ -883,7 +870,7 @@ def _triangle_oracle() -> str:
         FROM dots d
         JOIN norms na ON na.vec_id = d.va
         JOIN norms nb ON nb.vec_id = d.vb
-        WHERE round(d.dot / (sqrt(na.nn) * sqrt(nb.nn)), 6) >= {_TRI_TAU}
+        WHERE round(d.dot / (sqrt(na.nn) * sqrt(nb.nn)), 6) >= {TRI_TAU}
     )
     SELECT (SELECT COUNT(*) FROM e) AS n_edges,
            (SELECT COUNT(*)
@@ -916,13 +903,8 @@ def q_triangle_count(spark: SparkSession, d: str):
     a function of the vector, every triangle's three edges share one
     bucket, so all joins stay bucket-local (skew bounded by the
     bucket-size cap that the bit-count controls)."""
-    from direct_kafka_stream_spark.operators.llm import (
-        _bucket16_col,
-        _cosine,
-    )
-
     emb = load_table(spark, d, "embeddings").select(
-        "vec_id", "embedding", _bucket16_col().alias("bucket")
+        "vec_id", "embedding", similarity.bucket16_col().alias("bucket")
     )
     a = emb.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"), "bucket"
@@ -934,7 +916,7 @@ def q_triangle_count(spark: SparkSession, d: str):
         a.join(bb, "bucket")
         .filter(F.col("va") < F.col("vb"))
         .filter(
-            F.round(_cosine(F.col("ea"), F.col("eb")), 6) >= _TRI_TAU
+            F.round(similarity.cosine(F.col("ea"), F.col("eb")), 6) >= TRI_TAU
         )
         .select(F.col("va").alias("a"), F.col("vb").alias("b"))
     )

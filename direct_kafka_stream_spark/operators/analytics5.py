@@ -24,6 +24,8 @@ from direct_kafka_stream_spark.exprs import (
 )
 from direct_kafka_stream_spark.exprs import safe_corr
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import similarity
+from direct_kafka_stream_spark.operators.analytics4 import TRI_TAU
 from direct_kafka_stream_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -692,12 +694,9 @@ def q_dedup_fuzzy(spark: SparkSession, d: str):
 
 
 def _degree_oracle() -> str:
-    from direct_kafka_stream_spark.operators.analytics4 import _TRI_TAU
-    from direct_kafka_stream_spark.operators.llm import _BUCKET16_SQL, _EV_SQL
-
     return f"""
-    WITH ev AS ({_EV_SQL}),
-    b AS (SELECT vec_id, {_BUCKET16_SQL} AS bucket FROM embeddings),
+    WITH ev AS ({similarity.EV_SQL}),
+    b AS (SELECT vec_id, {similarity.BUCKET16_SQL} AS bucket FROM embeddings),
     norms AS (SELECT vec_id, SUM(x * x) AS nn FROM ev GROUP BY vec_id),
     cand AS (
         SELECT a.vec_id AS va, b2.vec_id AS vb
@@ -716,7 +715,7 @@ def _degree_oracle() -> str:
         FROM dots d
         JOIN norms na ON na.vec_id = d.va
         JOIN norms nb ON nb.vec_id = d.vb
-        WHERE round(d.dot / (sqrt(na.nn) * sqrt(nb.nn)), 6) >= {_TRI_TAU}
+        WHERE round(d.dot / (sqrt(na.nn) * sqrt(nb.nn)), 6) >= {TRI_TAU}
     ),
     deg AS (
         SELECT v.vec_id, CAST(COUNT(ends.v) AS BIGINT) AS degree
@@ -749,11 +748,8 @@ def q_degree_dist(spark: SparkSession, d: str):
     vertex table so ISOLATED nodes report degree 0) gives per-node
     degree, and the final histogram is a degree-keyed count over a
     vertex-sized table. All exchanges are vertex- or bucket-keyed."""
-    from direct_kafka_stream_spark.operators.analytics4 import _TRI_TAU
-    from direct_kafka_stream_spark.operators.llm import _bucket16_col, _cosine
-
     emb = load_table(spark, d, "embeddings").select(
-        "vec_id", "embedding", _bucket16_col().alias("bucket")
+        "vec_id", "embedding", similarity.bucket16_col().alias("bucket")
     )
     a = emb.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"), "bucket"
@@ -764,7 +760,7 @@ def q_degree_dist(spark: SparkSession, d: str):
     edges = (
         a.join(bb, "bucket")
         .filter(F.col("va") < F.col("vb"))
-        .filter(F.round(_cosine(F.col("ea"), F.col("eb")), 6) >= _TRI_TAU)
+        .filter(F.round(similarity.cosine(F.col("ea"), F.col("eb")), 6) >= TRI_TAU)
         .select(F.col("va").alias("u"), F.col("vb").alias("v"))
     )
     ends = edges.select(F.col("u").alias("node")).unionAll(

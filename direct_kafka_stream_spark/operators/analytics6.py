@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key, dsum, dsum_sql
-from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
 
 

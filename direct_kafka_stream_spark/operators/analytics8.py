@@ -22,6 +22,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import text
 from direct_kafka_stream_spark.registry import query
 
 # --- HyperLogLog parameters -------------------------------------------------
@@ -217,10 +218,8 @@ def q_cms_heavy_hitters(spark: SparkSession, d: str):
     by key — the CMS merge IS counter addition); the probe side is
     top-k-bounded and joins the broadcast sketch. All md5/integer —
     no tolerance anywhere."""
-    from direct_kafka_stream_spark.operators.llm import _tokens
-
     docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
-    words = docs.select(F.explode(_tokens()).alias("word"))
+    words = docs.select(F.explode(text.tokens()).alias("word"))
     words = track(words.persist())
     salts = spark.range(_CMS_D).select(F.col("id").cast("int").alias("s"))
     bucket = (

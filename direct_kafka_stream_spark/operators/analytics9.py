@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key, dsum, dsum_sql
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import text
 from direct_kafka_stream_spark.registry import query
 
 _PSI_BINS = 10
@@ -176,12 +177,10 @@ def q_jsd(spark: SparkSession, d: str):
     is rounded per-element then exact-summed (ALIGNMENT); zero-count
     words contribute 0 exactly (the p·ln(p/m) limit), keeping JSD
     finite without epsilons."""
-    from direct_kafka_stream_spark.operators.llm import _tokens
-
     docs = load_table(spark, d, "documents").filter(
         F.col("source").isin("src0", "src1")
     )
-    words = docs.select("source", F.explode(_tokens()).alias("word"))
+    words = docs.select("source", F.explode(text.tokens()).alias("word"))
     words = track(words.persist())
     vocab = (
         words.groupBy("word")

@@ -15,6 +15,8 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import text
+from direct_kafka_stream_spark.operators.llm2 import DECON_EVAL, decon_gram_stream
 from direct_kafka_stream_spark.registry import query
 
 
@@ -122,7 +124,7 @@ def q_vocab_coverage(spark: SparkSession, d: str):
     The token table is never shuffled by word for phase 2; only the
     doc-keyed aggregation exchanges fact-sized data."""
     docs = load_table(spark, d, "documents")
-    toks_arr = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks_arr = text.tokens()
     toks = docs.select("doc_id", F.explode(toks_arr).alias("word"))
     vocab = (
         toks.groupBy("word")
@@ -300,15 +302,9 @@ def q_decontaminate_frac(spark: SparkSession, d: str):
     are the two per-doc distinct counts; the final join is
     contamination-sized ⋈ corpus-sized on doc_id with the small side
     broadcast."""
-    from direct_kafka_stream_spark.operators.llm import _spread
-    from direct_kafka_stream_spark.operators.llm2 import (
-        _DECON_EVAL,
-        decon_gram_stream,
-    )
-
-    sh = decon_gram_stream(_spread(load_table(spark, d, "documents")))
-    train = sh.filter(F.col("source") != _DECON_EVAL)
-    ev = sh.filter(F.col("source") == _DECON_EVAL).select("gh").distinct()
+    sh = decon_gram_stream(spread_scan(load_table(spark, d, "documents"), "doc_id"))
+    train = sh.filter(F.col("source") != DECON_EVAL)
+    ev = sh.filter(F.col("source") == DECON_EVAL).select("gh").distinct()
     totals = train.groupBy("doc_id").agg(
         F.count_distinct("gh").alias("n_grams")
     )
@@ -359,7 +355,7 @@ def q_zipf_slope(spark: SparkSession, d: str):
     regr_r2 are identical closed forms in both engines; rounded 6 dp
     (ALIGNMENT.md transcendental rule for the LN inputs)."""
     docs = load_table(spark, d, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     freq = (
         docs.select(F.explode(toks).alias("word"))
         .groupBy("word")
@@ -430,15 +426,10 @@ def q_minhash_accuracy(spark: SparkSession, d: str):
     q_jaccard_pairs paths are the corpus-scale forms). Distinct
     3-gram shingle sets per doc, intersection via sorted-array
     overlap, decile bucketing in one aggregation."""
-    from direct_kafka_stream_spark.operators.llm import (
-        _shingles_from_docs,
-        _spread,
+    docs = spread_scan(
+        load_table(spark, d, "documents").filter(F.col("doc_id") < 50), "doc_id"
     )
-
-    docs = _spread(
-        load_table(spark, d, "documents").filter(F.col("doc_id") < 50)
-    )
-    sh = _shingles_from_docs(docs).select("doc_id", "shingle").distinct()
+    sh = text.shingles_from_docs(docs).select("doc_id", "shingle").distinct()
     ws = sh.groupBy("doc_id").agg(
         F.sort_array(F.collect_set("shingle")).alias("s")
     )
@@ -541,11 +532,9 @@ def q_embed_outliers(spark: SparkSession, d: str):
 
 
 def _langid_confusion_oracle() -> str:
-    from direct_kafka_stream_spark.operators.llm import _marker_hits_sql
-
     return f"""
     SELECT lang AS actual,
-           CASE WHEN {_marker_hits_sql()} > 0 THEN 'en' ELSE 'unknown' END
+           CASE WHEN {text.marker_hits_sql()} > 0 THEN 'en' ELSE 'unknown' END
                AS predicted,
            COUNT(*) AS n,
            round(COUNT(*) * 1.0 / SUM(COUNT(*)) OVER (PARTITION BY lang), 6)
@@ -572,10 +561,8 @@ def q_langid_confusion(spark: SparkSession, d: str):
     q_text_langid — length-delta-of-replace, no regex) + a
     (langs × 2)-cell aggregation; the row-share window runs on that
     tiny matrix."""
-    from direct_kafka_stream_spark.operators.llm import _marker_hits
-
     docs = load_table(spark, d, "documents")
-    hits = _marker_hits()
+    hits = text.marker_hits()
     cells = (
         docs.select(
             F.col("lang").alias("actual"),

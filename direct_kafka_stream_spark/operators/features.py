@@ -14,9 +14,10 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import similarity, text
 from direct_kafka_stream_spark.registry import query
 
-_FH_DIM = 32  # hashed feature space size
+FH_DIM = 32  # hashed feature space size
 
 
 @query(
@@ -30,7 +31,7 @@ _FH_DIM = 32  # hashed feature space size
     )
     SELECT doc_id,
            CAST(CAST(concat('0x', substr(md5(word), 1, 2)) AS BIGINT)
-                % {_FH_DIM} AS BIGINT) AS bucket,
+                % {FH_DIM} AS BIGINT) AS bucket,
            COUNT(*) AS n
     FROM toks
     GROUP BY doc_id, bucket
@@ -49,9 +50,9 @@ def q_feature_hash(spark: SparkSession, d: str):
     One explode + one (doc, bucket) groupBy — map-side combined, and
     the output is at most 32 rows per doc regardless of length."""
     docs = load_table(spark, d, "documents").filter(F.col("doc_id") < 100)
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     bucket = (
-        F.conv(F.substring(F.md5("word"), 1, 2), 16, 10).cast("long") % _FH_DIM
+        F.conv(F.substring(F.md5("word"), 1, 2), 16, 10).cast("long") % FH_DIM
     )
     return (
         docs.select("doc_id", F.explode(toks).alias("word"))
@@ -111,7 +112,7 @@ def q_collocations(spark: SparkSession, d: str):
     Top-30 via TakeOrderedAndProject. Bigrams are formed in-row with
     the indexed-lambda transform (tokens hoisted to a column first)."""
     docs = load_table(spark, d, "documents")
-    toks_arr = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks_arr = text.tokens()
     tokenized = docs.select("doc_id", toks_arr.alias("toks"))
     uni = (
         tokenized.select(F.explode("toks").alias("word"))
@@ -253,11 +254,11 @@ def q_drift_ks(spark: SparkSession, d: str):
 # Deterministic per-bucket weights: w_j = ((j * 37) % 19 - 9) / 10.0
 # — a fixed fasttext-style linear model; in production these arrive
 # from an offline training job as a broadcast side input.
-_QC_BIAS = -0.1
+QC_BIAS = -0.1
 _QC_THRESHOLD = 0.5
 
 
-def _qc_weight_sql(bucket_expr: str) -> str:
+def qc_weight_sql(bucket_expr: str) -> str:
     return f"((({bucket_expr}) * 37) % 19 - 9) / 10.0"
 
 
@@ -273,14 +274,14 @@ def _qc_weight_sql(bucket_expr: str) -> str:
     feats AS (
         SELECT doc_id,
                CAST(CAST(concat('0x', substr(md5(word), 1, 2)) AS BIGINT)
-                    % {_FH_DIM} AS BIGINT) AS bucket,
+                    % {FH_DIM} AS BIGINT) AS bucket,
                COUNT(*) AS n
         FROM toks GROUP BY doc_id, bucket
     ),
     scored AS (
         SELECT f.doc_id,
-               SUM(f.n * {_qc_weight_sql('f.bucket')})
-                   / SUM(f.n) + {_QC_BIAS} AS z
+               SUM(f.n * {qc_weight_sql('f.bucket')})
+                   / SUM(f.n) + {QC_BIAS} AS z
         FROM feats f GROUP BY f.doc_id
     )
     SELECT doc_id,
@@ -313,13 +314,13 @@ def q_quality_classifier(spark: SparkSession, d: str):
 def quality_scores(docs):
     """Composable form of q_quality_classifier over any (doc_id, text)
     DataFrame."""
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     bucket = (
-        F.conv(F.substring(F.md5("word"), 1, 2), 16, 10).cast("long") % _FH_DIM
+        F.conv(F.substring(F.md5("word"), 1, 2), 16, 10).cast("long") % FH_DIM
     )
     weight = ((bucket * 37) % 19 - 9) / 10.0
     z = (
-        F.sum(weight) / F.count(F.lit(1)) + F.lit(_QC_BIAS)
+        F.sum(weight) / F.count(F.lit(1)) + F.lit(QC_BIAS)
     )  # token-weighted mean: every token contributes its bucket weight
     score = 1.0 / (1.0 + F.exp(-z))
     return (
@@ -368,7 +369,7 @@ def q_shard_plan(spark: SparkSession, d: str):
     (max/mean token ratio) belongs to the caller — this emits the
     evidence."""
     docs = load_table(spark, d, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     shard = (
         F.conv(
             F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10
@@ -457,7 +458,7 @@ def lm_scores(docs):
     round-before-compare contract). Shared by q_text_bigram_lm and
     the q_curation_v2 capstone so the tokenization, bigram formation,
     and interpolation live in exactly one place."""
-    toks_arr = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks_arr = text.tokens()
     tokenized = docs.select("doc_id", toks_arr.alias("toks"))
     bigrams = F.when(
         F.size(F.col("toks")) >= 2,
@@ -525,13 +526,13 @@ _CV2_LM_MIN = -3.42     # bigram-LM perplexity gate
     buckets AS (
         SELECT doc_id,
                CAST(concat('0x', substr(md5(word), 1, 2)) AS BIGINT)
-                   % {_FH_DIM} AS bucket
+                   % {FH_DIM} AS bucket
         FROM t2
     ),
     scored AS (
         SELECT doc_id,
-               round(1.0 / (1.0 + exp(-(SUM({_qc_weight_sql('bucket')})
-                                        / COUNT(*) + {_QC_BIAS}))), 6) AS score
+               round(1.0 / (1.0 + exp(-(SUM({qc_weight_sql('bucket')})
+                                        / COUNT(*) + {QC_BIAS}))), 6) AS score
         FROM buckets GROUP BY doc_id
     ),
     s2 AS (
@@ -684,8 +685,6 @@ def q_knn_classify(spark: SparkSession, d: str):
     aggregation — the corpus is scanned once and only k rows leave the
     heap. At scale the top-k pass swaps for the IVF/LSH probes
     (q_sim_ivf, q_sim_ann_bucket) with identical voting."""
-    from direct_kafka_stream_spark.operators.llm import _cosine
-
     e = load_table(spark, d, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     topk = (
@@ -694,7 +693,7 @@ def q_knn_classify(spark: SparkSession, d: str):
         .select(
             "vec_id",
             "label",
-            F.round(_cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(_KNN_K)
@@ -769,10 +768,8 @@ def q_win_running_distinct(spark: SparkSession, d: str):
 
 
 def _keep_best_oracle() -> str:
-    from direct_kafka_stream_spark.operators.llm import _BANDS_SQL
-
     return f"""
-    WITH RECURSIVE {_BANDS_SQL},
+    WITH RECURSIVE {similarity.BANDS_SQL},
     comp(doc_id, label) AS (
         SELECT doc_id, doc_id FROM documents
         UNION
@@ -812,7 +809,7 @@ def _keep_best_oracle() -> str:
            CAST(cluster_size AS BIGINT) AS cluster_size
     FROM ranked WHERE rn = 1
     """.format(
-        fh=_FH_DIM, w=_qc_weight_sql("bucket"), bias=_QC_BIAS
+        fh=FH_DIM, w=qc_weight_sql("bucket"), bias=QC_BIAS
     )
 
 

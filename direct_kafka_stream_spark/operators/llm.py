@@ -23,97 +23,15 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import similarity, text
 from direct_kafka_stream_spark.registry import query
 
-# ---------------------------------------------------------------------------
-# Shared building blocks
-# ---------------------------------------------------------------------------
-
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
-
-
-def _tokens(col: str = "text") -> Column:
-    """Non-empty token array (texts can carry trailing separators)."""
-    return F.filter(F.split(col, " "), lambda w: w != "")
-
-
-def _spread(df: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Hash-repartition a small-file scan across all cores. The
-    documents fixture arrives as one parquet file → ONE input partition,
-    which serializes every CPU-bound per-row stage (shingling, md5,
-    higher-order array transforms) onto a single core. Round 12: now
-    GATED on input size (io.spread_scan) — when the scan is already
-    wide enough to feed every core (the 100 TB case), the extra
-    exchange is skipped outright instead of shuffling the whole corpus
-    for nothing; under the threshold the behavior is exactly the old
-    unconditional repartition. Keyed (not round-robin) so no
-    determinism sort is needed."""
-    from direct_kafka_stream_spark.io import spread_scan
-
-    return spread_scan(df, key)
-
-
-def _words(docs: DataFrame) -> DataFrame:
-    """documents → one row per (doc_id, position, word). The empty-token
-    filter runs on the ARRAY before exploding, so positions are
-    contiguous by construction — no shuffle, no ranking window; the
-    whole thing stays in one codegen stage per input partition."""
-    return docs.select(
-        "doc_id", F.posexplode(_tokens()).alias("pos0", "word")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
-
-
-_WORDS_SQL = """
-    SELECT doc_id,
-           unnest(list_filter(string_split(text, ' '), w -> w != '')) AS word,
-           generate_subscripts(list_filter(string_split(text, ' '), w -> w != ''), 1) AS pos
-    FROM documents
-"""
-
-
-def _cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float vectors via higher-order functions
-    (JVM codegen, no UDF): dot / (|a|·|b|), computed in double."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    nb = F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
-# Oracle-side: explode embeddings to (vec_id, i, x) and join on position.
-_EV_SQL = """
-    SELECT vec_id,
-           CAST(unnest(embedding) AS DOUBLE) AS x,
-           generate_subscripts(embedding, 1) AS i
-    FROM embeddings
-"""
-
-
-def _cosine_vs_query_sql(query_vec_id: int, where: str = "TRUE") -> str:
-    """DuckDB: cosine similarity of every embedding vs one query vector,
-    rounded to 6 dp (cross-engine double accumulation differs ~1e-15)."""
-    return f"""
-    WITH ev AS ({_EV_SQL}),
-    qv AS (SELECT i, x AS qx FROM ev WHERE vec_id = {query_vec_id}),
-    dots AS (
-        SELECT e.vec_id, SUM(e.x * q.qx) AS dot, SUM(e.x * e.x) AS na
-        FROM ev AS e JOIN qv AS q USING (i)
-        GROUP BY e.vec_id
-    ),
-    nq AS (SELECT SUM(qx * qx) AS nq FROM qv)
-    SELECT d.vec_id, round(d.dot / (sqrt(d.na) * sqrt(nq.nq)), 6) AS sim
-    FROM dots AS d, nq
-    WHERE {where}
-    """
 
 
 # ---------------------------------------------------------------------------
@@ -147,191 +65,12 @@ def dedup_exact_keep_first(docs):
     )
 
 
-# Banded MinHash-LSH signature: b bands × r rows. A pair is a candidate
-# iff ALL r row-minhashes agree in AT LEAST ONE band — the classic
-# S-curve P(cand) = 1 - (1 - s^r)^b, here ≈0.99 at shingle-Jaccard 0.9
-# and ≈0.0004 at 0.1. (Round 1 shipped 4 bands of size 1, where a single
-# hash collision made a candidate — fine on fixtures, a false-positive
-# flood on a real corpus.)
-_MH_ROWS = 4  # r: AND within a band
-_MH_BANDS = 4  # b: OR across bands
-_N_MINHASH = _MH_ROWS * _MH_BANDS  # 16 independent minhash functions
-
-# Each shingle is hashed ONCE (md5 → 60-bit int); the 16 "permutations"
-# are affine maps (a·h + b) mod p over the Mersenne prime 2³¹−1 — exact
-# 64-bit integer arithmetic, bit-identical in Spark and DuckDB, and ~16×
-# cheaper than 16 seeded md5 calls per shingle (measured: the md5-per-seed
-# variant doubled the capstone's wall time at sf0.1).
-_MH_P = 2147483647  # 2^31 - 1; a*h + b < 2^62 — no int64 overflow
-
-
-def _mh_coeff(tag: str) -> int:
-    """Deterministic pseudo-random coefficient in [1, p): md5 of a fixed
-    tag. The (a, b) pairs must be mutually independent — arithmetic
-    progressions like a_j = c·(j+1) make the "permutations" scaled
-    copies of one another, the r rows of a band stop being independent
-    tests, and random pairs collide at the single-hash rate (measured:
-    16 false-positive candidates at shingle-Jaccard ~0.01 on the sf0.001
-    fixture; 0 with independent coefficients)."""
-    import hashlib
-
-    return int(hashlib.md5(tag.encode()).hexdigest()[:15], 16) % (_MH_P - 1) + 1
-
-
-_MH_A = [_mh_coeff(f"minhash-a-{j}") for j in range(_N_MINHASH)]
-_MH_B = [_mh_coeff(f"minhash-b-{j}") for j in range(_N_MINHASH)]
-
-
-def _shingles_from_docs(docs: DataFrame) -> DataFrame:
-    """Word 3-gram shingles built array-side (transform over an index
-    sequence) — zero shuffles, contrast the oracle's window-LEAD
-    formulation which must sort per doc. Semantically identical.
-    The token array is projected ONCE first: element_at inside the
-    lambda would otherwise re-run split+filter per gram position
-    (O(len²) per doc — measured ~8× on the inflated scale probe)."""
-    tokd = docs.select("doc_id", _tokens().alias("toks"))
-    toks = F.col("toks")
-    sh = F.when(
-        F.size(toks) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return tokd.select("doc_id", F.explode(sh).alias("shingle"))
-
-
-_SHINGLES_SQL = f"""
-    SELECT doc_id, word || ' ' || w1 || ' ' || w2 AS shingle
-    FROM (
-        SELECT doc_id, word,
-               LEAD(word, 1) OVER w AS w1,
-               LEAD(word, 2) OVER w AS w2
-        FROM ({_WORDS_SQL})
-        WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-    ) WHERE w2 IS NOT NULL
-"""
-
-
-def _minhash_sigs(sh: DataFrame) -> DataFrame:
-    """shingles → one row per doc with _N_MINHASH min-hash columns.
-    One md5 per shingle (first 15 hex digits → 60-bit int, identical to
-    DuckDB's hex cast), then _N_MINHASH affine permutations — so the
-    whole signature is oracle-replayable."""
-    h0 = (
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long") % _MH_P
-    ).alias("h0")
-    return (
-        sh.select("doc_id", h0)
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.lit(_MH_A[j]) * F.col("h0") + F.lit(_MH_B[j])) % _MH_P).alias(
-                    f"mh{j}"
-                )
-                for j in range(_N_MINHASH)
-            ]
-        )
-    )
-
-
-def _minhash_bands(sigs: DataFrame) -> DataFrame:
-    """signatures → (doc_id, band, mh) where mh = md5 of the band's r
-    concatenated row-hashes: equality on mh is equality on ALL r rows
-    (AND), and explode across bands gives the OR. The md5 re-hash keeps
-    the join key one fixed-width column. One explode pass — a
-    union-of-b-selects reshape re-reads sigs b times and measurably
-    drags the dedup family's wall time."""
-    entries = [
-        F.struct(
-            F.lit(B).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"mh{B * _MH_ROWS + i}").cast("string")
-                        for i in range(_MH_ROWS)
-                    ],
-                )
-            ).alias("mh"),
-        )
-        for B in range(_MH_BANDS)
-    ]
-    return sigs.select("doc_id", F.explode(F.array(*entries)).alias("e")).select(
-        "doc_id", F.col("e.band").alias("band"), F.col("e.mh").alias("mh")
-    )
-
-
-_H0_FROM_SHINGLES_SQL = (
-    "SELECT doc_id, CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT)"
-    f" % {_MH_P} AS h0 FROM shingles"
-)
-_SIGS_AGG_SQL = ", ".join(
-    f"MIN(({_MH_A[j]} * h0 + {_MH_B[j]}) % {_MH_P}) AS mh{j}"
-    for j in range(_N_MINHASH)
-)
-_SIGS_CTE_SQL = (
-    f"sigs AS (SELECT doc_id, {_SIGS_AGG_SQL}"
-    f" FROM ({_H0_FROM_SHINGLES_SQL}) GROUP BY doc_id)"
-)
-_BANDS_SELECT_SQL = " UNION ALL ".join(
-    "SELECT doc_id, {B} AS band, md5({cat}) AS mh FROM sigs".format(
-        B=B,
-        cat=" || '|' || ".join(
-            f"CAST(mh{B * _MH_ROWS + i} AS VARCHAR)" for i in range(_MH_ROWS)
-        ),
-    )
-    for B in range(_MH_BANDS)
-)
-
-
-def _word_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, ws) with ws = distinct word array — the per-doc word set
-    as ONE array row instead of an exploded fact table. Jaccard
-    confirmation then joins candidates against a doc-count-sized table
-    and intersects array-side in codegen, instead of re-joining a
-    corpus-sized (doc_id, word) fact twice."""
-    return docs.select("doc_id", F.array_distinct(_tokens()).alias("ws"))
-
-
-_WARR_SQL = """
-    SELECT doc_id,
-           list_distinct(list_filter(string_split(text, ' '), w -> w != '')) AS ws
-    FROM documents
-"""
-
-
-def _jaccard_on_pairs(
-    pairs: DataFrame, warr: DataFrame, left: str, right: str
-) -> DataFrame:
-    """Attach exact word-set Jaccard to (left, right) doc-id pairs via
-    array_intersect over the compact word-array table."""
-    wa = warr.select(F.col("doc_id").alias(left), F.col("ws").alias("wsa"))
-    wb = warr.select(F.col("doc_id").alias(right), F.col("ws").alias("wsb"))
-    ni = F.size(F.array_intersect("wsa", "wsb"))
-    return (
-        pairs.join(wa, left)
-        .join(wb, right)
-        .withColumn("ni", ni)
-        .withColumn(
-            "jaccard",
-            F.col("ni").cast("double")
-            / (F.size("wsa") + F.size("wsb") - F.col("ni")),
-        )
-    )
-
-
 @query(
     "q_dedup_near",
     oracle=f"""
-    WITH shingles AS ({_SHINGLES_SQL}),
-    {_SIGS_CTE_SQL},
-    bands AS ({_BANDS_SELECT_SQL}),
+    WITH shingles AS ({text.SHINGLES_SQL}),
+    {similarity.SIGS_CTE_SQL},
+    bands AS ({similarity.BANDS_SELECT_SQL}),
     capped AS (
         SELECT doc_id, band, mh FROM (
             SELECT doc_id, band, mh,
@@ -344,7 +83,7 @@ def _jaccard_on_pairs(
         FROM capped AS a JOIN capped AS b
           ON a.band = b.band AND a.mh = b.mh AND a.doc_id < b.doc_id
     ),
-    warr AS ({_WARR_SQL})
+    warr AS ({similarity.WARR_SQL})
     SELECT c.doc_a, c.doc_b,
            round(CAST(len(list_intersect(wa.ws, wb.ws)) AS DOUBLE)
                  / (len(wa.ws) + len(wb.ws) - len(list_intersect(wa.ws, wb.ws))),
@@ -364,14 +103,14 @@ def q_dedup_near(spark: SparkSession, d: str):
     (band, mh) self-join — the corpus is never cross-joined — → exact
     Jaccard via array_intersect on per-doc distinct-word arrays (a
     doc-count-sized join, not two corpus-sized word-fact joins)."""
-    docs = _spread(load_table(spark, d, "documents"))
+    docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
     cand = (
-        _minhash_band_edges(docs)
+        similarity.minhash_band_edges(docs)
         .filter(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
     )
-    warr = track(_word_arrays(docs).persist())
-    return _jaccard_on_pairs(cand, warr, "doc_a", "doc_b").select(
+    warr = track(similarity.word_arrays(docs).persist())
+    return similarity.jaccard_on_pairs(cand, warr, "doc_a", "doc_b").select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
 
@@ -389,7 +128,7 @@ def _simhash_sql() -> str:
     )
     fp = " + ".join(f"(CASE WHEN s{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(_SIMHASH_BITS))
     return f"""
-    WITH wset AS (SELECT DISTINCT doc_id, word FROM ({_WORDS_SQL})),
+    WITH wset AS (SELECT DISTINCT doc_id, word FROM ({text.WORDS_SQL})),
     h AS (SELECT doc_id, md5(word) AS hx FROM wset),
     bits AS (SELECT doc_id, {bit_sums} FROM h GROUP BY doc_id)
     SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM bits
@@ -402,8 +141,8 @@ def q_dedup_simhash(spark: SparkSession, d: str):
     ±1 per bit position according to its md5 hex digit; the fingerprint
     packs the sign bits. Near-dups have small Hamming distance. One
     explode + one groupBy — linear in corpus size."""
-    docs = _spread(load_table(spark, d, "documents"))
-    wset = _words(docs).select("doc_id", "word").distinct()
+    docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
+    wset = text.words(docs).select("doc_id", "word").distinct()
     h = wset.select("doc_id", F.md5("word").alias("hx"))
     bit_sums = [
         F.sum(
@@ -422,17 +161,13 @@ def q_dedup_simhash(spark: SparkSession, d: str):
     return bits.select("doc_id", fp.cast("long").alias("simhash"))
 
 
-_ROWS1_SELECT_SQL = " UNION ALL ".join(
-    f"SELECT doc_id, {j} AS band, mh{j} AS mh FROM sigs" for j in range(_N_MINHASH)
-)
-
 
 @query(
     "q_jaccard_pairs",
     oracle=f"""
-    WITH shingles AS ({_SHINGLES_SQL}),
-    {_SIGS_CTE_SQL},
-    rows1 AS ({_ROWS1_SELECT_SQL}),
+    WITH shingles AS ({text.SHINGLES_SQL}),
+    {similarity.SIGS_CTE_SQL},
+    rows1 AS ({similarity.ROWS1_SELECT_SQL}),
     capped AS (
         SELECT doc_id, band, mh FROM (
             SELECT doc_id, band, mh,
@@ -445,7 +180,7 @@ _ROWS1_SELECT_SQL = " UNION ALL ".join(
         FROM capped AS a JOIN capped AS b
           ON a.band = b.band AND a.mh = b.mh AND a.doc_id < b.doc_id
     ),
-    warr AS ({_WARR_SQL})
+    warr AS ({similarity.WARR_SQL})
     SELECT c.doc_a, c.doc_b,
            round(CAST(len(list_intersect(wa.ws, wb.ws)) AS DOUBLE)
                  / (len(wa.ws) + len(wb.ws) - len(list_intersect(wa.ws, wb.ws))),
@@ -465,15 +200,15 @@ def q_jaccard_pairs(spark: SparkSession, d: str):
     similarity yet still bucket-joined — the corpus is never
     cross-joined, unlike the round-1 sampled all-pairs baseline whose
     a.id < b.id join was quadratic by construction."""
-    docs = _spread(load_table(spark, d, "documents"))
-    sigs = _minhash_sigs(_shingles_from_docs(docs))
+    docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
+    sigs = similarity.minhash_sigs(text.shingles_from_docs(docs))
     rows1 = sigs.select(
         "doc_id",
         F.explode(
             F.array(
                 *[
                     F.struct(F.lit(j).alias("band"), F.col(f"mh{j}").alias("mh"))
-                    for j in range(_N_MINHASH)
+                    for j in range(similarity.N_MINHASH)
                 ]
             )
         ).alias("e"),
@@ -481,7 +216,7 @@ def q_jaccard_pairs(spark: SparkSession, d: str):
     wb = Window.partitionBy("band", "mh")
     capped = track(
         rows1.withColumn("bn", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bn") <= _BUCKET_CAP)
+        .filter(F.col("bn") <= similarity.BUCKET_CAP)
         .persist()
     )
     a, b = capped.alias("a"), capped.alias("b")
@@ -495,8 +230,8 @@ def q_jaccard_pairs(spark: SparkSession, d: str):
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    warr = track(_word_arrays(docs).persist())
-    return _jaccard_on_pairs(cand, warr, "doc_a", "doc_b").select(
+    warr = track(similarity.word_arrays(docs).persist())
+    return similarity.jaccard_on_pairs(cand, warr, "doc_a", "doc_b").select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
 
@@ -507,7 +242,7 @@ def q_jaccard_pairs(spark: SparkSession, d: str):
 
 @query(
     "q_sim_cosine",
-    oracle=_cosine_vs_query_sql(0, where="d.vec_id != 0")
+    oracle=similarity.cosine_vs_query_sql(0, where="d.vec_id != 0")
     + " ORDER BY sim DESC, d.vec_id LIMIT 20",
     tags=("llm", "similarity"),
 )
@@ -523,7 +258,7 @@ def q_sim_cosine(spark: SparkSession, d: str):
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(20)
@@ -535,7 +270,7 @@ def q_sim_cosine(spark: SparkSession, d: str):
     oracle=f"""
     WITH sims AS (
         SELECT e2.label, s.vec_id, s.sim
-        FROM ({_cosine_vs_query_sql(0, where="d.vec_id != 0")}) AS s
+        FROM ({similarity.cosine_vs_query_sql(0, where="d.vec_id != 0")}) AS s
         JOIN embeddings AS e2 ON e2.vec_id = s.vec_id
     )
     SELECT label, vec_id, sim FROM (
@@ -558,7 +293,7 @@ def q_sim_knn_group(spark: SparkSession, d: str):
         .select(
             "label",
             "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("label").orderBy(F.col("sim").desc(), "vec_id")
@@ -569,87 +304,19 @@ def q_sim_knn_group(spark: SparkSession, d: str):
     )
 
 
-# Signed-random-projection LSH. _SRP_H pseudo-random hyperplanes give
-# 2^_SRP_H buckets; the hyperplane matrix is drawn ONCE from a seeded
-# generator and inlined as integer literals in both engines (a formula
-# like (i·p_j mod 7)−3 looks random but degenerates — p_j ≡ 0 mod 7
-# yields a constant hyperplane and equal residues duplicate planes,
-# which measurably costs recall). Sign bits must agree bit-for-bit
-# across engines, so the dot product is computed on µ-quantized int64
-# components (floor(x·1e6): float→double widening, one IEEE multiply,
-# and floor are all exactly reproducible) — pure integer arithmetic,
-# no float sums.
-_SRP_H = 8
-_SRP_DIM = 64
-
-
-def _srp_coefs() -> list[list[int]]:
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    return rng.integers(-7, 8, size=(_SRP_H, _SRP_DIM)).tolist()
-
-
-_SRP_C = _srp_coefs()
-
-_SRP_EVQ_SQL = """
-    SELECT vec_id,
-           CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000) AS BIGINT) AS xq,
-           generate_subscripts(embedding, 1) AS i
-    FROM embeddings
-"""
-
-_SRP_BUCKET_SQL = (
-    "SELECT vec_id, "
-    + " + ".join(
-        f"CAST(SUM(xq * ([{', '.join(str(c) for c in _SRP_C[j])}])[i]) > 0"
-        f" AS INTEGER) * {1 << j}"
-        for j in range(_SRP_H)
-    )
-    + f" AS bucket FROM ({_SRP_EVQ_SQL}) GROUP BY vec_id"
-)
-
-_SRP_MASKS = [0] + [1 << j for j in range(_SRP_H)]
-
-
-def _srp_bucket_col() -> Column:
-    """Spark twin of _SRP_BUCKET_SQL: per-hyperplane int64 dot via
-    zip_with against the literal coefficient row + aggregate (JVM
-    codegen, zero UDFs). The µ-quantization runs ONCE over the vector
-    and all 8 planes zip against the shared quantized array (Catalyst
-    CSE collapses the repeated subtree) — quantizing inside each
-    plane's lambda re-floors 8× and measured ~5× slower."""
-    xq = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * 1000000.0).cast("long")
-    )
-
-    def dot(j: int) -> Column:
-        coefs = F.array(*[F.lit(c) for c in _SRP_C[j]])
-        return F.aggregate(
-            F.zip_with(xq, coefs, lambda a, c: a * c.cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    return reduce(
-        lambda a, b: a + b,
-        [(dot(j) > 0).cast("int") * (1 << j) for j in range(_SRP_H)],
-    )
-
-
 @query(
     "q_sim_ann_bucket",
     oracle=f"""
-    WITH b AS ({_SRP_BUCKET_SQL}),
+    WITH b AS ({similarity.SRP_BUCKET_SQL}),
     qb AS (SELECT bucket FROM b WHERE vec_id = 0),
     probes AS (
         SELECT xor(qb.bucket, m.mask) AS pbucket
-        FROM qb, (VALUES {", ".join(f"({m})" for m in _SRP_MASKS)}) AS m(mask)
+        FROM qb, (VALUES {", ".join(f"({m})" for m in similarity.SRP_MASKS)}) AS m(mask)
     ),
     cand AS (SELECT b.vec_id, b.bucket FROM b JOIN probes ON b.bucket = probes.pbucket
              WHERE b.vec_id != 0)
     SELECT c.bucket, s.vec_id, s.sim
-    FROM ({_cosine_vs_query_sql(0, where="d.vec_id != 0")}) AS s
+    FROM ({similarity.cosine_vs_query_sql(0, where="d.vec_id != 0")}) AS s
     JOIN cand AS c ON c.vec_id = s.vec_id
     ORDER BY s.sim DESC, s.vec_id LIMIT 10
     """,
@@ -673,11 +340,11 @@ def q_sim_ann_bucket(spark: SparkSession, d: str):
     is ~1.1s at sf0.1 and the compile is a per-query constant that
     amortizes to nothing at scale."""
     e = load_table(spark, d, "embeddings")
-    b = e.select("vec_id", "embedding", _srp_bucket_col().alias("bucket"))
+    b = e.select("vec_id", "embedding", similarity.srp_bucket_col().alias("bucket"))
     qrow = b.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"), F.col("bucket").alias("qbucket")
     )
-    masks = spark.createDataFrame([(m,) for m in _SRP_MASKS], "mask int")
+    masks = spark.createDataFrame([(m,) for m in similarity.SRP_MASKS], "mask int")
     qprobes = qrow.crossJoin(masks).select(
         "qv", F.col("qbucket").bitwiseXOR(F.col("mask")).alias("pbucket")
     )
@@ -687,31 +354,18 @@ def q_sim_ann_bucket(spark: SparkSession, d: str):
         .select(
             "bucket",
             "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(10)
     )
 
 
-_BUCKET16_SQL = (
-    "(CAST(embedding[1] > 0 AS INTEGER) * 8 + CAST(embedding[2] > 0 AS INTEGER) * 4"
-    " + CAST(embedding[3] > 0 AS INTEGER) * 2 + CAST(embedding[4] > 0 AS INTEGER))"
-)
-
-
-def _bucket16_col() -> Column:
-    """Sign-LSH bucket from 4 leading components → 16 buckets; the
-    Spark twin of _BUCKET16_SQL."""
-    bit = lambda i: (F.element_at("embedding", i).cast("double") > 0).cast("int")  # noqa: E731
-    return bit(1) * 8 + bit(2) * 4 + bit(3) * 2 + bit(4)
-
-
 @query(
     "q_dedup_embed",
     oracle=f"""
-    WITH ev AS ({_EV_SQL}),
-    b AS (SELECT vec_id, {_BUCKET16_SQL} AS bucket FROM embeddings),
+    WITH ev AS ({similarity.EV_SQL}),
+    b AS (SELECT vec_id, {similarity.BUCKET16_SQL} AS bucket FROM embeddings),
     norms AS (SELECT vec_id, SUM(x * x) AS nn FROM ev GROUP BY vec_id),
     pairs AS (
         SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b
@@ -744,7 +398,7 @@ def q_dedup_embed(spark: SparkSession, d: str):
     at 100 TB, more hyperplanes → 2^k buckets keeps per-bucket pair
     counts bounded."""
     e = spread_scan(load_table(spark, d, "embeddings"), "vec_id").select(
-        "vec_id", "embedding", _bucket16_col().alias("bucket")
+        "vec_id", "embedding", similarity.bucket16_col().alias("bucket")
     )
     a = e.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"), "bucket"
@@ -758,7 +412,7 @@ def q_dedup_embed(spark: SparkSession, d: str):
         .select(
             "vec_a",
             "vec_b",
-            F.round(_cosine(F.col("ea"), F.col("eb")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("ea"), F.col("eb")), 6).alias("sim"),
         )
     )
 
@@ -771,7 +425,7 @@ def q_dedup_embed(spark: SparkSession, d: str):
     "q_text_tokens",
     oracle=f"""
     SELECT word, COUNT(*) AS n
-    FROM ({_WORDS_SQL})
+    FROM ({text.WORDS_SQL})
     GROUP BY word
     """,
     tags=("llm", "text"),
@@ -779,7 +433,7 @@ def q_dedup_embed(spark: SparkSession, d: str):
 def q_text_tokens(spark: SparkSession, d: str):
     """Tokenize + global word count (the classic)."""
     docs = load_table(spark, d, "documents")
-    return _words(docs).groupBy("word").agg(F.count(F.lit(1)).alias("n"))
+    return text.words(docs).groupBy("word").agg(F.count(F.lit(1)).alias("n"))
 
 
 @query(
@@ -798,7 +452,7 @@ def q_text_tokens(spark: SparkSession, d: str):
 def q_text_stats(spark: SparkSession, d: str):
     """Corpus stats per language: doc/token counts, char stats."""
     docs = load_table(spark, d, "documents")
-    n_tok = F.size(F.filter(F.split("text", " "), lambda w: w != ""))
+    n_tok = F.size(text.tokens())
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(n_tok).cast("long").alias("total_tokens"),
@@ -832,7 +486,7 @@ def q_text_filter(spark: SparkSession, d: str):
     WITH tok AS (
         SELECT doc_id, COUNT(*) AS n_tok,
                COUNT(*) FILTER (WHERE word IN ({', '.join(f"'{w}'" for w in _STOPWORDS)})) AS n_stop
-        FROM ({_WORDS_SQL}) GROUP BY doc_id
+        FROM ({text.WORDS_SQL}) GROUP BY doc_id
     )
     SELECT d.doc_id,
            t.n_tok,
@@ -858,7 +512,7 @@ def text_quality_report(docs):
     (tests/test_streaming.py)."""
     docs = docs
     tok = (
-        _words(docs)
+        text.words(docs)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tok"),
@@ -887,41 +541,12 @@ def text_quality_report(docs):
     )
 
 
-_LANG_MARKERS = ("the", "a", "of")
-
-
-def _marker_hits_sql() -> str:
-    pad = "' ' || text || ' '"
-    terms = []
-    for m in _LANG_MARKERS:
-        pat = f"' {m} '"
-        terms.append(
-            f"(length({pad}) - length(replace({pad}, {pat}, ' '))) / {len(m) + 1}"
-        )
-    return " + ".join(terms)
-
-
-def _marker_hits():
-    """Spark twin of ``_marker_hits_sql`` — the marker-word occurrence
-    count as a Column over a ``text`` column. Shared by q_text_langid
-    and q_langid_confusion so the two can't drift if markers or the
-    padding scheme change."""
-    pad = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    hits = None
-    for m in _LANG_MARKERS:
-        t = (F.length(pad) - F.length(F.replace(pad, F.lit(f" {m} "), F.lit(" ")))) / (
-            len(m) + 1
-        )
-        hits = t if hits is None else hits + t
-    return hits
-
-
 @query(
     "q_text_langid",
     oracle=f"""
     SELECT doc_id,
-           CAST({_marker_hits_sql()} AS BIGINT) AS en_hits,
-           CASE WHEN {_marker_hits_sql()} > 0 THEN 'en' ELSE 'unknown' END AS lang_guess
+           CAST({text.marker_hits_sql()} AS BIGINT) AS en_hits,
+           CASE WHEN {text.marker_hits_sql()} > 0 THEN 'en' ELSE 'unknown' END AS lang_guess
     FROM documents
     """,
     tags=("llm", "text"),
@@ -939,7 +564,7 @@ def text_langid_report(docs):
     foreachBatch streaming twin's per-batch transform
     (tests/test_streaming.py)."""
     docs = docs
-    hits = _marker_hits()
+    hits = text.marker_hits()
     return docs.select(
         "doc_id",
         hits.cast("long").alias("en_hits"),
@@ -998,7 +623,7 @@ def q_text_bpe(spark: SparkSession, d: str):
     budgeting when a real tokenizer is too expensive to run inline.
     Pure higher-order array functions, no Python."""
     docs = load_table(spark, d, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
+    toks = text.tokens()
     pieces = F.aggregate(
         toks,
         F.lit(0).cast("long"),
@@ -1018,7 +643,7 @@ def _centroid_sims_sql() -> str:
     """DuckDB: cosine sim of every vector vs each centroid vector."""
     cids = ", ".join(str(c) for c in _IVF_CENTROIDS)
     return f"""
-    WITH ev AS ({_EV_SQL}),
+    WITH ev AS ({similarity.EV_SQL}),
     cv AS (SELECT vec_id AS cid, i, x AS cx FROM ev WHERE vec_id IN ({cids})),
     norms AS (SELECT vec_id, SUM(x * x) AS nn FROM ev GROUP BY vec_id),
     sims AS (
@@ -1051,7 +676,7 @@ def _centroid_sims_sql() -> str:
         WHERE a.cid = qc.cid AND a.vec_id != 0
     )
     SELECT b.cid, s.vec_id, s.sim
-    FROM ({_cosine_vs_query_sql(0, where="d.vec_id != 0")}) AS s
+    FROM ({similarity.cosine_vs_query_sql(0, where="d.vec_id != 0")}) AS s
     JOIN bucket AS b ON b.vec_id = s.vec_id
     ORDER BY s.sim DESC, s.vec_id LIMIT 5
     """,
@@ -1076,7 +701,7 @@ def q_sim_ivf(spark: SparkSession, d: str):
     sims = e.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cid",
-        F.round(_cosine(F.col("embedding"), F.col("cv")), 6).alias("csim"),
+        F.round(similarity.cosine(F.col("embedding"), F.col("cv")), 6).alias("csim"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), "cid")
     assign = (
@@ -1096,7 +721,7 @@ def q_sim_ivf(spark: SparkSession, d: str):
         .select(
             "cid",
             "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(5)
@@ -1139,8 +764,8 @@ def q_text_winnow(spark: SparkSession, d: str):
     needs no tolerance. At 100 TB the (doc_id, fp) output feeds the
     same band-join dedup as MinHash with a containment (not just
     resemblance) guarantee."""
-    docs = _spread(load_table(spark, d, "documents"))
-    tokd = docs.select("doc_id", _tokens().alias("toks"))
+    docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
+    tokd = docs.select("doc_id", text.tokens().alias("toks"))
     toks = F.col("toks")
     n = F.size(toks)
     grams = F.when(
@@ -1194,7 +819,7 @@ def q_text_winnow(spark: SparkSession, d: str):
 @query(
     "q_text_tfidf",
     oracle=f"""
-    WITH tok AS ({_WORDS_SQL}),
+    WITH tok AS ({text.WORDS_SQL}),
     tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM tok GROUP BY doc_id, word),
     dfreq AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY word),
     n AS (SELECT COUNT(DISTINCT doc_id) AS n FROM documents),
@@ -1221,9 +846,9 @@ def q_text_tfidf(spark: SparkSession, d: str):
     shuffle is the (doc_id, word) groupBy. Ranking orders by the
     ROUNDED score (bit-identical across engines) with the term as
     tie-break, so the top-5 set is deterministic."""
-    docs = _spread(load_table(spark, d, "documents"))
+    docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
     tf = (
-        _words(docs)
+        text.words(docs)
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -1248,67 +873,10 @@ def q_text_tfidf(spark: SparkSession, d: str):
     )
 
 
-_BUCKET_CAP = 64  # drop degenerate LSH buckets (boilerplate signatures)
-
-
-def _minhash_band_edges(docs: DataFrame) -> DataFrame:
-    """Symmetric LSH edge list: (src, dst) iff some band's full
-    r-row signature collides. Join key is (band, mh) — the corpus is
-    never cross-joined — and buckets larger than _BUCKET_CAP are
-    dropped BEFORE the self-join: a degenerate bucket
-    (boilerplate/empty-doc signatures) of size m would emit m² edges,
-    and at 100 TB a single million-doc bucket is a 10¹²-pair skew bomb.
-    The cap is a window count over the same (band, mh) shuffle the join
-    needs anyway — no extra exchange. (Fixture buckets max out at 4, so
-    the cap binds only at scale; the oracle applies the identical cap.)"""
-    sigs = _minhash_sigs(_shingles_from_docs(_spread(docs)))
-    bands = _minhash_bands(sigs)
-    wb = Window.partitionBy("band", "mh")
-    # Persist the capped band table: it is referenced from BOTH sides of
-    # the self-join, and each bands reference re-evaluates the signature
-    # aggregate 4× (one per band select) — 8 evaluations of the shingle
-    # scan without this one doc-count-sized cache.
-    capped = track(
-        bands.withColumn("bn", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bn") <= _BUCKET_CAP)
-        .persist()
-    )
-    a, b = capped.alias("a"), capped.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.mh") == F.col("b.mh"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .distinct()
-    )
-
-
-_BANDS_SQL = f"""
-    shingles AS ({_SHINGLES_SQL}),
-    {_SIGS_CTE_SQL},
-    bands AS ({_BANDS_SELECT_SQL}),
-    capped AS (
-        SELECT doc_id, band, mh FROM (
-            SELECT doc_id, band, mh,
-                   COUNT(*) OVER (PARTITION BY band, mh) AS bn
-            FROM bands
-        ) WHERE bn <= 64
-    ),
-    edges AS (
-        SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-        FROM capped AS a JOIN capped AS b
-          ON a.band = b.band AND a.mh = b.mh AND a.doc_id != b.doc_id
-    )
-"""
-
-
 @query(
     "q_dedup_components",
     oracle=f"""
-    WITH RECURSIVE {_BANDS_SQL},
+    WITH RECURSIVE {similarity.BANDS_SQL},
     comp(doc_id, label) AS (
         SELECT doc_id, doc_id FROM documents
         UNION
@@ -1340,7 +908,7 @@ def q_dedup_components(spark: SparkSession, d: str):
     truncation, executor-loss-safe. The oracle is DuckDB's recursive
     CTE of the same closure."""
     docs = load_table(spark, d, "documents")
-    edges = track(_minhash_band_edges(docs).persist())
+    edges = track(similarity.minhash_band_edges(docs).persist())
     labels = propagate_min_labels(edges)
     singletons = docs.join(labels, "doc_id", "left_anti").select(
         "doc_id", F.col("doc_id").alias("label")

@@ -12,14 +12,8 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import bounded_window_key
-from direct_kafka_stream_spark.io import load_table
-from direct_kafka_stream_spark.operators.llm import (
-    _BANDS_SELECT_SQL,
-    _SHINGLES_SQL,
-    _SIGS_CTE_SQL,
-    _spread,
-    _tokens,
-)
+from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import similarity, text
 from direct_kafka_stream_spark.registry import query
 
 _CHUNK = 20  # tokens per chunk
@@ -47,8 +41,8 @@ def q_text_chunk(spark: SparkSession, d: str):
     sequence (no join, no window function); each row explodes into
     ceil(n/stride) chunks inside the same scan stage, so the operator
     is embarrassingly parallel at any corpus size."""
-    docs = _spread(load_table(spark, d, "documents"))
-    toks = _tokens()
+    docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
+    toks = text.tokens()
     withs = docs.select("doc_id", toks.alias("t")).filter(F.size("t") >= 1)
     return (
         withs.select(
@@ -98,7 +92,7 @@ def q_text_pack(spark: SparkSession, d: str):
     (partitionBy(shard) in the window) so every partition packs
     independently — same operator, sharded key."""
     docs = load_table(spark, d, "documents")
-    n = F.size(_tokens())
+    n = F.size(text.tokens())
     w = Window.partitionBy(bounded_window_key("doc_id")).orderBy(
         "doc_id"
     ).rowsBetween(Window.unboundedPreceding, 0)
@@ -188,7 +182,7 @@ def q_embed_centroid(spark: SparkSession, d: str):
 @query(
     "q_text_repetition",
     oracle=f"""
-    WITH shingles AS ({_SHINGLES_SQL})
+    WITH shingles AS ({text.SHINGLES_SQL})
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_grams,
            CAST(COUNT(DISTINCT shingle) AS BIGINT) AS n_distinct,
@@ -205,10 +199,8 @@ def q_text_repetition(spark: SparkSession, d: str):
     explode + one groupBy; COUNT DISTINCT expands to the standard
     two-phase aggregate. Docs under 3 tokens have no 3-grams and drop
     out on both engines."""
-    from direct_kafka_stream_spark.operators.llm import _shingles_from_docs
-
-    docs = _spread(load_table(spark, d, "documents"))
-    sh = _shingles_from_docs(docs)
+    docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
+    sh = text.shingles_from_docs(docs)
     return sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.countDistinct("shingle").alias("n_distinct"),
@@ -249,10 +241,8 @@ def q_text_logprob(spark: SparkSession, d: str):
     both engines sum identical doubles), then summed exactly in
     decimal and averaged. Two shuffles: word-frequency groupBy and the
     per-doc aggregate."""
-    from direct_kafka_stream_spark.operators.llm import _words
-
-    docs = _spread(load_table(spark, d, "documents"))
-    toks = _words(docs).select("doc_id", "word")
+    docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
+    toks = text.words(docs).select("doc_id", "word")
     freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     total = toks.agg(F.count(F.lit(1)).alias("t"))
     lp = F.round(F.log(F.col("cnt").cast("double") / F.col("t")), 6)
@@ -309,8 +299,6 @@ def q_rag_retrieve(spark: SparkSession, d: str):
     (per-partition heaps, no global sort). At scale the sims stage is
     replaced by the IVF probe (q_sim_ivf) — the surrounding plan is
     unchanged."""
-    from direct_kafka_stream_spark.operators.llm import _cosine
-
     docs = load_table(spark, d, "documents").filter(
         F.col("lang").isin("en", "es", "de")
         & F.col("n_chars").between(100, 100000)
@@ -324,7 +312,7 @@ def q_rag_retrieve(spark: SparkSession, d: str):
         .select(
             "doc_id",
             "lang",
-            F.round(_cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
             F.left("text", F.lit(40)).alias("snippet"),
         )
         .orderBy(F.col("sim").desc(), "doc_id")
@@ -383,10 +371,8 @@ def q_kmeans_step(spark: SparkSession, d: str):
     means are one groupBy — no driver iteration inside the step (the
     outer k-means loop would checkpoint between steps exactly like
     q_dedup_components)."""
-    from direct_kafka_stream_spark.operators.llm import _spread
-
     e = load_table(spark, d, "embeddings")
-    ev = _spread(e, "vec_id").select(
+    ev = spread_scan(e, "vec_id").select(
         "vec_id", F.posexplode("embedding").alias("pos0", "xf")
     ).select(
         "vec_id", (F.col("pos0") + 1).alias("i"), F.col("xf").cast("double").alias("x")
@@ -528,19 +514,7 @@ def q_kmeans_train(spark: SparkSession, d: str):
         candidates = []
         for cid, arr in sorted(cents.items()):
             carr = F.array(*[F.lit(v) for v in arr])
-            d2 = F.round(
-                F.aggregate(
-                    F.zip_with(
-                        "embedding",
-                        carr,
-                        lambda x, y: (x.cast("double") - y)
-                        * (x.cast("double") - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            )
+            d2 = F.round(similarity.sq_dist("embedding", carr), 6)
             candidates.append(
                 F.struct(d2.alias("d2"), F.lit(cid).cast("long").alias("cid"))
             )
@@ -569,8 +543,8 @@ def q_kmeans_train(spark: SparkSession, d: str):
     return spark.createDataFrame(out_rows, out_schema)
 
 
-_CURATION_LANGS = ("en", "es", "de", "fr")
-_CURATION_TAU = 0.8
+CURATION_LANGS = ("en", "es", "de", "fr")
+CURATION_TAU = 0.8
 
 
 @query(
@@ -582,7 +556,7 @@ _CURATION_TAU = 0.8
                    ROW_NUMBER() OVER (PARTITION BY sha256(text)
                                       ORDER BY doc_id) AS rn
             FROM documents
-            WHERE lang IN {_CURATION_LANGS!r}
+            WHERE lang IN {CURATION_LANGS!r}
               AND n_chars BETWEEN 50 AND 100000
         ) WHERE rn = 1
     ),
@@ -602,8 +576,8 @@ _CURATION_TAU = 0.8
             WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
         ) WHERE w2 IS NOT NULL
     ),
-    {_SIGS_CTE_SQL},
-    bands AS ({_BANDS_SELECT_SQL}),
+    {similarity.SIGS_CTE_SQL},
+    bands AS ({similarity.BANDS_SELECT_SQL}),
     capped AS (
         SELECT doc_id, band, mh FROM (
             SELECT doc_id, band, mh,
@@ -631,7 +605,7 @@ _CURATION_TAU = 0.8
         JOIN warr wb ON wb.doc_id = c.doc_b
     ),
     drops AS (SELECT DISTINCT doc_b AS doc_id FROM jac
-              WHERE jaccard >= {_CURATION_TAU})
+              WHERE jaccard >= {CURATION_TAU})
     SELECT b.doc_id,
            CAST(len(list_filter(string_split(b.text, ' '), w -> w != '')) AS BIGINT)
                AS n_tokens
@@ -659,15 +633,8 @@ def curation_pipeline_on(raw_docs):
     batch analog the incremental streaming twin and its hypothesis
     property test compare against (tests/test_streaming.py,
     tests/test_properties.py)."""
-    from direct_kafka_stream_spark.operators.llm import (
-        _jaccard_on_pairs,
-        _minhash_band_edges,
-        _spread,
-        _word_arrays,
-    )
-
-    docs = _spread(raw_docs).filter(
-        F.col("lang").isin(*_CURATION_LANGS)
+    docs = spread_scan(raw_docs, "doc_id").filter(
+        F.col("lang").isin(*CURATION_LANGS)
         & F.col("n_chars").between(50, 100000)
     )
     # keep-first by hash via min_by: a HASH aggregate (map-side
@@ -680,27 +647,21 @@ def curation_pipeline_on(raw_docs):
         .select(F.col("k.doc_id").alias("doc_id"), F.col("k.text").alias("text"))
         .persist()
     )
-    edges = _minhash_band_edges(base).filter(F.col("src") < F.col("dst"))
-    warr = track(_word_arrays(base).persist())
+    edges = similarity.minhash_band_edges(base).filter(F.col("src") < F.col("dst"))
+    warr = track(similarity.word_arrays(base).persist())
     drops = (
-        _jaccard_on_pairs(edges, warr, "src", "dst")
-        .filter(F.col("jaccard") >= _CURATION_TAU)
+        similarity.jaccard_on_pairs(edges, warr, "src", "dst")
+        .filter(F.col("jaccard") >= CURATION_TAU)
         .select(F.col("dst").alias("doc_id"))
         .distinct()
     )
-    return (
-        base.join(drops, "doc_id", "left_anti")
-        .select(
-            "doc_id",
-            F.size(F.filter(F.split("text", " "), lambda t: t != "")).alias(
-                "n_tokens"
-            ),
-        )
+    return base.join(drops, "doc_id", "left_anti").select(
+        "doc_id", F.size(text.tokens()).alias("n_tokens")
     )
 
 
 _DECON_N = 4  # word n-gram size for contamination matching
-_DECON_EVAL = "src0"  # held-out benchmark source
+DECON_EVAL = "src0"  # held-out benchmark source
 
 _DECON_GRAMS_SQL = """
     SELECT doc_id, source, md5(word || ' ' || w1 || ' ' || w2 || ' ' || w3) AS gh
@@ -724,11 +685,11 @@ _DECON_GRAMS_SQL = """
     "q_decontaminate",
     oracle=f"""
     WITH sh AS ({_DECON_GRAMS_SQL}),
-    ev AS (SELECT DISTINCT gh FROM sh WHERE source = '{_DECON_EVAL}'),
+    ev AS (SELECT DISTINCT gh FROM sh WHERE source = '{DECON_EVAL}'),
     hits AS (
         SELECT s.doc_id, CAST(COUNT(DISTINCT s.gh) AS BIGINT) AS n_shared
         FROM sh AS s JOIN ev USING (gh)
-        WHERE s.source != '{_DECON_EVAL}'
+        WHERE s.source != '{DECON_EVAL}'
         GROUP BY s.doc_id
     )
     SELECT doc_id, n_shared FROM hits
@@ -749,7 +710,7 @@ def q_decontaminate(spark: SparkSession, d: str):
     text) and build array-side with zero per-doc sorts. The only
     exchange is the per-doc count over matched rows, which is
     contamination-sized, not corpus-sized."""
-    return decontaminate(_spread(load_table(spark, d, "documents")))
+    return decontaminate(spread_scan(load_table(spark, d, "documents"), "doc_id"))
 
 
 def decon_gram_stream(docs):
@@ -759,7 +720,7 @@ def decon_gram_stream(docs):
     inside the lambda would otherwise re-run the split+filter per gram
     position (O(len²) per doc)."""
     n = _DECON_N
-    tokd = docs.select("doc_id", "source", _tokens().alias("toks"))
+    tokd = docs.select("doc_id", "source", text.tokens().alias("toks"))
     toks = F.col("toks")
     grams = F.when(
         F.size(toks) >= n,
@@ -779,9 +740,9 @@ def decontaminate(docs):
     """Frame-level decontamination body (also driven by the scale
     probe over synthetically inflated corpora): see q_decontaminate."""
     sh = decon_gram_stream(docs)
-    ev = sh.filter(F.col("source") == _DECON_EVAL).select("gh").distinct()
+    ev = sh.filter(F.col("source") == DECON_EVAL).select("gh").distinct()
     return (
-        sh.filter(F.col("source") != _DECON_EVAL)
+        sh.filter(F.col("source") != DECON_EVAL)
         .join(F.broadcast(ev), "gh")
         .groupBy("doc_id")
         .agg(F.count_distinct("gh").alias("n_shared"))
@@ -823,7 +784,7 @@ def q_mix_domains(spark: SparkSession, d: str):
     docs = load_table(spark, d, "documents")
     dom = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(_tokens()).cast("long")).alias("n_tokens"),
+        F.sum(F.size(text.tokens()).cast("long")).alias("n_tokens"),
     )
     tot = dom.agg(
         F.sum("n_tokens").alias("total"), F.count(F.lit(1)).alias("n_dom")
@@ -887,7 +848,7 @@ def q_mix_sample(spark: SparkSession, d: str):
     at any scale."""
     docs = load_table(spark, d, "documents")
     dom = docs.groupBy("source").agg(
-        F.sum(F.size(_tokens()).cast("long")).alias("n_tokens")
+        F.sum(F.size(text.tokens()).cast("long")).alias("n_tokens")
     )
     tot = dom.agg(
         F.sum("n_tokens").alias("total"), F.count(F.lit(1)).alias("n_dom")
@@ -909,5 +870,5 @@ def q_mix_sample(spark: SparkSession, d: str):
     return (
         docs.join(F.broadcast(rates), "source")
         .filter(u < F.col("rate"))
-        .select("doc_id", "source", F.size(_tokens()).alias("n_tokens"))
+        .select("doc_id", "source", F.size(text.tokens()).alias("n_tokens"))
     )

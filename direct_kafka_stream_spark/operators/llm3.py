@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table, spread_scan
+from direct_kafka_stream_spark.operators import similarity, text
 from direct_kafka_stream_spark.registry import query
 
 _BPE_TOPK = 10
@@ -63,11 +64,9 @@ def q_bpe_merge_step(spark: SparkSession, d: str):
     only — a corpus of any size costs one word-count aggregation plus
     vocab x word-length pair rows. The pair census is
     alphabet²-bounded; top-k is TakeOrderedAndProject."""
-    from direct_kafka_stream_spark.operators.llm import _tokens
-
     docs = load_table(spark, d, "documents")
     wc = (
-        docs.select(F.explode(_tokens()).alias("word"))
+        docs.select(F.explode(text.tokens()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.length("word") >= 2)
@@ -223,17 +222,10 @@ def q_textcat_profiles(spark: SparkSession, d: str):
 
 
 def _dup_curve_oracle() -> str:
-    from direct_kafka_stream_spark.operators.llm import (
-        _ROWS1_SELECT_SQL,
-        _SHINGLES_SQL,
-        _SIGS_CTE_SQL,
-        _WARR_SQL,
-    )
-
     return f"""
-    WITH shingles AS ({_SHINGLES_SQL}),
-    {_SIGS_CTE_SQL},
-    rows1 AS ({_ROWS1_SELECT_SQL}),
+    WITH shingles AS ({text.SHINGLES_SQL}),
+    {similarity.SIGS_CTE_SQL},
+    rows1 AS ({similarity.ROWS1_SELECT_SQL}),
     capped AS (
         SELECT doc_id, band, mh FROM (
             SELECT doc_id, band, mh,
@@ -246,7 +238,7 @@ def _dup_curve_oracle() -> str:
         FROM capped AS a JOIN capped AS b
           ON a.band = b.band AND a.mh = b.mh AND a.doc_id < b.doc_id
     ),
-    warr AS ({_WARR_SQL}),
+    warr AS ({similarity.WARR_SQL}),
     jac AS (
         SELECT round(CAST(len(list_intersect(wa.ws, wb.ws)) AS DOUBLE)
                      / (len(wa.ws) + len(wb.ws)
@@ -280,34 +272,24 @@ def q_dup_threshold_curve(spark: SparkSession, d: str):
     (bucket-scoped, never corpus²); the curve itself is a 7-literal
     threshold table against the pair similarities, all counts
     exact."""
-    from direct_kafka_stream_spark.operators.llm import (
-        _BUCKET_CAP,
-        _N_MINHASH,
-        _jaccard_on_pairs,
-        _minhash_sigs,
-        _shingles_from_docs,
-        _spread,
-        _word_arrays,
-    )
-
-    docs = _spread(load_table(spark, d, "documents"))
+    docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
     # nothing persisted: AQE stage reuse recycles the signature/cap/
     # word-array exchanges (0.80x the time of persisting them, round 12)
-    sigs = _minhash_sigs(_shingles_from_docs(docs))
+    sigs = similarity.minhash_sigs(text.shingles_from_docs(docs))
     rows1 = sigs.select(
         "doc_id",
         F.explode(
             F.array(
                 *[
                     F.struct(F.lit(j).alias("band"), F.col(f"mh{j}").alias("mh"))
-                    for j in range(_N_MINHASH)
+                    for j in range(similarity.N_MINHASH)
                 ]
             )
         ).alias("e"),
     ).select("doc_id", F.col("e.band").alias("band"), F.col("e.mh").alias("mh"))
     wb = Window.partitionBy("band", "mh")
     capped = rows1.withColumn("bn", F.count(F.lit(1)).over(wb)).filter(
-        F.col("bn") <= _BUCKET_CAP
+        F.col("bn") <= similarity.BUCKET_CAP
     )
     a, b = capped.alias("a"), capped.alias("b")
     cand = (
@@ -320,8 +302,8 @@ def q_dup_threshold_curve(spark: SparkSession, d: str):
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    warr = _word_arrays(docs)
-    jac = _jaccard_on_pairs(cand, warr, "doc_a", "doc_b").select(
+    warr = similarity.word_arrays(docs)
+    jac = similarity.jaccard_on_pairs(cand, warr, "doc_a", "doc_b").select(
         F.round("jaccard", 6).alias("j")
     )
     taus = spark.createDataFrame(
@@ -403,9 +385,8 @@ def gopher_rules_census(docs):
     foreachBatch streaming twin's per-batch transform
     (tests/test_streaming.py)."""
     docs = docs
-    from direct_kafka_stream_spark.operators.llm import _tokens
 
-    n_words = F.size(_tokens())
+    n_words = F.size(text.tokens())
     mean_wlen = F.when(
         n_words > 0,
         F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))

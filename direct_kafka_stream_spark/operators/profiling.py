@@ -21,10 +21,8 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table, spread_scan
-from direct_kafka_stream_spark.operators.llm import (
-    _BANDS_SQL,
-    q_dedup_components,
-)
+from direct_kafka_stream_spark.operators import similarity, text
+from direct_kafka_stream_spark.operators.llm import q_dedup_components
 from direct_kafka_stream_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -461,7 +459,7 @@ def q_ngram_freq(spark: SparkSession, d: str):
     then one groupBy(bigram) with map-side partial counts and a top-50
     TakeOrderedAndProject."""
     docs = load_table(spark, d, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     # Hoist the token array to a projected column BEFORE the indexed
     # lambda: element_at inside transform would otherwise re-evaluate
     # the split+filter once per index (the O(len²) trap fixed for
@@ -529,7 +527,7 @@ def text_entropy_report(docs):
     foreachBatch streaming twin's per-batch transform
     (tests/test_streaming.py)."""
     docs = docs
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     counts = (
         docs.select("doc_id", F.explode(toks).alias("word"))
         .groupBy("doc_id", "word")
@@ -558,7 +556,7 @@ def text_entropy_report(docs):
 @query(
     "q_dup_cluster_stats",
     oracle=f"""
-    WITH RECURSIVE {_BANDS_SQL},
+    WITH RECURSIVE {similarity.BANDS_SQL},
     comp(doc_id, label) AS (
         SELECT doc_id, doc_id FROM documents
         UNION

@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators import text
 from direct_kafka_stream_spark.registry import query
 
 # BM25 constants (standard Robertson defaults) and a fixed lexical
@@ -65,7 +66,7 @@ def bm25_scored(spark: SparkSession, d: str):
     Spark twin of ``BM25_SCORED_SQL``. Candidate-docs-sized output:
     only documents containing at least one query term appear."""
     docs = load_table(spark, d, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     dl = docs.select("doc_id", F.size(toks).alias("dl"))
     st = dl.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
     tf = (
@@ -207,7 +208,7 @@ def q_boilerplate_ngrams(spark: SparkSession, d: str):
     against it plus the doc's own gram count gives the same fraction
     with no full-vocabulary shuffle."""
     docs = load_table(spark, d, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     tokenized = docs.select("doc_id", toks.alias("toks"))
     grams = F.when(
         F.size(F.col("toks")) >= _BP_N,
@@ -271,7 +272,7 @@ def q_mix_temperature(spark: SparkSession, d: str):
     of size. The integer allocation FLOORs on both engines (half-up
     vs banker's rounding never enters)."""
     docs = load_table(spark, d, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(toks)).cast("long").alias("n_tokens"),
@@ -479,7 +480,7 @@ def q_ngram_novelty(spark: SparkSession, d: str):
     combined), a gram-keyed join back, and a doc-keyed rollup —
     nothing quadratic, no global window anywhere."""
     docs = load_table(spark, d, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toks = text.tokens()
     tokenized = docs.select("doc_id", toks.alias("toks"))
     grams = F.when(
         F.size(F.col("toks")) >= _NOV_N,

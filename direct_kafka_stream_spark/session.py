@@ -103,6 +103,13 @@ def jvm_cpus(spark: SparkSession) -> int | None:
         return None
 
 
+def driver_memory(physical_bytes: int) -> str:
+    """Default driver heap: a quarter of physical memory (the JVM's own
+    default heap fraction), at most 32g. A heap near or above physical
+    memory is never forced to collect before the host runs out."""
+    return f"{min(physical_bytes // 4 >> 20, 32 << 10)}m"
+
+
 def session_cores(spark: SparkSession) -> int:
     """The session's real task slots (``defaultParallelism``) — a
     driver may hand us a local[4] session on a 32-CPU host. Falls back
@@ -186,11 +193,14 @@ def get_session(
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", min(cpus, 16))
     )
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config(

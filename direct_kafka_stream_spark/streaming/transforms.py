@@ -20,6 +20,8 @@ from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC, dsum
+from direct_kafka_stream_spark.io import spread_scan
+from direct_kafka_stream_spark.operators import similarity, text
 
 
 def _win_bounds(win: Column) -> list[Column]:
@@ -362,7 +364,7 @@ def curation_apply_batch(
     Scale shape: every per-batch stage is batch-sized on one side —
     the sha256 anti-join and the (band, mh) probe join are new-docs ×
     store joins, never store × store; the accumulated bucket cap
-    (_BUCKET_CAP over store ∪ batch) keeps the probe skew-bounded
+    (BUCKET_CAP over store ∪ batch) keeps the probe skew-bounded
     exactly like the batch pipeline's cap. State grows by one (h,
     doc_id) row, 4 band rows and 1 word-array row per accepted-base
     doc — the per-doc fingerprint state a 100 TB incremental dedup
@@ -374,22 +376,13 @@ def curation_apply_batch(
     deltas to their stores; drops stay IN the band/word stores (the
     batch analog also blocks on pairs whose smaller side was itself
     dropped)."""
-    from direct_kafka_stream_spark.operators.llm import (
-        _BUCKET_CAP,
-        _jaccard_on_pairs,
-        _minhash_bands,
-        _minhash_sigs,
-        _shingles_from_docs,
-        _spread,
-        _word_arrays,
-    )
-    from direct_kafka_stream_spark.operators.llm2 import (
-        _CURATION_LANGS,
-        _CURATION_TAU,
-    )
+    # not at module level: operators/streaming_analog.py imports this
+    # module, and llm2 imported that early would register its queries
+    # out of registry order
+    from direct_kafka_stream_spark.operators.llm2 import CURATION_LANGS, CURATION_TAU
 
     gated = new_docs.filter(
-        F.col("lang").isin(*_CURATION_LANGS)
+        F.col("lang").isin(*CURATION_LANGS)
         & F.col("n_chars").between(50, 100000)
     )
     keeper = F.min_by(F.struct("doc_id", "text"), "doc_id").alias("k")
@@ -412,19 +405,18 @@ def curation_apply_batch(
     new_base = track(
         batch_base.join(seen.select("h"), "h", "left_anti").localCheckpoint(eager=True)
     )
-    sigs = _minhash_sigs(
-        _shingles_from_docs(_spread(new_base.select("doc_id", "text")))
-    )
+    spread = spread_scan(new_base.select("doc_id", "text"), "doc_id")
+    sigs = similarity.minhash_sigs(text.shingles_from_docs(spread))
     # persisted, and filled by the eager drops checkpoint below: each
     # is read there and again by the caller's store append
-    new_bands = track(_minhash_bands(sigs).persist())
-    new_warr = track(_word_arrays(new_base).persist())
+    new_bands = track(similarity.minhash_bands(sigs).persist())
+    new_warr = track(similarity.word_arrays(new_base).persist())
 
     all_bands = bands_store.unionByName(new_bands)
     wb = Window.partitionBy("band", "mh")
     capped = track(
         all_bands.withColumn("bn", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bn") <= _BUCKET_CAP)
+        .filter(F.col("bn") <= similarity.BUCKET_CAP)
         .drop("bn")
         .persist()
     )
@@ -446,17 +438,15 @@ def curation_apply_batch(
     # returned frames survive subsequent store appends (same hazard as
     # new_base above)
     drops = track(
-        _jaccard_on_pairs(edges, all_warr, "src", "dst")
-        .filter(F.col("jaccard") >= _CURATION_TAU)
+        similarity.jaccard_on_pairs(edges, all_warr, "src", "dst")
+        .filter(F.col("jaccard") >= CURATION_TAU)
         .select(F.col("dst").alias("doc_id"))
         .distinct()
         .localCheckpoint(eager=True)
     )
     accepted = new_base.join(drops, "doc_id", "left_anti").select(
         "doc_id",
-        F.size(F.filter(F.split("text", " "), lambda t: t != ""))
-        .cast("bigint")
-        .alias("n_tokens"),
+        F.size(text.tokens()).cast("bigint").alias("n_tokens"),
     )
     return {
         "accepted": accepted,

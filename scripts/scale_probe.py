@@ -42,7 +42,8 @@ Flags (before the subcommand; `run` only)
                          the pair generators' 60x memory bound is a
                          per-TASK working-set bound, so more
                          partitions = smaller sort runs per task)
---driver-mem SIZE        spark.driver.memory (default 32g)
+--driver-mem SIZE        spark.driver.memory (default: a quarter of
+                         physical memory, at most 32g)
 --timeout SEC            per-run guard (default 900): breach cancels
                          all jobs and records a DNF row instead of
                          hanging the host (round-9 memory note, now

@@ -75,6 +75,38 @@ def test_every_operator_persist_is_tracked():
     assert not untracked, sorted(untracked)
 
 
+def test_shared_helpers_are_public_and_tokenize_in_one_place():
+    """No package module imports a ``_``-name from an operator module:
+    helpers shared across modules are public (the text and similarity
+    primitives live in ``operators/text.py`` and ``operators/similarity.py``).
+    And the only Spark-side split on a space is ``text.space_split``."""
+    private, splits = [], []
+    for p in sorted(PACKAGE.rglob("*.py")):
+        rel = p.relative_to(PACKAGE)
+        for node in ast.walk(ast.parse(p.read_text())):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").startswith(f"{PACKAGE.name}.operators")
+            ):
+                private += [
+                    f"{rel}:{node.lineno} {a.name}"
+                    for a in node.names
+                    if a.name.startswith("_")
+                ]
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "split"
+                and len(node.args) > 1
+                and isinstance(node.args[1], ast.Constant)
+                and node.args[1].value == " "
+                and str(rel) != "operators/text.py"
+            ):
+                splits.append(f"{rel}:{node.lineno}")
+    assert not private, private
+    assert not splits, splits
+
+
 def _persistent_rdd_ids(spark) -> set[int]:
     """RDDs pinned by ``persist`` or ``localCheckpoint``."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())

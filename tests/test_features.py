@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from direct_kafka_stream_spark import QUERIES, load_table
-from direct_kafka_stream_spark.operators.features import _FH_DIM
+from direct_kafka_stream_spark.operators.features import FH_DIM
 from direct_kafka_stream_spark.plans import inspect
 
 from tests.conftest import SF_DIR
@@ -22,7 +22,7 @@ def test_feature_hash_preserves_token_mass(spark):
     assert rows
     by_doc: dict[int, int] = {}
     for r in rows:
-        assert 0 <= r.bucket < _FH_DIM
+        assert 0 <= r.bucket < FH_DIM
         by_doc[r.doc_id] = by_doc.get(r.doc_id, 0) + r.n
     toks = (
         load_table(spark, SF_DIR, "documents")

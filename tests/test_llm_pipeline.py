@@ -9,8 +9,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark import QUERIES, load_table
-from direct_kafka_stream_spark.operators.llm import _minhash_band_edges, _tokens
 from direct_kafka_stream_spark.operators.llm2 import _CHUNK, _CTX, _STRIDE
+from direct_kafka_stream_spark.operators.similarity import (
+    BUCKET_CAP,
+    SRP_MASKS,
+    cosine,
+    minhash_band_edges,
+    sq_dist,
+    srp_bucket_col,
+)
+from direct_kafka_stream_spark.operators.text import tokens
 
 from tests.conftest import SF_DIR
 
@@ -18,7 +26,7 @@ from tests.conftest import SF_DIR
 def test_chunking_covers_every_token_with_fixed_stride(spark):
     chunks = QUERIES["q_text_chunk"].spark(spark, SF_DIR)
     docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", F.size(_tokens()).alias("n")
+        "doc_id", F.size(tokens()).alias("n")
     )
     per_doc = chunks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_chunks"),
@@ -59,7 +67,7 @@ def test_component_labels_are_closed_over_edges(spark):
     and every label must be a member of its own component (the min)."""
     docs = load_table(spark, SF_DIR, "documents")
     comp = QUERIES["q_dedup_components"].spark(spark, SF_DIR)
-    edges = _minhash_band_edges(docs)
+    edges = minhash_band_edges(docs)
     lab_src = comp.select(
         F.col("doc_id").alias("src"), F.col("component").alias("c_src")
     )
@@ -77,16 +85,11 @@ def test_component_labels_are_closed_over_edges(spark):
 
 
 def test_lsh_bucket_cap_drops_degenerate_buckets(spark):
-    """A bucket bigger than _BUCKET_CAP (e.g. thousands of identical
+    """A bucket bigger than BUCKET_CAP (e.g. thousands of identical
     boilerplate docs sharing every minhash) must produce NO edges —
     that's the m² skew guard — while normal near-dup pairs still do."""
-    from direct_kafka_stream_spark.operators.llm import (
-        _BUCKET_CAP,
-        _minhash_band_edges,
-    )
-
     boiler = [(i, "the exact same boilerplate text repeated verbatim here")
-              for i in range(_BUCKET_CAP + 10)]
+              for i in range(BUCKET_CAP + 10)]
     # near-dup pair at shingle-Jaccard 38/39 ≈ 0.97 — above the banded
     # S-curve's knee, so it must survive as a candidate
     text = (
@@ -97,7 +100,7 @@ def test_lsh_bucket_cap_drops_degenerate_buckets(spark):
     )
     near = [(1000, text), (1001, text + " extra")]
     docs = spark.createDataFrame(boiler + near, "doc_id long, text string")
-    edges = _minhash_band_edges(docs).collect()
+    edges = minhash_band_edges(docs).collect()
     endpoints = {r.src for r in edges} | {r.dst for r in edges}
     assert endpoints == {1000, 1001}, (
         "degenerate bucket must be dropped, near-dup pair kept"
@@ -138,36 +141,41 @@ def test_ivf_persisted_index_prunes_to_one_list(spark, tmp_path):
     layout partitioned by centroid id. A query probes exactly ONE
     partition directory (partition pruning on cid) — the amortized
     form where the index build cost is paid once, and each query scans
-    corpus/k vectors instead of the corpus."""
+    corpus/k vectors instead of the corpus. Vectors go to the centroid
+    of highest cosine, or of least squared distance."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
-    from direct_kafka_stream_spark.operators.llm import _cosine
 
     e = load_table(spark, SF_DIR, "embeddings")
     cents = e.filter(F.col("vec_id").isin(1, 2, 3, 4)).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
-    sims = e.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "embedding", "cid",
-        F.round(_cosine(F.col("embedding"), F.col("cv")), 6).alias("csim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), "cid")
-    index = (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("cid", "vec_id", "embedding")
-    )
-    out = str(tmp_path / "ivf_index")
-    index.write.partitionBy("cid").mode("overwrite").parquet(out)
+    emb, cv = F.col("embedding"), F.col("cv")
+    for rule, closeness in [
+        ("cosine", cosine(emb, cv)),
+        ("sq_dist", -sq_dist(emb, cv)),
+    ]:
+        sims = e.crossJoin(F.broadcast(cents)).select(
+            "vec_id", "embedding", "cid", F.round(closeness, 6).alias("csim"),
+        )
+        w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), "cid")
+        index = (
+            sims.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("cid", "vec_id", "embedding")
+        )
+        out = str(tmp_path / f"ivf_index_{rule}")
+        index.write.partitionBy("cid").mode("overwrite").parquet(out)
 
-    lists = spark.read.parquet(out)
-    qcid = [r.cid for r in lists.filter(F.col("vec_id") == 0).collect()][0]
-    probe = lists.filter(F.col("cid") == qcid)
-    probe.collect()
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cid" in plan.split("PartitionFilters", 1)[1][:120]
-    # the probe scans one inverted list, not the corpus
-    assert 0 < probe.count() < lists.count()
+        lists = spark.read.parquet(out)
+        qcid = [r.cid for r in lists.filter(F.col("vec_id") == 0).collect()][0]
+        probe = lists.filter(F.col("cid") == qcid)
+        probe.collect()
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert "PartitionFilters" in plan, rule
+        assert "cid" in plan.split("PartitionFilters", 1)[1][:120], rule
+        # the probe scans one inverted list, not the corpus
+        assert 0 < probe.count() < lists.count(), rule
 
 
 def test_minhash_banding_s_curve(spark):
@@ -289,8 +297,6 @@ def test_srp_multiprobe_recovers_planted_near_duplicates(spark):
     the recall property must be shown on actual near-duplicates."""
     import numpy as np
 
-    from direct_kafka_stream_spark.operators.llm import _SRP_MASKS, _srp_bucket_col
-
     rng = np.random.default_rng(7)
     dim, n_planted, n_random = 64, 12, 300
     q = rng.standard_normal(dim)
@@ -306,9 +312,9 @@ def test_srp_multiprobe_recovers_planted_near_duplicates(spark):
         v = rng.standard_normal(dim)
         rows.append((100 + k, [float(x) for x in v / np.linalg.norm(v)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    b = df.select("vec_id", _srp_bucket_col().alias("bucket"))
+    b = df.select("vec_id", srp_bucket_col().alias("bucket"))
     got = {r.vec_id: r.bucket for r in b.collect()}
-    probed = {got[0] ^ m for m in _SRP_MASKS}
+    probed = {got[0] ^ m for m in SRP_MASKS}
     planted_hits = sum(1 for k in range(n_planted) if got[1 + k] in probed)
     random_hits = sum(1 for k in range(n_random) if got[100 + k] in probed)
     assert planted_hits >= int(0.7 * n_planted), planted_hits

@@ -1,5 +1,6 @@
 """Session sizing: the ``SPARK_GRAFT_CPUS`` parser, the JVM option
-builder, and a JVM built with fewer slots than the host has."""
+builder, the default driver heap, and a JVM built with fewer slots than
+the host has."""
 
 from __future__ import annotations
 
@@ -12,7 +13,12 @@ import textwrap
 
 import pytest
 
-from direct_kafka_stream_spark.session import _usable_cpus, default_parallelism, java_options
+from direct_kafka_stream_spark.session import (
+    _usable_cpus,
+    default_parallelism,
+    driver_memory,
+    java_options,
+)
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 TZ = "-Duser.timezone=UTC"
@@ -30,6 +36,20 @@ def test_bad_cpus_env_names_the_variable(monkeypatch, raw):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         default_parallelism()
+
+
+@pytest.mark.parametrize(
+    "gib, heap",
+    [
+        (16, "4096m"),  # a quarter of physical memory
+        (15.7, "4019m"),
+        (2, "512m"),
+        (128, "32768m"),  # capped at 32g
+        (512, "32768m"),
+    ],
+)
+def test_driver_heap_defaults_to_a_quarter_of_memory(gib, heap):
+    assert driver_memory(int(gib * 2**30)) == heap
 
 
 @pytest.mark.parametrize(
