@@ -98,22 +98,22 @@ def _effective_green(
 
 
 def _ordered_names() -> list[str]:
-    """Registry order, rotated LEAST-RECENTLY-VERIFIED first: the
-    correctness driver checks a bounded prefix of this dict per round.
-    Names with no green row from any prior round — or whose ORACLE TEXT
-    changed since their newest green row (ORACLE_LEDGER.json) — sort to
-    the very front (round 0); after that, the names whose newest green
-    row is oldest — so once the ledger is closed, the driver
-    re-validates the whole registry on a rolling ~8-round cycle instead
-    of re-checking the same registry-order prefix forever."""
+    """Query names, LEAST-RECENTLY-VERIFIED first: the correctness
+    driver checks a bounded prefix of this order per round. Names with
+    no green row from any prior round — or whose ORACLE TEXT changed
+    since their newest green row (ORACLE_LEDGER.json) — sort to the very
+    front (round 0); after that, the names whose newest green row is
+    oldest — so once the ledger is closed, the driver re-validates the
+    whole registry on a rolling ~8-round cycle instead of re-checking
+    the same prefix forever. Ties break by name, so neither module
+    layout nor import order moves the rotation."""
     newest = _newest_green_round()
     effective = _effective_green(
         newest,
         _load_oracle_ledger(),
         {n: _oracle_hash(q.oracle) for n, q in QUERIES.items()},
     )
-    names = list(QUERIES)
-    return sorted(names, key=lambda n: (effective.get(n, 0), names.index(n)))
+    return sorted(QUERIES, key=lambda n: (effective.get(n, 0), n))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

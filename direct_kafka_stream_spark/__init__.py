@@ -34,8 +34,6 @@ from direct_kafka_stream_spark.functions import udf  # noqa: F401
 from direct_kafka_stream_spark.functions import extra  # noqa: F401
 from direct_kafka_stream_spark.operators import advanced  # noqa: F401
 from direct_kafka_stream_spark.operators import tpch  # noqa: F401
-from direct_kafka_stream_spark.functions import sweep4  # noqa: F401
-from direct_kafka_stream_spark.operators import llm2  # noqa: F401
 from direct_kafka_stream_spark.operators import sqlfeatures  # noqa: F401
 from direct_kafka_stream_spark.operators import cdc  # noqa: F401
 from direct_kafka_stream_spark.operators import profiling  # noqa: F401
@@ -45,44 +43,13 @@ from direct_kafka_stream_spark.operators import corpus  # noqa: F401
 from direct_kafka_stream_spark.operators import features  # noqa: F401
 from direct_kafka_stream_spark.operators import scale_variants  # noqa: F401
 from direct_kafka_stream_spark.operators import retrieval  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics4  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics5  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics6  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics7  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics8  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics9  # noqa: F401
-from direct_kafka_stream_spark.operators import llm3  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics10  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics11  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics12  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics13  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics14  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics15  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics16  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics17  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics18  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics19  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics20  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics21  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics22  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics23  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics24  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics25  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics26  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics27  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics28  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics29  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics30  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics31  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics32  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics33  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics34  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics35  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics36  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics37  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics38  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics39  # noqa: F401
-from direct_kafka_stream_spark.operators import analytics40  # noqa: F401
+from direct_kafka_stream_spark.operators import graph  # noqa: F401
+from direct_kafka_stream_spark.operators import hypothesis  # noqa: F401
+from direct_kafka_stream_spark.operators import experiments  # noqa: F401
+from direct_kafka_stream_spark.operators import models  # noqa: F401
+from direct_kafka_stream_spark.operators import timeseries  # noqa: F401
+from direct_kafka_stream_spark.operators import engine  # noqa: F401
+from direct_kafka_stream_spark.operators import stream_exhibits  # noqa: F401
 
 __all__ = [
     "get_session",

@@ -87,10 +87,17 @@ def bounded_window_key(col) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(1))
 
 
+def md5_int(col, hex_digits: int) -> Column:
+    """The first ``hex_digits`` hex digits of md5(col) as a BIGINT — the
+    portable hash behind every md5 bucket, shard, arm and uniform draw
+    (DuckDB: ``CAST(concat('0x', substr(md5(x), 1, n)) AS BIGINT)``).
+    ``col`` must already be a string column; 15 digits (60 bits) is the
+    most a signed BIGINT holds."""
+    return F.conv(F.substring(F.md5(col), 1, hex_digits), 16, 10).cast("long")
+
+
 # 2^60 as double: the md5 60-bit prefix maps any key to u ∈ [0,1) with
-# identical bits on every engine (same scheme as q_mix_sample /
-# analytics10's split draws — hoisted here so new modules stop
-# re-deriving it inline).
+# identical bits on every engine.
 U_DENOM = 1152921504606846976.0
 
 
@@ -101,12 +108,7 @@ def u01(col) -> Column:
     partition dependence — the same key always draws the same u, which
     is what makes sampling/splitting/noise reproducible at 100 TB."""
     c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .cast("double")
-        / U_DENOM
-    )
+    return md5_int(c.cast("string"), 15).cast("double") / U_DENOM
 
 
 def u01_sql(expr: str) -> str:

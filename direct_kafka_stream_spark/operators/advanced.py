@@ -1,7 +1,7 @@
-"""Advanced operator sweep: as-of join, hypertable-style rollup,
-correlated subqueries (TPC-H Q17/Q22 shapes), Q18, unpivot,
-explode_outer, grouping ids, LOCF gap-fill windows, and a non-file
-source.
+"""Advanced operator sweep: as-of, point-in-time and bitemporal joins,
+hypertable-style rollup, correlated subqueries (TPC-H Q17/Q22 shapes),
+Q18, unpivot, explode_outer, grouping ids, LOCF gap-fill windows, and
+a non-file source.
 
 Reference anchor: all user processing in the reference attaches at the
 ``map``/``foreachRDD`` hook (KafkaDirectStream.scala:43-51); these are
@@ -393,4 +393,191 @@ def q_range_source(spark: SparkSession, d: str):
         "id",
         (F.col("id") * F.col("id")).alias("sq"),
         (F.col("id") % 2 == 0).alias("is_even"),
+    )
+
+
+@query(
+    "q_join_pit",
+    oracle=f"""
+    WITH dim AS (
+        SELECT o_custkey AS custkey,
+               CAST(o_orderdate AS DATE) AS valid_from,
+               LEAD(CAST(o_orderdate AS DATE))
+                   OVER (PARTITION BY o_custkey ORDER BY o_orderdate,
+                         o_orderkey) AS valid_to,
+               ROW_NUMBER() OVER (PARTITION BY o_custkey
+                                  ORDER BY o_orderdate, o_orderkey) AS tier
+        FROM orders
+    ),
+    fact AS (
+        SELECT o.o_custkey AS custkey,
+               CAST(l.l_shipdate AS DATE) AS ship_day,
+               l.l_extendedprice AS price
+        FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+    )
+    SELECT d.tier AS tier,
+           CAST(COUNT(*) AS BIGINT) AS n_lineitems,
+           round({dsum_sql('f.price')}, 2) AS revenue
+    FROM fact f
+    JOIN dim d ON d.custkey = f.custkey
+              AND f.ship_day >= d.valid_from
+              AND (d.valid_to IS NULL OR f.ship_day < d.valid_to)
+    GROUP BY d.tier
+    ORDER BY tier
+    """,
+    tags=("temporal", "join"),
+)
+def q_join_pit(spark: SparkSession, d: str):
+    """Point-in-time (SCD-2) join: each lineitem is matched to the
+    customer-order-count tier that was VALID ON ITS SHIP DATE —
+    "which version of the dimension was true when the fact happened",
+    the temporal join every slowly-changing-dimension warehouse needs
+    (and the bitemporal cousin of q_join_asof's nearest-key lookup).
+
+    The oracle states the semantics as the interval join; the Spark
+    plan uses the scale-safe AS-OF COMPOSITION instead: dim-version
+    starts and facts union into one stream, ONE customer-keyed window
+    ordered by (time, dim-first) LOCFs the tier onto every fact —
+    single shuffle, no range join, no nested loop (the
+    q_join_asof pattern, extended with validity expiry handled by
+    version start = predecessor end). Facts before their customer's
+    first version drop (inner semantics) in both forms."""
+    o = load_table(spark, d, "orders")
+    li = load_table(spark, d, "lineitem")
+    w_ver = Window.partitionBy("o_custkey").orderBy(
+        "o_orderdate", "o_orderkey"
+    )
+    dim = o.select(
+        F.col("o_custkey").alias("custkey"),
+        F.col("o_orderdate").cast("date").alias("t"),
+        F.row_number().over(w_ver).alias("tier"),
+        F.lit(1).alias("is_dim"),
+        F.lit(None).cast("double").alias("price"),
+    )
+    fact = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(
+            F.col("o_custkey").alias("custkey"),
+            F.col("l_shipdate").cast("date").alias("t"),
+            F.lit(None).cast("int").alias("tier"),
+            F.lit(0).alias("is_dim"),
+            F.col("l_extendedprice").alias("price"),
+        )
+    )
+    # dim rows sort before facts at the same instant (inclusive start)
+    w_locf = (
+        Window.partitionBy("custkey")
+        .orderBy("t", F.col("is_dim").desc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    tagged = dim.unionByName(fact).withColumn(
+        "cur_tier", F.last("tier", ignorenulls=True).over(w_locf)
+    )
+    return (
+        tagged.filter((F.col("is_dim") == 0) & F.col("cur_tier").isNotNull())
+        .groupBy(F.col("cur_tier").alias("tier"))
+        .agg(
+            F.count(F.lit(1)).alias("n_lineitems"),
+            F.round(dsum("price"), 2).alias("revenue"),
+        )
+        .orderBy("tier")
+    )
+
+
+# Bitemporal ledger: corrections for orderkey % 10 = 0 become known 30
+# days after the order date; the query asks for state as-of valid time
+# V as known at transaction time T.
+_BT_VALID_AS_OF = "1996-06-30"
+_BT_TX_AS_OF = "1996-07-15"
+
+
+@query(
+    "q_bitemporal",
+    oracle=f"""
+    WITH versions AS (
+        SELECT o_orderkey AS k, o_orderstatus AS status,
+               o_orderdate AS valid_from, o_orderdate AS tx_from,
+               o_totalprice AS price
+        FROM orders
+        UNION ALL
+        SELECT o_orderkey, o_orderstatus,
+               o_orderdate, o_orderdate + INTERVAL 30 DAY,
+               o_totalprice + 5.0
+        FROM orders WHERE o_orderkey % 10 = 0
+    ),
+    known AS (
+        SELECT * FROM versions
+        WHERE valid_from <= TIMESTAMP '{_BT_VALID_AS_OF}'
+          AND tx_from <= TIMESTAMP '{_BT_TX_AS_OF}'
+    ),
+    latest AS (
+        SELECT k, status, price FROM (
+            SELECT k, status, price,
+                   ROW_NUMBER() OVER (PARTITION BY k
+                                      ORDER BY tx_from DESC) AS rn
+            FROM known
+        ) WHERE rn = 1
+    )
+    SELECT status, COUNT(*) AS n_orders,
+           {dsum_sql('price')} AS total_price
+    FROM latest GROUP BY status
+    """,
+    tags=("temporal", "cdc"),
+)
+def q_bitemporal(spark: SparkSession, d: str):
+    """Bitemporal as-of query: orders form a two-dimensional ledger
+    (valid time = order date; transaction time = when each version
+    became known, with price corrections recorded 30 days later for
+    every tenth order), and the query reconstructs the state as-of a
+    VALID date as it was KNOWN at a TRANSACTION date — corrections
+    recorded after T are invisible even though their valid time
+    qualifies. This composes q_scd2 (one time axis) and q_join_pit
+    (as-of lookup) into the full bitemporal semantics auditing and
+    backtesting require: 'what did we believe on July 15 about June
+    30?'.
+
+    Scale shape: both temporal predicates push into the scan
+    (partition pruning on date-partitioned ledgers); the
+    latest-version-per-key window partitions on the ledger key
+    (bounded by versions per key — here ≤2, generally small); the
+    rollup is an exact-decimal keyed aggregate."""
+    o = load_table(spark, d, "orders")
+    v1 = o.select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderstatus").alias("status"),
+        F.col("o_orderdate").alias("valid_from"),
+        F.col("o_orderdate").alias("tx_from"),
+        F.col("o_totalprice").alias("price"),
+    )
+    v2 = (
+        o.filter(F.col("o_orderkey") % 10 == 0)
+        .select(
+            F.col("o_orderkey").alias("k"),
+            F.col("o_orderstatus").alias("status"),
+            F.col("o_orderdate").alias("valid_from"),
+            # o_orderdate is a timestamp: interval addition (NOT
+            # date_add, which truncates to date) matches the oracle
+            (F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")).alias(
+                "tx_from"
+            ),
+            (F.col("o_totalprice") + 5.0).alias("price"),
+        )
+    )
+    known = (
+        v1.unionByName(v2)
+        .filter(F.col("valid_from") <= _BT_VALID_AS_OF)
+        .filter(F.col("tx_from") <= _BT_TX_AS_OF)
+    )
+    latest = (
+        known.withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("k").orderBy(F.col("tx_from").desc())
+            ),
+        )
+        .filter(F.col("rn") == 1)
+    )
+    return latest.groupBy("status").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        dsum("price").alias("total_price"),
     )

@@ -1,5 +1,5 @@
-"""Change-data-capture patterns: MERGE-style upsert and SCD-2
-dimension history — the batch form of what the reference's Kafka
+"""Change-data-capture patterns: MERGE-style upsert, SCD-2 dimension
+history and snapshot diffs — the batch form of what the reference's Kafka
 stream feeds in production (its AUTH_STREAM payloads were row-change
 JSON, reference README.md:167). Extension surface per SURVEY.md §2.B;
 anchor: the processing hook at KafkaDirectStream.scala:43-51.
@@ -181,4 +181,84 @@ def rfm_report(o):
             F.col("f").cast("string"),
             F.col("m").cast("string"),
         ),
+    )
+
+
+@query(
+    "q_snapshot_diff",
+    oracle=f"""
+    WITH old AS (
+        SELECT o_orderkey AS k,
+               CASE WHEN o_orderkey % 13 = 0 THEN o_totalprice + 10.0
+                    ELSE o_totalprice END AS price
+        FROM orders WHERE o_orderkey % 97 <> 3
+    ),
+    new AS (
+        SELECT o_orderkey AS k, o_totalprice AS price
+        FROM orders WHERE o_orderkey % 89 <> 7
+    ),
+    diff AS (
+        SELECT CASE
+                 WHEN old.k IS NULL THEN 'inserted'
+                 WHEN new.k IS NULL THEN 'deleted'
+                 WHEN new.price <> old.price THEN 'updated'
+                 ELSE 'unchanged'
+               END AS status,
+               COALESCE(new.price, 0) - COALESCE(old.price, 0) AS delta
+        FROM old FULL OUTER JOIN new ON old.k = new.k
+    )
+    SELECT status,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           round({dsum_sql('delta')}, 2) AS revenue_delta
+    FROM diff
+    GROUP BY status
+    ORDER BY status
+    """,
+    tags=("cdc", "diff"),
+)
+def q_snapshot_diff(spark: SparkSession, d: str):
+    """CDC snapshot diff census: given two snapshots of the orders
+    table (old = a deterministic subset with some prices perturbed,
+    new = a different subset), a key-wise full-outer join classifies
+    every row as inserted / deleted / updated / unchanged and rolls
+    up the count and net revenue delta per class — the table-diff
+    audit every incremental-load pipeline runs.
+
+    The full-outer join shuffles both snapshots once on the primary
+    key (co-partitioned, no broadcast needed or wanted at 100 TB);
+    the census is a 4-row aggregate with exact-decimal sums. The
+    snapshot predicates are modulus-deterministic so both engines
+    build identical inputs."""
+    o = load_table(spark, d, "orders")
+    old = o.filter(F.col("o_orderkey") % 97 != 3).select(
+        F.col("o_orderkey").alias("k"),
+        F.when(
+            F.col("o_orderkey") % 13 == 0, F.col("o_totalprice") + 10.0
+        )
+        .otherwise(F.col("o_totalprice"))
+        .alias("price"),
+    )
+    new = o.filter(F.col("o_orderkey") % 89 != 7).select(
+        F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("price")
+    )
+    joined = old.alias("old").join(
+        new.alias("new"), F.col("old.k") == F.col("new.k"), "full_outer"
+    )
+    status = (
+        F.when(F.col("old.k").isNull(), "inserted")
+        .when(F.col("new.k").isNull(), "deleted")
+        .when(F.col("new.price") != F.col("old.price"), "updated")
+        .otherwise("unchanged")
+    )
+    delta = F.coalesce(F.col("new.price"), F.lit(0.0)) - F.coalesce(
+        F.col("old.price"), F.lit(0.0)
+    )
+    return (
+        joined.select(status.alias("status"), delta.alias("delta"))
+        .groupBy("status")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(dsum("delta"), 2).alias("revenue_delta"),
+        )
+        .orderBy("status")
     )

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from direct_kafka_stream_spark.exprs import bounded_window_key, dsum, dsum_sql
+from direct_kafka_stream_spark.exprs import bounded_window_key, dsum, dsum_sql, md5_int
 from direct_kafka_stream_spark.io import load_table
 from direct_kafka_stream_spark.registry import query
 
@@ -538,12 +538,7 @@ def q_ab_test(spark: SparkSession, d: str):
 def ab_test_report(e):
     """q_ab_test's transform on an events frame — shared by the batch
     query and its streaming foreachBatch twin."""
-    arm = (
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 2), 16, 10
-        ).cast("long")
-        % 2
-    )
+    arm = md5_int(F.col("user_id").cast("string"), 2) % 2
     arms = (
         e.select(arm.alias("arm"), "value")
         .groupBy("arm")

@@ -24,6 +24,7 @@ from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.exprs import (
+    bounded_window_key,
     davg,
     davg_sql,
     dsum,
@@ -879,3 +880,178 @@ def q_null_semantics(spark: SparkSession, d: str):
         .cast("int")
         .alias("null_branch"),
     )
+
+
+@query(
+    "q_skyline",
+    oracle="""
+    WITH per_size AS (
+        SELECT p_size, MIN(p_retailprice) AS minp
+        FROM part GROUP BY p_size
+    ),
+    pref AS (
+        SELECT p_size, minp,
+               MIN(minp) OVER (ORDER BY p_size DESC
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                               AND 1 PRECEDING) AS better_minp
+        FROM per_size
+    )
+    SELECT p.p_partkey, p.p_size, p.p_retailprice
+    FROM part p
+    JOIN pref ON p.p_size = pref.p_size
+    WHERE p.p_retailprice = pref.minp
+      AND (pref.better_minp IS NULL OR p.p_retailprice < pref.better_minp)
+    """,
+    tags=("classic", "skyline"),
+)
+def q_skyline(spark: SparkSession, d: str):
+    """Skyline (Pareto frontier) over parts: maximize p_size, minimize
+    p_retailprice. A part is dominated if some other part has size >=
+    and price <= with at least one strict; the skyline keeps the
+    non-dominated set.
+
+    The naive formulation is an O(n^2) dominance anti-join. The
+    scale-safe rewrite used here exploits the bounded objective
+    domain: aggregate to per-size min price (distinct-size-bounded,
+    50 rows here, broadcastable at any corpus scale), take the
+    running strict-prefix min over sizes sorted descending (distinct
+    sizes -> a ROWS 1 PRECEDING frame is exactly "all strictly larger
+    sizes"), then broadcast that bounded frontier table back onto the
+    one fact scan. A part survives iff it is the cheapest at its size
+    AND strictly cheaper than every larger size's cheapest. One
+    fact shuffle (the per-size aggregate), one bounded window, one
+    broadcast join."""
+    part = load_table(spark, d, "part")
+    per_size = part.groupBy("p_size").agg(F.min("p_retailprice").alias("minp"))
+    w = Window.partitionBy(bounded_window_key("p_size")).orderBy(
+        F.col("p_size").desc()
+    ).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    pref = per_size.select(
+        "p_size", "minp", F.min("minp").over(w).alias("better_minp")
+    )
+    return (
+        part.join(F.broadcast(pref), "p_size")
+        .filter(
+            (F.col("p_retailprice") == F.col("minp"))
+            & (
+                F.col("better_minp").isNull()
+                | (F.col("p_retailprice") < F.col("better_minp"))
+            )
+        )
+        .select("p_partkey", "p_size", "p_retailprice")
+    )
+
+
+_PIVOT_TYPES = ["click", "error", "purchase", "signup", "view"]
+
+
+def _pivot_multi_oracle() -> str:
+    cols = ", ".join(
+        f"""CAST(COUNT(*) FILTER (WHERE event_type = '{t}') AS BIGINT)
+                AS {t}_n,
+            round({dsum_sql(f"CASE WHEN event_type = '{t}' THEN value END")}, 4)
+                AS {t}_sum"""
+        for t in _PIVOT_TYPES
+    )
+    return f"""
+    SELECT CAST(user_id % 10 AS BIGINT) AS user_bucket, {cols}
+    FROM events
+    GROUP BY user_id % 10
+    ORDER BY user_bucket
+    """
+
+
+@query(
+    "q_pivot_multi_agg",
+    oracle=_pivot_multi_oracle(),
+    tags=("relational", "pivot"),
+)
+def q_pivot_multi_agg(spark: SparkSession, d: str):
+    """Pivot with MULTIPLE aggregates per pivot value: event counts
+    AND exact-decimal value sums per event type, spread into columns
+    per user bucket — the wide-format report shape (one row per
+    entity, metric x category columns) BI exports want.
+
+    Uses the explicit-values pivot (the 5 event types are declared,
+    so the plan is a single pass with 10 conditional aggregates — no
+    distinct-values pre-query, which at 100 TB would be an extra
+    fact scan). Output is 10 rows x 11 columns."""
+    e = load_table(spark, d, "events")
+    piv = (
+        e.groupBy((F.col("user_id") % 10).cast("bigint").alias("user_bucket"))
+        .pivot("event_type", _PIVOT_TYPES)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(dsum("value"), 4).alias("sum"),
+        )
+    )
+    # pivot names columns "<value>_<alias>". An empty pivot cell is
+    # NULL from Spark's pivot but 0 from the oracle's COUNT FILTER —
+    # coalesce counts (sums stay NULL-on-empty on both engines).
+    cols = [F.col("user_bucket")]
+    for t in _PIVOT_TYPES:
+        cols.append(
+            F.coalesce(F.col(f"{t}_n"), F.lit(0))
+            .cast("bigint")
+            .alias(f"{t}_n")
+        )
+        cols.append(F.col(f"{t}_sum").alias(f"{t}_sum"))
+    return piv.select(*cols).orderBy("user_bucket")
+
+
+@query(
+    "q_win_nav",
+    oracle="""
+    SELECT user_id, event_id, event_type,
+           first_value(event_type) OVER w AS first_type,
+           nth_value(value, 2) OVER w AS second_val,
+           last_value(CASE WHEN event_type = 'purchase' THEN value END
+                      IGNORE NULLS) OVER w AS last_purchase_val,
+           COALESCE(lead(event_type) OVER (PARTITION BY user_id
+                                           ORDER BY ts, event_id), 'END')
+               AS next_type
+    FROM events
+    WHERE user_id % 50 = 0
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+    ORDER BY user_id, event_id
+    """,
+    tags=("relational", "window"),
+)
+def q_win_nav(spark: SparkSession, d: str):
+    """Navigation window-function surface: first_value, nth_value,
+    IGNORE-NULLS last_value (running "most recent purchase amount" —
+    the LOCF-of-a-subset pattern), and defaulted LEAD, all over one
+    fully-tie-broken user window — the per-entity timeline enrichment
+    every sessionized export runs.
+
+    One user-keyed exchange serves all four functions (they share the
+    window spec); the deterministic user sample (user_id % 50) bounds
+    the output without changing the plan shape. The IGNORE NULLS
+    variant is the portable trick for 'carry forward the last event
+    of type X' without a second join."""
+    e = load_table(spark, d, "events").filter(F.col("user_id") % 50 == 0)
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    w_lead = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return e.select(
+        "user_id",
+        "event_id",
+        "event_type",
+        F.first("event_type").over(w).alias("first_type"),
+        F.nth_value("value", 2).over(w).alias("second_val"),
+        F.last(
+            F.when(F.col("event_type") == "purchase", F.col("value")),
+            ignorenulls=True,
+        )
+        .over(w)
+        .alias("last_purchase_val"),
+        F.coalesce(F.lead("event_type").over(w_lead), F.lit("END")).alias(
+            "next_type"
+        ),
+    ).orderBy("user_id", "event_id")

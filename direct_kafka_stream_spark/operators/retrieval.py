@@ -1,5 +1,5 @@
-"""Round-4 retrieval and corpus-mixing operators: BM25 lexical
-retrieval (the sparse complement of the dense q_rag_retrieve path),
+"""Retrieval and corpus-mixing operators: dense RAG retrieval, BM25
+lexical retrieval and their reciprocal-rank fusion, grid-cell kNN,
 boilerplate n-gram detection (the CCNet-style repeated-shingle
 hygiene pass), temperature-scaled domain mixture weights (the
 multinomial-sampling schedule LLM pretraining mixes corpora with),
@@ -14,8 +14,9 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from direct_kafka_stream_spark.exprs import bounded_window_key
 from direct_kafka_stream_spark.io import load_table
-from direct_kafka_stream_spark.operators import text
+from direct_kafka_stream_spark.operators import similarity, text
 from direct_kafka_stream_spark.registry import query
 
 # BM25 constants (standard Robertson defaults) and a fixed lexical
@@ -27,7 +28,7 @@ _BM25_TOPK = 10
 
 # Shared CTE chain producing the per-document BM25 score for the fixed
 # lexical query — used by the q_rag_bm25 oracle and by q_rrf_fusion's
-# (analytics18.py) fused-ranking oracle so the two can never drift.
+# fused-ranking oracle (below) so the two can never drift.
 BM25_SCORED_SQL = f"""
     t AS (
         SELECT doc_id,
@@ -503,5 +504,300 @@ def q_ngram_novelty(spark: SparkSession, d: str):
             F.count(F.lit(1)).alias("n_grams"),
             novel.cast("long").alias("n_novel"),
             F.round(novel / F.count(F.lit(1)), 6).alias("novelty_frac"),
+        )
+    )
+
+
+# Reciprocal-rank fusion: the standard k=60 damping constant and the
+# per-list candidate depth.
+_RRF_K = 60
+_RRF_N = 20
+
+_RRF_ORACLE = f"""
+    WITH {BM25_SCORED_SQL},
+    lex_top AS (
+        SELECT doc_id, round(score, 6) AS s
+        FROM scored ORDER BY s DESC, doc_id LIMIT {_RRF_N}
+    ),
+    lex AS (
+        SELECT doc_id,
+               ROW_NUMBER() OVER (ORDER BY s DESC, doc_id) AS r_lex
+        FROM lex_top
+    ),
+    ev AS (
+        SELECT vec_id,
+               CAST(unnest(embedding) AS DOUBLE) AS x,
+               generate_subscripts(embedding, 1) AS i
+        FROM embeddings
+    ),
+    qv AS (SELECT i, x AS qx FROM ev WHERE vec_id = 0),
+    dots AS (
+        SELECT e.vec_id, SUM(e.x * q.qx) AS dot, SUM(e.x * e.x) AS na
+        FROM ev e JOIN qv q USING (i) GROUP BY e.vec_id
+    ),
+    nq AS (SELECT SUM(qx * qx) AS nq FROM qv),
+    sem_top AS (
+        SELECT d.vec_id AS doc_id,
+               round(d.dot / (sqrt(d.na) * sqrt(nq.nq)), 6) AS sim
+        FROM dots d, nq WHERE d.vec_id != 0
+        ORDER BY sim DESC, doc_id LIMIT {_RRF_N}
+    ),
+    sem AS (
+        SELECT doc_id,
+               ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id) AS r_sem
+        FROM sem_top
+    )
+    SELECT COALESCE(lex.doc_id, sem.doc_id) AS doc_id, r_lex, r_sem,
+           round(COALESCE(CAST(1 AS DOUBLE) / ({_RRF_K} + r_lex), 0)
+                 + COALESCE(CAST(1 AS DOUBLE) / ({_RRF_K} + r_sem), 0),
+                 6) AS rrf
+    FROM lex FULL OUTER JOIN sem ON lex.doc_id = sem.doc_id
+"""
+
+
+@query(
+    "q_rrf_fusion",
+    oracle=_RRF_ORACLE,
+    tags=("retrieval", "llm", "composite"),
+)
+def q_rrf_fusion(spark: SparkSession, d: str):
+    """Reciprocal-rank fusion (RRF) of the lexical BM25 top-20 and the
+    dense cosine top-20 for the fixed query: score(d) = Σ_lists
+    1/(k + rank_list(d)), the standard hybrid-retrieval merge. Shares
+    q_rag_bm25's scoring helper (``retrieval.bm25_scored``) and
+    q_rag_retrieve's cosine shape, so the fused ranking is consistent
+    with both single-mode paths.
+
+    Scale shape: each list is cut to its top-N FIRST via
+    TakeOrderedAndProject (per-partition heaps), so the rank-assigning
+    global window runs over ≤N rows — bounded by construction, never
+    corpus-sized. The fusion join is a ≤2N-row full outer join.
+    Ranking uses the ALIGNMENT.md rule: ROUNDED score desc with id
+    tiebreak, identical on both engines."""
+    lex_top = (
+        bm25_scored(spark, d)
+        .select("doc_id", F.round("score", 6).alias("s"))
+        .orderBy(F.col("s").desc(), "doc_id")
+        .limit(_RRF_N)
+    )
+    lex = lex_top.select(
+        "doc_id",
+        F.row_number()
+        .over(
+            Window.partitionBy(bounded_window_key("doc_id")).orderBy(
+                F.col("s").desc(), "doc_id"
+            )
+        )
+        .cast("long")
+        .alias("r_lex"),
+    )
+
+    e = load_table(spark, d, "embeddings")
+    qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+    sem_top = (
+        e.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(qv))
+        .select(
+            F.col("vec_id").alias("doc_id"),
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+        )
+        .orderBy(F.col("sim").desc(), "doc_id")
+        .limit(_RRF_N)
+    )
+    sem = sem_top.select(
+        "doc_id",
+        F.row_number()
+        .over(
+            Window.partitionBy(bounded_window_key("doc_id")).orderBy(
+                F.col("sim").desc(), "doc_id"
+            )
+        )
+        .cast("long")
+        .alias("r_sem"),
+    )
+
+    one = F.lit(1.0)
+    fused = lex.join(sem, "doc_id", "full")
+    return fused.select(
+        "doc_id",
+        "r_lex",
+        "r_sem",
+        F.round(
+            F.coalesce(one / (_RRF_K + F.col("r_lex")), F.lit(0.0))
+            + F.coalesce(one / (_RRF_K + F.col("r_sem")), F.lit(0.0)),
+            6,
+        ).alias("rrf"),
+    )
+
+
+@query(
+    "q_rag_retrieve",
+    oracle="""
+    WITH ev AS (
+        SELECT vec_id,
+               CAST(unnest(embedding) AS DOUBLE) AS x,
+               generate_subscripts(embedding, 1) AS i
+        FROM embeddings
+    ),
+    qv AS (SELECT i, x AS qx FROM ev WHERE vec_id = 0),
+    dots AS (
+        SELECT e.vec_id, SUM(e.x * q.qx) AS dot, SUM(e.x * e.x) AS na
+        FROM ev e JOIN qv q USING (i) GROUP BY e.vec_id
+    ),
+    nq AS (SELECT SUM(qx * qx) AS nq FROM qv),
+    sims AS (
+        SELECT d.vec_id, round(d.dot / (sqrt(d.na) * sqrt(nq.nq)), 6) AS sim
+        FROM dots d, nq WHERE d.vec_id != 0
+    )
+    SELECT doc.doc_id, doc.lang, s.sim, left(doc.text, 40) AS snippet
+    FROM sims s
+    JOIN documents doc ON doc.doc_id = s.vec_id
+    WHERE doc.lang IN ('en', 'es', 'de') AND doc.n_chars BETWEEN 100 AND 100000
+    ORDER BY s.sim DESC, doc.doc_id
+    LIMIT 10
+    """,
+    tags=("llm", "similarity", "composite"),
+)
+def q_rag_retrieve(spark: SparkSession, d: str):
+    """End-to-end retrieval: corpus quality gate (language + length) ∘
+    cosine similarity vs a query vector ∘ top-k with text payload —
+    the full RAG retrieval path in one declarative plan. The quality
+    filter pushes into the documents scan BEFORE the embedding join
+    prunes the similarity work; top-k is a TakeOrderedAndProject
+    (per-partition heaps, no global sort). At scale the sims stage is
+    replaced by the IVF probe (q_sim_ivf) — the surrounding plan is
+    unchanged."""
+    docs = load_table(spark, d, "documents").filter(
+        F.col("lang").isin("en", "es", "de")
+        & F.col("n_chars").between(100, 100000)
+    )
+    e = load_table(spark, d, "embeddings")
+    qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+    return (
+        e.filter(F.col("vec_id") != 0)
+        .join(docs, e.vec_id == docs.doc_id)
+        .crossJoin(F.broadcast(qv))
+        .select(
+            "doc_id",
+            "lang",
+            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.left("text", F.lit(40)).alias("snippet"),
+        )
+        .orderBy(F.col("sim").desc(), "doc_id")
+        .limit(10)
+    )
+
+
+# Geo kNN: synthetic deterministic coordinates, 10-degree grid cells,
+# 3x3 neighborhood probe, top-5 per probe.
+_GEO_CELL_DEG = 10
+_GEO_TOPK = 5
+_GEO_PROBES = ((1, 37.77, -122.42), (2, 51.5, -0.13), (3, -33.87, 151.21))
+_GEO_R_KM = 6371.0
+
+
+def _geo_probes_sql() -> str:
+    rows = ", ".join(
+        f"({pid}, CAST({lat} AS DOUBLE), CAST({lon} AS DOUBLE))"
+        for pid, lat, lon in _GEO_PROBES
+    )
+    return f"(VALUES {rows}) AS probes(pid, plat, plon)"
+
+
+@query(
+    "q_geo_cell_knn",
+    oracle=f"""
+    WITH pts AS (
+        SELECT c_custkey,
+               (c_custkey * 7919 % 18000) / 100.0 - 90.0 AS lat,
+               (c_custkey * 104729 % 36000) / 100.0 - 180.0 AS lon
+        FROM customer
+    ),
+    cand AS (
+        SELECT probes.pid, probes.plat, probes.plon,
+               t.c_custkey, t.lat, t.lon
+        FROM pts t, {_geo_probes_sql()}
+        WHERE abs(CAST(floor(t.lat / {_GEO_CELL_DEG}) AS BIGINT)
+                  - CAST(floor(probes.plat / {_GEO_CELL_DEG}) AS BIGINT)) <= 1
+          AND abs(CAST(floor(t.lon / {_GEO_CELL_DEG}) AS BIGINT)
+                  - CAST(floor(probes.plon / {_GEO_CELL_DEG}) AS BIGINT)) <= 1
+    ),
+    dists AS (
+        SELECT pid, c_custkey,
+               round(2 * {_GEO_R_KM} * asin(sqrt(
+                   sin(radians(lat - plat) / 2) * sin(radians(lat - plat) / 2)
+                   + cos(radians(plat)) * cos(radians(lat))
+                     * sin(radians(lon - plon) / 2)
+                     * sin(radians(lon - plon) / 2))), 6) AS d_km
+        FROM cand
+    )
+    SELECT pid AS probe_id, c_custkey, d_km,
+           CAST(rn AS BIGINT) AS rank_n
+    FROM (
+        SELECT pid, c_custkey, d_km,
+               ROW_NUMBER() OVER (PARTITION BY pid
+                                  ORDER BY d_km, c_custkey) AS rn
+        FROM dists
+    ) WHERE rn <= {_GEO_TOPK}
+    """,
+    tags=("geo", "similarity"),
+)
+def q_geo_cell_knn(spark: SparkSession, d: str):
+    """Grid-cell k-nearest-neighbor search: deterministic synthetic
+    coordinates per customer, a 10° lat/lon grid, and per-probe
+    candidate generation restricted to the probe's 3×3 cell
+    neighborhood before the exact haversine top-5 — the geospatial
+    instance of the bucket-then-verify pattern (q_sim_ivf's probe, on
+    a grid instead of learned centroids). The neighborhood scan is
+    the documented semantic (candidates beyond ~10° are not
+    considered), matching production geo indexes that probe a fixed
+    ring of cells; distances compare ROUNDED with a key tiebreak.
+
+    Scale shape: probes are a literal broadcast; the cell filter is a
+    pair of integer predicates that push into the scan, pruning
+    parquet row groups when the table is laid out cell-ordered (the
+    q_zorder_key layout makes exactly this query fast); the per-probe
+    rank window is bounded by 9-cell occupancy. Antimeridian wrap is
+    out of scope and documented (probe cells sit away from ±180°)."""
+    pts = load_table(spark, d, "customer").select(
+        "c_custkey",
+        ((F.col("c_custkey") * 7919 % 18000) / 100.0 - 90.0).alias("lat"),
+        ((F.col("c_custkey") * 104729 % 36000) / 100.0 - 180.0).alias("lon"),
+    )
+    probes = spark.createDataFrame(
+        list(_GEO_PROBES), "pid int, plat double, plon double"
+    )
+    cell = lambda c: F.floor(c / _GEO_CELL_DEG)  # noqa: E731
+    cand = pts.crossJoin(F.broadcast(probes)).filter(
+        (F.abs(cell(F.col("lat")) - cell(F.col("plat"))) <= 1)
+        & (F.abs(cell(F.col("lon")) - cell(F.col("plon"))) <= 1)
+    )
+    sin_dlat = F.sin(F.radians(F.col("lat") - F.col("plat")) / 2)
+    sin_dlon = F.sin(F.radians(F.col("lon") - F.col("plon")) / 2)
+    hav = 2 * _GEO_R_KM * F.asin(
+        F.sqrt(
+            sin_dlat * sin_dlat
+            + F.cos(F.radians(F.col("plat")))
+            * F.cos(F.radians(F.col("lat")))
+            * sin_dlon
+            * sin_dlon
+        )
+    )
+    dists = cand.select(
+        "pid", "c_custkey", F.round(hav, 6).alias("d_km")
+    )
+    return (
+        dists.withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("pid").orderBy("d_km", "c_custkey")
+            ),
+        )
+        .filter(F.col("rn") <= _GEO_TOPK)
+        .select(
+            F.col("pid").alias("probe_id"),
+            "c_custkey",
+            "d_km",
+            F.col("rn").cast("long").alias("rank_n"),
         )
     )

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark.caching import track
+from direct_kafka_stream_spark.exprs import md5_int
 from direct_kafka_stream_spark.io import spread_scan
 from direct_kafka_stream_spark.operators import text
 
@@ -124,9 +125,7 @@ def minhash_sigs(sh: DataFrame) -> DataFrame:
     One md5 per shingle (first 15 hex digits → 60-bit int, identical to
     DuckDB's hex cast), then N_MINHASH affine permutations — so the
     whole signature is oracle-replayable."""
-    h0 = (
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long") % _MH_P
-    ).alias("h0")
+    h0 = (md5_int("shingle", 15) % _MH_P).alias("h0")
     return (
         sh.select("doc_id", h0)
         .groupBy("doc_id")

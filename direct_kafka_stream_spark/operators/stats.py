@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
-from direct_kafka_stream_spark.exprs import dsum, dsum_sql, safe_corr
+from direct_kafka_stream_spark.exprs import dsum, dsum_sql, md5_int, safe_corr
 from direct_kafka_stream_spark.io import load_table, spread_scan
 from direct_kafka_stream_spark.registry import query
 
@@ -283,14 +283,7 @@ def q_agg_kmv(spark: SparkSession, d: str):
     unions of corpora combine by keeping the k smallest of the merged
     sets."""
     o = load_table(spark, d, "orders")
-    h = (
-        o.select(
-            F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("hv")
-        )
-        .distinct()
-    )
+    h = o.select(md5_int(F.col("o_custkey").cast("string"), 15).alias("hv")).distinct()
     k = h.orderBy("hv").limit(_KMV_K)
     return k.agg(
         F.count(F.lit(1)).alias("k_used"),

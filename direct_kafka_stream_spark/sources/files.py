@@ -21,7 +21,7 @@ from direct_kafka_stream_spark.exprs import dsum
 from direct_kafka_stream_spark.session import tune_session
 
 # Stateful-stream state store configuration, shared by the streaming
-# exhibits (operators/analytics38.py) and the standalone probes
+# exhibits (operators/stream_exhibits.py) and the standalone probes
 # (scripts/stream_probe.py): the provider swap that trades a
 # constant per-batch checkpoint cost for bounded-heap feasibility at
 # 100 M+ distinct keys.

@@ -9,13 +9,13 @@ the split plan the scheduler parallelizes over, and each ``read``
 call runs ON AN EXECUTOR, yielding tuples that Spark assembles into
 Arrow batches. State passed to readers must be picklable.
 
-Driven by q_python_datasource (operators/analytics36.py), whose
+Driven by q_python_datasource (operators/engine.py), whose
 DuckDB range() oracle reproduces the deterministic generator exactly.
 
 Round 8 adds the STREAMING WRITER half (JsonlSinkDataSource /
 JsonlStreamWriter): a two-phase-commit JSONL sink — stage
 executor-side, publish atomically driver-side per batchId — driven by
-q_stream_pyds_write (operators/analytics38.py) and the protocol tests
+q_stream_pyds_write (operators/stream_exhibits.py) and the protocol tests
 in tests/test_stream_machinery.py.
 """
 

@@ -22,6 +22,7 @@ from direct_kafka_stream_spark.caching import track
 from direct_kafka_stream_spark.exprs import DEC, dsum
 from direct_kafka_stream_spark.io import spread_scan
 from direct_kafka_stream_spark.operators import similarity, text
+from direct_kafka_stream_spark.operators.llm import CURATION_LANGS, CURATION_TAU
 
 
 def _win_bounds(win: Column) -> list[Column]:
@@ -226,7 +227,7 @@ IVM_VIEW_SCHEMA = "status string, n bigint, rev decimal(38,10)"
 def ivm_apply_delta(view: DataFrame, cdc: DataFrame) -> DataFrame:
     """Apply one micro-batch of CDC rows to the per-status (n, rev)
     materialized aggregate — q_ivm_delta's retraction algebra
-    (operators/analytics17.py) lifted to the foreachBatch sink, the
+    (operators/engine.py) lifted to the foreachBatch sink, the
     batch/stream-unification flagship: the SAME delta-merge the batch
     operator proves exact against a from-scratch oracle keeps a live
     aggregate fresh per micro-batch without recomputing it
@@ -280,7 +281,7 @@ def ivm_join_apply_delta(
     d_s: DataFrame,
 ) -> DataFrame:
     """Apply one micro-batch of inserts to BOTH sides of a maintained
-    join view — q_ivm_join's bilinear rule (operators/analytics33.py)
+    join view — q_ivm_join's bilinear rule (operators/engine.py)
     lifted to the foreachBatch sink: with R_acc/S_acc the accumulated
     sides BEFORE this batch and ΔR/ΔS the batch's new rows,
 
@@ -348,7 +349,7 @@ def curation_apply_batch(
     warr_store: DataFrame,
 ):
     """One micro-batch of the incremental curation pipeline — the
-    streaming twin of q_curation_pipeline (operators/llm2.py): quality
+    streaming twin of q_curation_pipeline (operators/llm.py): quality
     gate → exact dedup against the accumulated sha256 ``seen`` store →
     MinHash-LSH candidates of the batch's new docs against the
     accumulated ``bands_store`` (old-vs-new AND new-vs-new; old-vs-old
@@ -376,11 +377,6 @@ def curation_apply_batch(
     deltas to their stores; drops stay IN the band/word stores (the
     batch analog also blocks on pairs whose smaller side was itself
     dropped)."""
-    # not at module level: operators/streaming_analog.py imports this
-    # module, and llm2 imported that early would register its queries
-    # out of registry order
-    from direct_kafka_stream_spark.operators.llm2 import CURATION_LANGS, CURATION_TAU
-
     gated = new_docs.filter(
         F.col("lang").isin(*CURATION_LANGS)
         & F.col("n_chars").between(50, 100000)

@@ -1,5 +1,6 @@
 """Independent brute-force proofs for the round-4 evaluation/integrity
-sweep (analytics21): the stitched Mann-Whitney rank math vs a naive
+sweep (operators/hypothesis.py, models.py, engine.py,
+timeseries.py): the stitched Mann-Whitney rank math vs a naive
 pooled-sort ranking, nDCG vs a direct per-order computation, the
 centroid-classifier metrics vs a plain Python replica, the table
 checksum vs hashlib, and the Bollinger bands vs a rolling-window loop.

@@ -1,10 +1,11 @@
 """Independent brute-force proofs for the round-4 graph/linkage/stats
-sweep (analytics22). The similarity-graph checks replicate the
-sign-LSH bucket and the Spark fold-order cosine in plain Python, so
-edge membership is reproduced bit-exactly; the k-core check peels
-UNBOUNDED (until fixpoint) to prove the fixed 4-round unrolling is
-enough on the fixture; the stats checks re-derive Welch and MI from
-raw counts without SQL."""
+sweep (operators/graph.py, hypothesis.py, profiling.py, features.py).
+The similarity-graph checks replicate the sign-LSH bucket and the
+Spark fold-order cosine in plain Python, so edge membership is
+reproduced bit-exactly; the k-core check peels UNBOUNDED (until
+fixpoint) to prove the fixed 4-round unrolling is enough on the
+fixture; the stats checks re-derive Welch and MI from raw counts
+without SQL."""
 
 from __future__ import annotations
 

@@ -1,9 +1,9 @@
 """Independent proofs for the round-4 training-prep / rank-statistics /
-graph sweep (analytics23): the epoch shuffle must be a deterministic
-permutation, sentence stats are re-derived by a plain string loop,
-Spearman is checked against a naive full-sort average-rank
-computation, and link prediction against a Python neighborhood scan of
-the shared sim-graph replica."""
+graph sweep (operators/llm.py, corpus.py, hypothesis.py, graph.py):
+the epoch shuffle must be a deterministic permutation, sentence stats
+are re-derived by a plain string loop, Spearman is checked against a
+naive full-sort average-rank computation, and link prediction against
+a Python neighborhood scan of the shared sim-graph replica."""
 
 from __future__ import annotations
 

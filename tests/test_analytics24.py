@@ -1,8 +1,9 @@
 """Independent proofs for the round-4 agreement/resampling/graph-quality
-sweep (analytics24): Cohen's kappa against a Python re-derivation of
-both raters, the delete-one-bucket jackknife against hashlib bucketing
-and exact decimal moments, and modularity against union-find components
-over the shared sim-graph replica."""
+sweep (operators/models.py, hypothesis.py, graph.py): Cohen's kappa
+against a Python re-derivation of both raters, the delete-one-bucket
+jackknife against hashlib bucketing and exact decimal moments, and
+modularity against union-find components over the shared sim-graph
+replica."""
 
 from __future__ import annotations
 

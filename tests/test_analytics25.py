@@ -1,5 +1,6 @@
 """Independent proofs for the round-4 containment/order-stat/feature
-sweep (analytics25): containment pairs against a full O(n²) Python
+sweep (operators/llm.py, hypothesis.py, features.py,
+profiling.py): containment pairs against a full O(n²) Python
 shingle scan (including the blocking-recall question), the median CI
 against plain sorted-order statistics, lag features against a per-user
 loop, and HHI against a decimal share computation."""

@@ -1,4 +1,5 @@
-"""Independent proofs for the round-5 stats sweep (analytics26):
+"""Independent proofs for the round-5 stats sweep (operators/hypothesis.py,
+timeseries.py, models.py, profiling.py):
 ANOVA against the textbook group-mean computation, Kendall tau-b
 against direct pair counting, CUSUM against the sequential recursion
 it replaces, ridge against a NumPy solve of the same normal equations,
@@ -256,9 +257,7 @@ def test_degenerate_inputs_yield_null_on_both_engines(spark, tmp_path):
     s, o = _run_both(spark, d, "q_grubbs")
     assert s[0][3] is None and o[0][3] is None
     # constant feature: singular Hessian -> NULL step
-    from direct_kafka_stream_spark.operators.analytics28 import (  # noqa: F401
-        q_logistic_step,
-    )
+    from direct_kafka_stream_spark.operators.models import q_logistic_step  # noqa: F401
 
     s, o = _run_both(spark, d, "q_logistic_step")
     assert s[0][1] is None and s[0][2] is None

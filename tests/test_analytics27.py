@@ -1,5 +1,6 @@
 """Independent proofs for the round-5 retrieval/text/corpus sweep
-(analytics27): MRR against a direct Python ranking, TF-IDF cosine
+(operators/models.py, llm.py, corpus.py, timeseries.py, profiling.py,
+features.py): MRR against a direct Python ranking, TF-IDF cosine
 against a brute-force vector computation, naive Bayes against a plain
 Python reimplementation, the dataset card against direct censuses,
 date gaps against a set difference, and Pareto/whitening structure."""

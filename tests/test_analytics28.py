@@ -1,4 +1,5 @@
-"""Independent proofs for the round-5 batch-3 sweep (analytics28):
+"""Independent proofs for the round-5 batch-3 sweep (operators/hypothesis.py,
+corpus.py, timeseries.py, models.py):
 Levene/Cohen's d/Cramér's V against textbook Python computations,
 c-TF-IDF and hapax against direct censuses, Heaps' law against a
 sequential vocabulary scan, burstiness against daily-count moments,
@@ -205,7 +206,7 @@ def test_burstiness_matches_daily_counts(spark, con):
 
 
 def test_rake_matches_python_splitter(spark, con):
-    from direct_kafka_stream_spark.operators.analytics28 import (
+    from direct_kafka_stream_spark.operators.corpus import (
         _RAKE_DELIM,
         _RAKE_MIN_FREQ,
         _RAKE_TOPK,

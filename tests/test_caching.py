@@ -15,6 +15,7 @@ from __future__ import annotations
 import ast
 import os
 import pathlib
+import re
 import subprocess
 import sys
 import threading
@@ -75,15 +76,33 @@ def test_every_operator_persist_is_tracked():
     assert not untracked, sorted(untracked)
 
 
+def _is_call(node, attr: str) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == attr
+        and bool(node.args)
+    )
+
+
 def test_shared_helpers_are_public_and_tokenize_in_one_place():
     """No package module imports a ``_``-name from an operator module:
     helpers shared across modules are public (the text and similarity
     primitives live in ``operators/text.py`` and ``operators/similarity.py``).
-    And the only Spark-side split on a space is ``text.space_split``."""
-    private, splits = [], []
+    The only Spark-side split on a space is ``text.space_split``, and the
+    only md5-prefix integer is ``exprs.md5_int``. Modules are named by
+    the family they hold, never by the round that added them."""
+    private, splits, md5_ints = [], [], []
     for p in sorted(PACKAGE.rglob("*.py")):
         rel = p.relative_to(PACKAGE)
         for node in ast.walk(ast.parse(p.read_text())):
+            if (
+                _is_call(node, "conv")
+                and _is_call(node.args[0], "substring")
+                and _is_call(node.args[0].args[0], "md5")
+                and str(rel) != "exprs.py"
+            ):
+                md5_ints.append(f"{rel}:{node.lineno}")
             if (
                 isinstance(node, ast.ImportFrom)
                 and (node.module or "").startswith(f"{PACKAGE.name}.operators")
@@ -105,6 +124,13 @@ def test_shared_helpers_are_public_and_tokenize_in_one_place():
                 splits.append(f"{rel}:{node.lineno}")
     assert not private, private
     assert not splits, splits
+    assert not md5_ints, md5_ints
+    round_named = re.compile(r"analytics\d+|llm\d|sweep\d")
+    assert not [
+        str(p.relative_to(PACKAGE))
+        for p in PACKAGE.rglob("*.py")
+        if round_named.fullmatch(p.stem)
+    ]
 
 
 def _persistent_rdd_ids(spark) -> set[int]:

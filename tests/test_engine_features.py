@@ -234,9 +234,7 @@ def test_cogroup_asof_pruned_and_matchless_paths(spark):
     bounds. Both crashed before round 7's guards."""
     import datetime
 
-    from direct_kafka_stream_spark.operators.analytics36 import (
-        cogroup_asof_report,
-    )
+    from direct_kafka_stream_spark.operators.engine import cogroup_asof_report
 
     base = datetime.datetime(2024, 1, 1)
     ev = spark.createDataFrame(
@@ -264,7 +262,7 @@ def test_cogroup_merge_kernel_direct():
     import pandas as pd
     import pytest
 
-    from direct_kafka_stream_spark.operators.analytics36 import _cogroup_merge
+    from direct_kafka_stream_spark.operators.engine import _cogroup_merge
 
     pruned_left = pd.DataFrame({"bucket": [0, 0]})
     right = pd.DataFrame(

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from direct_kafka_stream_spark import QUERIES, load_table
-from direct_kafka_stream_spark.operators.llm2 import _CHUNK, _CTX, _STRIDE
+from direct_kafka_stream_spark.operators.llm import _CHUNK, _CTX, _STRIDE
 from direct_kafka_stream_spark.operators.similarity import (
     BUCKET_CAP,
     SRP_MASKS,
@@ -241,7 +241,7 @@ def test_kmeans_train_improves_on_seed_centers(spark):
     64-dimensional, and (c) achieve total within-cluster squared
     distance (inertia) no worse than the seed centers they started
     from — the monotone-improvement property of Lloyd iterations."""
-    from direct_kafka_stream_spark.operators.llm2 import _KM_SEEDS
+    from direct_kafka_stream_spark.operators.models import _KM_SEEDS
 
     e = load_table(spark, SF_DIR, "embeddings")
     n = e.count()
@@ -380,7 +380,7 @@ def test_components_pointer_jumping_converges_on_long_path(spark):
     cap — convergence within the cap proves the label's-label jump
     contracts chains in O(log diameter), and the helper must label the
     whole chain with its minimum node id (and never raise)."""
-    from direct_kafka_stream_spark.operators.llm import propagate_min_labels
+    from direct_kafka_stream_spark.operators.graph import propagate_min_labels
 
     n = 300
     hops = [(i, i + 1) for i in range(n - 1)]
@@ -396,7 +396,7 @@ def test_components_nonconvergence_raises_not_silent(spark):
     returned silently — the helper raises."""
     import pytest as _pytest
 
-    from direct_kafka_stream_spark.operators.llm import propagate_min_labels
+    from direct_kafka_stream_spark.operators.graph import propagate_min_labels
 
     hops = [(i, i + 1) for i in range(63)]
     sym = hops + [(b, a) for a, b in hops]

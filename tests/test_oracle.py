@@ -249,7 +249,7 @@ def test_gk_gate_flips_false_on_out_of_band_rank(spark):
     guaranteed band must produce FALSE from rank_within_eps, and one
     straddling the target must produce TRUE."""
     from direct_kafka_stream_spark.exprs import rank_within_eps
-    from direct_kafka_stream_spark.functions.sweep4 import _GK_EPS
+    from direct_kafka_stream_spark.functions.scalar import _GK_EPS
 
     n = 100_000  # eps*N = 10 at the registered accuracy (eps = 1e-4)
     df = spark.createDataFrame(

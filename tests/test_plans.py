@@ -794,7 +794,7 @@ def test_exchange_reuse_single_shuffle(spark):
 def test_item_cf_reuses_the_basket_exchange(spark):
     """q_item_cf does not persist its baskets: every reference hangs off
     one repartition("u") exchange, which AQE reads back as a
-    ReusedExchange (analytics20.py). At this scale the executed final
+    ReusedExchange (operators/models.py). At this scale the executed final
     plan carries 5 ReusedExchange nodes: the basket shuffle, one join
     shuffle and three reads of one broadcast."""
     df = QUERIES["q_item_cf"].spark(spark, SF_DIR)

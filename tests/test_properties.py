@@ -132,7 +132,7 @@ _bytes = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(pairs=_bytes)
 def test_zorder_interleave_bijective(spark, pairs):
-    from direct_kafka_stream_spark.operators.analytics10 import _z_col
+    from direct_kafka_stream_spark.operators.engine import _z_col
 
     df = spark.createDataFrame(pairs, "ka bigint, kb bigint")
     out = df.select(
@@ -167,7 +167,7 @@ def test_concurrent_peak_matches_brute_force(spark, epochs):
 
     import pandas as pd
 
-    from direct_kafka_stream_spark.operators.analytics5 import (
+    from direct_kafka_stream_spark.operators.timeseries import (
         _PRESENCE_S,
         concurrent_peak_report,
     )
@@ -252,7 +252,7 @@ def test_pca_hilo_reconstruction_is_exact(pairs):
     sl = sum(t - ((t >> 30) << 30) for t in terms)
     total = sh * (1 << 30) + sl
     assert total == sum(terms)
-    # replicate analytics12._g_val
+    # replicate models._g_val
     q8, rem = divmod(abs(total), 10**8)
     r = q8 + (1 if rem >= 5 * 10**7 else 0)
     g = (-r if total < 0 else r) / 10000.0
@@ -327,7 +327,7 @@ def test_bounded_window_key_never_folds(spark, data):
 )
 @_settings
 def test_grid_sum_matches_duckdb_exactly(spark, vals):
-    """The 1e-9 floor-grid decimal sum (analytics30._grid_sum) must be
+    """The 1e-9 floor-grid decimal sum (models._grid_sum) must be
     bit-identical between Spark and DuckDB for any double inputs in
     the contract's domain |v| ≤ 1e4 — the order-free sum contract the
     round-6 statistics rely on. The domain bound is real, not
@@ -340,10 +340,7 @@ def test_grid_sum_matches_duckdb_exactly(spark, vals):
     residuals)."""
     import duckdb
 
-    from direct_kafka_stream_spark.operators.analytics30 import (
-        _grid_sum,
-        _grid_sum_sql,
-    )
+    from direct_kafka_stream_spark.operators.models import _grid_sum, _grid_sum_sql
 
     df = spark.createDataFrame([(v,) for v in vals], "v double")
     got = df.agg(_grid_sum(F.col("v")).cast("double").alias("s")).collect()[0].s
@@ -374,7 +371,7 @@ def test_shapley_efficiency_axiom(spark, users):
     touch-set/conversion configuration — the identity that makes the
     bounded coalition algebra in q_shapley_attribution a real Shapley
     value and not just a weighted diff."""
-    from direct_kafka_stream_spark.operators.analytics34 import (
+    from direct_kafka_stream_spark.operators.experiments import (
         _SH_CHANNELS,
         shapley_attribution,
     )
@@ -430,9 +427,7 @@ def test_bloom_reduce_join_equals_plain_join(spark, fact_keys, dim_keys):
     optimization (false positives are removed by the real join)."""
     from pyspark.sql import functions as F
 
-    from direct_kafka_stream_spark.operators.analytics33 import (
-        bloom_reduce_join,
-    )
+    from direct_kafka_stream_spark.operators.engine import bloom_reduce_join
 
     li = spark.createDataFrame(
         [(k, 100.0 + k, 0.1) for k in fact_keys],
@@ -569,9 +564,7 @@ def test_kruskal_wallis_matches_brute_force_ranks(spark, vals):
     textbook pooled mid-rank Kruskal-Wallis H (and its tie correction)
     for ANY grouping — the identity that licenses computing ranks from
     counts instead of a global sort."""
-    from direct_kafka_stream_spark.operators.analytics33 import (
-        kruskal_wallis_stat,
-    )
+    from direct_kafka_stream_spark.operators.hypothesis import kruskal_wallis_stat
 
     ev = spark.createDataFrame(
         [
@@ -631,9 +624,7 @@ def test_logrank_matches_brute_force(spark, durs):
     members of g with T >= t, including times where g itself has no
     exit) — the property the round-6 ADVICE found violated when a
     group's risk set was only evaluated at its own cell times."""
-    from direct_kafka_stream_spark.operators.analytics35 import (
-        logrank_from_durations,
-    )
+    from direct_kafka_stream_spark.operators.experiments import logrank_from_durations
 
     df = spark.createDataFrame(durs, "g long, t int, ev int")
     row = logrank_from_durations(df).collect()[0]
@@ -702,9 +693,7 @@ def _midranks(xs):
 def test_stitched_avg_ranks_match_pooled(spark, vals):
     """stitched_avg_ranks == 2 x brute-force pooled mid-rank for any
     multiset, including values straddling bin boundaries."""
-    from direct_kafka_stream_spark.operators.analytics23 import (
-        stitched_avg_ranks,
-    )
+    from direct_kafka_stream_spark.operators.hypothesis import stitched_avg_ranks
 
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got = {r.v: r.ar2 for r in stitched_avg_ranks(df, "x", 10.0).collect()}
@@ -729,7 +718,7 @@ def test_spearman_matches_brute_force(spark, pairs):
     """spearman_rho == Pearson on brute-force pooled mid-ranks."""
     import math
 
-    from direct_kafka_stream_spark.operators.analytics23 import spearman_rho
+    from direct_kafka_stream_spark.operators.hypothesis import spearman_rho
 
     df = spark.createDataFrame(
         [(float(a) * 1.5, float(b) * 3.0) for a, b in pairs], "a double, b double"
@@ -767,9 +756,7 @@ def test_weighted_median_matches_brute_force(spark, rows_):
     """weighted_median_stat's bin-then-refine == the global weighted
     lower median (first value where 2*cumweight >= total, rows ordered
     by (value, key))."""
-    from direct_kafka_stream_spark.operators.analytics18 import (
-        weighted_median_stat,
-    )
+    from direct_kafka_stream_spark.operators.profiling import weighted_median_stat
 
     data = [
         (f"S{g}", v * 25.0, i, w) for i, (g, v, w) in enumerate(rows_)
@@ -809,9 +796,7 @@ def test_mann_whitney_matches_brute_force(spark, durs):
     mid-ranks: u2 exactly, z to 1e-5."""
     import math
 
-    from direct_kafka_stream_spark.operators.analytics21 import (
-        mann_whitney_stat,
-    )
+    from direct_kafka_stream_spark.operators.hypothesis import mann_whitney_stat
     from collections import Counter
 
     data = [
@@ -853,9 +838,7 @@ def test_median_ci_matches_brute_force(spark, vals):
     statistics on the sorted sample at the three target ranks."""
     import math
 
-    from direct_kafka_stream_spark.operators.analytics25 import (
-        median_ci_report,
-    )
+    from direct_kafka_stream_spark.operators.hypothesis import median_ci_report
 
     ev = spark.createDataFrame(
         [(v, i) for i, v in enumerate(vals)], "value double, event_id long"
@@ -905,7 +888,7 @@ def test_incremental_curation_equals_batch_for_any_split(spark, docs_spec, cut):
     """curation_apply_batch accumulated over an arbitrary
     doc_id-ordered split == curation_pipeline_on over the union —
     exact dedup, LSH candidates and tau-drops included."""
-    from direct_kafka_stream_spark.operators.llm2 import curation_pipeline_on
+    from direct_kafka_stream_spark.operators.llm import curation_pipeline_on
     from direct_kafka_stream_spark.streaming.transforms import (
         CURATION_BANDS_SCHEMA,
         CURATION_SEEN_SCHEMA,
@@ -1086,7 +1069,7 @@ def test_lateness_stitched_runmax_matches_global(spark, evs, block):
 
     import numpy as np
 
-    from direct_kafka_stream_spark.operators.analytics14 import (
+    from direct_kafka_stream_spark.operators.timeseries import (
         _LATE_TAU,
         lateness_profile,
     )
@@ -1145,7 +1128,7 @@ _CG_EVENT = st.tuples(
     buys=st.lists(_CG_EVENT, min_size=0, max_size=40),
 )
 def test_cogroup_merge_matches_brute_force(clicks, buys):
-    """The merge_asof-based kernel (operators/analytics36.py, round-8
+    """The merge_asof-based kernel (operators/engine.py, round-8
     vectorization of the per-user loop) against a per-click O(n·m)
     scan: for every click, the FIRST purchase by the same user with
     p.ts >= c.ts (full-ns comparison), waits floored to seconds only
@@ -1154,7 +1137,7 @@ def test_cogroup_merge_matches_brute_force(clicks, buys):
     import numpy as np
     import pandas as pd
 
-    from direct_kafka_stream_spark.operators.analytics36 import _cogroup_merge
+    from direct_kafka_stream_spark.operators.engine import _cogroup_merge
 
     left = pd.DataFrame(
         {

@@ -23,9 +23,7 @@ def test_stream_pyds_write_two_phase_commit(spark, tmp_path):
     dir: per-batch manifests sum to the published row count, staging
     is empty after commit, and ≥2 batchIds actually committed
     (maxFilesPerTrigger=1 over a 2-file source)."""
-    from direct_kafka_stream_spark.operators.analytics38 import (
-        pyds_write_report,
-    )
+    from direct_kafka_stream_spark.operators.stream_exhibits import pyds_write_report
 
     out = pyds_write_report(spark, SF_DIR, str(tmp_path / "pysink"))
     got = {r.event_type: (r.n, r.id_sum) for r in out.collect()}
@@ -202,9 +200,7 @@ def test_pyds_commit_replay_is_idempotent(tmp_path):
 
 def test_stream_listener_ledger_accounts_every_row(spark):
     from direct_kafka_stream_spark.io import load_table
-    from direct_kafka_stream_spark.operators.analytics38 import (
-        q_stream_listener,
-    )
+    from direct_kafka_stream_spark.operators.stream_exhibits import q_stream_listener
 
     row = q_stream_listener(spark, SF_DIR).collect()[0]
     ev = load_table(spark, SF_DIR, "events")
@@ -215,7 +211,7 @@ def test_stream_listener_ledger_accounts_every_row(spark):
 
 
 def test_stream_rocksdb_restores_provider_conf(spark):
-    from direct_kafka_stream_spark.operators.analytics38 import q_stream_rocksdb
+    from direct_kafka_stream_spark.operators.stream_exhibits import q_stream_rocksdb
     from direct_kafka_stream_spark.sources.files import PROVIDER_CONF
 
     before = spark.conf.get(PROVIDER_CONF, None)
@@ -239,7 +235,7 @@ def test_state_reader_matches_batch_aggregate(spark):
     buffer's final rounding."""
     from direct_kafka_stream_spark.exprs import dsum
     from direct_kafka_stream_spark.io import load_table
-    from direct_kafka_stream_spark.operators.analytics39 import (
+    from direct_kafka_stream_spark.operators.stream_exhibits import (
         q_stream_state_reader,
     )
     from pyspark.sql import functions as F

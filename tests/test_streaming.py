@@ -18,6 +18,111 @@ import pytest
 from pyspark.sql import functions as F
 
 from direct_kafka_stream_spark.io import load_table
+from direct_kafka_stream_spark.operators.cdc import rfm_report, scd2_table
+from direct_kafka_stream_spark.operators.corpus import (
+    gopher_rules_census,
+    hapax_report,
+    readability_report,
+)
+from direct_kafka_stream_spark.operators.engine import (
+    arrow_counts,
+    cogroup_asof_report,
+    zonemap_report,
+)
+from direct_kafka_stream_spark.operators.events_analytics import (
+    ab_test_report,
+    attribution_matrix,
+    audience_overlap_report,
+    changepoint_report,
+    cohort_ltv_curve,
+    funnel3_counts,
+    retention_triangle,
+    seasonality_profile,
+    transition_matrix,
+)
+from direct_kafka_stream_spark.operators.experiments import (
+    ab_proportions_stat,
+    cuped_report,
+    logrank_stat,
+    mde_power_table,
+    nelson_aalen_curve,
+    neyman_alloc,
+    propensity_strata,
+    shapley_attribution,
+    sprt_table,
+)
+from direct_kafka_stream_spark.operators.features import lag_features_table
+from direct_kafka_stream_spark.operators.graph import textrank_on
+from direct_kafka_stream_spark.operators.hypothesis import (
+    anova_stat,
+    bh_fdr_table,
+    bootstrap_poisson_table,
+    chi2_stat,
+    cmh_stat,
+    cochran_armitage_stat,
+    cohens_d_stat,
+    cramers_v_stat,
+    fisher_method_stat,
+    friedman_stat,
+    grubbs_report,
+    kruskal_wallis_stat,
+    levene_stat,
+    mann_whitney_stat,
+    mcnemar_cells,
+    median_ci_report,
+    permutation_test_stat,
+    runs_test_stat,
+    welch_ttest_stat,
+    wilson_ci_table,
+)
+from direct_kafka_stream_spark.operators.llm import (
+    dedup_exact_keep_first,
+    text_langid_report,
+    text_quality_report,
+)
+from direct_kafka_stream_spark.operators.patterns import (
+    islands_report,
+    mom_growth_report,
+)
+from direct_kafka_stream_spark.operators.profiling import (
+    anomaly_mad_report,
+    benford_report,
+    dp_laplace_histogram,
+    entropy_hour_grid,
+    hhi_report,
+    hist2d_grid,
+    hist_equi_report,
+    impute_table,
+    k_anonymity_census,
+    l_diversity_census,
+    pareto_share_report,
+    qq_table,
+    quantile_bins_table,
+    robust_scale_report,
+    text_entropy_report,
+    winsorize_table,
+)
+from direct_kafka_stream_spark.operators.retrieval import sessionize_report
+from direct_kafka_stream_spark.operators.timeseries import (
+    acf_profile,
+    bollinger_bands,
+    bot_burst_report,
+    burstiness_report,
+    concurrent_peak_report,
+    cusum_report,
+    date_gaps_report,
+    dau_mau_report,
+    ewma_series,
+    funnel_latency_report,
+    holt_linear,
+    inter_event_profile,
+    interval_overlap_report,
+    lifecycle_ledger,
+    sax_table,
+    seasonal_anomaly_report,
+    seq_pattern_counts,
+    theil_sen_stat,
+)
 from direct_kafka_stream_spark.sources.files import events_schema, file_stream
 from direct_kafka_stream_spark.streaming import pipeline, transforms
 
@@ -887,75 +992,75 @@ def test_rate_source_generated_stream(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "qname, transform_name",
+    "qname, transform",
     [
-        ("q_funnel3", "funnel3_counts"),
-        ("q_attribution", "attribution_matrix"),
-        ("q_retention_matrix", "retention_triangle"),
-        ("q_transition_matrix", "transition_matrix"),
-        ("q_seq_pattern", "seq_pattern_counts"),
-        ("q_bot_burst", "bot_burst_report"),
-        ("q_inter_event", "inter_event_profile"),
-        ("q_concurrent_peak", "concurrent_peak_report"),
-        ("q_user_lifecycle", "lifecycle_ledger"),
-        ("q_dau_mau", "dau_mau_report"),
-        ("q_interval_overlap", "interval_overlap_report"),
-        ("q_bollinger", "bollinger_bands"),
-        ("q_hist2d", "hist2d_grid"),
-        ("q_sessionize", "sessionize_report"),
-        ("q_lag_features", "lag_features_table"),
-        ("q_median_ci", "median_ci_report"),
-        ("q_entropy_hour", "entropy_hour_grid"),
-        ("q_robust_scale", "robust_scale_report"),
-        ("q_burstiness", "burstiness_report"),
-        ("q_mann_whitney", "mann_whitney_stat"),
-        ("q_cogroup_asof", "cogroup_asof_report"),
-        ("q_changepoint", "changepoint_report"),
-        ("q_seasonality", "seasonality_profile"),
-        ("q_cohort_ltv", "cohort_ltv_curve"),
-        ("q_ab_test", "ab_test_report"),
-        ("q_audience_overlap", "audience_overlap_report"),
-        ("q_acf", "acf_profile"),
-        ("q_cuped", "cuped_report"),
-        ("q_sprt", "sprt_table"),
-        ("q_mde_power", "mde_power_table"),
-        ("q_qq_plot", "qq_table"),
-        ("q_wilson_ci", "wilson_ci_table"),
-        ("q_cochran_armitage", "cochran_armitage_stat"),
-        ("q_mcnemar", "mcnemar_cells"),
-        ("q_nelson_aalen", "nelson_aalen_curve"),
-        ("q_welch_ttest", "welch_ttest_stat"),
-        ("q_chi2", "chi2_stat"),
-        ("q_anova", "anova_stat"),
-        ("q_levene", "levene_stat"),
-        ("q_cohens_d", "cohens_d_stat"),
-        ("q_cramers_v", "cramers_v_stat"),
-        ("q_runs_test", "runs_test_stat"),
-        ("q_ab_proportions", "ab_proportions_stat"),
-        ("q_bh_fdr", "bh_fdr_table"),
-        ("q_fisher_method", "fisher_method_stat"),
-        ("q_permutation_test", "permutation_test_stat"),
-        ("q_kruskal_wallis", "kruskal_wallis_stat"),
-        ("q_l_diversity", "l_diversity_census"),
-        ("q_shapley_attribution", "shapley_attribution"),
-        ("q_neyman_alloc", "neyman_alloc"),
-        ("q_dp_laplace", "dp_laplace_histogram"),
-        ("q_bootstrap_poisson", "bootstrap_poisson_table"),
-        ("q_funnel_latency", "funnel_latency_report"),
-        ("q_seasonal_anomaly", "seasonal_anomaly_report"),
-        ("q_anomaly_mad", "anomaly_mad_report"),
-        ("q_holt_linear", "holt_linear"),
-        ("q_winsorize", "winsorize_table"),
-        ("q_impute", "impute_table"),
-        ("q_theil_sen", "theil_sen_stat"),
-        ("q_sax_symbols", "sax_table"),
-        ("q_friedman", "friedman_stat"),
-        ("q_propensity_strata", "propensity_strata"),
-        ("q_logrank", "logrank_stat"),
-        ("q_cmh", "cmh_stat"),
+        ("q_funnel3", funnel3_counts),
+        ("q_attribution", attribution_matrix),
+        ("q_retention_matrix", retention_triangle),
+        ("q_transition_matrix", transition_matrix),
+        ("q_seq_pattern", seq_pattern_counts),
+        ("q_bot_burst", bot_burst_report),
+        ("q_inter_event", inter_event_profile),
+        ("q_concurrent_peak", concurrent_peak_report),
+        ("q_user_lifecycle", lifecycle_ledger),
+        ("q_dau_mau", dau_mau_report),
+        ("q_interval_overlap", interval_overlap_report),
+        ("q_bollinger", bollinger_bands),
+        ("q_hist2d", hist2d_grid),
+        ("q_sessionize", sessionize_report),
+        ("q_lag_features", lag_features_table),
+        ("q_median_ci", median_ci_report),
+        ("q_entropy_hour", entropy_hour_grid),
+        ("q_robust_scale", robust_scale_report),
+        ("q_burstiness", burstiness_report),
+        ("q_mann_whitney", mann_whitney_stat),
+        ("q_cogroup_asof", cogroup_asof_report),
+        ("q_changepoint", changepoint_report),
+        ("q_seasonality", seasonality_profile),
+        ("q_cohort_ltv", cohort_ltv_curve),
+        ("q_ab_test", ab_test_report),
+        ("q_audience_overlap", audience_overlap_report),
+        ("q_acf", acf_profile),
+        ("q_cuped", cuped_report),
+        ("q_sprt", sprt_table),
+        ("q_mde_power", mde_power_table),
+        ("q_qq_plot", qq_table),
+        ("q_wilson_ci", wilson_ci_table),
+        ("q_cochran_armitage", cochran_armitage_stat),
+        ("q_mcnemar", mcnemar_cells),
+        ("q_nelson_aalen", nelson_aalen_curve),
+        ("q_welch_ttest", welch_ttest_stat),
+        ("q_chi2", chi2_stat),
+        ("q_anova", anova_stat),
+        ("q_levene", levene_stat),
+        ("q_cohens_d", cohens_d_stat),
+        ("q_cramers_v", cramers_v_stat),
+        ("q_runs_test", runs_test_stat),
+        ("q_ab_proportions", ab_proportions_stat),
+        ("q_bh_fdr", bh_fdr_table),
+        ("q_fisher_method", fisher_method_stat),
+        ("q_permutation_test", permutation_test_stat),
+        ("q_kruskal_wallis", kruskal_wallis_stat),
+        ("q_l_diversity", l_diversity_census),
+        ("q_shapley_attribution", shapley_attribution),
+        ("q_neyman_alloc", neyman_alloc),
+        ("q_dp_laplace", dp_laplace_histogram),
+        ("q_bootstrap_poisson", bootstrap_poisson_table),
+        ("q_funnel_latency", funnel_latency_report),
+        ("q_seasonal_anomaly", seasonal_anomaly_report),
+        ("q_anomaly_mad", anomaly_mad_report),
+        ("q_holt_linear", holt_linear),
+        ("q_winsorize", winsorize_table),
+        ("q_impute", impute_table),
+        ("q_theil_sen", theil_sen_stat),
+        ("q_sax_symbols", sax_table),
+        ("q_friedman", friedman_stat),
+        ("q_propensity_strata", propensity_strata),
+        ("q_logrank", logrank_stat),
+        ("q_cmh", cmh_stat),
     ],
 )
-def test_streaming_analytics_equal_batch(spark, events_dir, tmp_path, qname, transform_name):
+def test_streaming_analytics_equal_batch(spark, events_dir, tmp_path, qname, transform):
     """§2.C streaming twins for the round-3 event analytics: events
     stream in via foreachBatch (the reference's foreachRDD successor),
     each micro-batch appends to a staged table and the analytic is
@@ -965,41 +1070,7 @@ def test_streaming_analytics_equal_batch(spark, events_dir, tmp_path, qname, tra
     process, KafkaDirectStream.scala:43-51), with the round-3
     analytics as the analyze step."""
     from direct_kafka_stream_spark import QUERIES
-    from direct_kafka_stream_spark.operators import (
-        analytics4,
-        analytics5,
-        analytics6,
-        analytics7,
-        analytics8,
-        analytics13,
-        analytics16,
-        analytics21,
-        analytics22,
-        analytics25,
-        analytics26,
-        analytics28,
-        analytics29,
-        analytics30,
-        analytics32,
-        analytics33,
-        analytics34,
-        analytics35,
-        analytics36,
-        events_analytics,
-        profiling,
-        retrieval,
-    )
 
-    transform = next(
-        t
-        for m in (events_analytics, analytics4, analytics5, analytics7,
-                  analytics6, analytics8, analytics13, analytics16, analytics21,
-                  analytics22, analytics25, analytics26, analytics28,
-                  analytics29, analytics30, analytics32, analytics33,
-                  analytics34, analytics35, analytics36, profiling,
-                  retrieval)
-        if (t := getattr(m, transform_name, None)) is not None
-    )
     expected = sorted(
         map(tuple, QUERIES[qname].spark(spark, SF_DIR).collect())
     )
@@ -1160,7 +1231,7 @@ def test_ivm_delta_maintains_live_aggregate(spark, tmp_path):
     import time as _time
 
     from direct_kafka_stream_spark import QUERIES
-    from direct_kafka_stream_spark.operators.analytics17 import (
+    from direct_kafka_stream_spark.operators.engine import (
         _NEW_PRED,
         _OLD_PRED,
         _OLD_PRICE,
@@ -1295,10 +1366,7 @@ def test_ivm_join_maintains_live_join_view(spark, tmp_path):
     import time as _time
 
     from direct_kafka_stream_spark import QUERIES
-    from direct_kafka_stream_spark.operators.analytics33 import (
-        _IVM_R_OLD,
-        _IVM_S_OLD,
-    )
+    from direct_kafka_stream_spark.operators.engine import _IVM_R_OLD, _IVM_S_OLD
     from direct_kafka_stream_spark.streaming.transforms import (
         IVM_JOIN_VIEW_SCHEMA,
         ivm_join_apply_delta,
@@ -1439,24 +1507,24 @@ def orders_dir(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "qname, transform_name",
+    "qname, transform",
     [
-        ("q_islands", "islands_report"),
-        ("q_date_gaps", "date_gaps_report"),
-        ("q_cusum", "cusum_report"),
-        ("q_grubbs", "grubbs_report"),
-        ("q_mom_growth", "mom_growth_report"),
-        ("q_hist_equi", "hist_equi_report"),
-        ("q_rfm", "rfm_report"),
-        ("q_scd2", "scd2_table"),
-        ("q_ewma", "ewma_series"),
-        ("q_zonemap_prune", "zonemap_report"),
-        ("q_benford", "benford_report"),
-        ("q_quantile_bins", "quantile_bins_table"),
+        ("q_islands", islands_report),
+        ("q_date_gaps", date_gaps_report),
+        ("q_cusum", cusum_report),
+        ("q_grubbs", grubbs_report),
+        ("q_mom_growth", mom_growth_report),
+        ("q_hist_equi", hist_equi_report),
+        ("q_rfm", rfm_report),
+        ("q_scd2", scd2_table),
+        ("q_ewma", ewma_series),
+        ("q_zonemap_prune", zonemap_report),
+        ("q_benford", benford_report),
+        ("q_quantile_bins", quantile_bins_table),
     ],
 )
 def test_streaming_orders_analytics_equal_batch(
-    spark, orders_dir, tmp_path, qname, transform_name
+    spark, orders_dir, tmp_path, qname, transform
 ):
     """Orders-surface streaming twins: the same ingest-then-analyze
     foreachBatch shape as the events twins (stage each micro-batch,
@@ -1464,23 +1532,8 @@ def test_streaming_orders_analytics_equal_batch(
     orders-table analytics — gap/island detection, CUSUM/Grubbs
     monitors, SCD2 builds, RFM, EWMA — are batch/stream-unified too."""
     from direct_kafka_stream_spark import QUERIES
-    from direct_kafka_stream_spark.operators import (
-        analytics4,
-        analytics5,
-        analytics26,
-        analytics27,
-        cdc,
-        patterns,
-        profiling,
-    )
     from direct_kafka_stream_spark.sources.files import orders_schema
 
-    transform = next(
-        t
-        for m in (analytics4, analytics5, analytics26, analytics27, cdc,
-                  patterns, profiling)
-        if (t := getattr(m, transform_name, None)) is not None
-    )
     expected = sorted(
         map(tuple, QUERIES[qname].spark(spark, SF_DIR).collect())
     )
@@ -1518,22 +1571,22 @@ def documents_dir(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "qname, transform_name",
+    "qname, transform",
     [
-        ("q_dedup_exact", "dedup_exact_keep_first"),
-        ("q_text_quality", "text_quality_report"),
-        ("q_text_langid", "text_langid_report"),
-        ("q_gopher_rules", "gopher_rules_census"),
-        ("q_text_entropy", "text_entropy_report"),
-        ("q_readability", "readability_report"),
-        ("q_hapax", "hapax_report"),
-        ("q_k_anonymity", "k_anonymity_census"),
-        ("q_textrank", "textrank_on"),
-        ("q_map_in_arrow", "arrow_counts"),
+        ("q_dedup_exact", dedup_exact_keep_first),
+        ("q_text_quality", text_quality_report),
+        ("q_text_langid", text_langid_report),
+        ("q_gopher_rules", gopher_rules_census),
+        ("q_text_entropy", text_entropy_report),
+        ("q_readability", readability_report),
+        ("q_hapax", hapax_report),
+        ("q_k_anonymity", k_anonymity_census),
+        ("q_textrank", textrank_on),
+        ("q_map_in_arrow", arrow_counts),
     ],
 )
 def test_streaming_documents_analytics_equal_batch(
-    spark, documents_dir, tmp_path, qname, transform_name
+    spark, documents_dir, tmp_path, qname, transform
 ):
     """Documents-surface streaming twins: the curation analytics —
     exact dedup, quality/Gopher gates, language-ID, entropy,
@@ -1543,24 +1596,8 @@ def test_streaming_documents_analytics_equal_batch(
     crawl-ingest shape of an LLM data pipeline: documents land as
     files, the curation ledger stays fresh per batch."""
     from direct_kafka_stream_spark import QUERIES
-    from direct_kafka_stream_spark.operators import (
-        analytics27,
-        analytics28,
-        analytics32,
-        analytics34,
-        analytics36,
-        llm,
-        llm3,
-        profiling,
-    )
     from direct_kafka_stream_spark.sources.files import documents_schema
 
-    transform = next(
-        t
-        for m in (llm, llm3, profiling, analytics27, analytics28,
-                  analytics32, analytics34, analytics36)
-        if (t := getattr(m, transform_name, None)) is not None
-    )
     expected = sorted(
         map(tuple, QUERIES[qname].spark(spark, SF_DIR).collect())
     )
@@ -1746,9 +1783,7 @@ def test_streaming_lineitem_spearman_equal_batch(spark, tmp_path):
     """Spearman over a lineitem stream: the bin-stitched rank kernel
     is recomputable per micro-batch and lands exactly on the batch
     answer once the stream drains."""
-    from direct_kafka_stream_spark.operators.analytics23 import (
-        spearman_report,
-    )
+    from direct_kafka_stream_spark.operators.hypothesis import spearman_report
 
     _run_table_twin(
         spark, tmp_path, "q_spearman", "lineitem", _LINEITEM_DDL,
@@ -1759,9 +1794,7 @@ def test_streaming_lineitem_spearman_equal_batch(spark, tmp_path):
 def test_streaming_customer_weighted_median_equal_batch(spark, tmp_path):
     """Weighted median per segment over a customer stream: the
     bin-then-refine two-pass is batch/stream-unified."""
-    from direct_kafka_stream_spark.operators.analytics18 import (
-        weighted_median_report,
-    )
+    from direct_kafka_stream_spark.operators.profiling import weighted_median_report
 
     _run_table_twin(
         spark, tmp_path, "q_weighted_median", "customer", _CUSTOMER_DDL,
@@ -1778,7 +1811,7 @@ def test_streaming_orders_gini_static_dims_equal_batch(spark, tmp_path):
     slowly changing) the reference app approximated with its
     store-then-process loop (KafkaDirectStream.scala:43-51)."""
     from direct_kafka_stream_spark import QUERIES
-    from direct_kafka_stream_spark.operators.analytics4 import gini_report
+    from direct_kafka_stream_spark.operators.profiling import gini_report
     from direct_kafka_stream_spark.sources.files import orders_schema
 
     expected = sorted(
@@ -1811,12 +1844,8 @@ def test_streaming_orders_gini_static_dims_equal_batch(spark, tmp_path):
 @pytest.mark.parametrize(
     "qname, importer",
     [
-        ("q_hhi", lambda: __import__(
-            "direct_kafka_stream_spark.operators.analytics25",
-            fromlist=["hhi_report"]).hhi_report),
-        ("q_pareto_share", lambda: __import__(
-            "direct_kafka_stream_spark.operators.analytics27",
-            fromlist=["pareto_share_report"]).pareto_share_report),
+        ("q_hhi", lambda: hhi_report),
+        ("q_pareto_share", lambda: pareto_share_report),
     ],
 )
 def test_streaming_orders_concentration_static_dims_equal_batch(
