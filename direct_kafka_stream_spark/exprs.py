@@ -27,30 +27,30 @@ DEC = "decimal(38,10)"
 # Spark's BigDecimal→double is correctly rounded. At scale 4 the scaled
 # integer stays under 2^53 for |sum| ≤ ~9e11, making both conversions
 # exact and the results bit-identical.
-_OUT_SCALE = 4
+OUT_SCALE = 4
 
 
 def dsum(col) -> Column:
     """Order-independent exact sum of a double column, as double."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(c.cast(DEC)), _OUT_SCALE).cast("double")
+    return F.round(F.sum(c.cast(DEC)), OUT_SCALE).cast("double")
 
 
 def dsum_sql(expr: str) -> str:
     return (
-        f"CAST(ROUND(SUM(CAST(({expr}) AS DECIMAL(38,10))), {_OUT_SCALE}) AS DOUBLE)"
+        f"CAST(ROUND(SUM(CAST(({expr}) AS DECIMAL(38,10))), {OUT_SCALE}) AS DOUBLE)"
     )
 
 
 def davg(col) -> Column:
     """Order-independent mean: exact decimal sum / count, in double."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(c.cast(DEC)), _OUT_SCALE).cast("double") / F.count(c)
+    return F.round(F.sum(c.cast(DEC)), OUT_SCALE).cast("double") / F.count(c)
 
 
 def davg_sql(expr: str) -> str:
     return (
-        f"CAST(ROUND(SUM(CAST(({expr}) AS DECIMAL(38,10))), {_OUT_SCALE}) AS DOUBLE)"
+        f"CAST(ROUND(SUM(CAST(({expr}) AS DECIMAL(38,10))), {OUT_SCALE}) AS DOUBLE)"
         f" / COUNT({expr})"
     )
 

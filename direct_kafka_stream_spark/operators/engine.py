@@ -21,6 +21,7 @@ from pyspark.sql.window import Window
 from direct_kafka_stream_spark.caching import on_close, scratch_dir, track
 from direct_kafka_stream_spark.exprs import (
     DEC,
+    OUT_SCALE,
     bounded_window_key,
     dsum,
     dsum_sql,
@@ -1062,14 +1063,11 @@ def q_ivm_delta(spark: SparkSession, d: str):
         F.round(
             F.coalesce(F.col("v.rev"), zero)
             + F.coalesce(F.col("da.drev"), zero),
-            4,
+            OUT_SCALE,
         )
         .cast("double")
         .alias("revenue"),
     ).orderBy("status")
-
-
-_OUT_SCALE = 4  # matches exprs.dsum's output rounding
 
 
 # ---------------------------------------------------------------------------
@@ -1148,7 +1146,7 @@ def q_ivm_join(spark: SparkSession, d: str):
         .alias("n"),
         F.round(
             F.coalesce(F.col("v.rev"), zero) + F.coalesce(F.col("d.rev"), zero),
-            _OUT_SCALE,
+            OUT_SCALE,
         )
         .cast("double")
         .alias("revenue"),
@@ -1322,9 +1320,6 @@ def _cogroup_merge(left, right):
     float64 the merge emits for misses) and the ns timestamp is
     re-read from the int64 source array, because ns epochs (~1.7e18)
     exceed float64's 2^53 integer range and would round."""
-    import numpy as np
-    import pandas as pd
-
     _OUT = ["user_id", "n_clicks", "n_converted", "total_wait_s"]
     if left.empty:
         return pd.DataFrame(columns=_OUT)
@@ -1681,8 +1676,6 @@ def q_ml_linreg(spark: SparkSession, d: str):
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import LinearRegression
 
-    from direct_kafka_stream_spark.io import spread_scan
-
     # Project to the three feature columns FIRST, then spread: both the
     # singularity-gate moment pass and ML's WLS treeAggregate otherwise
     # run single-task on the unsplittable fixture scan (guide §2.5),
@@ -1701,8 +1694,6 @@ def q_ml_linreg(spark: SparkSession, d: str):
     # Computing the identical Cramer determinant from the identical
     # exact-decimal moments, in the identical operation order, makes
     # the gate bit-equal to the oracle's.
-    from direct_kafka_stream_spark.exprs import dsum
-
     q, disc, y = F.col("l_quantity"), F.col("l_discount"), F.col("l_extendedprice")
     mm = li.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -1825,8 +1816,6 @@ def q_multimodal_codec(spark: SparkSession, d: str):
     # pass runs once, not once per branch (bounded: |docs|/13 rows of
     # ~700 B media each); tracked so it is freed when the query's
     # scope closes (caching)
-    from direct_kafka_stream_spark.caching import track
-
     media = track(
         docs.mapInPandas(
             build_media,

@@ -583,8 +583,6 @@ def propensity_strata(events):
     """Composable form over any events-shaped frame — also the
     foreachBatch streaming twin's per-batch transform
     (tests/test_streaming.py)."""
-    from direct_kafka_stream_spark.exprs import bounded_window_key
-
     u = events.groupBy("user_id").agg(
         F.max(
             F.when(F.col("event_type") == "error", 1).otherwise(0)

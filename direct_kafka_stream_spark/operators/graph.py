@@ -1129,11 +1129,6 @@ def q_textrank(spark: SparkSession, d: str):
 
 def textrank_on(docs):
     """Composable form over any documents-shaped frame."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from direct_kafka_stream_spark.exprs import DEC
-
     words = docs.select(
         "doc_id",
         F.posexplode(text.tokens()).alias("pos", "w"),

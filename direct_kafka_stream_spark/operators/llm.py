@@ -1705,7 +1705,6 @@ def q_containment_dedup(spark: SparkSession, d: str):
     ~d²/2⁶⁵ per doc — negligible against the blocking recall trade
     already accepted above)."""
     docs = spread_scan(load_table(spark, d, "documents"), "doc_id")
-    from direct_kafka_stream_spark.caching import track
 
     # Round 13: persist RESTORED (tracked, freed when the query's scope
     # closes). The round-12 stage-reuse variant won a warm interleaved

@@ -2221,8 +2221,6 @@ def q_pca_power(spark: SparkSession, d: str):
         v = {i: x / m for i, x in w.items()}
     pick = max(dims, key=lambda i: (abs(v[i]), -i))
     sgn = -1.0 if v[pick] < 0 else 1.0
-    import math
-
     rows = [
         (i, math.floor(v[i] * sgn * 1e6 + 0.5) / 1e6
          if v[i] * sgn >= 0

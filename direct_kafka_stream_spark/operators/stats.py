@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
-from direct_kafka_stream_spark.exprs import dsum, dsum_sql, md5_int, safe_corr
+from direct_kafka_stream_spark.exprs import U_DENOM, dsum, dsum_sql, md5_int, safe_corr
 from direct_kafka_stream_spark.io import load_table, spread_scan
 from direct_kafka_stream_spark.registry import query
 
@@ -247,7 +247,6 @@ def q_sample_mod(spark: SparkSession, d: str):
 
 
 _KMV_K = 256
-_KMV_DENOM = 1152921504606846976.0  # 2^60: hash-space size for md5[:15]
 
 
 @query(
@@ -262,7 +261,7 @@ _KMV_DENOM = 1152921504606846976.0  # 2^60: hash-space size for md5[:15]
     k AS (SELECT hv FROM h ORDER BY hv LIMIT {_KMV_K})
     SELECT CAST(COUNT(*) AS BIGINT) AS k_used,
            CAST(CASE WHEN COUNT(*) < {_KMV_K} THEN COUNT(*)
-                ELSE FLOOR(({_KMV_K - 1}.0 * {_KMV_DENOM}) / MAX(hv))
+                ELSE FLOOR(({_KMV_K - 1}.0 * {U_DENOM}) / MAX(hv))
                 END AS BIGINT) AS kmv_estimate
     FROM k
     """,
@@ -290,7 +289,7 @@ def q_agg_kmv(spark: SparkSession, d: str):
         F.when(
             F.count(F.lit(1)) < _KMV_K, F.count(F.lit(1))
         )
-        .otherwise(F.floor((_KMV_K - 1) * _KMV_DENOM / F.max("hv")).cast("long"))
+        .otherwise(F.floor((_KMV_K - 1) * U_DENOM / F.max("hv")).cast("long"))
         .cast("long")
         .alias("kmv_estimate"),
     )

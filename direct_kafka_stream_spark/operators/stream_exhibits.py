@@ -17,7 +17,7 @@ import uuid
 from pyspark.sql import SparkSession, functions as F
 
 from direct_kafka_stream_spark.caching import scratch_dir, session_confs
-from direct_kafka_stream_spark.exprs import _OUT_SCALE, dsum_sql
+from direct_kafka_stream_spark.exprs import OUT_SCALE, dsum_sql
 from direct_kafka_stream_spark.registry import query
 from direct_kafka_stream_spark.sources.files import (
     PROVIDER_CONF,
@@ -322,7 +322,7 @@ def q_stream_state_reader(spark: SparkSession, d: str):
     return st.select(
         F.col("key.event_type").alias("event_type"),
         F.col("value.count").alias("n"),
-        F.round(F.col("value.sum"), _OUT_SCALE).cast("double").alias("total"),
+        F.round(F.col("value.sum"), OUT_SCALE).cast("double").alias("total"),
     )
 
 

@@ -886,9 +886,6 @@ def holt_linear(events):
     foreachBatch streaming twin's per-batch transform
     (tests/test_streaming.py)."""
     import pandas as pd
-    from pyspark.sql import functions as F
-
-    from direct_kafka_stream_spark.exprs import dsum
 
     daily = (
         events.filter(F.col("event_type") == "purchase")

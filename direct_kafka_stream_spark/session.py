@@ -47,6 +47,14 @@ _RUNTIME_CONF = {
 # Derived per session in tune_session, not a fixed value.
 _LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
+# Which class writes the offset and commit logs, the file-source log and
+# the state-store files of a stream (see checkpoint_manager).
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def default_parallelism() -> int:
     """Task slots of the ``local[N]`` master: ``SPARK_GRAFT_CPUS``, or
@@ -141,6 +149,35 @@ def scale_flag_set() -> bool:
     return _env_flag("SPARK_GRAFT_SCALE")
 
 
+def checkpoint_manager(default_fs: str | None, configured: str | None) -> str | None:
+    """The checkpoint file manager ``tune_session`` sets, or None to
+    leave the session as it is.
+
+    Spark's default manager renames through Hadoop's ``FileContext``,
+    which on the local file system forks a ``readlink`` per rename:
+    several processes for every committed micro-batch. On a ``file:``
+    default file system the ``FileSystem`` manager does the same
+    temp-file-then-rename commit in the JVM (docs/TUNING.md): a
+    POSIX rename is atomic, and ``LocalFileSystem`` still writes and
+    verifies the ``.crc`` of each file. What it gives up is the
+    fail-if-exists rename, which only two concurrent writers of one
+    checkpoint would need, and Spark runs one. A cluster file system
+    (``hdfs://``, ``s3a://``) and a manager set on purpose are kept.
+    """
+    if configured or not (default_fs or "").startswith("file:"):
+        return None
+    return FS_CHECKPOINT_MANAGER
+
+
+def _default_fs(spark: SparkSession) -> str | None:
+    """``fs.defaultFS`` of the session's Hadoop configuration; None
+    where no SparkContext is reachable (Spark Connect)."""
+    try:
+        return spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    except Exception:
+        return None
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine confs to an existing session.
 
@@ -159,6 +196,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
     package, so its parent directory joins their ``PYTHONPATH`` once
     and stays: a changed path would start new workers. That covers
     workers that see the driver's filesystem; others use ``--py-files``.
+
+    Local checkpoints rename in the JVM, not by forking a ``readlink``
+    (``checkpoint_manager``).
     """
     try:
         env = spark.sparkContext.environment
@@ -170,6 +210,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
         env["PYTHONPATH"] = os.pathsep.join([*paths, root])
     confs = dict(_RUNTIME_CONF)
     confs[_LISTING_PARALLELISM] = str(session_cores(spark))
+    manager = checkpoint_manager(
+        _default_fs(spark), spark.conf.get(CHECKPOINT_MANAGER_CONF, None)
+    )
+    if manager:
+        confs[CHECKPOINT_MANAGER_CONF] = manager
     for k, v in confs.items():
         try:
             spark.conf.set(k, v)

@@ -19,6 +19,8 @@ restart SFDIR [n_a n_b]
         batches >= n_a, nothing reprocessed;
       - LIVE state == batch aggregate of A ∪ B;
       - state time-traveled to batch n_a - 1 == batch aggregate of A.
+    Also reports the JVM's reaped-child CPU per micro-batch: the shell
+    commands the checkpoint's file system forks.
 
 kill SFDIR [n_files] [--rocksdb]
     Outage (reference README.md:160-176): a WORKER process (own Python
@@ -42,9 +44,10 @@ kill SFDIR [n_files] [--rocksdb]
 
 state SFDIR [SFDIR...]
     State-store footprint as the input scales, on both providers: wall
-    time, micro-batches, state bytes (total and per batch), input rows
-    and sink rows. Sink rows must stay |event_types| at every scale:
-    state and sink are key-bounded, only the scan is row-linear.
+    time, micro-batches, state bytes (total and per batch), reaped-child
+    CPU per batch, input rows and sink rows. Sink rows must stay
+    |event_types| at every scale: state and sink are key-bounded, only
+    the scan is row-linear.
 
 worker SRC CKPT [--rocksdb]
     The driver that ``kill`` spawns and kills.
@@ -100,6 +103,16 @@ def _du(path: pathlib.Path) -> int:
     return sum(p.stat().st_size for p in path.rglob("*") if p.is_file())
 
 
+def _jvm_child_cpu_s(spark) -> float:
+    """CPU seconds of the session JVM's reaped children so far
+    (``cutime + cstime`` of ``/proc/<jvm>/stat``): the processes Hadoop
+    forks, such as ``chmod`` and ``readlink`` on the local file system."""
+    pid = spark.sparkContext._gateway.proc.pid
+    with open(f"/proc/{pid}/stat") as fh:
+        fields = fh.read().rsplit(")", 1)[1].split()
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
 def _drain(spark, src: str, ckpt: str, sink: str | None = None) -> float:
     """Drain the stateful aggregate over ``src`` from ``ckpt`` into the
     noop sink, or into the memory sink named ``sink``; returns wall
@@ -152,10 +165,12 @@ def restart(spark, sf_dir: str, n_a: int = 4, n_b: int = 4) -> dict:
         ckpt = str(scratch / "ckpt")
         for f in files[:n_a]:
             shutil.copy(f, src / f.name)
+        child0 = _jvm_child_cpu_s(spark)
         wall_a = _drain(spark, str(src), ckpt)
         for f in files[n_a:]:
             shutil.copy(f, src / f.name)
         wall_resume = _drain(spark, str(src), ckpt)
+        child_cpu = _jvm_child_cpu_s(spark) - child0
 
         # --- audit 1: offset/commit ledger across the restart ---
         ledger = read_stream_ledger(ckpt)
@@ -192,6 +207,7 @@ def restart(spark, sf_dir: str, n_a: int = 4, n_b: int = 4) -> dict:
             "n_batches": n_batches,
             "wall_a_s": wall_a,
             "wall_resume_s": wall_resume,
+            "child_cpu_s_per_batch": round(child_cpu / max(n_batches, 1), 4),
             "ledger_entries": n_batches,
             "ledger_bytes": _du(pathlib.Path(ckpt) / "offsets")
             + _du(pathlib.Path(ckpt) / "commits"),
@@ -359,8 +375,10 @@ def state(spark, sf_dir: str, provider: str, n_files: int = 4) -> dict:
     name = f"stateprobe_{uuid.uuid4().hex[:10]}"
     ckpt = scratch / "ckpt"
     try:
+        child0 = _jvm_child_cpu_s(spark)
         with session_confs(spark, _ROCKSDB if provider == "rocksdb" else {}):
             wall = _drain(spark, src, str(ckpt), sink=name)
+        child_cpu = _jvm_child_cpu_s(spark) - child0
         sink_rows = spark.table(name).count()
         n_batches = len(log_ids(str(ckpt / "offsets")))
         state_bytes = _du(ckpt / "state")
@@ -372,6 +390,7 @@ def state(spark, sf_dir: str, provider: str, n_files: int = 4) -> dict:
             "wall_s": wall,
             "state_bytes": state_bytes,
             "state_bytes_per_batch": round(state_bytes / max(n_batches, 1)),
+            "child_cpu_s_per_batch": round(child_cpu / max(n_batches, 1), 4),
             "sink_rows": sink_rows,
         }
     finally:

@@ -1,6 +1,6 @@
 """Session sizing: the ``SPARK_GRAFT_CPUS`` parser, the JVM option
-builder, the default driver heap, and a JVM built with fewer slots than
-the host has."""
+builder, the default driver heap, a JVM built with fewer slots than
+the host has, and the checkpoint file manager of local streams."""
 
 from __future__ import annotations
 
@@ -14,10 +14,14 @@ import textwrap
 import pytest
 
 from direct_kafka_stream_spark.session import (
+    CHECKPOINT_MANAGER_CONF,
+    FS_CHECKPOINT_MANAGER,
     _usable_cpus,
+    checkpoint_manager,
     default_parallelism,
     driver_memory,
     java_options,
+    tune_session,
 )
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
@@ -141,3 +145,68 @@ def test_python_workers_import_the_package(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert int(out.stdout.strip().splitlines()[-1]) > 0
+
+
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+_FILE_CONTEXT_MANAGER = _CHECKPOINTING + "FileContextBasedCheckpointFileManager"
+
+
+def _manager_for(spark, path: str) -> str:
+    """The class a stream started now would write ``path``'s checkpoint
+    with."""
+    jvm = spark._jvm
+    cfm = getattr(jvm, _CHECKPOINTING + "CheckpointFileManager")
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return cfm.create(jvm.org.apache.hadoop.fs.Path(path), conf).getClass().getName()
+
+
+@pytest.fixture
+def manager_conf(spark):
+    """The session's checkpoint manager conf, restored after the test."""
+    saved = spark.conf.get(CHECKPOINT_MANAGER_CONF, None)
+    yield
+    if saved is None:
+        spark.conf.unset(CHECKPOINT_MANAGER_CONF)
+    else:
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, saved)
+
+
+def test_file_stream_gives_local_checkpoints_the_filesystem_manager(
+    spark, manager_conf, tmp_path
+):
+    """A session built elsewhere, without the key, writes a ``file:``
+    checkpoint through ``FileContext`` until a stream is defined;
+    ``file_stream`` tunes it to the manager that renames in the JVM."""
+    from direct_kafka_stream_spark.sources.files import events_schema, file_stream
+
+    ckpt = (tmp_path / "ckpt").as_uri()
+    spark.conf.unset(CHECKPOINT_MANAGER_CONF)
+    assert _manager_for(spark, ckpt) == _FILE_CONTEXT_MANAGER
+    file_stream(spark, str(tmp_path), events_schema())
+    assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == FS_CHECKPOINT_MANAGER
+    assert _manager_for(spark, ckpt) == FS_CHECKPOINT_MANAGER
+
+
+def test_configured_checkpoint_manager_survives_tuning(spark, manager_conf, tmp_path):
+    spark.conf.set(CHECKPOINT_MANAGER_CONF, _FILE_CONTEXT_MANAGER)
+    tune_session(spark)
+    assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == _FILE_CONTEXT_MANAGER
+    assert _manager_for(spark, (tmp_path / "ckpt").as_uri()) == _FILE_CONTEXT_MANAGER
+
+
+@pytest.mark.parametrize(
+    "default_fs, configured, manager",
+    [
+        ("file:///", None, FS_CHECKPOINT_MANAGER),
+        ("file:/", None, FS_CHECKPOINT_MANAGER),
+        ("hdfs://namenode:8020", None, None),  # cluster file systems keep
+        ("s3a://bucket", None, None),  # Spark's fail-if-exists rename
+        ("viewfs://cluster/", None, None),
+        (None, None, None),  # no SparkContext (Spark Connect)
+        ("file:///", "com.example.Manager", None),  # set on purpose
+    ],
+)
+def test_checkpoint_manager_only_for_unset_local_file_systems(
+    default_fs, configured, manager
+):
+    assert checkpoint_manager(default_fs, configured) == manager
